@@ -108,156 +108,18 @@ def _name_pattern(pat: str, ploc: str) -> "_re.Pattern":
             location=ploc)
 
 
-def _compile_fast_pattern(pat: str):
-    """Translate a SAFE SUBSET of Java regex into a builder of plain Column
-    expressions equivalent to ``col.rlike(pat)`` — regex matching is the
-    single most expensive predicate on a verdict scan (r06 measurement:
-    ~2x the cost of the equivalent substring/translate checks over 20M
-    rows), and schema ``pattern`` values are overwhelmingly of the shape
-    this subset covers (anchored literal prefixes and fixed-width
-    character-class runs, e.g. ``^clip_[0-9a-f]{12}$``, ``^[1-5]-``).
+def _any_missing(inst: Inst, names: list) -> Column:
+    """True iff some of ``names`` is not present on ``inst`` (never NULL)."""
+    cond = F.lit(False)
+    for n in names:
+        cond = cond | ~inst.present(n)
+    return cond
 
-    Subset: ``^`` then a concatenation of literal characters (regex
-    metacharacters only when backslash-escaped), positive character
-    classes ``[...]`` of plain BMP chars and ranges with an optional fixed
-    ``{n}`` count, optionally ending in ``$``. Anything else (alternation,
-    groups, predefined classes, unanchored patterns, negated classes,
-    variable quantifiers) returns ``None`` and the caller keeps ``rlike``.
 
-    Equivalence: rlike is an unanchored Java ``find()``, so ``^elems``
-    accepts exactly the strings whose prefix matches the concatenation
-    (and with ``$`` exactly the full matches). Every accepted string is a
-    sequence of the subset's BMP characters, where Spark's codepoint
-    ``length``/``substring`` agree with Java's code-unit counting; any
-    string rejected by the class/literal checks is rejected by the regex
-    too. The class check is ``length(translate(run, class_chars, '')) ==
-    0`` (translate deletes every class char; a survivor means a non-class
-    char). NULL propagates NULL exactly like rlike."""
-    META = set(".*+?()[]{}|\\^$")
-    n = len(pat)
-    if not pat.startswith("^"):
-        return None
-    i = 1
-    anchored_end = False
-    elems: list[tuple] = []  # ('lit', ch) | ('cls', frozenset)
-    while i < n:
-        c = pat[i]
-        if c == "$":
-            if i == n - 1:
-                anchored_end = True
-                i += 1
-                break
-            return None
-        if c == "\\":
-            if i + 1 >= n:
-                return None
-            nxt = pat[i + 1]
-            if nxt in META or nxt == "-":
-                elems.append(("lit", nxt))
-                i += 2
-            else:
-                return None  # \d, \w, \p{...}: keep the real engine
-        elif c == "[":
-            j = pat.find("]", i + 1)
-            if j < 0:
-                return None
-            body = pat[i + 1:j]
-            if not body or body[0] == "^" or "\\" in body or "[" in body \
-                    or "&" in body:
-                return None
-            chars: set[str] = set()
-            k = 0
-            while k < len(body):
-                ch = body[k]
-                if k + 2 < len(body) and body[k + 1] == "-":
-                    lo, hi = ord(ch), ord(body[k + 2])
-                    if hi < lo or hi - lo > 255:
-                        return None
-                    chars.update(chr(x) for x in range(lo, hi + 1))
-                    k += 3
-                else:
-                    if ch == "-" and 0 < k < len(body) - 1:
-                        return None  # mid-class '-' not consumed by a range
-                    chars.add(ch)
-                    k += 1
-            i = j + 1
-            count = 1
-            if i < n and pat[i] == "{":
-                j2 = pat.find("}", i)
-                if j2 < 0:
-                    return None
-                q = pat[i + 1:j2]
-                if not q.isdigit():
-                    return None
-                count = int(q)
-                if not 0 < count <= 256:
-                    return None
-                i = j2 + 1
-            elif i < n and pat[i] in "*+?":
-                return None
-            elems.extend([("cls", frozenset(chars))] * count)
-        elif c in META:
-            return None
-        else:
-            elems.append(("lit", c))
-            i += 1
-            if i < n and pat[i] in "*+?{":
-                return None  # quantified literal: fallback
-    # astral chars break the codepoint/code-unit equivalence; surrogates
-    # can't be compared as single chars — refuse both
-    for kind, v in elems:
-        cs = [v] if kind == "lit" else v
-        for ch in cs:
-            if ord(ch) >= 0x10000 or 0xD800 <= ord(ch) <= 0xDFFF:
-                return None
-    total = len(elems)
-
-    def build(col: Column) -> Column:
-        ln = F.length(col)
-
-        def end_anchor_ok() -> Column:
-            # Java's '$' (no MULTILINE) matches at end of input OR before a
-            # FINAL line terminator (\n, \r, \r\n, NEL, LS, PS)
-            return ((ln == total)
-                    | ((ln == total + 1)
-                       & F.substring(col, total + 1, 1)
-                       .isin("\n", "\r", "\u0085", "\u2028", "\u2029"))
-                    | ((ln == total + 2)
-                       & (F.substring(col, total + 1, 2) == "\r\n")))
-
-        if total == 0:
-            return end_anchor_ok() if anchored_end \
-                else F.when(col.isNull(), F.lit(None).cast("boolean")) \
-                .otherwise(F.lit(True))
-        conds = [end_anchor_ok() if anchored_end else (ln >= total)]
-        pos = 1
-        idx = 0
-        while idx < total:
-            kind, v = elems[idx]
-            if kind == "lit":
-                run = idx
-                lit = []
-                while run < total and elems[run][0] == "lit":
-                    lit.append(elems[run][1])
-                    run += 1
-                conds.append(F.substring(col, pos, len(lit)) == "".join(lit))
-                pos += len(lit)
-                idx = run
-            else:
-                run = idx
-                while run < total and elems[run] == ("cls", v):
-                    run += 1
-                cnt = run - idx
-                conds.append(F.length(F.translate(
-                    F.substring(col, pos, cnt), "".join(sorted(v)), "")) == 0)
-                pos += cnt
-                idx = run
-        out = conds[0]
-        for c in conds[1:]:
-            out = out & c
-        return out
-
-    return build
+def _missing_names(inst: Inst, names: list) -> Column:
+    """The names not present on ``inst``, comma-joined in schema order."""
+    return F.concat_ws(", ", *[F.when(~inst.present(n), F.lit(n))
+                               for n in names])
 
 
 def _check_java_pattern(pat: str, ploc: str) -> None:
@@ -1437,20 +1299,31 @@ class Compiler:
             gate = F.lit(True)
             col = inst.col
         # F.length counts code points on strings — matches codePointCount
-        # (Validator.kt:454,574); on binary it counts bytes.
+        # (Validator.kt:454,574); on binary it counts bytes. Counting walks
+        # every byte, so the O(1) byte length decides first: Spark's
+        # numChars lies in [ceil(bytes/4), bytes] (a character is 1-4
+        # bytes, an invalid lead byte counts as one), and codegen
+        # short-circuits AND/OR, so length() only runs for rows whose byte
+        # length falls inside that band. 4n is capped at 2^31 (past any
+        # octet_length) so that a huge bound still fits a long literal.
         ln = F.length(col)
+        ob = F.octet_length(col)
         parts = []
         if "minLength" in node:
             n = node["minLength"]
+            # length < n  <=>  ob < n  OR  (ob < 4n AND length < n)
+            too_short = (ob < n) | ((ob < min(4 * n, 2 ** 31)) & (ln < n))
             parts.append(Compiled.simple(
-                ~inst.is_absent() & (ln < n), "minLength",
+                ~inst.is_absent() & too_short, "minLength",
                 f"{kw_loc}/minLength", inst.loc, dyn + "/minLength",
                 F.format_string(
                     f"actual string length %s is lower than minLength {n}", ln)))
         if "maxLength" in node:
             n = node["maxLength"]
+            # length > n  <=>  ob > 4n  OR  (ob > n AND length > n)
+            too_long = (ob > min(4 * n, 2 ** 31)) | ((ob > n) & (ln > n))
             parts.append(Compiled.simple(
-                ~inst.is_absent() & (ln > n), "maxLength",
+                ~inst.is_absent() & too_long, "maxLength",
                 f"{kw_loc}/maxLength", inst.loc, dyn + "/maxLength",
                 F.format_string(
                     f"actual string length %s exceeds maxLength {n}", ln)))
@@ -1458,16 +1331,10 @@ class Compiler:
             p = node["pattern"]
             # rlike = Java regex unanchored find(), same engine + semantics as
             # the reference (Regexp.kt:29-49); validated against the Java
-            # engine at compile time (review r05c). Anchored literal/class
-            # patterns lower to substring/translate checks instead of the
-            # regex engine (_compile_fast_pattern, r06) — equivalent by
-            # construction, ~2x cheaper on a 20M-row verdict scan.
+            # engine at compile time (review r05c)
             _check_java_pattern(p, f"{kw_loc}/pattern")
-            fast = _compile_fast_pattern(p)
-            scol = col.cast("string")
-            match = fast(scol) if fast is not None else scol.rlike(p)
             parts.append(Compiled.simple(
-                ~inst.is_absent() & ~match, "pattern",
+                ~inst.is_absent() & ~col.cast("string").rlike(p), "pattern",
                 f"{kw_loc}/pattern", inst.loc, dyn + "/pattern",
                 F.lit(f"instance value did not match pattern {p}")))
         return conj(parts) if parts else None
@@ -1556,29 +1423,18 @@ class Compiler:
         # required (Validator.kt:632-641)
         if "required" in node:
             req = node["required"]
-            missing = F.filter(
-                F.array(*[
-                    F.when(~inst.present(n), F.lit(n)) for n in req
-                ]), lambda x: x.isNotNull())
-            # verdict condition as a plain OR chain, NOT size(filter(...)):
-            # higher-order functions are CodegenFallback expressions —
-            # evaluated interpreted, one GenericArrayData allocation per ROW
-            # — and `required` sits on every verdict scan (the 20M-row
-            # constraint probe spent a measurable slice of its wall here,
-            # r06 measurement). OR(~present) is semantically identical to
-            # size(filter(missing-names)) > 0: present() is never-null on
-            # every instance kind, and Compiled.simple coalesces anyway.
-            # `missing` survives only inside the failure MESSAGE, which is
-            # evaluated for failing rows alone (and replaced by a literal
-            # under light_messages).
-            cond = F.lit(False)
-            for n in req:
-                cond = cond | ~inst.present(n)
+            # verdict and message without higher-order functions: a
+            # filter(array(...), lambda) is a CodegenFallback expression
+            # (interpreted, one array allocation per row) and would drop
+            # the whole violations() Project out of whole-stage codegen.
+            # present() is never-null on every instance kind, so the OR
+            # chain is exactly "some name is missing"; concat_ws skips the
+            # NULLs that stand for present names.
             add(Compiled.simple(
-                ~inst.is_absent() & cond, "required", f"{kw_loc}/required",
-                inst.loc, dyn + "/required",
+                ~inst.is_absent() & _any_missing(inst, req), "required",
+                f"{kw_loc}/required", inst.loc, dyn + "/required",
                 F.concat(F.lit("required properties are missing: "),
-                         F.array_join(missing, ", "))))
+                         _missing_names(inst, req))))
 
         # additionalProperties (Validator.kt:539-570): properties not named in
         # `properties` nor matching any patternProperties
@@ -1706,17 +1562,14 @@ class Compiler:
         # dependentRequired (Validator.kt:842-855)
         if "dependentRequired" in node:
             for key, deps in node["dependentRequired"].items():
-                missing = F.filter(
-                    F.array(*[F.when(~inst.present(d), F.lit(d)) for d in deps]),
-                    lambda x: x.isNotNull())
-                cond = inst.present(key) & (F.size(missing) > 0)
                 add(Compiled.simple(
-                    cond, "dependentRequired",
+                    inst.present(key) & _any_missing(inst, deps),
+                    "dependentRequired",
                     f"{kw_loc}/dependentRequired/{pointer_escape(key)}", inst.loc,
                     dyn + "/dependentRequired",
                     F.concat(F.lit(f"property {key} is present in the object but "
                                    "the following properties are missing: "),
-                             F.array_join(missing, ", "))))
+                             _missing_names(inst, deps))))
 
         # dependentSchemas (Validator.kt:828-840)
         if "dependentSchemas" in node:

@@ -11,9 +11,13 @@ table is the distributed equivalent, plus north-rule lineage:
 Scale notes:
 - ``apply(..., mode="verdict")`` only builds the boolean column; Catalyst
   prunes every failure-struct expression, so the verdict path is pure
-  whole-stage-codegen boolean algebra.
+  whole-stage-codegen boolean algebra. ``minLength``/``maxLength`` decide
+  on the O(1) byte length and count characters only inside the byte band
+  where that cannot decide; ``pattern`` is one ``rlike``.
 - ``violations`` filters to failing rows *before* exploding, so shuffle-free
-  and proportional to the violation count, not the table size.
+  and proportional to the violation count, not the table size. The failure
+  structs and messages use no higher-order function, so their Project
+  stays in whole-stage codegen as well.
 """
 
 from __future__ import annotations
