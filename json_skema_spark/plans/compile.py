@@ -14,8 +14,8 @@ Design:
   Pointer column for lineage. The table root uses direct ``F.col`` references
   so Catalyst column pruning still reaches the parquet scan.
 - Each keyword builder returns a ``Compiled``: a null-safe boolean ``passed``
-  Column plus a ``failures`` Column of type ``array<failure_struct>`` carrying
-  the reference's lineage fields (keyword / keywordLocation /
+  Column plus a builder for the ``array<failure_struct>`` failures Column
+  carrying the reference's lineage fields (keyword / keywordLocation /
   instanceLocation / dynamicPath / message — ValidationFailure.toJSON(),
   ValidationFailure.kt:35-50). Failure wordings mirror the reference's
   literal message templates (cited per keyword below).
@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import math as _math
 import re as _re
-import threading
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -184,48 +183,29 @@ def empty_failures() -> Column:
     return F.array().cast(f"array<{FAILURE_DDL}>")
 
 
-# When set (via the light_messages() context), failure structs carry an
-# EMPTY message literal instead of the real formatted message expression.
-# Counting paths (ValidationPlan.summary) don't read messages, but the
-# per-violation format_string/cast work still executed at runtime — at
-# sf10 the summary ran 36x slower than the verdict scan over the same
-# rows almost entirely on message construction (round-5 measurement).
-# THREAD-LOCAL, not a module global: a multi-threaded driver submitting
-# parallel jobs may compile on several threads at once, and a process-wide
-# flag would bake empty messages into an unrelated thread's plan — or,
-# with interleaved context exits, stick True for the process lifetime
-# (review r05). Within one thread the save/restore is reentrant.
-_LIGHT = threading.local()
-
-
-def _light_active() -> bool:
-    return getattr(_LIGHT, "on", False)
-
-
-@contextmanager
-def light_messages():
-    prev = _light_active()
-    _LIGHT.on = True
-    try:
-        yield
-    finally:
-        _LIGHT.on = prev
-
-
 def _fail_struct(keyword: str, kw_loc: str, inst_loc: Column, dyn_path: str,
-                 message: Column) -> Column:
+                 message: Column, messages: bool) -> Column:
+    """One failure struct; ``messages=False`` writes an empty message."""
     return F.struct(
         F.lit(keyword).alias("keyword"),
         F.lit(kw_loc).alias("keyword_location"),
         inst_loc.alias("instance_location"),
         F.lit(dyn_path).alias("dynamic_path"),
-        (F.lit("") if _light_active() else message).alias("message"),
+        (message if messages else F.lit("")).alias("message"),
     )
 
 
 @dataclass
 class Compiled:
     """Result of lowering one schema node for one instance expression.
+
+    ``build_failures(messages)`` builds the ``array<failure_struct>``
+    column (never NULL, empty iff ``passed``) only when an output reads it,
+    so one compile feeds verdict, violations and summary. Counting paths
+    pass ``messages=False``: they never read ``message``, and building it
+    made the round-5 sf10 summary 36x slower than the verdict scan. A
+    builder runs after the compile returns, so a name it reads must not be
+    rebound later in the enclosing function.
 
     ``legs`` is the summary fast-path metadata: a tuple of
     ``(cond_fail, keyword, keyword_location)`` triples, one per failure
@@ -240,23 +220,35 @@ class Compiled:
     """
 
     passed: Column   # boolean, never NULL
-    failures: Column  # array<failure_struct>, never NULL (empty iff passed)
+    build_failures: Callable[[bool], Column]
     legs: tuple | None = None
+
+    @property
+    def failures(self) -> Column:
+        """The failure array with messages."""
+        return self.build_failures(True)
+
+    def gated(self, gate: Column) -> "Compiled":
+        """This result where ``gate`` holds, a pass everywhere else."""
+        return Compiled(
+            passed=F.when(gate, self.passed).otherwise(F.lit(True)),
+            build_failures=lambda m: F.when(gate, self.build_failures(m))
+            .otherwise(empty_failures()))
 
     @staticmethod
     def ok() -> "Compiled":
-        return Compiled(F.lit(True), empty_failures(), legs=())
+        return Compiled(F.lit(True), lambda m: empty_failures(), legs=())
 
     @staticmethod
     def simple(cond_fail: Column, keyword: str, kw_loc: str, inst_loc: Column,
                dyn_path: str, message: Column) -> "Compiled":
         cond_fail = F.coalesce(cond_fail, F.lit(False))
-        dyn = dyn_path
         return Compiled(
             passed=~cond_fail,
-            failures=F.when(
+            build_failures=lambda m: F.when(
                 cond_fail,
-                F.array(_fail_struct(keyword, kw_loc, inst_loc, dyn, message)),
+                F.array(_fail_struct(keyword, kw_loc, inst_loc, dyn_path,
+                                     message, m)),
             ).otherwise(empty_failures()),
             legs=((cond_fail, keyword, kw_loc),),
         )
@@ -271,14 +263,15 @@ def conj(parts: list[Compiled]) -> Compiled:
     passed = parts[0].passed
     for p in parts[1:]:
         passed = passed & p.passed
-    fails = [p.failures for p in parts]
-    failures = fails[0] if len(fails) == 1 else F.concat(*fails)
+    builds = [p.build_failures for p in parts]
+    build = builds[0] if len(builds) == 1 else \
+        (lambda m: F.concat(*[b(m) for b in builds]))
     legs: tuple | None
     if all(p.legs is not None for p in parts):
         legs = tuple(leg for p in parts for leg in p.legs)
     else:
         legs = None
-    return Compiled(passed, failures, legs=legs)
+    return Compiled(passed, build, legs=legs)
 
 
 # --------------------------------------------------------------------------
@@ -790,10 +783,7 @@ class Compiler:
                                   sub_res, sub_parts.append)
             gate = F.coalesce(vt.is_object(inst.col), F.lit(False))
             if sub_parts:
-                sub = conj(sub_parts)
-                add(Compiled(
-                    passed=F.when(gate, sub.passed).otherwise(F.lit(True)),
-                    failures=F.when(gate, sub.failures).otherwise(empty_failures())))
+                add(conj(sub_parts).gated(gate))
             # coverage from the view flows to this node's unevaluated* and,
             # through merge_child in parents, to enclosing applicators
             res.merge_child(sub_res, gate)
@@ -811,10 +801,7 @@ class Compiler:
                                  sub_res, sub_parts.append)
             gate = F.coalesce(vt.is_array(inst.col), F.lit(False))
             if sub_parts:
-                sub = conj(sub_parts)
-                add(Compiled(
-                    passed=F.when(gate, sub.passed).otherwise(F.lit(True)),
-                    failures=F.when(gate, sub.failures).otherwise(empty_failures())))
+                add(conj(sub_parts).gated(gate))
             res.merge_child(sub_res, gate)
 
         # ---- combinators -------------------------------------------------
@@ -840,9 +827,7 @@ class Compiler:
                 part = self._kw_unevaluated_properties_dynamic(
                     sub, minst, kw_loc, dyn, scope, depth, res)
                 gate = F.coalesce(vt.is_object(inst.col), F.lit(False))
-                uneval_parts.append(Compiled(
-                    passed=F.when(gate, part.passed).otherwise(F.lit(True)),
-                    failures=F.when(gate, part.failures).otherwise(empty_failures())))
+                uneval_parts.append(part.gated(gate))
             # unevaluatedProperties evaluates every property not otherwise
             # covered -> together with prior keywords, EVERYTHING is now
             # evaluated; parents merging this node's annotations must see
@@ -860,19 +845,17 @@ class Compiler:
                 part = self._kw_unevaluated_items(
                     sub, ainst, kw_loc, dyn, scope, depth, res)
                 gate = F.coalesce(vt.is_array(inst.col), F.lit(False))
-                uneval_parts.append(Compiled(
-                    passed=F.when(gate, part.passed).otherwise(F.lit(True)),
-                    failures=F.when(gate, part.failures).otherwise(empty_failures())))
+                uneval_parts.append(part.gated(gate))
             res.rest_cov.append(F.lit(True))  # §11.2: all items now evaluated
         if uneval_parts:
             uneval = conj(uneval_parts)
             # only evaluated when no prior failure (shouldVisitUnevaluatedSchemas,
             # Validator.kt:419)
-            combined = Compiled(
+            res.compiled = Compiled(
                 passed=base.passed & uneval.passed,
-                failures=F.when(base.passed, uneval.failures).otherwise(base.failures),
-            )
-            res.compiled = combined
+                build_failures=lambda m: F.when(
+                    base.passed, uneval.build_failures(m))
+                .otherwise(base.build_failures(m)))
         else:
             res.compiled = base
         return res
@@ -1578,11 +1561,7 @@ class Compiler:
                 child = self._compile(sub, inst, sloc,
                                       dyn + "/dependentSchemas/" + key, scope, depth + 1)
                 present = inst.present(key)
-                gated = Compiled(
-                    passed=F.when(present, child.compiled.passed).otherwise(F.lit(True)),
-                    failures=F.when(present, child.compiled.failures)
-                    .otherwise(empty_failures()))
-                add(gated)
+                add(child.compiled.gated(present))
                 res.merge_child(child, present & child.compiled.passed)
 
     # -- array keywords ----------------------------------------------------
@@ -1666,10 +1645,7 @@ class Compiler:
                           F.concat(inst.loc, F.lit(f"/{i}")), strict=inst.strict)
                 child = self._compile(sub, el, ploc, dyn + f"/prefixItems/{i}",
                                       scope, depth + 1).compiled
-                gate = ~inst.is_absent() & (size > i)
-                add(Compiled(
-                    passed=F.when(gate, child.passed).otherwise(F.lit(True)),
-                    failures=F.when(gate, child.failures).otherwise(empty_failures())))
+                add(child.gated(~inst.is_absent() & (size > i)))
             res.prefix_cov = max(res.prefix_cov, prefix_n)
 
         # items (Validator.kt:711-728): every element from prefix_n on
@@ -1677,10 +1653,15 @@ class Compiler:
             iloc = f"{kw_loc}/items"
             elem_fn = self._element_fn(node["items"], elem_t, inst.loc, iloc,
                                        dyn + "/items", scope, depth, strict=inst.strict)
-            per_elem = F.transform(
-                arr, lambda x, i: F.when(i >= prefix_n, elem_fn(x, i).failures)
-                .otherwise(empty_failures()))
-            failures = F.flatten(per_elem)
+
+            def items_failures(m: bool, elem_fn=elem_fn) -> Column:
+                # elem_fn bound at definition: the contains block rebinds it
+                per_elem = F.transform(
+                    arr, lambda x, i: F.when(i >= prefix_n,
+                                             elem_fn(x, i).build_failures(m))
+                    .otherwise(empty_failures()))
+                return F.when(inst.is_absent(), empty_failures()) \
+                    .otherwise(F.coalesce(F.flatten(per_elem), empty_failures()))
             # passed: all post-prefix elements pass
             ok = F.forall(
                 F.transform(arr, lambda x, i: F.when(i < prefix_n, F.lit(True))
@@ -1689,8 +1670,7 @@ class Compiler:
             add(Compiled(
                 passed=F.when(inst.is_absent(), F.lit(True))
                 .otherwise(F.coalesce(ok, F.lit(True))),
-                failures=F.when(inst.is_absent(), empty_failures())
-                .otherwise(F.coalesce(failures, empty_failures()))))
+                build_failures=items_failures))
             res.rest_cov.append(F.lit(True))
 
         # contains + minContains/maxContains (Validator.kt:751-781)
@@ -1774,11 +1754,9 @@ class Compiler:
                 any_ok = any_ok | s.compiled.passed
             # on failure, flatten() yields the branch leaf failures
             # (AnyOf.kt message + ValidationFailure.flatten, :56-59)
-            fails = F.concat(*[s.compiled.failures for s in subs]) \
-                if len(subs) > 1 else subs[0].compiled.failures
-            add(Compiled(
-                passed=any_ok,
-                failures=F.when(~any_ok, fails).otherwise(empty_failures())))
+            add(Compiled(passed=any_ok,
+                         build_failures=conj([s.compiled for s in subs])
+                         .gated(~any_ok).build_failures))
             for s in subs:
                 res.merge_child(s, s.compiled.passed)
 
@@ -1792,20 +1770,21 @@ class Compiler:
             for s in subs:
                 c = s.compiled.passed.cast("int")
                 matched = c if matched is None else matched + c
-            one_struct = _fail_struct(
-                "oneOf", f"{kw_loc}/oneOf", inst.loc, dyn + "/oneOf",
-                F.format_string(
-                    f"expected 1 subschema to match out of {n}, %s matched", matched))
-            child_fails = F.concat(*[s.compiled.failures for s in subs]) \
-                if n > 1 else subs[0].compiled.failures
-            # absent value: oneOf never applies (all branches vacuously pass,
-            # which would read as "N matched" without this guard)
-            add(Compiled(
-                passed=inst.is_absent() | (matched == 1),
-                failures=F.when(inst.is_absent(), empty_failures())
-                .when(matched == 0, child_fails)
-                .when(matched > 1, F.array(one_struct))
-                .otherwise(empty_failures())))
+            one_msg = F.format_string(
+                f"expected 1 subschema to match out of {n}, %s matched", matched)
+            branches = conj([s.compiled for s in subs])
+
+            def one_of_failures(m: bool) -> Column:
+                # absent value: oneOf never applies (all branches vacuously
+                # pass, which would read as "N matched" without this guard)
+                return (F.when(inst.is_absent(), empty_failures())
+                        .when(matched == 0, branches.build_failures(m))
+                        .when(matched > 1, F.array(_fail_struct(
+                            "oneOf", f"{kw_loc}/oneOf", inst.loc,
+                            dyn + "/oneOf", one_msg, m)))
+                        .otherwise(empty_failures()))
+            add(Compiled(passed=inst.is_absent() | (matched == 1),
+                         build_failures=one_of_failures))
             for s in subs:
                 res.merge_child(s, s.compiled.passed & (matched == 1))
 
@@ -1833,7 +1812,8 @@ class Compiler:
             e = else_res.compiled if else_res else Compiled.ok()
             add(Compiled(
                 passed=F.when(ip, t.passed).otherwise(e.passed),
-                failures=F.when(ip, t.failures).otherwise(e.failures)))
+                build_failures=lambda m: F.when(ip, t.build_failures(m))
+                .otherwise(e.build_failures(m))))
             res.merge_child(if_res, ip)
             if then_res:
                 res.merge_child(then_res, ip & t.passed)
@@ -1955,10 +1935,9 @@ class Compiler:
 def compile_schema(schema_doc: Any, struct_type: T.StructType, **kwargs):
     """Compile ``schema_doc`` against a table schema; returns a ValidationPlan.
 
-    Forces the full-message compile so schema mistakes raise HERE —
-    before callers (runner.validate_table) create manifests or output
-    dirs — while ValidationPlan itself stays lazy for light-only
-    streaming consumers (review r05c)."""
+    Runs the plan's one ``compile_root`` now, so schema mistakes raise
+    HERE — before callers (runner.validate_table) create manifests or
+    output dirs (review r05c)."""
     from json_skema_spark.plans.verdict import ValidationPlan
 
     plan = ValidationPlan(Compiler(schema_doc, **kwargs), struct_type)

@@ -206,29 +206,6 @@ def test_release_persisted_signatures(spark):
     assert dedup.release_persisted_signatures() == 0  # idempotent
 
 
-def test_cobucketed_join_validates_specs(spark, tmp_path):
-    import shutil
-
-    from json_skema_spark.operators import bucketing
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("cbl", "cbr", "cbm", "cbn"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)  # stale crash debris
-    df = spark.createDataFrame([(str(i), i) for i in range(50)],
-                               "k string, v int")
-    bucketing.write_bucketed(df, "cbl", "k", buckets=4)
-    bucketing.write_bucketed(df, "cbr", "k", buckets=4)
-    out = bucketing.cobucketed_join(spark, "cbl", "cbr", "k")
-    assert out.count() == 50  # matched specs join fine (the shuffle-free
-    # plan shape itself is pinned by the existing bucketing plan test)
-    bucketing.write_bucketed(df, "cbm", "k", buckets=8)  # mismatched count
-    with pytest.raises(ValueError, match="bucket counts differ"):
-        bucketing.cobucketed_join(spark, "cbl", "cbm", "k")
-    df.write.mode("overwrite").saveAsTable("cbn")  # unbucketed
-    with pytest.raises(ValueError, match="not bucketed"):
-        bucketing.cobucketed_join(spark, "cbl", "cbn", "k")
-
-
 # ------------------------------- fixtures/functions family (review pass 7)
 
 def test_builder_subschema_not_aliased():

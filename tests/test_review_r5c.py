@@ -128,8 +128,8 @@ def test_deprecated_usage_zero_row_table_counts_zero(spark):
 
 
 def test_violation_rate_compiles_once(spark, monkeypatch):
-    """violation_rate reads only the light plan; the full-message compile
-    must not run at all (review r05c finding 7)."""
+    """violation_rate compiles its plan exactly once (review r05c
+    finding 7)."""
     from json_skema_spark.plans import compile as compile_mod
     from json_skema_spark.streaming.validate_stream import violation_rate
 
@@ -144,7 +144,7 @@ def test_violation_rate_compiles_once(spark, monkeypatch):
     df = spark.createDataFrame([(datetime(2026, 1, 1), 1.0)],
                                "ts timestamp, v double")
     rate = violation_rate(df, {"properties": {"v": {"minimum": 2}}}, "ts")
-    assert len(calls) == 1  # light only — full plan never built
+    assert len(calls) == 1
     assert "n_violations" in rate.columns
 
 
@@ -735,11 +735,13 @@ def test_scaling_bench_prefers_settled_floors():
     """An unsettled (interference-bound) minimum must not beat a settled
     floor in the published evidence (review r05c)."""
     import sys
-    sys.path.insert(0, "/root/repo")
+    from pathlib import Path
+    root = str(Path(__file__).resolve().parents[1])
+    sys.path.insert(0, root)
     try:
         from tools.scaling_bench import _better
     finally:
-        sys.path.remove("/root/repo")
+        sys.path.remove(root)
     settled_slow = {"best_s": 5.0, "settled": True}
     unsettled_fast = {"best_s": 2.0, "settled": False}
     assert _better(settled_slow, unsettled_fast) is settled_slow
@@ -1044,7 +1046,10 @@ def test_uniqueness_violations_carry_partition_id_column(spark):
     assert out.collect()[0]["partition_id"] is None
 
 
-def test_verdict_counts_uses_light_compile(spark, monkeypatch):
+def test_plan_compiles_schema_once(spark, monkeypatch):
+    """Every output of a plan — verdict, full apply, violations, summary
+    (legs path and explode path) and verdict counts — comes from one
+    compile_root."""
     from json_skema_spark.plans import compile as compile_mod
     from json_skema_spark.plans.compile import Compiler
     from json_skema_spark.plans.verdict import ValidationPlan
@@ -1056,11 +1061,20 @@ def test_verdict_counts_uses_light_compile(spark, monkeypatch):
         return orig(self, st)
 
     monkeypatch.setattr(compile_mod.Compiler, "compile_root", counting)
-    df = spark.createDataFrame([(1,)], "v int")
-    plan = ValidationPlan(Compiler({"properties": {"v": {"minimum": 0}}}),
-                          df.schema)
-    plan.verdict_counts(df).collect()
-    assert len(calls) == 1  # light only — full-message tree never built
+    df = spark.createDataFrame([(1,), (-1,), (None,)], "v int")
+    legs_doc = {"properties": {"v": {"minimum": 0}}}
+    explode_doc = {"properties": {"v": {"anyOf": [{"minimum": 5},
+                                                  {"maximum": -5}]}}}
+    for doc, summarizable in ((legs_doc, True), (explode_doc, False)):
+        calls.clear()
+        plan = ValidationPlan(Compiler(doc), df.schema)
+        df.select(plan.passed).collect()
+        plan.apply(df, mode="full").collect()
+        assert plan.violations(df, "v").count() >= 1
+        assert plan.summary(df).count() >= 1
+        plan.verdict_counts(df).collect()
+        assert (plan._compiled.legs is not None) == summarizable
+        assert len(calls) == 1
 
 
 def test_deprecated_usage_dotted_column_still_counts(spark):

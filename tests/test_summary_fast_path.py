@@ -45,9 +45,8 @@ def table(spark):
 
 
 def _explode_counts(plan, df):
-    light = plan._light()
-    return (df.filter(~light.passed)
-            .select(light.failures.alias("failures"))
+    return (df.filter(~plan.passed)
+            .select(plan.counted_failures.alias("failures"))
             .select(F.explode("failures").alias("f"))
             .groupBy(F.col("f.keyword").alias("keyword"),
                      F.col("f.keyword_location").alias("keyword_location"))
@@ -56,7 +55,7 @@ def _explode_counts(plan, df):
 
 def test_simple_schema_has_legs(table):
     plan = compile_schema(SIMPLE, table.schema)
-    assert plan._light().legs, "simple scalar schema must be summarizable"
+    assert plan._compiled.legs, "simple scalar schema must be summarizable"
 
 
 def test_fast_path_matches_explode(table):
@@ -70,7 +69,7 @@ def test_fast_path_matches_explode(table):
 
 def test_combinator_schema_falls_back(table):
     plan = compile_schema(COMBINATOR, table.schema)
-    assert plan._light().legs is None, \
+    assert plan._compiled.legs is None, \
         "anyOf wraps child failures — legs must poison to None"
     # and the fallback still produces the right counts
     out = {(r.keyword, r.keyword_location): r.n_violations
@@ -113,3 +112,55 @@ def test_allof_legs_match_explode(spark):
     slow = {(r.keyword, r.keyword_location): r.n_violations
             for r in _explode_counts(plan, df).collect()}
     assert fast == slow and fast
+
+
+ARRAY_SCHEMA = {
+    "type": "object",
+    "properties": {
+        "toks": {
+            "type": "array",
+            "minItems": 4,
+            "maxItems": 6,
+            "uniqueItems": True,
+            "items": {"type": "string", "minLength": 1, "maxLength": 6},
+            "contains": {"pattern": "^[aeiou]"},
+            "minContains": 1,
+            "maxContains": 1,
+        }
+    },
+}
+
+
+def test_items_and_contains_failures_keep_their_keywords(spark):
+    """``items`` and ``contains`` on one array compile separate element
+    schemas; each must report its own failures in both the summary (explode
+    path: per-element failures have no legs) and the violations."""
+    rows = [
+        (1, ["apple", "b", "c", "d"]),                       # passes
+        (2, ["toolongword", "b", "c", "d"]),                 # maxLength, contains
+        (3, ["apple", "egg", "x", "", "x"]),                 # minLength, maxContains, uniqueItems
+        (4, ["a", "b"]),                                     # minItems
+        (5, None),                                           # absent: passes
+        (6, ["e", "toolong1", "x", "y", "z", "w", "v"]),     # maxItems, maxLength
+    ]
+    df = spark.createDataFrame(rows, "id int, toks array<string>")
+    plan = compile_schema(ARRAY_SCHEMA, df.schema)
+    assert plan._compiled.legs is None
+    loc = "#/properties/toks"
+    want = {
+        ("maxLength", f"{loc}/items/maxLength"): 2,
+        ("minLength", f"{loc}/items/minLength"): 1,
+        ("contains", f"{loc}/contains"): 1,
+        ("maxContains", f"{loc}/contains"): 1,
+        ("uniqueItems", f"{loc}/uniqueItems"): 1,
+        ("minItems", f"{loc}/minItems"): 1,
+        ("maxItems", f"{loc}/maxItems"): 1,
+    }
+    summary = {(r.keyword, r.keyword_location): r.n_violations
+               for r in plan.summary(df).collect()}
+    assert summary == want
+    violations: dict = {}
+    for r in plan.violations(df, "id").collect():
+        k = (r.keyword, r.keyword_location)
+        violations[k] = violations.get(k, 0) + 1
+    assert violations == want

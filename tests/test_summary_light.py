@@ -1,5 +1,6 @@
-"""ValidationPlan.summary's light-message recompile must count exactly what
-the full failures explode counts — only the message literal may differ."""
+"""ValidationPlan.summary counts ``counted_failures`` (empty messages); it
+must count exactly what the full failures explode counts — only the message
+literal may differ."""
 
 import pyspark.sql.functions as F
 
@@ -38,38 +39,15 @@ def test_summary_matches_full_explode_counts(spark):
 
 
 def test_light_plan_empties_messages_only(spark):
-    from json_skema_spark.plans.compile import light_messages
     df = _fixture(spark)
     plan = compile_schema(DOC, df.schema)
-    light = plan._light()
-    rows = (df.withColumn("failures", light.failures)
+    rows = (df.withColumn("failures", plan.counted_failures)
             .select(F.explode("failures").alias("f")).select("f.*").collect())
     assert rows and all(r["message"] == "" for r in rows)
     assert all(r["keyword"] for r in rows)
-    # the full plan still renders real messages (flag is scoped)
+    # the same plan still renders real messages in ``failures``
     full_rows = (df.withColumn("failures", plan.failures)
                  .select(F.explode("failures").alias("f"))
                  .select("f.message").limit(5).collect())
     assert any(r["message"] for r in full_rows)
 
-
-def test_light_flag_is_thread_local(spark):
-    """A concurrent compile on another thread must NOT inherit the light
-    flag — a process-wide flag would bake empty messages into unrelated
-    plans (review r05)."""
-    import threading
-
-    from json_skema_spark.plans.compile import (_light_active,
-                                                light_messages)
-    seen = {}
-
-    def other_thread():
-        seen["active"] = _light_active()
-
-    with light_messages():
-        assert _light_active()
-        t = threading.Thread(target=other_thread)
-        t.start()
-        t.join()
-    assert seen["active"] is False
-    assert _light_active() is False

@@ -114,28 +114,3 @@ def test_array_query_prunes_scan(spark):
     cols = {f.split(":")[0] for f in m.group(1).split(",")}
     assert cols == {"doc_id", "text"}  # lang/source/n_chars pruned
 
-
-def test_cobucketed_join_is_shuffle_free(spark, tmp_path):
-    """Both sides bucketed on the key with the same count -> SortMergeJoin
-    with ZERO Exchange (the recurring-join scale path; write once, never
-    shuffle again)."""
-    from json_skema_spark.operators import bucketing
-
-    spark.sql("DROP TABLE IF EXISTS jss_bl")
-    spark.sql("DROP TABLE IF EXISTS jss_br")
-    left = spark.range(0, 10_000).selectExpr("id AS k", "id * 2 AS a")
-    right = spark.range(0, 5_000).selectExpr("id AS k", "id * 3 AS b")
-    bucketing.write_bucketed(left, "jss_bl", "k", buckets=8)
-    bucketing.write_bucketed(right, "jss_br", "k", buckets=8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = bucketing.cobucketed_join(spark, "jss_bl", "jss_br", "k")
-        phys = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in phys
-        assert "Exchange" not in phys  # co-located: no shuffle on either side
-        assert j.count() == 5_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS jss_bl")
-        spark.sql("DROP TABLE IF EXISTS jss_br")

@@ -11,7 +11,8 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not an installed or fixed-path copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region nation customer supplier part orders lineitem events "
