@@ -15,7 +15,7 @@ Public API::
 
     plan = compile_schema(schema_doc, df.schema)
     verdicts = plan.apply(df)            # adds `passed`, `failures`
-    viols = plan.violations(df, row_id="clip_id")
+    viols = plan.violations(df, row_key="clip_id")
 """
 
 from json_skema_spark.plans.compat import (compat_report, delta_schema,

@@ -17,7 +17,10 @@ Scale notes:
 - ``violations`` filters to failing rows *before* exploding, so shuffle-free
   and proportional to the violation count, not the table size. The failure
   structs and messages use no higher-order function, so their Project
-  stays in whole-stage codegen as well.
+  stays in whole-stage codegen as well. Its output is coalesced (narrow,
+  no Exchange) to ``defaultParallelism`` partitions, so a write runs one
+  task and one file per task slot instead of one per input split;
+  ``partition_id`` still names the input split.
 """
 
 from __future__ import annotations
@@ -79,15 +82,14 @@ class ValidationPlan:
         the ``_metadata`` column (file-based sources incl. parquet/Iceberg —
         the engine's replacement for the reference's line/character
         SourceLocation, JsonValue.kt:63-123).
+        The result has at most ``defaultParallelism`` partitions (set
+        ``spark.default.parallelism`` to fix the bound: under dynamic
+        allocation Spark derives it from the executors alive at call time).
         """
         key = F.col(row_key) if isinstance(row_key, str) else row_key
         # The boolean verdict filter runs FIRST, fused into the scan, so
         # passing rows never build any failure struct; the message/explode
-        # work applies to failing rows only. NOT repartitioned (r06
-        # measurement): an exchange of the failing rows cost more than the
-        # 7-task->32-task message-construction win it bought at sf1.0
-        # (count 0.95 s -> 1.37 s with the repartition), and at scale the
-        # scan yields ample splits anyway.
+        # work applies to failing rows only.
         failing = df.filter(~self.passed)
         cols = [
             key.cast("string").alias("row_key"),
@@ -106,7 +108,7 @@ class ValidationPlan:
             cols.append(src.alias("source_file"))
             out_extra = ["source_file"]
         base = failing.select(*cols)
-        return (
+        out = (
             base.select("row_key", F.explode("failures").alias("f"),
                         "partition_id", *out_extra)
             .select(
@@ -120,6 +122,15 @@ class ValidationPlan:
                 *out_extra,
             )
         )
+        # One output partition per task slot, not per input split: a write
+        # pays a fixed writer set-up and commit cost per task whatever its
+        # row count. coalesce is narrow, so the verdict filter, failure
+        # Project and explode stay in one codegen stage with no Exchange,
+        # and spark_partition_id() is evaluated below it, so partition_id
+        # still names the input split. A shuffle (repartition/rebalance)
+        # measured slower here, as it did in r06 for the failing rows;
+        # numbers in CHANGES.md.
+        return out.coalesce(df.sparkSession.sparkContext.defaultParallelism)
 
     def summary(self, df: DataFrame) -> DataFrame:
         """Per-keyword-location violation counts + overall pass rate input.
