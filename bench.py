@@ -26,9 +26,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CLIPS_N = int(os.environ.get("SPARK_GRAFT_CLIPS_N", "20000000"))
 AUDIO_N = int(os.environ.get("SPARK_GRAFT_AUDIO_N", "40000"))
 
-# the headline suite — single source of truth, imported by
-# tools/sf1_evidence.py so the scale-evidence run can never
-# desynchronize from the benchmark (review r05)
+# the headline suite — the single list of driver queries this harness times
 BENCH_QUERIES = [
     "validate_orders_verdict",
     "validate_orders_violations",

@@ -376,8 +376,8 @@ def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
     of a much longer claimed clip passes (the reference synth is truncated
     to the decoded length and SNR compares the common prefix). Default OFF
     because the in-repo fixtures intentionally cap synthesized audio at 2 s
-    (BENCH note) — enable it on production tables, or use the dedicated
-    ``audio_features.duration_consistency_violations`` report.
+    (BENCH note) — enable it on production tables, through
+    ``audio_violations(..., check_duration=True)`` on the violations path.
 
     A clip absent from ``ref_transcripts`` (or a null transcript) gets
     ``transcript_ok=False`` with ``error="missing_reference_transcript"``
@@ -477,9 +477,10 @@ def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
                 errs[idx] = err
                 if sig_len is not None:
                     # null metadata must be *reported*, never kill the
-                    # validator (ADVICE r01)
-                    eff_sr = dec_sr if dec_sr else sr
-                    if dur is None or eff_sr is None or not eff_sr:
+                    # validator (ADVICE r01). A decoder rate of 0, None or
+                    # below 0 is no rate: fall back to the claimed one.
+                    eff_sr = dec_sr if dec_sr and dec_sr > 0 else sr
+                    if dur is None or not eff_sr or eff_sr < 0:
                         errs[idx] = "missing_metadata"
                     else:
                         try:

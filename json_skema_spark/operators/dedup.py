@@ -136,15 +136,6 @@ def minhash_signature_from_hashes(hash_col: Column,
     )
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64,
-                      seed: int = 42) -> Column:
-    """Signature straight from string shingles (see
-    ``minhash_signature_from_hashes``). Deterministic in ``seed``."""
-    return minhash_signature_from_hashes(
-        F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(seed))),
-        num_hashes)
-
-
 _PERSISTED_BASES: list = []
 
 
@@ -281,15 +272,6 @@ def _bucket_pairs(keyed: DataFrame, bucket_cols: list[str],
         .filter(F.col("doc_id_a") < F.col("doc_id_b"))
         .distinct()
     )
-
-
-def ngram_jaccard(df_pairs: DataFrame, left_text: str, right_text: str,
-                  n: int = 3) -> Column:
-    """Exact n-gram Jaccard between two text columns of a pair DataFrame."""
-    a = shingles(F.col(left_text), n)
-    b = shingles(F.col(right_text), n)
-    return (F.size(F.array_intersect(a, b)).cast("double")
-            / F.size(F.array_union(a, b)))
 
 
 def ngram_jaccard_near_duplicates(df: DataFrame, text_col: str, id_col: str,

@@ -121,8 +121,9 @@ def mergeable_profile(df: DataFrame, columns: list[str] | None = None, *,
     max_str, distinct_sketch)`` — counts sum, min/max fold (numerics kept
     as doubles: lexicographic string folding would order "9" > "10"),
     distinct as a mergeable HLL sketch (``hll_union_agg``), one scan total.
-    Quantiles are deliberately absent: sketch-merge quantiles go through
-    ``operators/tdigest.partial_digests``/``merge_digests``.
+    Quantiles are absent: no mergeable quantile sketch rides these parts
+    yet, so ``drift_report`` scores no quantile drift on a merged profile
+    (``profile`` computes quantiles with ``percentile_approx`` in one scan).
     """
     columns = columns or [f.name for f in df.schema.fields
                           if not isinstance(f.dataType, (T.BinaryType, T.ArrayType,
@@ -173,7 +174,7 @@ def mergeable_profile(df: DataFrame, columns: list[str] | None = None, *,
 def merge_profiles(parts: DataFrame) -> DataFrame:
     """Combine ``mergeable_profile`` parts into a global profile with the
     same shape ``drift_report`` consumes (``quantiles`` is null — see
-    ``mergeable_profile``; quantile drift at merged level uses TDigest).
+    ``mergeable_profile``; a merged profile reports no quantile drift).
 
     Exactness: n_rows/null_fraction/min/max are exact regardless of how the
     input was sliced; approx_distinct is a single sketch UNION — equivalent

@@ -35,6 +35,16 @@ from pyspark.sql import types as T
 from json_skema_spark.plans.compile import Compiled, Compiler
 
 
+_APPLY_MODES = ("verdict", "full")
+
+
+def _check_mode(mode: str, allowed: tuple[str, ...]) -> None:
+    # a typo must not fall through to another mode's output
+    if mode not in allowed:
+        raise ValueError(f"unknown mode {mode!r}; expected one of "
+                         + ", ".join(map(repr, allowed)))
+
+
 class ValidationPlan:
     """A schema compiled against a fixed table StructType.
 
@@ -67,6 +77,7 @@ class ValidationPlan:
 
     def apply(self, df: DataFrame, mode: str = "full") -> DataFrame:
         """Add ``passed`` (and in full mode ``failures``) columns."""
+        _check_mode(mode, _APPLY_MODES)
         if mode == "verdict":
             return df.withColumn("passed", self.passed)
         return df.withColumn("passed", self.passed) \
@@ -406,6 +417,7 @@ def validate(df: DataFrame, schema_doc: Any, *, row_key: str | None = None,
     ``validate(df, schema, row_key='clip_id', mode='violations')`` ->
     exploded violations table.
     """
+    _check_mode(mode, (*_APPLY_MODES, "violations"))
     plan = ValidationPlan(Compiler(schema_doc, **compiler_kwargs), df.schema)
     if mode == "violations":
         if row_key is None:

@@ -1,4 +1,4 @@
-"""Loaders for the driver-generated parquet tables (TESTDATA.md).
+"""Input table dispatch for ``runner.py --format``.
 
 Equivalent of the reference's instance sources (string / stream / URI,
 JsonParser.kt:176-190) at table scale: ``spark.read.parquet`` with schema
@@ -10,21 +10,7 @@ API takes a format parameter so an Iceberg table name drops in unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-TABLE_NAMES = ("region", "nation", "customer", "supplier", "part", "orders",
-               "lineitem", "events", "documents", "embeddings")
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str,
-               fmt: str = "parquet") -> DataFrame:
-    if fmt == "parquet":
-        return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if fmt == "iceberg":
-        return spark.read.format("iceberg").load(f"{sf_dir}.{name}")
-    raise ValueError(f"unknown format {fmt!r}")
 
 
 def read_table(spark: SparkSession, path_or_name: str, *,
@@ -69,11 +55,3 @@ def read_table(spark: SparkSession, path_or_name: str, *,
             raise
     raise ValueError(f"unknown format {format!r} (parquet|iceberg)")
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for n in TABLE_NAMES:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -1,6 +1,7 @@
 """Audio decode/SNR invariants + text-analysis functions + clips fixtures."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from json_skema_spark.functions import audio, text
@@ -87,6 +88,33 @@ def test_decoder_registry_pins_integration_contract(spark):
     assert all(r.error == "codec_not_supported:flac" for r in out3.values())
 
 
+@pytest.mark.parametrize("codec, bad_sr", [("srzero", 0), ("nonesr", None),
+                                           ("negsr", -48000)])
+def test_bad_decoder_rate_gets_one_verdict_per_row(spark, codec, bad_sr):
+    """A registered decoder reporting sample rate 0, None or below 0 must
+    leave each row with one verdict on the path runner.validate_table runs,
+    never fail the task. The check falls back to the claimed rate."""
+    ids = [f"clip_00000000000{i}" for i in range(3)]
+    df = spark.createDataFrame(
+        [(cid, codec, bytearray(b"xx"), 48000, 100, "t") for cid in ids],
+        "clip_id string, codec string, bytes binary, sr_hz int, "
+        "dur_ms int, transcript string")
+    audio.register_decoder(codec, lambda buf: (np.zeros(4800), bad_sr, ""))
+    try:
+        checked = audio.pcm_invariant_check(df, check_duration=True).collect()
+        viols = audio.audio_violations(df, check_duration=True).collect()
+    finally:
+        audio.unregister_decoder(codec)
+        audio._KNOWN_CODECS.discard(codec)
+    assert sorted(r.clip_id for r in checked) == ids
+    assert sorted(r.row_key for r in viols) == ids
+    for r in checked:
+        # silence against the claimed 48 kHz reference: SNR is exactly
+        # 0 dB, and 4800 samples at 48 kHz are the claimed 100 ms
+        assert not r.invariant_ok
+        assert r.snr_db == 0.0 and r.error == ""
+
+
 def test_transcript_mismatch_detected(spark):
     df = clips.clips_df(spark, 40, inject=False)
     ref = df.select("clip_id",
@@ -144,9 +172,6 @@ def test_null_metadata_reported_not_raised(spark):
     # null dur_ms rows are unverifiable -> reported; null sr_hz rows still
     # verify via the decoded sample rate (dec_sr wins over claimed sr_hz)
     assert missing and all(not r.invariant_ok for r in missing)
-    # duration-consistency check also survives the same dirty rows
-    from json_skema_spark.functions import audio_features
-    audio_features.duration_consistency_violations(dirty).collect()
 
 
 def test_pii_scrub_and_counts(spark):

@@ -190,69 +190,6 @@ _f32 = st.floats(min_value=-1000.0, max_value=1000.0, allow_nan=False,
                  width=32)
 
 
-# ------------------------------------------ 4. t-digest sketch guarantees
-
-def _rank_band(data: np.ndarray, value: float) -> tuple[float, float]:
-    """The normalized rank interval a value occupies in sorted data."""
-    n = len(data)
-    return (float(np.sum(data < value)) / n, float(np.sum(data <= value)) / n)
-
-
-@settings(max_examples=200, **SETTINGS)
-@given(data=st.lists(st.floats(min_value=-1e6, max_value=1e6,
-                               allow_nan=False), min_size=1, max_size=400),
-       delta=st.sampled_from([8, 20, 50, 200]),
-       probs=st.lists(st.floats(min_value=0.0, max_value=1.0),
-                      min_size=1, max_size=5))
-def test_tdigest_rank_error_bounded(data, delta, probs):
-    """Single-level compression: every estimated quantile sits within a
-    rank band of ~bin-width (1/delta) of the requested prob — the accuracy
-    contract drift scoring relies on (operators/tdigest.py docstring)."""
-    from json_skema_spark.operators.tdigest import (_compress,
-                                                    quantiles_from_digest)
-    x = np.asarray(data, dtype=float)
-    m, w = _compress(x, np.ones(len(x), dtype=np.int64), delta)
-    assert int(w.sum()) == len(x)                      # weight conservation
-    assert m.min() >= x.min() and m.max() <= x.max()   # means stay in range
-    err = 3.0 / delta + 2.0 / len(x)
-    for p, q in zip(probs, quantiles_from_digest(m, w, probs)):
-        lo, hi = _rank_band(x, q)
-        assert lo - err <= p <= hi + err, (
-            f"p={p} est={q} rank_band=({lo},{hi}) err={err} n={len(x)} "
-            f"delta={delta}")
-
-
-@settings(max_examples=150, **SETTINGS)
-@given(data=st.lists(st.floats(min_value=-1e6, max_value=1e6,
-                               allow_nan=False), min_size=2, max_size=400),
-       n_parts=st.integers(2, 6),
-       delta=st.sampled_from([20, 50, 200]),
-       probs=st.lists(st.floats(min_value=0.0, max_value=1.0),
-                      min_size=1, max_size=5))
-def test_tdigest_partition_merge_rank_error_bounded(data, n_parts, delta,
-                                                    probs):
-    """Two-level path (per-partition compress -> merge): the resumable
-    profiling claim — partition count and order don't break the bound,
-    only widen it by one compression level."""
-    from json_skema_spark.operators.tdigest import (_compress, merge_digests,
-                                                    quantiles_from_digest)
-    x = np.asarray(data, dtype=float)
-    centroids = []
-    for part in np.array_split(x, min(n_parts, len(x))):
-        if len(part) == 0:
-            continue
-        m, w = _compress(part, np.ones(len(part), dtype=np.int64), delta)
-        centroids.extend(zip(m.tolist(), w.tolist()))
-    m, w = merge_digests(centroids, delta=delta)
-    assert int(w.sum()) == len(x)
-    err = 6.0 / delta + 2.0 / len(x)
-    for p, q in zip(probs, quantiles_from_digest(m, w, probs)):
-        lo, hi = _rank_band(x, q)
-        assert lo - err <= p <= hi + err, (
-            f"p={p} est={q} rank_band=({lo},{hi}) err={err} n={len(x)} "
-            f"parts={n_parts} delta={delta}")
-
-
 @settings(max_examples=300, **SETTINGS)
 @given(one=st.lists(_f32, min_size=1, max_size=17),
        dec=st.lists(_f32, min_size=0, max_size=100))

@@ -252,30 +252,6 @@ def test_scrubber_replacement_with_dollar_sign(spark):
     assert r"<\MAIL>" in out2 and "me@x.test" not in out2
 
 
-def test_audio_features_sr_zero_decoder_contained(spark):
-    """A third-party decoder reporting sample rate 0 must degrade to empty
-    rows, never ZeroDivisionError the task (the registry contract)."""
-    import numpy as np
-
-    from json_skema_spark.functions import audio as audio_fn
-    from json_skema_spark.functions.audio_features import (extract_features,
-                                                           resample_clips,
-                                                           sample_frames)
-    audio_fn.register_decoder("srzero", lambda buf: (np.ones(100), 0, ""))
-    try:
-        df = spark.createDataFrame(
-            [("c1", bytearray(b"xx"), "srzero")],
-            "clip_id string, bytes binary, codec string")
-        feats = extract_features(df).collect()
-        assert feats[0].n_frames == 0
-        res = resample_clips(df, target_sr=8000).collect()
-        assert res[0].n_samples == 0
-        assert sample_frames(df).count() == 0
-    finally:
-        audio_fn.unregister_decoder("srzero")
-        audio_fn._KNOWN_CODECS.discard("srzero")
-
-
 def test_transcripts_ref_inject_matches_clips(spark):
     """inject=False ref against inject=False clips: ids align (no spurious
     orphans from injection-consumed rng draws), transcripts agree except

@@ -1,5 +1,5 @@
 """Regressions for the round-5 second review pass (least-revisited files:
-render, suite loader, util, tdigest, validate_stream)."""
+render, suite loader, util, validate_stream)."""
 
 import json
 import os
@@ -62,22 +62,6 @@ def test_suite_format_dir_is_segment_matched(tmp_path):
     assert by_file["not-optional/format/date.json"].is_format is False
     assert "optional/format/sub/date.json" in by_file
     assert by_file["optional/format/sub/date.json"].is_format is True
-
-
-def test_tdigest_raises_on_non_numeric_values(spark):
-    """Silent errors='coerce' dropped unparseable values and returned
-    plausible quantiles over an unannounced subset."""
-    from json_skema_spark.operators.tdigest import tdigest_quantiles
-
-    bad = spark.createDataFrame(
-        [("1",), ("2",), ("oops",), (None,)], "x string")
-    with pytest.raises(Exception, match="non-numeric|unparseable"):
-        tdigest_quantiles(bad, "x", [0.5])
-    # numeric-as-string with only nulls as gaps still works
-    ok = spark.createDataFrame(
-        [("1",), ("2",), ("3",), (None,)], "x string")
-    (q,) = tdigest_quantiles(ok, "x", [0.5])
-    assert q == pytest.approx(2.0)
 
 
 DOC = {
@@ -293,25 +277,3 @@ def test_merge_profiles_scale0_decimal_exact_past_2_53(spark):
               merge_profiles(mergeable_profile(df, ["d"])).collect()}
     assert merged["d"]["min_value"] == exact["d"]["min_value"] == str(big)
     assert merged["d"]["max_value"] == exact["d"]["max_value"] == str(big + 1)
-
-
-def test_audio_quality_stats_negative_sr_degrades(spark):
-    """A registered decoder reporting sr=-1 must degrade the row like the
-    sibling UDFs (r04 containment guard), not compute 1-sample frames."""
-    import numpy as np
-
-    from json_skema_spark.functions import audio
-    from json_skema_spark.functions.audio_features import audio_quality_stats
-
-    def bad_decoder(buf):
-        return np.zeros(100), -1, ""
-
-    audio.register_decoder("negsr", bad_decoder)
-    try:
-        df = spark.createDataFrame([("c1", "negsr", bytearray(b"x"))],
-                                   "clip_id string, codec string, bytes binary")
-        rows = audio_quality_stats(df).collect()
-        assert rows[0]["decode_ok"] is False
-        assert rows[0]["silence_ratio"] is None
-    finally:
-        audio.unregister_decoder("negsr")

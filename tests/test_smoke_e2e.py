@@ -1,9 +1,10 @@
 """End-to-end slice (SURVEY.md §7): compile the clips schema, validate a tiny
 DataFrame, check verdicts + violation lineage."""
 
+import pytest
 from pyspark.sql import types as T
 
-from json_skema_spark import compile_schema
+from json_skema_spark import compile_schema, validate
 
 CLIPS_SCHEMA = {
     "type": "object",
@@ -76,3 +77,31 @@ def test_verdict_counts(spark):
     plan = compile_schema(CLIPS_SCHEMA, df.schema)
     counts = {r.passed: r.n_rows for r in plan.verdict_counts(df).collect()}
     assert counts == {True: 1, False: 1}
+
+
+def test_unknown_mode_raises(spark):
+    """A mode typo raises instead of falling through to another mode's
+    output; the valid modes keep theirs."""
+    df = _mk(spark, [("clip_0000000000ab", b"x", 16000, 1200, "flac", "t"),
+                     ("nope", b"x", 16000, 1200, "flac", "t")])
+    plan = compile_schema(CLIPS_SCHEMA, df.schema)
+    for typo in ("verdicts", "Verdict", "violation", "", None):
+        with pytest.raises(ValueError, match="'verdict', 'full'$"):
+            plan.apply(df, mode=typo)
+        with pytest.raises(ValueError, match="'verdict', 'full', 'violations'"):
+            validate(df, CLIPS_SCHEMA, row_key="clip_id", mode=typo)
+    with pytest.raises(ValueError, match="unknown mode 'violations'"):
+        plan.apply(df, mode="violations")
+
+    passed = {"clip_0000000000ab": True, "nope": False}
+    verdict = validate(df, CLIPS_SCHEMA, mode="verdict")
+    assert verdict.columns == df.columns + ["passed"]
+    assert {r.clip_id: r.passed for r in verdict.collect()} == passed
+    full = validate(df, CLIPS_SCHEMA, mode="full")
+    assert full.columns == df.columns + ["passed", "failures"]
+    assert {r.clip_id: [f.keyword for f in r.failures]
+            for r in full.collect()} == {"clip_0000000000ab": [],
+                                         "nope": ["pattern"]}
+    viols = validate(df, CLIPS_SCHEMA, row_key="clip_id", mode="violations")
+    assert [(v.row_key, v.keyword) for v in viols.collect()] == \
+        [("nope", "pattern")]
