@@ -162,7 +162,10 @@ _DECODERS: dict[str, Decoder] = {
     # container; absence reports codec_not_supported, never a crash.
 }
 
-_KNOWN_CODECS = {"pcm_s16le", "flac", "opus"}
+# A codec without a decoder is known (codec_not_supported) iff it is one of
+# these; any other codec is registered or unknown. A constant, so an
+# executor's re-imported module agrees with the process that built the plan.
+_BUILTIN_CODECS = frozenset({"pcm_s16le", "flac", "opus"})
 
 
 def register_decoder(codec: str, fn: Decoder) -> None:
@@ -170,7 +173,6 @@ def register_decoder(codec: str, fn: Decoder) -> None:
     ``(float signal in [-1,1] | None, sr_hz, error_string)``; exceptions it
     leaks are contained per row as ``decode_error:<type>`` verdicts."""
     _DECODERS[codec] = fn
-    _KNOWN_CODECS.add(codec)
 
 
 def unregister_decoder(codec: str) -> None:
@@ -228,29 +230,20 @@ def register_optional_decoders() -> list[str]:
     return registered
 
 
-def _decoder_snapshot() -> tuple[dict[str, Decoder], frozenset]:
-    """Value-copy of (decoders, known codecs) for capture into a UDF
-    closure. The KNOWN set must ride the snapshot too: reading the
-    module-global on an executor (whose re-imported module only has the
-    builtins) would report 'unknown_codec' where the driver says
-    'codec_not_supported' — inconsistent verdicts for the same row
-    (review r04)."""
-    return dict(_DECODERS), frozenset(_KNOWN_CODECS)
+def _decoder_snapshot() -> dict[str, Decoder]:
+    """Value-copy of the registry for capture into a UDF closure."""
+    return dict(_DECODERS)
 
 
-def _decode_with(decoders, codec: Any,
+def _decode_with(decoders: dict[str, Decoder], codec: Any,
                  buf: Any) -> tuple[np.ndarray | None, int, str]:
-    if isinstance(decoders, tuple):
-        decoders, known = decoders
-    else:  # bare-dict callers (driver-side dispatch)
-        known = _KNOWN_CODECS
     fn = decoders.get(codec)
     if fn is not None:
         try:
             return fn(buf)
         except Exception as exc:  # decoder bug must not kill the task
             return None, 0, f"decode_error:{type(exc).__name__}"
-    if codec in known:
+    if codec in _BUILTIN_CODECS:
         return None, 0, f"codec_not_supported:{codec}"
     return None, 0, f"unknown_codec:{codec}"
 
@@ -303,12 +296,20 @@ def snr_db_periodic(one: np.ndarray, decoded: np.ndarray) -> float:
     the audio check is Python-worker memory-bandwidth-bound, so bytes
     touched per clip IS the throughput (VERDICT r04 #2).
 
+    ``decoded`` is a float signal in [-1, 1] or RAW int16 PCM samples. An
+    int16 chunk is converted to float64 / 32767 inside the loop, so the
+    full-length float64 signal is never materialized (a 2 s 48 kHz clip is
+    192 KB of int16 but 768 KB of float64). The result is bit-identical to
+    passing ``s16.astype(float64) / 32767``: astype and divide are
+    elementwise, so converting a slice equals slicing the conversion.
+
     Numerically: noise values are IDENTICAL to ``snr_db`` against the
     tiled reference (same float64 upcast of the same float32 period
     samples); the power sums use per-chunk ``np.dot`` instead of one
     global pairwise sum — different rounding in the last ulp, orders of
     magnitude below any verdict threshold. ``len(decoded)`` may be any
     length >= 0; a final partial chunk is handled exactly."""
+    decoded = np.asarray(decoded)
     n = len(decoded)
     if n == 0:
         return float("-inf")
@@ -316,43 +317,15 @@ def snr_db_periodic(one: np.ndarray, decoded: np.ndarray) -> float:
     p = len(one64)
     if p == 0:  # empty reference: zero signal power (range step 0 guard)
         return float("-inf")
+    pcm16 = decoded.dtype == np.dtype("<i2")
     one_sq = float(np.dot(one64, one64))
     p_sig = 0.0
     p_noise = 0.0
     for start in range(0, n, p):
         chunk = decoded[start:start + p]
-        ref = one64 if len(chunk) == p else one64[:len(chunk)]
-        p_sig += one_sq if len(chunk) == p else float(np.dot(ref, ref))
-        noise = ref - chunk
-        p_noise += float(np.dot(noise, noise))
-    if p_noise == 0.0:
-        return float("inf")
-    return 10.0 * np.log10(p_sig / p_noise) if p_sig > 0 else float("-inf")
-
-
-def snr_db_periodic_i16(one: np.ndarray, s16: np.ndarray, n_cmp: int) -> float:
-    """``snr_db_periodic`` taking the RAW int16 samples: each period-sized
-    chunk is converted int16 -> float64 -> /32767 inside the loop, so the
-    full-length float64 signal is never materialized (a 2 s 48 kHz clip is
-    192 KB of int16 but 768 KB of float64; the audio check is memory-
-    bandwidth-bound at high core counts, so bytes touched per clip IS the
-    throughput). Bit-identical to ``snr_db_periodic(one, sig[:n_cmp])``
-    with ``sig = s16.astype(float64)/32767``: astype and divide are
-    elementwise, so converting a slice equals slicing the conversion, and
-    the accumulation order is unchanged."""
-    n = min(n_cmp, len(s16))
-    if n == 0:
-        return float("-inf")
-    one64 = np.asarray(one, dtype=np.float64)
-    p = len(one64)
-    if p == 0:
-        return float("-inf")
-    one_sq = float(np.dot(one64, one64))
-    p_sig = 0.0
-    p_noise = 0.0
-    for start in range(0, n, p):
-        chunk = s16[start:min(start + p, n)].astype(np.float64)
-        chunk /= 32767.0
+        if pcm16:
+            chunk = chunk.astype(np.float64)
+            chunk /= 32767.0
         ref = one64 if len(chunk) == p else one64[:len(chunk)]
         p_sig += one_sq if len(chunk) == p else float(np.dot(ref, ref))
         noise = ref - chunk
@@ -408,7 +381,7 @@ def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
         # Here each clip's bytes are a zero-copy memoryview slice of the
         # Arrow data buffer, the WAV parse yields an int16 VIEW, and the
         # int16 -> float64 conversion happens chunk-wise inside
-        # snr_db_periodic_i16 — each payload byte is touched once and the
+        # snr_db_periodic — each payload byte is touched once and the
         # peak per-clip allocation is one period, not the whole clip.
         # Verdicts/snr are bit-identical (elementwise conversion commutes
         # with slicing; accumulation order unchanged).
@@ -466,14 +439,13 @@ def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
                 sr, dur, tr, rtr = srs[idx], durs[idx], trs[idx], rtrs[idx]
                 buf = None if null_mask[idx] \
                     else data_mv[offs[idx]:offs[idx + 1]]
-                fast = decoders[0].get(codec) is decode_wav_pcm16
-                if fast:
-                    s16, dec_sr, err = _parse_wav_pcm16(buf)
-                    sig_len = None if s16 is None else len(s16)
+                if decoders.get(codec) is decode_wav_pcm16:
+                    # the raw int16 view; snr_db_periodic converts it
+                    sig, dec_sr, err = _parse_wav_pcm16(buf)
                 else:
                     sig, dec_sr, err = _decode_with(
                         decoders, codec, None if buf is None else bytes(buf))
-                    sig_len = None if sig is None else len(sig)
+                sig_len = None if sig is None else len(sig)
                 errs[idx] = err
                 if sig_len is not None:
                     # null metadata must be *reported*, never kill the
@@ -514,8 +486,7 @@ def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
                             one = synth_reference_signal(
                                 i, sr_i, dur_i, max_samples=base_n,
                                 dtype=np.float32).astype(np.float64)
-                        s = snr_db_periodic_i16(one, s16, n_cmp) if fast \
-                            else snr_db_periodic(one, sig[:n_cmp])
+                        s = snr_db_periodic(one, sig[:n_cmp])
                         snr[idx] = s
                         ok[idx] = s >= min_snr_db
                         if check_duration:

@@ -234,34 +234,3 @@ def merge_profiles(parts: DataFrame) -> DataFrame:
         F.coalesce(max_both, F.col("max_str")).alias("max_value"),
         "approx_distinct",
         F.lit(None).cast("array<double>").alias("quantiles"))
-
-
-def hll_sketches(df: DataFrame, columns: list[str], *,
-                 lg_k: int = 12) -> DataFrame:
-    """Mergeable HLL sketches per column (partial+final pattern: sketch per
-    partition-run here, ``hll_union_agg`` across runs — the incremental-
-    profile path for checkpointed resume). Single scan: all sketches in one
-    aggregate, unpivoted to rows."""
-    wide = df.groupBy().agg(*[
-        F.hll_sketch_agg(quoted_col(name).cast("string"), F.lit(lg_k))
-        .alias(f"{name}__sketch") for name in columns])
-    structs = F.array(*[
-        F.struct(F.lit(name).alias("column_name"),
-                 quoted_col(f"{name}__sketch").alias("sketch"))
-        for name in columns])
-    return wide.select(F.explode(structs).alias("s")).select("s.column_name",
-                                                             "s.sketch")
-
-
-def merge_hll(sketches: DataFrame) -> DataFrame:
-    """Union per-column sketches (e.g. across resumed runs) -> estimates.
-
-    ``allowDifferentLgConfigK=True`` (matching ``merge_profiles``): the
-    advertised resume path unions sketches from DIFFERENT runs, and a
-    later run that changed ``lg_k`` must degrade to the coarser sketch,
-    not fail the merge job (review r04)."""
-    return (
-        sketches.groupBy("column_name")
-        .agg(F.hll_sketch_estimate(
-            F.hll_union_agg("sketch", F.lit(True))).alias("approx_distinct"))
-    )

@@ -43,6 +43,7 @@ import math as _math
 import re as _re
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Any, Callable
 
 from pyspark.sql import Column
@@ -111,13 +112,13 @@ def _any_missing(inst: Inst, names: list) -> Column:
     """True iff some of ``names`` is not present on ``inst`` (never NULL)."""
     cond = F.lit(False)
     for n in names:
-        cond = cond | ~inst.present(n)
+        cond = cond | inst.missing(n)
     return cond
 
 
 def _missing_names(inst: Inst, names: list) -> Column:
     """The names not present on ``inst``, comma-joined in schema order."""
-    return F.concat_ws(", ", *[F.when(~inst.present(n), F.lit(n))
+    return F.concat_ws(", ", *[F.when(inst.missing(n), F.lit(n))
                                for n in names])
 
 
@@ -307,6 +308,12 @@ class Inst:
     ``col is None`` only at the table root, where properties bind to real
     DataFrame columns (keeps parquet column pruning intact — a predicate on
     ``sr_hz`` must not force a read of ``bytes``).
+
+    One member rule serves every object keyword, whatever holds the object
+    (struct field, map entry or variant member): a member is present iff
+    its value is not absent by ``is_absent`` — not SQL NULL and, unless
+    ``strict``, not a JSON null. ``missing`` applies it to one named
+    member, ``members`` to every entry of a map.
     """
 
     col: Column | None
@@ -322,16 +329,12 @@ class Inst:
     strict: bool = False
 
     def is_absent(self) -> Column:
+        """Whether this value counts as absent (never NULL)."""
         if self.root:
             return F.lit(False)
         if _is_variant(self.dtype) and not self.strict:
             return vt.is_absent(self.col)
         return self.col.isNull()
-
-    def value(self) -> Column:
-        if self.root:
-            raise CompileError("table root has no single value column")
-        return self.col
 
     # -- object access -----------------------------------------------------
     def field_names(self) -> list[str]:
@@ -355,36 +358,39 @@ class Inst:
                         loc, strict=self.strict)
         raise CompileError(f"cannot access property {name!r} on {self.dtype}")
 
-    def present(self, name: str) -> Column:
-        if _is_variant(self.dtype):
-            c = vt.get_field(self.col, name)
-            if self.strict:
-                return c.isNotNull()  # JSON null member IS present
-            return c.isNotNull() & ~vt.is_json_null(c)
-        if isinstance(self.dtype, T.StructType):
-            if name not in self.dtype.fieldNames():
-                return F.lit(False)
-            c = self.child(name).col
-            if _is_variant(self.dtype[name].dataType) and not self.strict:
-                # a JSON-null variant member is absent under the engine's
-                # SQL convention — same rule as the MapType branch below
-                return c.isNotNull() & ~F.coalesce(vt.is_json_null(c),
-                                                   F.lit(False))
-            return c.isNotNull()
-        if isinstance(self.dtype, T.MapType):
-            has = F.coalesce(F.map_contains_key(self.col, F.lit(name)), F.lit(False))
-            if _is_variant(self.dtype.valueType) and not self.strict:
-                val = F.element_at(self.col, F.lit(name))
-                return has & ~F.coalesce(vt.is_json_null(val), F.lit(False))
-            if not _is_variant(self.dtype.valueType):
-                # non-variant map values: SQL NULL = absent, matching the
-                # struct branch above — a NULL-valued key previously
-                # counted as PRESENT here, so the same logical document
-                # got opposite required/dependent* verdicts by physical
-                # column type (review r05c)
-                return has & F.element_at(self.col, F.lit(name)).isNotNull()
-            return has
-        return F.lit(False)
+    def missing(self, name: str) -> Column:
+        """Whether member ``name`` is not present (never NULL)."""
+        if isinstance(self.dtype, T.StructType) \
+                and name not in self.dtype.fieldNames():
+            return F.lit(True)
+        return self.child(name).is_absent()
+
+    def members(self, where: Callable[[Column], Column] | None = None
+                ) -> Column:
+        """A map instance's present members, as a map; with ``where``,
+        only those whose key satisfies it."""
+        val_t = self.dtype.valueType
+
+        def keep(k: Column, v: Column) -> Column:
+            cond = ~Inst(v, val_t, self.loc, strict=self.strict).is_absent()
+            return cond if where is None else cond & where(k)
+        return F.map_filter(self.col, keep)
+
+    # -- views of a variant value -------------------------------------------
+    # Object and array keywords apply to a variant through a typed view,
+    # gated on the value being of that kind; each is built once per Inst.
+    @cached_property
+    def object_view(self) -> tuple["Inst", Column]:
+        view = Inst(F.try_variant_get(self.col, "$", "map<string,variant>"),
+                    T.MapType(T.StringType(), _VARIANT_TYPES[0]()), self.loc,
+                    strict=self.strict)
+        return view, F.coalesce(vt.is_object(self.col), F.lit(False))
+
+    @cached_property
+    def array_view(self) -> tuple["Inst", Column]:
+        view = Inst(vt.as_array(self.col), T.ArrayType(_VARIANT_TYPES[0]()),
+                    self.loc, strict=self.strict)
+        return view, F.coalesce(vt.is_array(self.col), F.lit(False))
 
 
 # --------------------------------------------------------------------------
@@ -772,37 +778,15 @@ class Compiler:
         if isinstance(inst.dtype, (T.StructType, T.MapType)):
             self._object_keywords(node, inst, kw_loc, dyn, scope, depth, res, add)
         elif _is_variant(inst.dtype) and any(k in node for k in _OBJ_KW):
-            # runtime dispatch: apply object keywords through a
-            # map<string,variant> view, gated on the value being an object
-            minst = Inst(F.try_variant_get(inst.col, "$", "map<string,variant>"),
-                         T.MapType(T.StringType(), _VARIANT_TYPES[0]()), inst.loc,
-                         strict=inst.strict)
-            sub_parts: list[Compiled] = []
-            sub_res = NodeResult(Compiled.ok())
-            self._object_keywords(node, minst, kw_loc, dyn, scope, depth,
-                                  sub_res, sub_parts.append)
-            gate = F.coalesce(vt.is_object(inst.col), F.lit(False))
-            if sub_parts:
-                add(conj(sub_parts).gated(gate))
-            # coverage from the view flows to this node's unevaluated* and,
-            # through merge_child in parents, to enclosing applicators
-            res.merge_child(sub_res, gate)
+            self._through_view(self._object_keywords, inst.object_view, node,
+                               kw_loc, dyn, scope, depth, res, add)
 
         # ---- array keywords ---------------------------------------------
         if isinstance(inst.dtype, T.ArrayType):
             self._array_keywords(node, inst, kw_loc, dyn, scope, depth, res, add)
         elif _is_variant(inst.dtype) and any(k in node for k in _ARR_KW):
-            ainst = Inst(vt.as_array(inst.col),
-                         T.ArrayType(_VARIANT_TYPES[0]()), inst.loc,
-                         strict=inst.strict)
-            sub_parts = []
-            sub_res = NodeResult(Compiled.ok())
-            self._array_keywords(node, ainst, kw_loc, dyn, scope, depth,
-                                 sub_res, sub_parts.append)
-            gate = F.coalesce(vt.is_array(inst.col), F.lit(False))
-            if sub_parts:
-                add(conj(sub_parts).gated(gate))
-            res.merge_child(sub_res, gate)
+            self._through_view(self._array_keywords, inst.array_view, node,
+                               kw_loc, dyn, scope, depth, res, add)
 
         # ---- combinators -------------------------------------------------
         self._combinators(node, inst, kw_loc, dyn, scope, depth, res, add)
@@ -819,15 +803,9 @@ class Compiler:
                 uneval_parts.append(self._kw_unevaluated_properties_dynamic(
                     sub, inst, kw_loc, dyn, scope, depth, res))
             elif _is_variant(inst.dtype):
-                # runtime dispatch: coverage algebra over the object's
-                # map<string,variant> view, gated on the value being an object
-                minst = Inst(F.try_variant_get(inst.col, "$", "map<string,variant>"),
-                             T.MapType(T.StringType(), _VARIANT_TYPES[0]()),
-                             inst.loc, strict=inst.strict)
-                part = self._kw_unevaluated_properties_dynamic(
-                    sub, minst, kw_loc, dyn, scope, depth, res)
-                gate = F.coalesce(vt.is_object(inst.col), F.lit(False))
-                uneval_parts.append(part.gated(gate))
+                minst, gate = inst.object_view
+                uneval_parts.append(self._kw_unevaluated_properties_dynamic(
+                    sub, minst, kw_loc, dyn, scope, depth, res).gated(gate))
             # unevaluatedProperties evaluates every property not otherwise
             # covered -> together with prior keywords, EVERYTHING is now
             # evaluated; parents merging this node's annotations must see
@@ -839,13 +817,9 @@ class Compiler:
                 uneval_parts.append(self._kw_unevaluated_items(
                     sub, inst, kw_loc, dyn, scope, depth, res))
             elif _is_variant(inst.dtype):
-                ainst = Inst(vt.as_array(inst.col),
-                             T.ArrayType(_VARIANT_TYPES[0]()), inst.loc,
-                             strict=inst.strict)
-                part = self._kw_unevaluated_items(
-                    sub, ainst, kw_loc, dyn, scope, depth, res)
-                gate = F.coalesce(vt.is_array(inst.col), F.lit(False))
-                uneval_parts.append(part.gated(gate))
+                ainst, gate = inst.array_view
+                uneval_parts.append(self._kw_unevaluated_items(
+                    sub, ainst, kw_loc, dyn, scope, depth, res).gated(gate))
             res.rest_cov.append(F.lit(True))  # §11.2: all items now evaluated
         if uneval_parts:
             uneval = conj(uneval_parts)
@@ -859,6 +833,22 @@ class Compiler:
         else:
             res.compiled = base
         return res
+
+    def _through_view(self, keywords, view: tuple[Inst, Column], node: dict,
+                      kw_loc: str, dyn: str, scope: tuple, depth: int,
+                      res: NodeResult, add) -> None:
+        """Apply one keyword family (``_object_keywords`` or
+        ``_array_keywords``) to a variant's typed ``view``, gated on the
+        value being of the view's kind. Coverage from the view flows to this
+        node's unevaluated* and, through merge_child in parents, to
+        enclosing applicators."""
+        vinst, gate = view
+        parts: list[Compiled] = []
+        sub_res = NodeResult(Compiled.ok())
+        keywords(node, vinst, kw_loc, dyn, scope, depth, sub_res, parts.append)
+        if parts:
+            add(conj(parts).gated(gate))
+        res.merge_child(sub_res, gate)
 
     def _ref_loc(self, ref: str, kw_loc: str, target: Any = None) -> str:
         """keyword_location base for a $ref target: the target's REAL
@@ -890,33 +880,22 @@ class Compiler:
                       "array": vt.is_array, "object": vt.is_object,
                       # strict: only an explicit JSON null has type "null"
                       "null": vt.is_json_null if inst.strict else vt.is_absent}
+            # LENIENT coercion (Validator.kt:324-365): a variant scalar
+            # coerces by the typed-column rules of its runtime kind
+            scalars = [] if not self.lenient else [
+                (is_k(inst.col), Inst(as_k(inst.col), dt, inst.loc), actual)
+                for is_k, as_k, dt, actual in (
+                    (vt.is_string, vt.as_string, T.StringType(), "string"),
+                    (vt.is_boolean, vt.as_boolean, T.BooleanType(), "boolean"),
+                    (vt.is_number, vt.as_double, T.DoubleType(), "number"))]
             ok = F.lit(False)
             for t in types:
                 # unknown type name -> never matches (same as the typed
                 # path), not a KeyError escaping the CompileError contract
                 check = checks.get(t, lambda _c: F.lit(False))
                 cond = check(inst.col)
-                if self.lenient:
-                    # LENIENT primitive coercion (Validator.kt:324-365) on
-                    # the VARIANT path too — previously implemented only
-                    # for typed columns, so lenient=True was silently
-                    # ignored on open documents (review r05c); mirrors
-                    # _type_matches' typed-path rules exactly
-                    is_s = F.coalesce(vt.is_string(inst.col), F.lit(False))
-                    sv = vt.as_string(inst.col)
-                    if t == "number":
-                        cond = cond | (is_s & sv.try_cast("double").isNotNull())
-                    elif t == "integer":
-                        dd = sv.try_cast("double")
-                        cond = cond | (is_s & dd.isNotNull()
-                                       & (dd == F.floor(dd)))
-                    elif t == "boolean":
-                        cond = cond | (is_s & F.lower(sv).isin(
-                            "true", "false", "yes", "no", "on", "off"))
-                    elif t == "string":
-                        cond = cond | F.coalesce(
-                            vt.is_number(inst.col) | vt.is_boolean(inst.col),
-                            F.lit(False))
+                for is_k, typed, actual in scalars:
+                    cond = cond | (is_k & self._type_matches(t, typed, actual))
                 ok = ok | F.coalesce(cond, F.lit(False))
             prefix = (f"expected type: {types[0]}" if isinstance(tval, str)
                       else "expected type: one of " + ", ".join(types))
@@ -986,7 +965,7 @@ class Compiler:
         numeric type promotion in ``==`` gives the same value-based result."""
         col, dtype = inst.col, inst.dtype
         if _is_variant(dtype):
-            return self._variant_equals(col, value, strict=inst.strict)
+            return self._variant_equals(inst, value)
         if value is None:
             return col.isNull()
         if isinstance(value, bool):
@@ -1066,31 +1045,23 @@ class Compiler:
                 # properties absent from the const must be absent in the row
                 for name in dtype.fieldNames():
                     if name not in value:
-                        out = out & ~inst.present(name)
+                        out = out & inst.missing(name)
                 return out
             if isinstance(dtype, T.MapType):
-                if _is_variant(dtype.valueType):
-                    cnt = F.size(F.map_keys(col))
-                else:
-                    # non-variant: NULL-valued keys are absent and must
-                    # not count toward const/enum object size (review r05c)
-                    cnt = F.size(F.filter(F.map_values(col),
-                                          lambda v: v.isNotNull()))
-                out = cnt == len(value)
+                out = F.size(inst.members()) == len(value)
                 for k, v in value.items():
-                    out = out & F.coalesce(self._value_equals(
-                        Inst(F.element_at(col, F.lit(k)), dtype.valueType,
-                             F.lit("")), v), F.lit(False))
+                    out = out & F.coalesce(
+                        self._value_equals(inst.child(k), v), F.lit(False))
                 return out
             return F.lit(False)
         raise CompileError(f"unsupported const/enum value: {value!r}")
 
-    def _variant_equals(self, col: Column, value: Any, *,
-                        strict: bool = False) -> Column:
+    def _variant_equals(self, inst: Inst, value: Any) -> Column:
         """Deep equality for runtime-dispatched variant values."""
+        col = inst.col
         if value is None:
             # strict: const/enum null matches only an explicit JSON null
-            return vt.is_json_null(col) if strict else vt.is_absent(col)
+            return vt.is_json_null(col) if inst.strict else vt.is_absent(col)
         if isinstance(value, bool):
             return vt.is_boolean(col) & (vt.as_boolean(col) == F.lit(value))
         if _is_number(value):
@@ -1137,19 +1108,16 @@ class Compiler:
             arr = vt.as_array(col)
             out = vt.is_array(col) & (F.size(arr) == len(value))
             for i, v in enumerate(value):
-                out = out & F.coalesce(
-                    self._variant_equals(F.element_at(arr, i + 1), v,
-                                         strict=strict), F.lit(False))
+                out = out & F.coalesce(self._variant_equals(
+                    Inst(F.element_at(arr, i + 1), inst.dtype, inst.loc,
+                         strict=inst.strict), v), F.lit(False))
             return out
         if isinstance(value, dict):
-            m = F.try_variant_get(col, "$", "map<string,variant>")
-            keys = (F.map_keys(m) if strict else
-                    F.map_keys(F.map_filter(m, lambda _, v: ~vt.is_json_null(v))))
-            out = vt.is_object(col) & (F.size(keys) == len(value))
+            obj, is_obj = inst.object_view
+            out = is_obj & (F.size(obj.members()) == len(value))
             for k, v in value.items():
                 out = out & F.coalesce(
-                    self._variant_equals(vt.get_field(col, k), v,
-                                         strict=strict), F.lit(False))
+                    self._variant_equals(inst.child(k), v), F.lit(False))
             return out
         raise CompileError(f"unsupported const/enum value: {value!r}")
 
@@ -1410,7 +1378,7 @@ class Compiler:
             # filter(array(...), lambda) is a CodegenFallback expression
             # (interpreted, one array allocation per row) and would drop
             # the whole violations() Project out of whole-stage codegen.
-            # present() is never-null on every instance kind, so the OR
+            # missing() is never-null on every instance kind, so the OR
             # chain is exactly "some name is missing"; concat_ws skips the
             # NULLs that stand for present names.
             add(Compiled.simple(
@@ -1442,31 +1410,21 @@ class Compiler:
             allowed = list(prop_schemas)
             patterns = list(pattern_props)
 
-            def residual_keys(col):
-                def is_residual(k, v):
-                    cond = ~k.isin(*allowed) if allowed else F.lit(True)
-                    for pat in patterns:
-                        cond = cond & ~k.rlike(pat)
-                    if _is_variant(inst.dtype.valueType) and not inst.strict:
-                        # JSON-null members are absent (engine convention,
-                        # same as required/minProperties above)
-                        cond = cond & ~vt.is_json_null(v)
-                    elif not _is_variant(inst.dtype.valueType):
-                        # non-variant: SQL NULL = absent (review r05c)
-                        cond = cond & v.isNotNull()
-                    return cond
-                return F.map_filter(col, is_residual)
+            def unnamed(k: Column) -> Column:
+                cond = ~k.isin(*allowed) if allowed else F.lit(True)
+                for pat in patterns:
+                    cond = cond & ~k.rlike(pat)
+                return cond
 
             if ap is False:
-                extra = residual_keys(inst.col)
                 add(Compiled.simple(
-                    ~inst.is_absent() & (F.size(extra) > 0), "additionalProperties",
-                    aloc, inst.loc, adyn,
+                    ~inst.is_absent() & (F.size(inst.members(unnamed)) > 0),
+                    "additionalProperties", aloc, inst.loc, adyn,
                     F.lit("additional properties do not match subschema")))
             elif ap is not True:
                 val_t = inst.dtype.valueType
                 elem_fn = self._element_fn(ap, val_t, inst.loc, aloc, adyn, scope, depth, strict=inst.strict)
-                ok = F.forall(F.map_values(residual_keys(inst.col)),
+                ok = F.forall(F.map_values(inst.members(unnamed)),
                               lambda v: elem_fn(v, F.lit(0)).passed)
                 add(Compiled.simple(
                     ~inst.is_absent() & ~F.coalesce(ok, F.lit(True)),
@@ -1485,23 +1443,14 @@ class Compiler:
                         pn, Inst(F.lit(pname), T.StringType(), inst.loc),
                         ploc, dyn + "/propertyNames", scope, depth + 1).compiled
                     add(Compiled.simple(
-                        inst.present(pname) & ~c.passed, "propertyNames", ploc,
+                        ~inst.missing(pname) & ~c.passed, "propertyNames", ploc,
                         inst.loc, dyn + "/propertyNames",
                         F.lit(f'property name "{pname}" failed to validate')))
             else:
                 elem_fn = self._element_fn(pn, T.StringType(), inst.loc, ploc,
                                            dyn + "/propertyNames", scope, depth, strict=inst.strict)
-                pn_src = inst.col
-                if _is_variant(inst.dtype.valueType) and not inst.strict:
-                    # only PRESENT members' names validate: JSON-null
-                    # members are absent under the engine convention
-                    pn_src = F.map_filter(
-                        inst.col, lambda k, v: ~vt.is_json_null(v))
-                elif not _is_variant(inst.dtype.valueType):
-                    # non-variant: SQL NULL = absent (review r05c)
-                    pn_src = F.map_filter(
-                        inst.col, lambda k, v: v.isNotNull())
-                ok = F.forall(F.map_keys(pn_src), lambda k: elem_fn(k, F.lit(0)).passed)
+                ok = F.forall(F.map_keys(inst.members()),
+                              lambda k: elem_fn(k, F.lit(0)).passed)
                 add(Compiled.simple(
                     ~inst.is_absent() & ~F.coalesce(ok, F.lit(True)), "propertyNames",
                     ploc, inst.loc, dyn + "/propertyNames",
@@ -1512,21 +1461,11 @@ class Compiler:
             if is_struct:
                 cnt = None
                 for n in names:
-                    p = inst.present(n).cast("int")
+                    p = (~inst.missing(n)).cast("int")
                     cnt = p if cnt is None else cnt + p
                 cnt = cnt if cnt is not None else F.lit(0)
             else:
-                if _is_variant(inst.dtype.valueType) and not inst.strict:
-                    # JSON-null members are absent (engine convention);
-                    # strict mode counts them (official null semantics)
-                    cnt = F.size(F.filter(F.map_values(inst.col),
-                                          lambda v: ~vt.is_json_null(v)))
-                elif not _is_variant(inst.dtype.valueType):
-                    # non-variant: SQL NULL = absent (review r05c)
-                    cnt = F.size(F.filter(F.map_values(inst.col),
-                                          lambda v: v.isNotNull()))
-                else:
-                    cnt = F.size(F.map_keys(inst.col))
+                cnt = F.size(inst.members())
             if "minProperties" in node:
                 n = node["minProperties"]
                 add(Compiled.simple(
@@ -1546,7 +1485,7 @@ class Compiler:
         if "dependentRequired" in node:
             for key, deps in node["dependentRequired"].items():
                 add(Compiled.simple(
-                    inst.present(key) & _any_missing(inst, deps),
+                    ~inst.missing(key) & _any_missing(inst, deps),
                     "dependentRequired",
                     f"{kw_loc}/dependentRequired/{pointer_escape(key)}", inst.loc,
                     dyn + "/dependentRequired",
@@ -1560,7 +1499,7 @@ class Compiler:
                 sloc = f"{kw_loc}/dependentSchemas/{pointer_escape(key)}"
                 child = self._compile(sub, inst, sloc,
                                       dyn + "/dependentSchemas/" + key, scope, depth + 1)
-                present = inst.present(key)
+                present = ~inst.missing(key)
                 add(child.compiled.gated(present))
                 res.merge_child(child, present & child.compiled.passed)
 
@@ -1835,7 +1774,7 @@ class Compiler:
             covered = F.lit(False)
             for c in covs:
                 covered = covered | F.coalesce(c, F.lit(False))
-            residual = inst.present(name) & ~covered
+            residual = ~inst.missing(name) & ~covered
             child = self._compile(sub, inst.child(name), uloc,
                                   udyn, scope, depth + 1).compiled
             parts.append(Compiled.simple(
@@ -1876,23 +1815,13 @@ class Compiler:
                 cond = cond | (k.rlike(pat) & F.coalesce(gate, F.lit(False)))
             return cond
 
-        strict = inst.strict
-
-        def residual_entry(k: Column, v: Column) -> Column:
-            r = ~F.coalesce(evaluated(k), F.lit(False))
-            if _is_variant(val_t) and not strict:
-                r = r & ~F.coalesce(vt.is_json_null(v), F.lit(False))
-            elif not _is_variant(val_t):
-                # non-variant: SQL NULL = absent (review r05c)
-                r = r & v.isNotNull()
-            return r
-
-        residual = F.map_filter(inst.col, residual_entry)
+        residual = inst.members(lambda k: ~F.coalesce(evaluated(k),
+                                                      F.lit(False)))
         if sub is False:
             cond = ~inst.is_absent() & (F.size(residual) > 0)
         else:
             elem_fn = self._element_fn(sub, val_t, inst.loc, uloc, udyn,
-                                       scope, depth, strict=strict)
+                                       scope, depth, strict=inst.strict)
             ok = F.forall(F.map_values(residual),
                           lambda v: elem_fn(v, F.lit(0)).passed)
             cond = ~inst.is_absent() & ~F.coalesce(ok, F.lit(True))

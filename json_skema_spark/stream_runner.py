@@ -34,12 +34,11 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from json_skema_spark.plans.compile import compile_schema
 from json_skema_spark.runner import CLIPS_SCHEMA_DOC
 from json_skema_spark.streaming.dedup_stream import unique_key_stream
 from json_skema_spark.streaming.drift_stream import baseline_map, windowed_drift
-from json_skema_spark.streaming.stateful import running_violation_tally
-from json_skema_spark.streaming.validate_stream import (validate_stream,
-                                                        violations_stream)
+from json_skema_spark.streaming.stateful import tally_verdicts
 
 STREAM_QUERIES = ("verdicts", "violations", "dedup", "drift", "tally")
 
@@ -115,6 +114,8 @@ def start_streaming(spark: SparkSession, input_dir: str, out_dir: str, *,
                 f"streaming query {q!r} needs column(s) {missing} that the "
                 f"input lacks (have: {sorted(cols)}) — drop {q!r} from "
                 "--queries or fix --key/--ts/--tally-key")
+    # one compile feeds the verdicts, violations and tally queries
+    plan = compile_schema(schema_doc, input_schema)
     reader = spark.readStream.schema(input_schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -133,12 +134,11 @@ def start_streaming(spark: SparkSession, input_dir: str, out_dir: str, *,
     running = {}
     try:
         if "verdicts" in queries:
-            v = validate_stream(stream, schema_doc).drop("failures")
-            running["verdicts"] = _writer(v, "verdicts").start()
+            running["verdicts"] = _writer(
+                plan.apply(stream, mode="verdict"), "verdicts").start()
         if "violations" in queries:
             running["violations"] = _writer(
-                violations_stream(stream, schema_doc, row_key),
-                "violations").start()
+                plan.violations(stream, row_key), "violations").start()
         if "dedup" in queries:
             running["dedup"] = _writer(
                 unique_key_stream(stream, row_key, ts_col,
@@ -159,7 +159,7 @@ def start_streaming(spark: SparkSession, input_dir: str, out_dir: str, *,
             # review r05). The latest partition per key is the current tally;
             # the state store behind the checkpoint carries the running totals
             # across kill/resume.
-            tally = running_violation_tally(stream, schema_doc, tally_key)
+            tally = tally_verdicts(stream, plan.passed, tally_key)
             tally_path = os.path.join(out_dir, "tally")
 
             def _write_tally(bdf: DataFrame, batch_id: int) -> None:

@@ -15,7 +15,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -49,11 +49,17 @@ def running_violation_tally(stream_df: DataFrame, schema_doc: Any,
     every micro-batch; emit in update mode."""
     plan = ValidationPlan(Compiler(schema_doc, **compiler_kwargs),
                           stream_df.schema)
+    return tally_verdicts(stream_df, plan.passed, key_col)
+
+
+def tally_verdicts(stream_df: DataFrame, passed: Column,
+                   key_col: str) -> DataFrame:
+    """``running_violation_tally`` over an already compiled verdict."""
     # key cast to string: OUTPUT_SCHEMA declares `key string`, and a
     # non-string grouping column (int shard ids — the docstring's own
     # suggested key class) would fail the pandas->Arrow conversion on the
     # first micro-batch
-    flagged = stream_df.withColumn("passed", plan.passed) \
+    flagged = stream_df.withColumn("passed", passed) \
         .select(quoted_col(key_col).cast("string").alias("key"), "passed")
     return (
         flagged.groupBy("key")

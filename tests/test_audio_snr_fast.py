@@ -33,11 +33,15 @@ def test_periodic_snr_matches_tiled_snr_through_pcm16(i, sr, dur_ms):
     # round-trip through the real encode/decode: quantization noise is the
     # signal the check measures
     full = audio.synth_reference_signal(i, sr, dur_ms)
-    sig, dec_sr, err = audio.decode_wav_pcm16(
-        audio.encode_wav_pcm16(full, sr))
+    buf = audio.encode_wav_pcm16(full, sr)
+    sig, dec_sr, err = audio.decode_wav_pcm16(buf)
     assert err == "" and dec_sr == sr
     old = _old_snr(i, sr, dur_ms, sig)
     new = _new_snr(i, sr, dur_ms, sig)
+    # the raw int16 samples, converted chunk-wise: bit-identical
+    s16 = audio._parse_wav_pcm16(buf)[0]
+    assert s16.dtype == np.int16
+    assert _new_snr(i, sr, dur_ms, s16) == new
     # noise samples identical; power sums differ only in summation order
     assert new == pytest.approx(old, abs=1e-6)
     assert (new >= 30.0) == (old >= 30.0)
@@ -59,9 +63,12 @@ def test_periodic_snr_decoded_longer_than_claimed():
     # claimed 250 ms, decoded 1 s: comparison truncates to the claim
     sr = 8000
     full = audio.synth_reference_signal(2, sr, 1000)
-    sig, _, _ = audio.decode_wav_pcm16(audio.encode_wav_pcm16(full, sr))
+    buf = audio.encode_wav_pcm16(full, sr)
+    sig, _, _ = audio.decode_wav_pcm16(buf)
     assert _new_snr(2, sr, 250, sig) == pytest.approx(
         _old_snr(2, sr, 250, sig), abs=1e-6)
+    s16 = audio._parse_wav_pcm16(buf)[0]
+    assert _new_snr(2, sr, 250, s16) == _new_snr(2, sr, 250, sig)
 
 
 def test_periodic_snr_edge_values():

@@ -105,7 +105,6 @@ def test_bad_decoder_rate_gets_one_verdict_per_row(spark, codec, bad_sr):
         viols = audio.audio_violations(df, check_duration=True).collect()
     finally:
         audio.unregister_decoder(codec)
-        audio._KNOWN_CODECS.discard(codec)
     assert sorted(r.clip_id for r in checked) == ids
     assert sorted(r.row_key for r in viols) == ids
     for r in checked:
@@ -113,6 +112,24 @@ def test_bad_decoder_rate_gets_one_verdict_per_row(spark, codec, bad_sr):
         # 0 dB, and 4800 samples at 48 kHz are the claimed 100 ms
         assert not r.invariant_ok
         assert r.snr_db == 0.0 and r.error == ""
+
+
+def test_unregistered_codec_reads_unknown(spark):
+    """Unregistering a custom codec makes it unknown again, while a
+    built-in codec without a decoder stays codec_not_supported."""
+    df = spark.createDataFrame(
+        [("clip_000000000000", "x-test", bytearray(b"xx"), 8000, 100, "t"),
+         ("clip_000000000001", "flac", bytearray(b"xx"), 8000, 100, "t")],
+        "clip_id string, codec string, bytes binary, sr_hz int, "
+        "dur_ms int, transcript string")
+    audio.register_decoder("x-test", lambda buf: (None, 0, "nope"))
+    audio.register_decoder("flac", lambda buf: (None, 0, "nope"))
+    audio.unregister_decoder("x-test")
+    audio.unregister_decoder("flac")
+    for out in (audio.pcm_invariant_check(df), audio.decode_check(df)):
+        assert {r.clip_id: r.error for r in out.collect()} == {
+            "clip_000000000000": "unknown_codec:x-test",
+            "clip_000000000001": "codec_not_supported:flac"}
 
 
 def test_transcript_mismatch_detected(spark):

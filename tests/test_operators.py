@@ -69,10 +69,13 @@ def test_profile(spark):
 
 def test_hll_merge(spark):
     df = spark.createDataFrame([(i % 100,) for i in range(1000)], "x int")
-    sk1 = stats.hll_sketches(df.filter(F.col("x") < 50), ["x"])
-    sk2 = stats.hll_sketches(df.filter(F.col("x") >= 50), ["x"])
-    est = stats.merge_hll(sk1.unionByName(sk2)).collect()[0]
-    assert abs(est.approx_distinct - 100) <= 5
+    halves = stats.mergeable_profile(df.filter(F.col("x") < 50), ["x"]) \
+        .unionByName(stats.mergeable_profile(df.filter(F.col("x") >= 50), ["x"]))
+    est = stats.merge_profiles(halves).collect()[0].approx_distinct
+    one_pass = stats.merge_profiles(
+        stats.mergeable_profile(df, ["x"])).collect()[0].approx_distinct
+    assert est == one_pass
+    assert abs(est - 100) <= 5
 
 
 def test_drift(spark):

@@ -85,29 +85,26 @@ def test_real_png_decoder_roundtrip():
 
 
 def test_decoder_snapshot_carries_known_set():
-    """Review r04: the UDF closure snapshot must include the KNOWN-codec
-    set — an executor's re-imported module only has the builtins, so a
-    driver-registered codec would report unknown_codec there while the
-    driver says codec_not_supported."""
+    """Review r04: an executor dispatching with the UDF closure's snapshot
+    must give the same verdict as the live registry. A registered codec
+    rides the snapshot; a codec without a decoder is codec_not_supported
+    iff it is built in, on either side."""
     def fake(buf):
         return None, 0, "nope"
 
     audio_fn.register_decoder("mp3", fake)
     try:
-        # the register/unregister-fake pattern: mp3 is KNOWN (register
-        # adds it permanently) but currently has no decoder
-        audio_fn.unregister_decoder("mp3")
         snap = audio_fn._decoder_snapshot()
-        # simulate the executor: dispatch with the snapshot only — the
-        # known set must ride the snapshot, not the module global
-        _sig, _sr, err = audio_fn._decode_with(snap, "mp3", b"x")
-        assert err == "codec_not_supported:mp3"
-        # genuinely unknown codec still says so
-        _sig, _sr, err2 = audio_fn._decode_with(snap, "xyz", b"x")
-        assert err2 == "unknown_codec:xyz"
     finally:
         audio_fn.unregister_decoder("mp3")
-        audio_fn._KNOWN_CODECS.discard("mp3")
+    # simulate the executor: dispatch with the snapshot only
+    assert audio_fn._decode_with(snap, "mp3", b"x")[2] == "nope"
+    for codec, err in (("mp3", "unknown_codec:mp3"),
+                       ("flac", "codec_not_supported:flac"),
+                       ("xyz", "unknown_codec:xyz")):
+        assert audio_fn._decode_dispatch(codec, b"x")[2] == err
+        assert audio_fn._decode_with(audio_fn._decoder_snapshot(), codec,
+                                     b"x")[2] == err
 
     media_fn.register_image_decoder("tiff", lambda b: (None, "nope"))
     try:

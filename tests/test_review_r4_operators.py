@@ -102,11 +102,12 @@ def test_merged_profile_long_minmax_exact(spark):
 
 
 def test_merge_hll_tolerates_different_lg_k(spark):
-    from json_skema_spark.operators.stats import hll_sketches, merge_hll
+    from json_skema_spark.operators.stats import (merge_profiles,
+                                                  mergeable_profile)
     df = spark.createDataFrame([(i,) for i in range(100)], "id long")
-    a = hll_sketches(df, ["id"], lg_k=12)
-    b = hll_sketches(df, ["id"], lg_k=13)
-    est = merge_hll(a.unionByName(b)).collect()[0].approx_distinct
+    a = mergeable_profile(df, ["id"], lg_k=12)
+    b = mergeable_profile(df, ["id"], lg_k=13)
+    est = merge_profiles(a.unionByName(b)).collect()[0].approx_distinct
     assert 80 <= est <= 120  # merge succeeded, estimate sane
 
 

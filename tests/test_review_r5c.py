@@ -716,6 +716,52 @@ def test_map_null_values_are_absent_like_structs(spark):
     assert verdicts({"properties": {}, "unevaluatedProperties": False}) == \
         [True, False, True]
 
+    # map<string,variant> follows the same member rule as a struct of
+    # variants, under both strict_nulls settings. Rows: "a" is SQL NULL,
+    # "a" is a JSON null, "a" is missing; "b" is 1 in each.
+    vmt = T.MapType(T.StringType(), T.VariantType())
+    vst = T.StructType([T.StructField("a", T.VariantType()),
+                        T.StructField("b", T.VariantType())])
+    sql_null, json_null = "CAST(NULL AS VARIANT)", "parse_json('null')"
+    vdf = spark.sql(" UNION ALL ".join(
+        f"SELECT {i} AS i, {m} AS m, named_struct('a', {a}, 'b', "
+        "parse_json('1')) AS s"
+        for i, m, a in (
+            (0, f"map('a', {sql_null}, 'b', parse_json('1'))", sql_null),
+            (1, f"map('a', {json_null}, 'b', parse_json('1'))", json_null),
+            (2, "map('b', parse_json('1'))", sql_null)))).orderBy("i")
+    # each schema's verdict when "a" is absent; a present "a" flips it
+    absent_verdict = [
+        ({"required": ["a"]}, False),
+        ({"dependentRequired": {"b": ["a"]}}, False),
+        ({"minProperties": 2}, False),
+        ({"maxProperties": 1}, True),
+        ({"properties": {"b": True}, "additionalProperties": False}, True),
+        ({"propertyNames": {"pattern": "^b$"}}, True),
+        ({"properties": {"b": True}, "unevaluatedProperties": False}, True),
+        ({"const": {"b": 1}}, True),
+        ({"enum": [{"b": 1}]}, True),
+    ]
+    # the same document parsed as a variant and as map<string,variant>
+    jdf = spark.createDataFrame([('{"a": null, "b": 1}',)], "j string") \
+        .select(F.parse_json("j").alias("v"),
+                F.from_json("j", "map<string,variant>").alias("m"))
+
+    def all_verdicts(df, c, dt, strict):
+        rows = df.select(*[
+            Compiler(doc, strict_nulls=strict).compile_value(F.col(c), dt)
+            .passed.alias(str(j))
+            for j, (doc, _v) in enumerate(absent_verdict)]).collect()
+        return [[r[j] for r in rows] for j in range(len(absent_verdict))]
+
+    for strict in (False, True):
+        expect = [[v, v != strict, v] for _doc, v in absent_verdict]
+        assert all_verdicts(vdf, "m", vmt, strict) == expect, strict
+        assert all_verdicts(vdf, "s", vst, strict) == expect, strict
+        parity = [[v != strict] for _doc, v in absent_verdict]
+        assert all_verdicts(jdf, "v", T.VariantType(), strict) == parity
+        assert all_verdicts(jdf, "m", vmt, strict) == parity, strict
+
 
 def test_struct_pattern_names_match_java_ascii_classes(spark):
     """Struct-path name matching must use ASCII \\d/\\w like Java (the map

@@ -148,3 +148,34 @@ def test_stream_runner_tally_requires_key(spark, tmp_path):
     with pytest.raises(ValueError, match="tally-key"):
         start_streaming(spark, src, str(tmp_path / "o"), schema_doc=DOC,
                         queries=("tally",))
+
+
+def test_stream_runner_compiles_schema_once(spark, tmp_path, monkeypatch):
+    """All five queries started together come from one compile_root."""
+    from json_skema_spark.operators import stats
+    from json_skema_spark.plans import compile as compile_mod
+    calls = []
+    orig = compile_mod.Compiler.compile_root
+
+    def counting(self, st):
+        calls.append(1)
+        return orig(self, st)
+
+    monkeypatch.setattr(compile_mod.Compiler, "compile_root", counting)
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    rows = [("clip_a", 8000, 1), ("BAD", 99, 1)]
+    _batch(spark, rows).write.parquet(src)
+    baseline = stats.profile(_batch(spark, rows), ["sr_hz"])
+    running = start_streaming(
+        spark, src, out, schema_doc=DOC, ts_col="ts", tally_key="sr_hz",
+        baseline_profile=baseline, available_now=True,
+        max_files_per_trigger=None)
+    await_streaming(running)
+    assert set(running) == {"verdicts", "violations", "dedup", "drift",
+                            "tally"}
+    assert len(calls) == 1
+    verdicts = spark.read.parquet(os.path.join(out, "verdicts"))
+    assert sorted(verdicts.columns) == ["clip_id", "passed", "sr_hz", "ts"]
+    assert sorted((r["clip_id"], r["passed"]) for r in verdicts.collect()) \
+        == [("BAD", False), ("clip_a", True)]
