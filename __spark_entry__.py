@@ -212,13 +212,13 @@ def _q_exact_dup_hotkey(spark, sf_dir):
 
 
 def _q_duplicate_orderkeys_skewed(spark, sf_dir):
-    """Salted two-phase uniqueness under ADVERSARIAL key skew (VERDICT r04
-    #3): the lineitem key column plus 5,000 injected rows all sharing key 1
-    (~8% of the sf0.01 table on one key). The deterministic salt
-    (uniqueness.salt_column) shards the hot key across reducers; the
-    bounded-spread property itself is pinned by
-    tests/test_skew_queries.py. Oracle: plain GROUP BY over the identical
-    union."""
+    """Uniqueness under ADVERSARIAL key skew (VERDICT r04 #3): the lineitem
+    key column plus 5,000 injected rows all sharing key 1 (~8% of the
+    sf0.01 table on one key). duplicate_keys is one groupBy count, and
+    Spark's map-side partial count bounds what any reducer receives for
+    the hot key at one row per map task, so no salt is needed; the exact
+    count under skew is pinned by tests/test_skew_queries.py. Oracle:
+    plain GROUP BY over the identical union."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
     hot = spark.range(5000).select(
         F.lit(1).cast("bigint").alias("l_orderkey"))

@@ -91,13 +91,15 @@ def decode_rawvid_header(buf: Any) -> tuple[tuple[int, int, int, int] | None, st
 # -- decoder registry (same contract as functions/audio.py) ------------------
 
 _IMAGE_DECODERS: dict[str, Any] = {"rgb8raw": decode_rgb8raw}
-_KNOWN_IMAGE_CODECS = {"rgb8raw", "jpeg", "png", "webp"}
+
+# A codec without a decoder is known (codec_not_supported) iff it is one of
+# these; any other codec is registered or unknown (see audio._BUILTIN_CODECS).
+_BUILTIN_IMAGE_CODECS = frozenset({"rgb8raw", "jpeg", "png", "webp"})
 
 
 def register_image_decoder(codec: str, fn: Any) -> None:
     """``fn(buf) -> ((h,w,c) uint8 array | None, error)``."""
     _IMAGE_DECODERS[codec] = fn
-    _KNOWN_IMAGE_CODECS.add(codec)
 
 
 def unregister_image_decoder(codec: str) -> None:
@@ -136,20 +138,14 @@ def register_optional_image_decoders() -> list[str]:
     return registered
 
 
-def _image_decoder_snapshot() -> tuple[dict, frozenset]:
-    """(decoders, known) value-copy for UDF closures — the known set must
-    ship with the snapshot or executors report 'unknown_codec' where the
-    driver says 'codec_not_supported' (see audio._decoder_snapshot)."""
-    return dict(_IMAGE_DECODERS), frozenset(_KNOWN_IMAGE_CODECS)
+def _image_decoder_snapshot() -> dict[str, Any]:
+    """Value-copy of the registry for capture into a UDF closure."""
+    return dict(_IMAGE_DECODERS)
 
 
-def _decode_image(decoders, codec: Any, buf: Any):
+def _decode_image(decoders: dict[str, Any], codec: Any, buf: Any):
     # same dispatch contract as audio._decode_with (kept separate only
     # because the return shapes differ: (img, err) vs (sig, sr, err))
-    if isinstance(decoders, tuple):
-        decoders, known = decoders
-    else:
-        known = _KNOWN_IMAGE_CODECS
     fn = decoders.get(codec)
     if fn is not None:
         try:
@@ -167,7 +163,7 @@ def _decode_image(decoders, codec: Any, buf: Any):
                 return None, f"decode_error:bad_shape:{'x'.join(map(str, arr.shape))}"
             return arr, err
         return img, err
-    if codec in known:
+    if codec in _BUILTIN_IMAGE_CODECS:
         return None, f"codec_not_supported:{codec}"
     return None, f"unknown_codec:{codec}"
 

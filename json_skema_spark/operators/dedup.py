@@ -19,6 +19,8 @@ constants, so results are deterministic and resumable.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -140,11 +142,11 @@ _PERSISTED_BASES: list = []
 
 
 def release_persisted_signatures() -> int:
-    """Unpersist every signature dataset cached by
-    ``minhash_near_duplicates(persist_signatures=True)`` and return how
-    many were released. Call AFTER the pair/cluster results have been
-    consumed (an action ran) — the cache exists to dedupe the 3-4 subplan
-    re-executions inside one query, so releasing mid-query just recomputes."""
+    """Unpersist every per-document base cached by the MinHash, n-gram and
+    embedding near-duplicate operators and return how many were released.
+    Call AFTER the pair/cluster results have been consumed (an action ran)
+    — the cache exists to dedupe the 3-4 subplan re-executions inside one
+    query, so releasing mid-query just recomputes."""
     n = 0
     while _PERSISTED_BASES:
         _PERSISTED_BASES.pop().unpersist()
@@ -152,19 +154,101 @@ def release_persisted_signatures() -> int:
     return n
 
 
+def _persist_base(base: DataFrame) -> DataFrame:
+    """Persist a near-duplicate operator's per-document base and register
+    it for ``release_persisted_signatures()``. The base feeds the pair
+    stage and both verify joins, distinct subplans that ReuseExchange does
+    not dedupe: unpersisted, the shingling/minhash/projection over the full
+    corpus re-runs 3-4x. MEMORY_AND_DISK spills; unregistered, the copy
+    would pin block-manager storage for the application lifetime."""
+    from pyspark import StorageLevel
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    _PERSISTED_BASES.append(base)
+    return base
+
+
+def _bucket_pairs(keyed: DataFrame, bucket_cols: list[str],
+                  max_bucket: int | None,
+                  payload: str | Column = "doc_id") -> DataFrame:
+    """Distinct candidate pairs (``doc_id_a < doc_id_b``) from bucket
+    co-membership — the one pair generator behind every near-duplicate
+    operator. ONE aggregation instead of the r05 shape (bucket-size agg +
+    left-semi prune + self-join): members are collected per bucket,
+    oversized buckets dropped by ``size(_ids)`` (identical semantics to the
+    old count-then-semi-join prune), and the m^2/2 ordered pairs generated
+    by a double explode — no join, and the bucket keys shuffle ONCE instead
+    of three times (guide §2.4; r06 measurement: minhash pairs 3.4 s ->
+    see OPTIMIZATION_r06.md).
+
+    Memory: the ``size(_ids) <= max_bucket`` filter runs AFTER
+    ``collect_list``, so a hot bucket is collected whole into one agg
+    buffer before it is dropped — ``max_bucket`` bounds the pairs, not the
+    buffer. Counting first and collecting only the kept buckets is ROADMAP
+    direction 4. Callers that pass ``max_bucket=None`` accept unbounded
+    buckets exactly as the old self-join accepted their m^2 blow-up.
+
+    ``payload`` is the member value (a column of ``keyed`` or a Column
+    over it) and is what ``doc_id_a``/``doc_id_b`` carry: an id of any
+    orderable type, or a struct whose FIRST field is the id — Spark orders
+    structs field by field, so ``a < b`` and ``distinct`` keep their
+    meaning (except that a null id sorts first instead of pairing with
+    nothing), and the other fields ride along to verification without a
+    join back (SimHash's fingerprint)."""
+    grouped = (keyed.groupBy(*bucket_cols)
+               .agg(F.collect_list(payload).alias("_ids"))
+               .filter(F.size("_ids") >= 2))
+    if max_bucket:
+        grouped = grouped.filter(F.size("_ids") <= max_bucket)
+    return (
+        grouped.select("_ids", F.explode("_ids").alias("doc_id_a"))
+        .select("doc_id_a", F.explode("_ids").alias("doc_id_b"))
+        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
+        .distinct()
+    )
+
+
+def _verify_pairs(cand: DataFrame, base: DataFrame, value: str,
+                  score_name: str, score: Callable[[Column, Column], Column],
+                  threshold: float) -> DataFrame:
+    """Score candidate pairs and keep those at or above ``threshold`` —
+    the one join-back verify stage of the near-duplicate operators.
+
+    ``cand`` has two id columns (side a, side b); ``base`` has ``doc_id``
+    and ``value``. Each side joins back to ``base`` for its ``value``, so
+    only candidate ids' values move, never the corpus. Output: the two id
+    columns plus ``score_name = score(value_a, value_b)``."""
+    id_a, id_b = cand.columns
+    va, vb = f"{value}_a", f"{value}_b"
+    pairs = (
+        cand.join(base.select(F.col("doc_id").alias(id_a),
+                              F.col(value).alias(va)), id_a)
+        .join(base.select(F.col("doc_id").alias(id_b),
+                          F.col(value).alias(vb)), id_b)
+    )
+    return (
+        pairs.withColumn(score_name, score(F.col(va), F.col(vb)))
+        .filter(F.col(score_name) >= threshold)
+        .select(id_a, id_b, score_name)
+    )
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """Exact Jaccard of two hashed-shingle sets."""
+    return (F.size(F.array_intersect(a, b)).cast("double")
+            / F.size(F.array_union(a, b)))
+
+
 def minhash_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
                             shingle_n: int = 3, num_hashes: int = 64,
                             bands: int = 16, seed: int = 42,
                             jaccard_threshold: float = 0.8,
-                            verify: bool = True,
-                            max_bucket: int = 1000,
-                            persist_signatures: bool = True) -> DataFrame:
+                            max_bucket: int = 1000) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH.
 
     Pipeline: shingle -> signature -> split into ``bands`` bands of
     ``num_hashes // bands`` rows -> hash each band -> explode -> groupBy
-    (band, band_hash) bucket join -> candidate pairs -> (optional) exact
-    Jaccard verification on the shingle sets.
+    (band, band_hash) bucket pairs -> exact Jaccard verification on the
+    shingle sets.
 
     Scale: the only all-to-all movement is the exploded (band_hash, id)
     pairs — ``bands`` rows per document, independent of document length.
@@ -185,31 +269,17 @@ def minhash_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
     # every null-text doc would land in ONE bucket per band and pair with
     # every other null doc (review r04)
     df = ensure_parallelism(df).filter(F.col(text_col).isNotNull())
-    # max_bucket guards the self-join against degenerate buckets (e.g. empty
-    # or boilerplate docs all hashing identically): a bucket of m members
-    # contributes m^2/2 candidate pairs, so one hot bucket at 10^12-row scale
-    # is quadratic blow-up. Oversized buckets are dropped (their members are
-    # still compared through their other bands).
+    # max_bucket guards the pair generation against degenerate buckets
+    # (e.g. empty or boilerplate docs all hashing identically): a bucket of
+    # m members contributes m^2/2 candidate pairs, so one hot bucket at
+    # 10^12-row scale is quadratic blow-up. Oversized buckets are dropped
+    # (their members are still compared through their other bands).
     # shingles are hashed to longs ONCE at the source: the signature and the
     # verify-stage joins both consume array<long> — text never shuffles
-    base = df.select(
+    base = _persist_base(df.select(
         F.col(id_col).alias("doc_id"),
         shingle_hashes(F.col(text_col), shingle_n, seed).alias("sh"),
-    ).withColumn("sig", minhash_signature_from_hashes(F.col("sh"), num_hashes))
-    if persist_signatures:
-        # `base` feeds the bucket-size agg, the self-join, and both
-        # verify-stage joins: without a persist the dominant CPU cost
-        # (shingling + 64-way minhash over the full corpus) re-executes
-        # 3-4x — self-join branches are distinct subplans, so ReuseExchange
-        # alone does not dedupe them. MEMORY_AND_DISK spills; footprint is
-        # ids + hashed shingles + signatures (~KB/doc), never the text.
-        # The handle is tracked in _PERSISTED_BASES: a long-running app
-        # processing several corpora calls release_persisted_signatures()
-        # between them, or the cached copies pin block-manager storage for
-        # the application lifetime (review r04).
-        from pyspark import StorageLevel
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED_BASES.append(base)
+    ).withColumn("sig", minhash_signature_from_hashes(F.col("sh"), num_hashes)))
 
     banded = base.select(
         "doc_id",
@@ -225,70 +295,24 @@ def minhash_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
              F.col("bh.band_hash").alias("band_hash"))
 
     cand = _bucket_pairs(banded, ["band", "band_hash"], max_bucket)
-    if not verify:
-        return cand.withColumn("jaccard", F.lit(None).cast("double"))
-
-    sh = base.select("doc_id", "sh")
-    pairs = (
-        cand.join(sh.withColumnRenamed("doc_id", "doc_id_a")
-                  .withColumnRenamed("sh", "sh_a"), "doc_id_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_id_b")
-              .withColumnRenamed("sh", "sh_b"), "doc_id_b")
-    )
-    jac = (F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-           / F.size(F.array_union("sh_a", "sh_b")))
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
-
-
-def _bucket_pairs(keyed: DataFrame, bucket_cols: list[str],
-                  max_bucket: int | None,
-                  payload: str = "doc_id") -> DataFrame:
-    """Distinct candidate id pairs (``doc_id_a < doc_id_b``) from bucket
-    co-membership — ONE aggregation instead of the r05 shape (bucket-size
-    agg + left-semi prune + self-join): members are collected per bucket,
-    oversized buckets dropped by ``size(_ids)`` (identical semantics to the
-    old count-then-semi-join prune), and the m^2/2 ordered pairs generated
-    by a double explode — no join, and the bucket keys shuffle ONCE instead
-    of three times (guide §2.4; r06 measurement: minhash pairs 3.4 s ->
-    see OPTIMIZATION_r06.md). The per-bucket member array is bounded by
-    ``max_bucket``, so no agg buffer exceeds that; callers that pass
-    ``max_bucket=None`` accept unbounded buckets exactly as the old
-    self-join accepted their m^2 blow-up.
-
-    ``payload`` names the id column in ``keyed`` (any orderable type);
-    ``keyed`` must be ``bucket_cols + [payload]``."""
-    grouped = (keyed.groupBy(*bucket_cols)
-               .agg(F.collect_list(payload).alias("_ids"))
-               .filter(F.size("_ids") >= 2))
-    if max_bucket:
-        grouped = grouped.filter(F.size("_ids") <= max_bucket)
-    return (
-        grouped.select("_ids", F.explode("_ids").alias("doc_id_a"))
-        .select("doc_id_a", F.explode("_ids").alias("doc_id_b"))
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .distinct()
-    )
+    return _verify_pairs(cand, base, "sh", "jaccard", _jaccard,
+                         jaccard_threshold)
 
 
 def ngram_jaccard_near_duplicates(df: DataFrame, text_col: str, id_col: str,
                                   *, n: int = 3,
                                   jaccard_threshold: float = 0.8,
                                   seed: int = 42,
-                                  max_posting: int = 1000,
-                                  prefix_filter: bool = True,
-                                  persist_shingles: bool = True) -> DataFrame:
+                                  max_posting: int = 1000) -> DataFrame:
     """EXACT n-gram-Jaccard near-duplicate pairs via a prefix-filtered
     inverted index — the deterministic sibling of ``minhash_near_duplicates``
     (MinHash trades exactness for a fixed-width signature; this keeps exact
     set semantics and prunes the candidate space analytically instead).
 
     Pipeline: hash distinct word n-grams to longs once at the source ->
-    build an inverted index of (gram, doc_id) postings -> self-join postings
-    on gram -> exact Jaccard on the hashed shingle sets for candidate pairs.
+    build an inverted index of (gram, doc_id) postings -> pair the postings
+    of each gram -> exact Jaccard on the hashed shingle sets for candidate
+    pairs.
 
     Prefix filter (Chaudhuri et al. SSJoin / Xiao et al. PPJoin): under ANY
     fixed total order on grams, two sets A, B with ``J(A,B) >= t`` satisfy
@@ -316,7 +340,7 @@ def ngram_jaccard_near_duplicates(df: DataFrame, text_col: str, id_col: str,
         # exists to avoid); t > 1 is vacuous and breaks the prefix length
         raise ValueError(
             f"jaccard_threshold must be in (0, 1], got {jaccard_threshold}")
-    base = (
+    base = _persist_base(
         ensure_parallelism(df)
         # null text is not a near-duplicate of other null text (uniform
         # convention with exact_duplicates / minhash_near_duplicates)
@@ -327,48 +351,23 @@ def ngram_jaccard_near_duplicates(df: DataFrame, text_col: str, id_col: str,
         # explicit guard keeps the Jaccard denominator provably non-zero
         .filter(F.size("sh") > 0)
     )
-    if persist_shingles:
-        # feeds the postings index AND both verify-stage joins; without a
-        # persist the shingling+hash work re-executes 3x (distinct subplans
-        # are not deduped by ReuseExchange). Same lifecycle contract as
-        # minhash signatures: release via release_persisted_signatures().
-        from pyspark import StorageLevel
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED_BASES.append(base)
 
-    if prefix_filter:
-        srt = F.sort_array(F.col("sh"))
-        # the 1e-9 keeps ceil from overshooting an exact integer product by
-        # one double ulp (e.g. t*|A| = k computing as k+2^-52): overshoot
-        # would SHORTEN the prefix below the lossless bound, while the
-        # epsilon can only lengthen it — the safe direction
-        plen = (F.size("sh")
-                - F.ceil(F.lit(float(jaccard_threshold)) * F.size("sh")
-                         - F.lit(1e-9))
-                .cast("int") + F.lit(1))
-        index_grams = F.slice(srt, 1, plen)
-    else:
-        index_grams = F.col("sh")
-    postings = base.select("doc_id", F.explode(index_grams).alias("gram"))
+    # the 1e-9 keeps ceil from overshooting an exact integer product by
+    # one double ulp (e.g. t*|A| = k computing as k+2^-52): overshoot
+    # would SHORTEN the prefix below the lossless bound, while the
+    # epsilon can only lengthen it — the safe direction
+    plen = (F.size("sh")
+            - F.ceil(F.lit(float(jaccard_threshold)) * F.size("sh")
+                     - F.lit(1e-9))
+            .cast("int") + F.lit(1))
+    postings = base.select(
+        "doc_id", F.explode(F.slice(F.sort_array(F.col("sh")), 1, plen))
+        .alias("gram"))
 
-    # one aggregation replaces the posting-size agg + semi-join + self-join
-    # (same prune semantics: a gram whose posting list exceeds max_posting
-    # is dropped whole) — see _bucket_pairs
+    # a gram whose posting list exceeds max_posting is dropped whole
     cand = _bucket_pairs(postings, ["gram"], max_posting)
-    sh = base.select("doc_id", "sh")
-    pairs = (
-        cand.join(sh.withColumnRenamed("doc_id", "doc_id_a")
-                  .withColumnRenamed("sh", "sh_a"), "doc_id_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_id_b")
-              .withColumnRenamed("sh", "sh_b"), "doc_id_b")
-    )
-    jac = (F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-           / F.size(F.array_union("sh_a", "sh_b")))
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
+    return _verify_pairs(cand, base, "sh", "jaccard", _jaccard,
+                         jaccard_threshold)
 
 
 # -- SimHash ----------------------------------------------------------------
@@ -422,12 +421,13 @@ def simhash_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
     """Near-dup pairs by SimHash: band the 48-bit fingerprint into
     ``max_hamming + 1`` chunks (pigeonhole: a pair within hamming distance
     d differs in at most d chunks, so with d+1 chunks at least one matches
-    exactly), bucket-join on chunks, verify hamming distance. The chunk
+    exactly), pair the members of each chunk bucket, verify hamming
+    distance. The chunk
     count is DERIVED from ``max_hamming`` — a fixed 4-chunk banding only
     guarantees recall for d <= 3 and silently loses pairs at d >= 4
     (review r04).
 
-    ``max_bucket`` caps the chunk self-join exactly like the MinHash path: a
+    ``max_bucket`` caps the chunk buckets exactly like the MinHash path: a
     degenerate chunk value (e.g. empty docs all fingerprinting to 0) makes
     one bucket m^2/2 pairs — quadratic at 10^12 rows. Oversized buckets are
     dropped; their members still pair through their other chunks."""
@@ -452,23 +452,19 @@ def simhash_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
         ])).alias("c"),
     ).select("doc_id", "fp", F.col("c.chunk").alias("chunk"),
              F.col("c.val").alias("val"))
-    # same one-aggregation pair generation as _bucket_pairs, with the
-    # fingerprint riding along in the member struct so hamming verification
-    # needs no join back (8 extra bytes per member in the shuffle)
-    grouped = (chunks.groupBy("chunk", "val")
-               .agg(F.collect_list(F.struct("doc_id", "fp")).alias("_ids"))
-               .filter(F.size("_ids") >= 2))
-    if max_bucket:
-        grouped = grouped.filter(F.size("_ids") <= max_bucket)
+    # the fingerprint rides along in the member struct, so hamming
+    # verification needs no join back (8 extra bytes per member)
     return (
-        grouped.select("_ids", F.explode("_ids").alias("a"))
-        .select("a", F.explode("_ids").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_id_a"),
-                F.col("b.doc_id").alias("doc_id_b"),
-                hamming64(F.col("a.fp"), F.col("b.fp")).alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+        _bucket_pairs(chunks, ["chunk", "val"], max_bucket,
+                      F.struct("doc_id", "fp"))
+        .select(F.col("doc_id_a.doc_id").alias("doc_id_a"),
+                F.col("doc_id_b.doc_id").alias("doc_id_b"),
+                hamming64(F.col("doc_id_a.fp"), F.col("doc_id_b.fp"))
+                .alias("hamming"))
+        # struct order sorts a null id first where a bare id's `<` is
+        # NULL: drop it here, as the scalar-payload operators do
+        .filter(F.col("doc_id_a").isNotNull()
+                & (F.col("hamming") <= max_hamming))
     )
 
 

@@ -12,8 +12,9 @@ training-data-pipeline surface. Two paths:
   onto ``num_planes`` driver-seeded hyperplanes). At scale the bucket id is
   a partition key: a query probes one bucket (plus optional neighboring
   buckets by Hamming distance) instead of scanning everything.
-- ``embedding_near_duplicates``: same-bucket self-join + exact cosine — the
-  embedding-space analogue of MinHash near-dup.
+- ``embedding_near_duplicates``: same-bucket pairs + exact cosine through
+  the near-dup operators' shared pair and verify stages (operators/dedup.py)
+  — the embedding-space analogue of MinHash near-dup.
 
 Hyperplanes are generated driver-side from a numpy PRNG with a fixed seed and
 baked into the plan as literals — deterministic and resumable.
@@ -25,6 +26,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from json_skema_spark.operators.dedup import (_bucket_pairs, _persist_base,
+                                              _verify_pairs)
 from json_skema_spark.operators.util import ensure_parallelism
 
 
@@ -222,8 +225,7 @@ def embedding_near_duplicates(df: DataFrame, embedding_col: str, id_col: str, *,
                               cosine_threshold: float = 0.95,
                               bands: int = 16, planes_per_band: int = 4,
                               seed: int = 42, dim: int | None = None,
-                              max_bucket: int = 1000,
-                              persist_vectors: bool = True) -> DataFrame:
+                              max_bucket: int = 1000) -> DataFrame:
     """Near-duplicate pairs by embedding cosine: **banded** random-hyperplane
     LSH (the SimHash/MinHash banding trick applied to sign-projections), then
     exact-cosine verification. Output ``(id_a, id_b, cosine)``.
@@ -238,28 +240,16 @@ def embedding_near_duplicates(df: DataFrame, embedding_col: str, id_col: str, *,
 
     ``dim`` is the embedding dimension; pass it when known (it is a schema
     property, not data) — the ``.first()`` fallback is a driver action that
-    runs an extra job. ``max_bucket`` caps each band's bucket self-join (one
+    runs an extra job. ``max_bucket`` caps each band's buckets (one
     hot bucket of m members is m^2/2 pairs — quadratic at scale)."""
     if dim is None:
         dim = int(df.select(F.size(embedding_col).alias("d")).first()["d"])
     planes = make_hyperplanes(dim, bands * planes_per_band, seed)
     emb = F.col(embedding_col).cast("array<double>")
-    base = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc_id"), emb.alias("e"))
-    if persist_vectors:
-        # reused by the banding stage, the bucket-size agg, and both
-        # verify joins (same rationale as minhash_near_duplicates) — and
-        # tracked in the SAME release registry: an untracked persist pins
-        # block-manager storage for the application lifetime, the exact
-        # leak release_persisted_signatures() exists to drain
-        # (review r05c)
-        from pyspark import StorageLevel
-
-        from json_skema_spark.operators.dedup import _PERSISTED_BASES
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED_BASES.append(base)
+    base = _persist_base(ensure_parallelism(df).select(
+        F.col(id_col).alias("doc_id"), emb.alias("e")))
     banded = base.select(
-        "doc_id", "e",
+        "doc_id",
         F.explode(F.array(*[
             F.struct(
                 F.lit(b).alias("band"),
@@ -268,25 +258,10 @@ def embedding_near_duplicates(df: DataFrame, embedding_col: str, id_col: str, *,
                 .alias("bucket"))
             for b in range(bands)
         ])).alias("bb"),
-    ).select("doc_id", "e", F.col("bb.band").alias("band"),
-             F.col("bb.bucket").alias("bucket"))
-    # one aggregation replaces the bucket-size agg + semi-join + self-join
-    # (identical prune semantics); only (band, bucket, id) rows shuffle —
-    # never the vectors (dedup._bucket_pairs, r06)
-    from json_skema_spark.operators.dedup import _bucket_pairs
-    cand = _bucket_pairs(banded.select("band", "bucket", "doc_id"),
-                         ["band", "bucket"], max_bucket) \
+    ).select(F.col("bb.band").alias("band"),
+             F.col("bb.bucket").alias("bucket"), "doc_id")
+    # only (band, bucket, id) rows shuffle — never the vectors
+    cand = _bucket_pairs(banded, ["band", "bucket"], max_bucket) \
         .select(F.col("doc_id_a").alias("id_a"),
                 F.col("doc_id_b").alias("id_b"))
-    vecs = base
-    pairs = (
-        cand.join(vecs.select(F.col("doc_id").alias("id_a"),
-                              F.col("e").alias("e_a")), "id_a")
-        .join(vecs.select(F.col("doc_id").alias("id_b"),
-                          F.col("e").alias("e_b")), "id_b")
-    )
-    return (
-        pairs.withColumn("cosine", cosine(F.col("e_a"), F.col("e_b")))
-        .filter(F.col("cosine") >= cosine_threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    return _verify_pairs(cand, base, "e", "cosine", cosine, cosine_threshold)

@@ -11,8 +11,8 @@ Scale design:
   counting needs no explicit salt; the r05 salted two-phase shuffled the
   full key set twice for a guarantee the combiner already provides (r06).
   Salting remains the right tool where per-group STATE grows with the
-  group (``exact_duplicates``' id lists, ``violation_digest``'s example
-  keys) — ``salt_column`` is shared with those paths and the skew tests.
+  group: ``exact_duplicates``' id lists and ``violation_digest``'s example
+  keys each salt their own two-phase aggregation.
 - ``duplicate_rows``: tags every row of a duplicated key via a broadcast-able
   semi-join against the (small) duplicate-key set rather than a
   ``Window.partitionBy(key)`` — a window would shuffle the *full* table on a
@@ -25,23 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salt_column(key: Column, salt_buckets: int) -> Column:
-    """The two-phase agg's DETERMINISTIC salt (shared with the skew tests
-    so they exercise the exact production expression).
-
-    ``monotonically_increasing_id`` is nondeterministic, and using it as a
-    grouping key means a stage retry re-salts rows — reducers that fetched
-    the old attempt keep them under the old salt while re-fetching reducers
-    see the new one -> corrupted counts. ``spark_partition_id`` is stable
-    across retries of the same plan (a re-run map task keeps its
-    partition), and hashing it with the key spreads any single hot key
-    across ``salt_buckets`` sub-groups."""
-    return F.pmod(F.xxhash64(key, F.spark_partition_id(), F.lit(17)),
-                  F.lit(salt_buckets))
-
-
-def duplicate_keys(df: DataFrame, key: str | Column, *,
-                   salt_buckets: int = 64) -> DataFrame:
+def duplicate_keys(df: DataFrame, key: str | Column) -> DataFrame:
     """Keys occurring more than once, with their multiplicity.
 
     Output: ``(key, n_rows)`` with ``n_rows >= 2``.
@@ -55,8 +39,7 @@ def duplicate_keys(df: DataFrame, key: str | Column, *,
     the plan shuffled the full key set TWICE: measured 1.65 s vs 1.08 s
     at sf1.0). Aggregations whose per-group STATE grows with the group
     (``exact_duplicates``' top-K id lists, ``violation_digest``'s
-    examples) keep their salted two-phase — ``salt_buckets`` is retained
-    in the signature for callers that tuned it (unused here).
+    examples) keep their salted two-phase.
     """
     k = F.col(key) if isinstance(key, str) else key
     # a NULL is NOT a key occurrence (engine-wide convention: streaming
@@ -74,7 +57,7 @@ def duplicate_keys(df: DataFrame, key: str | Column, *,
     )
 
 
-def duplicate_rows(df: DataFrame, key: str, *, salt_buckets: int = 64,
+def duplicate_rows(df: DataFrame, key: str, *,
                    dup_keys_hint: int | None = None,
                    broadcast_threshold_rows: int = 2_000_000) -> DataFrame:
     """Every row whose key occurs more than once (the row-level violation set,
@@ -96,7 +79,7 @@ def duplicate_rows(df: DataFrame, key: str, *, salt_buckets: int = 64,
             f"duplicate_rows adds output column(s) {clash} that the input "
             "already carries — rename them first")
     dups = _maybe_broadcast(
-        duplicate_keys(df, key, salt_buckets=salt_buckets)
+        duplicate_keys(df, key)
         .select(F.col("key").alias(key), "n_rows"),
         broadcast_threshold_rows, dup_keys_hint)
     return (
@@ -106,11 +89,11 @@ def duplicate_rows(df: DataFrame, key: str, *, salt_buckets: int = 64,
 
 
 def uniqueness_violations(df: DataFrame, key: str, *,
-                          keyword_location: str = "#/uniqueItems",
-                          salt_buckets: int = 64) -> DataFrame:
+                          keyword_location: str = "#/uniqueItems"
+                          ) -> DataFrame:
     """Duplicate keys rendered as violation rows in the engine's standard
     violations shape (FIXTURES.md §5)."""
-    dups = duplicate_keys(df, key, salt_buckets=salt_buckets)
+    dups = duplicate_keys(df, key)
     return dups.select(
         F.col("key").cast("string").alias("row_key"),
         F.lit("uniqueItems").alias("keyword"),

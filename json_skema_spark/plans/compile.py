@@ -393,6 +393,15 @@ class Inst:
         return view, F.coalesce(vt.is_array(self.col), F.lit(False))
 
 
+def _present_const_members(obj: Inst, const: dict) -> int:
+    """The number of present members a map instance must have to equal
+    object ``const``. By the member rule a null const member equals an
+    ABSENT member, unless ``strict`` and the map's values can hold a JSON
+    null (variant): then it equals a present JSON null."""
+    json_null = obj.strict and _is_variant(obj.dtype.valueType)
+    return sum(1 for v in const.values() if v is not None or json_null)
+
+
 # --------------------------------------------------------------------------
 # per-object coverage info for unevaluatedProperties / unevaluatedItems
 # (the reference's mutable mark tracking, Validator.kt:184-243, collapsed to
@@ -1025,7 +1034,8 @@ class Compiler:
                 return F.size(col) == 0
             eqs = [
                 self._value_equals(
-                    Inst(F.element_at(col, i + 1), elem, F.lit("")), v)
+                    Inst(F.element_at(col, i + 1), elem, F.lit(""),
+                         strict=inst.strict), v)
                 for i, v in enumerate(value)
             ]
             out = F.size(col) == len(value)
@@ -1048,7 +1058,8 @@ class Compiler:
                         out = out & inst.missing(name)
                 return out
             if isinstance(dtype, T.MapType):
-                out = F.size(inst.members()) == len(value)
+                out = F.size(inst.members()) == _present_const_members(
+                    inst, value)
                 for k, v in value.items():
                     out = out & F.coalesce(
                         self._value_equals(inst.child(k), v), F.lit(False))
@@ -1114,7 +1125,8 @@ class Compiler:
             return out
         if isinstance(value, dict):
             obj, is_obj = inst.object_view
-            out = is_obj & (F.size(obj.members()) == len(value))
+            out = is_obj & (F.size(obj.members())
+                            == _present_const_members(obj, value))
             for k, v in value.items():
                 out = out & F.coalesce(
                     self._variant_equals(inst.child(k), v), F.lit(False))

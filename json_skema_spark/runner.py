@@ -4,7 +4,7 @@
 
 Pipeline per the north rule (BASELINE.json):
   1. schema-validate every row (compiled Column predicates)     -> violations
-  2. global clip_id uniqueness (salted two-phase agg)           -> violations
+  2. global clip_id uniqueness (one hash agg)                   -> violations
   3. transcript/clip referential integrity (broadcast/SMJ)      -> violations
   4. per-partition column stats + HLL + quantiles               -> profile
   5. drift vs a baseline profile (if provided)                  -> drift report
@@ -260,7 +260,7 @@ def validate_table(spark: SparkSession, clips: DataFrame, out_dir: str, *,
             # bucketed by key), so the uniqueness check folds in here as a
             # bucket-local exclusion — every copy of a duplicated key is
             # quarantined, consistent with violations_unique. Implemented
-            # as the salted two-phase duplicate-key agg + anti-join, NOT a
+            # as the duplicate-key hash agg + anti-join, NOT a
             # Window.partitionBy(clip_id) count: the window shuffled the
             # bucket's FULL rows (audio payload included) on the key and
             # serialized a hyper-duplicated key onto one task; the agg

@@ -1,4 +1,4 @@
-"""Integration: salted uniqueness under heavy key skew; profile -> drift."""
+"""Integration: uniqueness under heavy key skew; profile -> drift."""
 
 from pyspark.sql import functions as F
 
@@ -7,15 +7,15 @@ from json_skema_spark.sources import clips as clips_src
 
 
 def test_uniqueness_under_heavy_skew(spark):
-    """One hot key with 50k occurrences among 50k distinct keys: the salted
-    two-phase agg must return exact counts (the salt shards the hot key's
-    partials; the re-agg reassembles them)."""
+    """One hot key with 50k occurrences among 50k distinct keys: the
+    aggregation must return exact counts (map-side partial counts of the
+    hot key merge into one exact total)."""
     base = spark.range(0, 50_000).select(
         F.concat(F.lit("k"), F.col("id")).alias("k"))
     hot = spark.range(0, 50_000).select(F.lit("HOT").alias("k"))
     df = base.unionAll(hot).repartition(32)
     dups = {r.key: r.n_rows for r in
-            uniqueness.duplicate_keys(df, "k", salt_buckets=64).collect()}
+            uniqueness.duplicate_keys(df, "k").collect()}
     assert dups == {"HOT": 50_000}
 
 

@@ -111,10 +111,13 @@ def test_decoder_snapshot_carries_known_set():
         media_fn.unregister_image_decoder("tiff")
         msnap = media_fn._image_decoder_snapshot()
         _img, err = media_fn._decode_image(msnap, "tiff", b"x")
-        assert err == "codec_not_supported:tiff"
+        assert err == "unknown_codec:tiff"
     finally:
         media_fn.unregister_image_decoder("tiff")
-        media_fn._KNOWN_IMAGE_CODECS.discard("tiff")
+    # a built-in codec without a decoder stays known
+    _img, err = media_fn._decode_image(media_fn._image_decoder_snapshot(),
+                                       "jpeg", b"x")
+    assert err == "codec_not_supported:jpeg"
 
 
 def test_audio_violations_forwards_invariant_kwargs(spark):

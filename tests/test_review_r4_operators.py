@@ -202,8 +202,10 @@ def test_release_persisted_signatures(spark):
     df = spark.createDataFrame(
         [(str(i), f"some text number {i} with shared words") for i in range(20)],
         "doc_id string, text string")
+    dedup.release_persisted_signatures()
     dedup.minhash_near_duplicates(df, "text", "doc_id").count()
-    assert dedup.release_persisted_signatures() >= 1
+    dedup.ngram_jaccard_near_duplicates(df, "text", "doc_id").count()
+    assert dedup.release_persisted_signatures() == 2  # one base each
     assert dedup.release_persisted_signatures() == 0  # idempotent
 
 

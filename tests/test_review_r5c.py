@@ -467,8 +467,7 @@ def test_embedding_persist_tracked_for_release(spark):
     rows = [(f"d{i}", [float(i), 1.0, 0.5]) for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id string, emb array<float>")
     before = len(dedup._PERSISTED_BASES)
-    embedding_near_duplicates(df, "emb", "doc_id", dim=3,
-                              persist_vectors=True).collect()
+    embedding_near_duplicates(df, "emb", "doc_id", dim=3).collect()
     assert len(dedup._PERSISTED_BASES) == before + 1
     dedup.release_persisted_signatures()
     assert not dedup._PERSISTED_BASES
@@ -761,6 +760,38 @@ def test_map_null_values_are_absent_like_structs(spark):
         parity = [[v != strict] for _doc, v in absent_verdict]
         assert all_verdicts(jdf, "v", T.VariantType(), strict) == parity
         assert all_verdicts(jdf, "m", vmt, strict) == parity, strict
+
+    # const equality follows the same rule: a null const member equals an
+    # absent member, so {"a": null} matches a NULL "a" on a struct and a
+    # map<string,int> (typed NULL is absent under both settings) and a
+    # parsed JSON null; strict only makes a variant's missing "a" differ
+    def const_verdicts(doc, df, c, dt, strict):
+        comp = Compiler(doc, strict_nulls=strict).compile_value(F.col(c), dt)
+        return [r["p"] for r in df.select(comp.passed.alias("p")).collect()]
+
+    st = T.StructType([T.StructField("a", T.IntegerType())])
+    sdf = spark.createDataFrame([((None,),), ((1,),)],
+                                T.StructType([T.StructField("s", st)]))
+    pdf = spark.sql(" UNION ALL ".join(
+        f"SELECT {i} AS i, parse_json('{j}') AS v" for i, j in
+        ((0, '{"a": null}'), (1, '{"a": 1}'), (2, '{}')))).orderBy("i")
+    null_a = {"const": {"a": None}}
+    for strict in (False, True):
+        assert const_verdicts(null_a, sdf, "s", st, strict) == \
+            [True, False], strict
+        assert const_verdicts(null_a, df, "m", mt, strict) == \
+            [True, False, True], strict
+        assert const_verdicts(null_a, pdf, "v", T.VariantType(), strict) == \
+            [True, False, not strict], strict
+
+    # const [null] on array<variant>: under strict only a JSON null element
+    # equals null, as for a map or struct member
+    at = T.ArrayType(T.VariantType())
+    adf = spark.sql(f"SELECT 0 AS i, array({sql_null}) AS a UNION ALL "
+                    f"SELECT 1 AS i, array({json_null}) AS a").orderBy("i")
+    for strict in (False, True):
+        assert const_verdicts({"const": [None]}, adf, "a", at, strict) == \
+            [not strict, True], strict
 
 
 def test_struct_pattern_names_match_java_ascii_classes(spark):

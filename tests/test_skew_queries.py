@@ -1,9 +1,9 @@
 """Adversarial-skew behavior pins (VERDICT r04 #3).
 
 The driver-gate rows (`unique_duplicate_orderkeys_skewed`,
-`dedup_exact_hotkey`) verify VALUES under skew; these tests pin the
-SPREAD property the salt/cap machinery exists for — that no single
-reducer group carries an unbounded share of a hot key.
+`dedup_exact_hotkey`) verify VALUES under skew; these tests pin exact
+counts through the hot-key aggregation and the capped hot-group cells of
+exact_duplicates' salted two-phase.
 """
 
 import pyspark.sql.functions as F
@@ -12,32 +12,9 @@ from json_skema_spark.operators import dedup, uniqueness
 
 
 def _hot_key_df(spark, n=20_000, partitions=8):
-    # one key carrying every row — the worst case the salt must shard
+    # one key carrying every row — the worst case for a hash aggregation
     return (spark.range(n).repartition(partitions)
             .select(F.lit(1).cast("bigint").alias("k")))
-
-
-def test_salt_shards_hot_key_across_subgroups(spark):
-    """The production salt expression (uniqueness.salt_column — the same
-    Column duplicate_keys groups by) must split a 100%-hot key into many
-    (key, salt) sub-groups, each a small fraction of the total: the
-    per-reducer bound that keeps task durations even under skew. An
-    unsalted plan puts all n rows in ONE group.
-
-    The salt hashes (key, partition_id), so the shard count is
-    min(map tasks, salt_buckets) — 128 partitions models a real map-task
-    fleet; at 8 partitions it would shard only 8 ways (and map-side
-    partial combine already bounds THAT case)."""
-    df = _hot_key_df(spark, partitions=128)
-    partial = (df.withColumn("_salt", uniqueness.salt_column(F.col("k"), 64))
-               .groupBy("k", "_salt").agg(F.count("*").alias("n")))
-    rows = partial.collect()
-    total = sum(r["n"] for r in rows)
-    assert total == 20_000
-    assert len(rows) >= 32, "hot key must shard across many salt groups"
-    # max sub-group ~ total/64; 4x headroom tolerates hash unevenness.
-    # The unsalted plan's max is 20_000 — an order of magnitude above.
-    assert max(r["n"] for r in rows) <= 4 * total // 64
 
 
 def test_duplicate_keys_exact_under_skew(spark):
@@ -45,7 +22,7 @@ def test_duplicate_keys_exact_under_skew(spark):
         spark.range(2, 100).select(F.col("id").cast("bigint").alias("k")))
     out = {r["key"]: r["n_rows"]
            for r in uniqueness.duplicate_keys(df, "k").collect()}
-    assert out == {1: 20_000}  # counts exact through the two-phase merge
+    assert out == {1: 20_000}  # counts exact through the partial merge
 
 
 def test_exact_duplicates_hot_group_capped_and_exact(spark):
