@@ -42,7 +42,7 @@ from __future__ import annotations
 import math as _math
 import re as _re
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from functools import cached_property
 from typing import Any, Callable
 
@@ -185,14 +185,13 @@ def empty_failures() -> Column:
 
 
 def _fail_struct(keyword: str, kw_loc: str, inst_loc: Column, dyn_path: str,
-                 message: Column, messages: bool) -> Column:
-    """One failure struct; ``messages=False`` writes an empty message."""
+                 message: Column) -> Column:
     return F.struct(
         F.lit(keyword).alias("keyword"),
         F.lit(kw_loc).alias("keyword_location"),
         inst_loc.alias("instance_location"),
         F.lit(dyn_path).alias("dynamic_path"),
-        (message if messages else F.lit("")).alias("message"),
+        message.alias("message"),
     )
 
 
@@ -200,45 +199,46 @@ def _fail_struct(keyword: str, kw_loc: str, inst_loc: Column, dyn_path: str,
 class Compiled:
     """Result of lowering one schema node for one instance expression.
 
-    ``build_failures(messages)`` builds the ``array<failure_struct>``
-    column (never NULL, empty iff ``passed``) only when an output reads it,
-    so one compile feeds verdict, violations and summary. Counting paths
-    pass ``messages=False``: they never read ``message``, and building it
-    made the round-5 sf10 summary 36x slower than the verdict scan. A
-    builder runs after the compile returns, so a name it reads must not be
-    rebound later in the enclosing function.
+    ``failures`` and ``legs`` are built only when read, so one compile
+    feeds verdict, violations and summary. A builder runs after the
+    compile returns, so a name it reads must not be rebound later in the
+    enclosing function.
 
-    ``legs`` is the summary fast-path metadata: a tuple of
-    ``(cond_fail, keyword, keyword_location)`` triples, one per failure
-    leaf, valid ONLY when every leaf of this subtree contributes exactly
-    one failure struct per row iff its ``cond_fail`` holds and the
-    composition is plain accumulation (``conj``). Per-keyword violation
-    counting then lowers to one map-side-combinable SUM per leg instead of
-    building/exploding the failure array (ValidationPlan.summary, r06).
-    ``None`` = not summarizable (any combinator/array construct that
-    suppresses, wraps, or multiplies child failures poisons the subtree);
-    consumers must fall back to the explode path.
+    ``failures`` is the ``array<failure_struct>`` column: never NULL, empty
+    iff ``passed``. ``legs`` holds one ``(count, keyword,
+    keyword_location)`` per failure leaf, ``count`` being a never-NULL int
+    column: the number of failure structs the leaf adds to the row. So per
+    row ``sum(count) == size(failures)``, and counting reads legs, never
+    the failure array. Nodes combine their children's legs as they combine
+    failures: ``conj`` concatenates, ``gated`` zeroes them outside the
+    gate, ``items`` sums each element leg over the elements.
     """
 
     passed: Column   # boolean, never NULL
-    build_failures: Callable[[bool], Column]
-    legs: tuple | None = None
+    build_failures: Callable[[], Column]
+    build_legs: Callable[[], tuple]
 
     @property
     def failures(self) -> Column:
-        """The failure array with messages."""
-        return self.build_failures(True)
+        return self.build_failures()
+
+    @property
+    def legs(self) -> tuple:
+        return self.build_legs()
 
     def gated(self, gate: Column) -> "Compiled":
         """This result where ``gate`` holds, a pass everywhere else."""
         return Compiled(
             passed=F.when(gate, self.passed).otherwise(F.lit(True)),
-            build_failures=lambda m: F.when(gate, self.build_failures(m))
-            .otherwise(empty_failures()))
+            build_failures=lambda: F.when(gate, self.failures)
+            .otherwise(empty_failures()),
+            build_legs=lambda: tuple(
+                (F.when(gate, c).otherwise(F.lit(0)), k, kl)
+                for c, k, kl in self.legs))
 
     @staticmethod
     def ok() -> "Compiled":
-        return Compiled(F.lit(True), lambda m: empty_failures(), legs=())
+        return Compiled(F.lit(True), empty_failures, tuple)
 
     @staticmethod
     def simple(cond_fail: Column, keyword: str, kw_loc: str, inst_loc: Column,
@@ -246,12 +246,14 @@ class Compiled:
         cond_fail = F.coalesce(cond_fail, F.lit(False))
         return Compiled(
             passed=~cond_fail,
-            build_failures=lambda m: F.when(
+            build_failures=lambda: F.when(
                 cond_fail,
                 F.array(_fail_struct(keyword, kw_loc, inst_loc, dyn_path,
-                                     message, m)),
+                                     message)),
             ).otherwise(empty_failures()),
-            legs=((cond_fail, keyword, kw_loc),),
+            build_legs=lambda: (
+                (F.when(cond_fail, F.lit(1)).otherwise(F.lit(0)), keyword,
+                 kw_loc),),
         )
 
 
@@ -261,18 +263,15 @@ def conj(parts: list[Compiled]) -> Compiled:
     parts = [p for p in parts if p is not None]
     if not parts:
         return Compiled.ok()
+    if len(parts) == 1:
+        return parts[0]
     passed = parts[0].passed
     for p in parts[1:]:
         passed = passed & p.passed
-    builds = [p.build_failures for p in parts]
-    build = builds[0] if len(builds) == 1 else \
-        (lambda m: F.concat(*[b(m) for b in builds]))
-    legs: tuple | None
-    if all(p.legs is not None for p in parts):
-        legs = tuple(leg for p in parts for leg in p.legs)
-    else:
-        legs = None
-    return Compiled(passed, build, legs=legs)
+    return Compiled(
+        passed,
+        lambda: F.concat(*[p.failures for p in parts]),
+        lambda: tuple(leg for p in parts for leg in p.legs))
 
 
 # --------------------------------------------------------------------------
@@ -834,11 +833,8 @@ class Compiler:
             uneval = conj(uneval_parts)
             # only evaluated when no prior failure (shouldVisitUnevaluatedSchemas,
             # Validator.kt:419)
-            res.compiled = Compiled(
-                passed=base.passed & uneval.passed,
-                build_failures=lambda m: F.when(
-                    base.passed, uneval.build_failures(m))
-                .otherwise(base.build_failures(m)))
+            res.compiled = replace(conj([base, uneval.gated(base.passed)]),
+                                   passed=base.passed & uneval.passed)
         else:
             res.compiled = base
         return res
@@ -1605,14 +1601,32 @@ class Compiler:
             elem_fn = self._element_fn(node["items"], elem_t, inst.loc, iloc,
                                        dyn + "/items", scope, depth, strict=inst.strict)
 
-            def items_failures(m: bool, elem_fn=elem_fn) -> Column:
+            def items_failures(elem_fn=elem_fn) -> Column:
                 # elem_fn bound at definition: the contains block rebinds it
                 per_elem = F.transform(
                     arr, lambda x, i: F.when(i >= prefix_n,
-                                             elem_fn(x, i).build_failures(m))
+                                             elem_fn(x, i).failures)
                     .otherwise(empty_failures()))
                 return F.when(inst.is_absent(), empty_failures()) \
                     .otherwise(F.coalesce(F.flatten(per_elem), empty_failures()))
+
+            def items_legs(elem_fn=elem_fn) -> tuple:
+                # one element compile serves every leg: per element, a
+                # struct of its legs' counts; each leg sums its field
+                legs: list = []
+
+                def per_elem(x: Column, i: Column) -> Column:
+                    legs.extend(elem_fn(x, i).legs)
+                    return F.struct(*[
+                        F.when(i >= prefix_n, c).otherwise(F.lit(0))
+                        .alias(f"_{j}") for j, (c, _, _) in enumerate(legs)])
+                counts = F.transform(arr, per_elem)
+                return tuple(
+                    (F.when(inst.is_absent(), F.lit(0)).otherwise(F.coalesce(
+                        F.aggregate(counts, F.lit(0),
+                                    lambda acc, c: acc + c[f"_{j}"]),
+                        F.lit(0))), k, kl)
+                    for j, (_, k, kl) in enumerate(legs))
             # passed: all post-prefix elements pass
             ok = F.forall(
                 F.transform(arr, lambda x, i: F.when(i < prefix_n, F.lit(True))
@@ -1621,7 +1635,7 @@ class Compiler:
             add(Compiled(
                 passed=F.when(inst.is_absent(), F.lit(True))
                 .otherwise(F.coalesce(ok, F.lit(True))),
-                build_failures=items_failures))
+                build_failures=items_failures, build_legs=items_legs))
             res.rest_cov.append(F.lit(True))
 
         # contains + minContains/maxContains (Validator.kt:751-781)
@@ -1705,9 +1719,8 @@ class Compiler:
                 any_ok = any_ok | s.compiled.passed
             # on failure, flatten() yields the branch leaf failures
             # (AnyOf.kt message + ValidationFailure.flatten, :56-59)
-            add(Compiled(passed=any_ok,
-                         build_failures=conj([s.compiled for s in subs])
-                         .gated(~any_ok).build_failures))
+            add(replace(conj([s.compiled for s in subs]).gated(~any_ok),
+                        passed=any_ok))
             for s in subs:
                 res.merge_child(s, s.compiled.passed)
 
@@ -1723,19 +1736,16 @@ class Compiler:
                 matched = c if matched is None else matched + c
             one_msg = F.format_string(
                 f"expected 1 subschema to match out of {n}, %s matched", matched)
-            branches = conj([s.compiled for s in subs])
-
-            def one_of_failures(m: bool) -> Column:
-                # absent value: oneOf never applies (all branches vacuously
-                # pass, which would read as "N matched" without this guard)
-                return (F.when(inst.is_absent(), empty_failures())
-                        .when(matched == 0, branches.build_failures(m))
-                        .when(matched > 1, F.array(_fail_struct(
-                            "oneOf", f"{kw_loc}/oneOf", inst.loc,
-                            dyn + "/oneOf", one_msg, m)))
-                        .otherwise(empty_failures()))
-            add(Compiled(passed=inst.is_absent() | (matched == 1),
-                         build_failures=one_of_failures))
+            # absent value: oneOf never applies (all branches vacuously
+            # pass, which would read as "N matched" without this guard)
+            present = ~inst.is_absent()
+            add(replace(conj([
+                conj([s.compiled for s in subs])
+                .gated(present & (matched == 0)),
+                Compiled.simple(present & (matched > 1), "oneOf",
+                                f"{kw_loc}/oneOf", inst.loc, dyn + "/oneOf",
+                                one_msg)]),
+                passed=inst.is_absent() | (matched == 1)))
             for s in subs:
                 res.merge_child(s, s.compiled.passed & (matched == 1))
 
@@ -1761,10 +1771,8 @@ class Compiler:
                                          dyn + "/else", scope, depth + 1)
             t = then_res.compiled if then_res else Compiled.ok()
             e = else_res.compiled if else_res else Compiled.ok()
-            add(Compiled(
-                passed=F.when(ip, t.passed).otherwise(e.passed),
-                build_failures=lambda m: F.when(ip, t.build_failures(m))
-                .otherwise(e.build_failures(m))))
+            add(replace(conj([t.gated(ip), e.gated(~ip)]),
+                        passed=F.when(ip, t.passed).otherwise(e.passed)))
             res.merge_child(if_res, ip)
             if then_res:
                 res.merge_child(then_res, ip & t.passed)

@@ -67,13 +67,18 @@ class ValidationPlan:
 
     @cached_property
     def failures(self) -> Column:
-        """Per-row failure array, with messages."""
-        return self._compiled.build_failures(True)
+        """Per-row failure array."""
+        return self._compiled.failures
 
     @cached_property
-    def counted_failures(self) -> Column:
-        """``failures`` with empty messages, for paths that only count."""
-        return self._compiled.build_failures(False)
+    def counts(self) -> dict[tuple[str, str], Column]:
+        """Per-row failure count for each (keyword, keyword_location): the
+        compiled legs with that pair, added. Each equals the number of
+        structs with that pair in the row's ``failures``."""
+        grouped: dict[tuple[str, str], list[Column]] = {}
+        for c, k, kl in self._compiled.legs:
+            grouped.setdefault((k, kl), []).append(c)
+        return {key: sum(cs, start=F.lit(0)) for key, cs in grouped.items()}
 
     def apply(self, df: DataFrame, mode: str = "full") -> DataFrame:
         """Add ``passed`` (and in full mode ``failures``) columns."""
@@ -144,69 +149,34 @@ class ValidationPlan:
         return out.coalesce(df.sparkSession.sparkContext.defaultParallelism)
 
     def summary(self, df: DataFrame) -> DataFrame:
-        """Per-keyword-location violation counts + overall pass rate input.
+        """Per-keyword-location violation counts: the grouped count of
+        ``explode(failures)``, computed without building the failure array.
 
-        Map-side partial aggregation applies (hash agg); output cardinality is
-        bounded by the number of schema keywords, so the final shuffle is tiny
-        regardless of input scale.
-
-        Counts from ``counted_failures``, the plan's failure array with
-        empty messages: counting never reads ``message``, but building each
-        violating row's format_string/cast chain before the explode made
-        the sf10 summary 36x slower than the verdict scan over identical
-        rows (round-5 measurement: 38.6 s -> see BENCH/BASELINE.md).
-        Keyword / location / count outputs are identical to exploding
-        ``failures`` (only the message differs).
-
-        When every failure leaf is a one-struct-per-row leg with a
-        compile-time (keyword, keyword_location) — ``Compiled.legs`` — the
-        counts lower to one map-side-combinable SUM per leg: no failure
-        array is built, nothing is exploded, and the only shuffle is the
-        single partial-aggregate row per task (guide §2.3 "aggregate
-        before you shuffle"; r06 measurement: 2.08 s -> ~0.5 s at sf1.0).
-        Identical output by construction: a simple leaf contributes
-        exactly one failure element iff its cond holds, so
-        count(explode(failures)) grouped by (keyword, location) equals the
-        per-leg conditional sums re-grouped the same way. Schemas with
-        combinator/per-element failure legs (legs=None) keep the explode
-        path.
+        Every compiled node carries its legs, and per row ``sum(count) ==
+        size(failures)`` (``Compiled``), so each (keyword,
+        keyword_location) count is one SUM of its per-row ``counts``. The
+        aggregation is map-side combinable: the only shuffle is one
+        partial-sum row per task (guide §2.3 "aggregate before you
+        shuffle"), and the one Generate explodes the literal result rows
+        above it. Exploding the failure array instead took 2.08 s against
+        ~0.5 s for the sums at sf1.0 (r06). Pairs that no row fails are
+        dropped, as the explode drops them.
         """
-        legs = self._compiled.legs
-        if legs:
-            # legs sharing a (keyword, keyword_location) are merged at BUILD
-            # time (their per-row contributions add), so no post-explode
-            # groupBy/Exchange is needed — one fewer AQE stage on the driver
-            grouped: dict[tuple[str, str], list[Column]] = {}
-            for c, k, kl in legs:
-                grouped.setdefault((k, kl), []).append(c)
-            keys = list(grouped)
-            sums = df.agg(*[
-                F.sum(sum((F.when(c, F.lit(1)).otherwise(F.lit(0))
-                           for c in grouped[key]), start=F.lit(0)))
-                .alias(f"_l{i}")
-                for i, key in enumerate(keys)])
-            rows = sums.select(F.explode(F.array(*[
-                F.struct(F.lit(k).alias("keyword"),
-                         F.lit(kl).alias("keyword_location"),
-                         F.col(f"_l{i}").alias("n_violations"))
-                for i, (k, kl) in enumerate(keys)])).alias("s"))
-            return (rows.select("s.keyword", "s.keyword_location",
-                                "s.n_violations")
-                    .filter(F.col("n_violations") > 0))
-        return (
-            # filter on the BOOLEAN verdict before building any failure
-            # array (same shape as violations()): passing rows never pay
-            # for array construction, and the boolean filter stays inside
-            # whole-stage codegen at the scan
-            df.filter(~self.passed)
-            .select(self.counted_failures.alias("failures"))
-            .select(F.explode("failures").alias("f"))
-            .groupBy(
-                F.col("f.keyword").alias("keyword"),
-                F.col("f.keyword_location").alias("keyword_location"),
-            )
-            .agg(F.count("*").alias("n_violations"))
-        )
+        keys = list(self.counts)
+        if not keys:
+            return df.sparkSession.createDataFrame(
+                [], "keyword string, keyword_location string, "
+                    "n_violations bigint")
+        sums = df.agg(*[F.sum(self.counts[key]).alias(f"_l{i}")
+                        for i, key in enumerate(keys)])
+        rows = sums.select(F.explode(F.array(*[
+            F.struct(F.lit(k).alias("keyword"),
+                     F.lit(kl).alias("keyword_location"),
+                     F.col(f"_l{i}").alias("n_violations"))
+            for i, (k, kl) in enumerate(keys)])).alias("s"))
+        return (rows.select("s.keyword", "s.keyword_location",
+                            "s.n_violations")
+                .filter(F.col("n_violations") > 0))
 
     def verdict_counts(self, df: DataFrame) -> DataFrame:
         return (
@@ -215,8 +185,11 @@ class ValidationPlan:
         )
 
 
-def violation_digest(violations: DataFrame, *, per_keyword: int = 20,
-                     salt_buckets: int = 64) -> DataFrame:
+_DIGEST_SALT_BUCKETS = 64
+
+
+def violation_digest(violations: DataFrame, *,
+                     per_keyword: int = 20) -> DataFrame:
     """Triage view of a violations table: EXACT per-keyword-location counts
     plus a bounded, deterministic sample of offending row keys.
 
@@ -229,9 +202,9 @@ def violation_digest(violations: DataFrame, *, per_keyword: int = 20,
     otherwise fill every example slot with copies of itself, review r05c).
 
     Scale design: keys are ranked inside (keyword_location, salt) window
-    partitions — a sort-based, spillable operator with ``salt_buckets``-way
-    parallelism per keyword, never an in-memory collect of a hot keyword's
-    keys — then only the <= salt_buckets x per_keyword survivors merge.
+    partitions — a sort-based, spillable operator with 64-way parallelism
+    per keyword, never an in-memory collect of a hot keyword's keys — then
+    only the <= 64 x per_keyword survivors merge.
     The merged slice is the global K-smallest (each global winner is a
     winner of its own salt bucket). Counts come from a separate map-side-
     combinable hash agg; both inputs shuffle (keyword, key) pairs only.
@@ -240,7 +213,7 @@ def violation_digest(violations: DataFrame, *, per_keyword: int = 20,
     key = F.col("row_key").cast("string")
     salted = violations.select(
         "keyword", "keyword_location", key.alias("k"),
-        F.pmod(F.xxhash64(key), F.lit(salt_buckets)).alias("_salt"))
+        F.pmod(F.xxhash64(key), F.lit(_DIGEST_SALT_BUCKETS)).alias("_salt"))
     counts = (salted.groupBy("keyword", "keyword_location")
               .agg(F.count("*").alias("n_violations")))
     w = Window.partitionBy("keyword", "keyword_location", "_salt") \

@@ -383,7 +383,7 @@ def test_violation_digest_exact_counts_bounded_examples(spark):
     v = spark.createDataFrame(
         rows, "row_key string, keyword string, keyword_location string")
     got = {r.keyword: r for r in
-           violation_digest(v, per_keyword=3, salt_buckets=8).collect()}
+           violation_digest(v, per_keyword=3).collect()}
     assert got["maximum"].n_violations == 500
     assert got["maximum"].example_keys == ["k0000", "k0001", "k0002"]
     assert got["required"].n_violations == 1

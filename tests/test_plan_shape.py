@@ -85,6 +85,23 @@ def test_every_length_is_byte_guarded(plans):
     assert any(GUARDED.search(t) for t in texts)
 
 
+@pytest.mark.parametrize("schema", [*sorted(SCHEMAS), "array"])
+def test_summary_has_no_generate_below_its_aggregate(spark, clips, schema):
+    """summary() sums the compiled legs: its one Generate explodes the
+    literal result rows above the aggregate, and no failure array is
+    exploded below it (``array`` is the driver's array-keyword schema,
+    whose ``items`` failures are per element)."""
+    if schema == "array":
+        import __spark_entry__ as entry
+        df = entry.queries()["array_violation_summary"](
+            spark, "/root/testdata/sf0.001")
+    else:
+        df = compile_schema(SCHEMAS[schema], clips.schema).summary(clips)
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" in opt
+    assert "Generate" not in opt.split("Aggregate", 1)[1], opt
+
+
 def test_verdict_plan_prunes_columns(spark):
     """Column pruning must reach the scan: a schema over 2 columns of a
     6-column parquet table reads exactly those 2 (SURVEY.md §4)."""

@@ -76,8 +76,8 @@ DOC = {
 
 def test_violation_rate_counts_match_full_plan_and_prefilters(spark):
     """violation_rate must count exactly what the full-message explode
-    counts, while filtering on the boolean verdict before array
-    construction (light-message recompile, same as summary())."""
+    counts, while filtering on the boolean verdict and counting from the
+    compiled legs (the same count path as summary())."""
     from json_skema_spark.streaming.validate_stream import violation_rate
 
     rows = [(i if i % 5 else None,
@@ -98,11 +98,12 @@ def test_violation_rate_counts_match_full_plan_and_prefilters(spark):
     want = {(r["keyword"], r["start"]): r["count"] for r in full}
     assert got == want and got  # non-vacuous
 
-    # structural: a verdict Filter sits in the plan (passing rows never
-    # build failure arrays)
+    # structural: a verdict Filter sits in the plan, and the counts come
+    # from the compiled legs: no failure struct is ever built
     opt = (violation_rate(df, DOC, "ts", window="1 hour")
            ._jdf.queryExecution().optimizedPlan().toString())
     assert "Filter" in opt
+    assert "instance_location" not in opt
 
 
 def test_get_field_exotic_property_names(spark):

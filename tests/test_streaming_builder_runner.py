@@ -5,11 +5,10 @@ import os
 
 from pyspark.sql import functions as F
 
+from json_skema_spark import compile_schema
 from json_skema_spark.plans.builder import SchemaBuilder
 from json_skema_spark.runner import validate_table
 from json_skema_spark.sources import clips as clips_src
-from json_skema_spark.streaming.validate_stream import (validate_stream,
-                                                        violations_stream)
 
 
 def test_builder_generates_schema_doc():
@@ -51,7 +50,8 @@ def test_streaming_validation(spark, tmp_path):
     stream = spark.readStream.schema(df.schema).parquet(src)
     doc = {"properties": {"clip_id": {"pattern": "^clip_"},
                           "sr_hz": {"enum": [8000, 16000]}}}
-    out = validate_stream(stream, doc)
+    plan = compile_schema(doc, stream.schema)
+    out = plan.apply(stream)
     assert out.isStreaming
 
     collected = []
@@ -64,8 +64,7 @@ def test_streaming_validation(spark, tmp_path):
     got = {r.clip_id: r.passed for r in collected}
     assert got == {"clip_000000000001": True, "BAD": False}
 
-    vstream = violations_stream(
-        spark.readStream.schema(df.schema).parquet(src), doc, "clip_id")
+    vstream = plan.violations(stream, "clip_id")
     vrows = []
     q2 = (vstream.writeStream.outputMode("append")
           .foreachBatch(lambda bdf, _id: vrows.extend(bdf.collect()))

@@ -1,10 +1,10 @@
-"""Round-6 optimization regressions: the summary leg fast path and the
-codegen-friendly `required` verdict condition.
+"""The summary's one count path and the codegen-friendly `required`
+verdict condition.
 
-The summary fast path (ValidationPlan.summary over Compiled.legs) must be
-row-for-row identical to the explode formulation it replaces, and must NOT
-engage for schemas whose failure legs are non-simple (combinators,
-per-element array failures) — those keep the explode path.
+ValidationPlan.summary sums Compiled.legs. It must be row-for-row identical
+to grouping the exploded ``failures``, for every schema: the corpus below
+holds one case per place where legs combine (combinators, gates, array
+elements, variant views, unevaluated*).
 """
 
 from __future__ import annotations
@@ -45,8 +45,7 @@ def table(spark):
 
 
 def _explode_counts(plan, df):
-    return (df.filter(~plan.passed)
-            .select(plan.counted_failures.alias("failures"))
+    return (df.select(plan.failures.alias("failures"))
             .select(F.explode("failures").alias("f"))
             .groupBy(F.col("f.keyword").alias("keyword"),
                      F.col("f.keyword_location").alias("keyword_location"))
@@ -67,11 +66,9 @@ def test_fast_path_matches_explode(table):
     assert fast == slow and fast, f"fast={fast} slow={slow}"
 
 
-def test_combinator_schema_falls_back(table):
+def test_combinator_schema_counts_from_legs(table):
     plan = compile_schema(COMBINATOR, table.schema)
-    assert plan._compiled.legs is None, \
-        "anyOf wraps child failures — legs must poison to None"
-    # and the fallback still produces the right counts
+    assert plan._compiled.legs, "anyOf must carry its branches' legs"
     out = {(r.keyword, r.keyword_location): r.n_violations
            for r in plan.summary(table).collect()}
     slow = {(r.keyword, r.keyword_location): r.n_violations
@@ -133,8 +130,8 @@ ARRAY_SCHEMA = {
 
 def test_items_and_contains_failures_keep_their_keywords(spark):
     """``items`` and ``contains`` on one array compile separate element
-    schemas; each must report its own failures in both the summary (explode
-    path: per-element failures have no legs) and the violations."""
+    schemas; each must report its own failures in both the summary (items
+    legs sum over the elements) and the violations."""
     rows = [
         (1, ["apple", "b", "c", "d"]),                       # passes
         (2, ["toolongword", "b", "c", "d"]),                 # maxLength, contains
@@ -145,7 +142,7 @@ def test_items_and_contains_failures_keep_their_keywords(spark):
     ]
     df = spark.createDataFrame(rows, "id int, toks array<string>")
     plan = compile_schema(ARRAY_SCHEMA, df.schema)
-    assert plan._compiled.legs is None
+    assert plan._compiled.legs
     loc = "#/properties/toks"
     want = {
         ("maxLength", f"{loc}/items/maxLength"): 2,
@@ -164,3 +161,117 @@ def test_items_and_contains_failures_keep_their_keywords(spark):
         k = (r.keyword, r.keyword_location)
         violations[k] = violations.get(k, 0) + 1
     assert violations == want
+
+
+# One case per site where legs combine: (schema, DDL, rows, compiler
+# kwargs). Every case has failing rows, except the accept-all schema.
+INTS = [(None,), (-4,), (0,), (1,), (3,), (4,), (6,), (7,), (12,)]
+ARRS = [(None,), ([],), ([1],), ([-1, 20],), ([1, 3, None, 5],),
+        ([0, 2, 4, 6, 8],), ([-2, 11, 7, None, 9, 30],)]
+JSON = [(None,), ("null",), ("3",), ('"s"',), ("{}",), ('{"x": null}',),
+        ('{"x": 0}',), ('{"x": 2, "y": 1}',), ("[]",), ("[1, null, -1]",),
+        ('[2, "a", [0]]',), ('{"x": [1, -5], "z": {"x": 0}}',)]
+NESTED = [(None,), ([],), ([[1, 2], None, [-1]],), ([[], [5, -3, -4]],),
+          ([[0], [1, None, 2]],)]
+
+
+def _int(sub):
+    return {"properties": {"a": sub}}
+
+
+CORPUS = {
+    "anyOf": (_int({"anyOf": [{"minimum": 5}, {"multipleOf": 3}]}),
+              "a int", INTS, {}),
+    # 1 and -4 match neither branch, 7 and 4 one, 6 and 12 both
+    "oneOf": (_int({"oneOf": [{"minimum": 5}, {"multipleOf": 2}]}),
+              "a int", INTS, {}),
+    "if_then": (_int({"if": {"minimum": 3}, "then": {"multipleOf": 2}}),
+                "a int", INTS, {}),
+    "if_else": (_int({"if": {"minimum": 3}, "else": {"maximum": -1}}),
+                "a int", INTS, {}),
+    "if_then_else": (_int({"if": {"minimum": 3},
+                           "then": {"multipleOf": 2, "maximum": 6},
+                           "else": {"maximum": -1}}), "a int", INTS, {}),
+    "dependentSchemas": (
+        {"dependentSchemas": {"a": {"required": ["b"],
+                                    "properties": {"b": {"minimum": 0}}},
+                              "b": {"properties": {"a": {"maximum": 3}}}}},
+        "a int, b int",
+        [(None, None), (1, None), (1, -1), (4, 2), (None, -3), (2, 5)], {}),
+    "prefixItems": (_int({"prefixItems": [{"minimum": 0},
+                                          {"maximum": 10}]}),
+                    "a array<int>", ARRS, {}),
+    "items_after_prefix": (
+        _int({"prefixItems": [{"minimum": 0}],
+              "items": {"multipleOf": 2, "maximum": 8}}),
+        "a array<int>", ARRS, {}),
+    "items_nested_array": (
+        _int({"items": {"minItems": 1,
+                        "items": {"minimum": 0, "multipleOf": 2}}}),
+        "a array<array<int>>", NESTED, {}),
+    "contains": (_int({"contains": {"minimum": 5}, "minContains": 2,
+                       "maxContains": 3}), "a array<int>", ARRS, {}),
+    "false_subschema": (_int(False), "a int", INTS, {}),
+    "unevaluatedProperties": (
+        # base fails where b < 0; c is unevaluated where base passes
+        {"properties": {"s": {"properties": {"b": {"minimum": 0}},
+                              "unevaluatedProperties": {"maximum": 2}}}},
+        "s struct<b:int,c:int>",
+        [(None,), ((-1, 9),), ((1, 9),), ((1, 1),), ((None, 5),),
+         ((-2, None),)], {}),
+    "unevaluatedItems": (
+        _int({"prefixItems": [{"minimum": 0}],
+              "unevaluatedItems": {"maximum": 5}}),
+        "a array<int>", ARRS, {}),
+}
+for strict in (False, True):
+    sfx = "_strict" if strict else ""
+    CORPUS["variant_views" + sfx] = (
+        {"properties": {"j": {
+            "properties": {"x": {"minimum": 1,
+                                 "items": {"minimum": 0}}},
+            "required": ["x"], "minProperties": 2,
+            "items": {"type": "integer", "minimum": 0},
+            "minItems": 2}}},
+        "j string", JSON, {"strict_nulls": strict})
+    CORPUS["variant_unevaluated" + sfx] = (
+        {"properties": {"j": {
+            "properties": {"x": {"minimum": 1}},
+            "unevaluatedProperties": False,
+            "prefixItems": [{"type": "integer"}],
+            "unevaluatedItems": {"type": "integer"}}}},
+        "j string", JSON, {"strict_nulls": strict})
+
+
+def _corpus_table(spark, ddl, rows):
+    df = spark.createDataFrame(rows, ddl)
+    if ddl == "j string":
+        df = df.select(F.parse_json("j").alias("j"))
+    return df
+
+
+@pytest.mark.parametrize("case", sorted(CORPUS))
+def test_summary_equals_failures_explode(spark, case):
+    """summary() equals the grouped explode of ``failures`` row for row,
+    and per row the legs' counts add up to the failure array's size."""
+    schema, ddl, rows, kwargs = CORPUS[case]
+    df = _corpus_table(spark, ddl, rows)
+    plan = compile_schema(schema, df.schema, **kwargs)
+    assert plan._compiled.legs
+    got = sorted(plan.summary(df).collect())
+    want = sorted(_explode_counts(plan, df)
+                  .select("keyword", "keyword_location", "n_violations")
+                  .collect())
+    assert got == want and got, case
+    total = sum(plan.counts.values(), start=F.lit(0))
+    sizes = df.select(total.alias("n"), F.size(plan.failures).alias("size"))
+    assert all(r.n == r.size for r in sizes.collect()), case
+
+
+def test_accept_all_summary_is_empty(spark):
+    df = spark.createDataFrame(INTS, "a int")
+    plan = compile_schema({}, df.schema)
+    assert plan._compiled.legs == ()
+    out = plan.summary(df)
+    assert out.columns == ["keyword", "keyword_location", "n_violations"]
+    assert out.collect() == []

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 import json_skema_spark
 from json_skema_spark import compile_schema
 from json_skema_spark.sources.clips import CLIPS_CONSTRAINT_SCHEMA, clips_df_fast
-from json_skema_spark.streaming.validate_stream import violations_stream
 
 from tests.test_plan_shape import SCHEMAS
 
@@ -94,10 +93,10 @@ def test_one_coalesce_and_no_exchange(many_splits, schema):
 def test_stream_is_coalesced_like_batch(spark, many_splits, tmp_path):
     """A micro-batch runs the same narrow coalesce and yields the batch
     rows (``partition_id`` aside: a stream plans its own splits)."""
-    out = violations_stream(
-        spark.readStream.schema(many_splits.schema)
-        .parquet(many_splits.inputFiles()[0].rsplit("/", 1)[0]),
-        CLIPS_CONSTRAINT_SCHEMA, "clip_id")
+    stream = (spark.readStream.schema(many_splits.schema)
+              .parquet(many_splits.inputFiles()[0].rsplit("/", 1)[0]))
+    out = compile_schema(CLIPS_CONSTRAINT_SCHEMA, stream.schema) \
+        .violations(stream, "clip_id")
     q = (out.writeStream.format("memory").queryName("viol_stream_coalesce")
          .option("checkpointLocation", str(tmp_path / "ck"))
          .trigger(availableNow=True).start())
