@@ -1041,8 +1041,15 @@ def _q_stream_violation_windows(spark, sf_dir):
     # per trigger forces a genuinely multi-batch drain. At the gate's
     # sf0.01 the write is milliseconds.
     stage = tempfile.mkdtemp(prefix="spark_graft_stream_src_")
-    tz_before = spark.conf.get("spark.sql.session.timeZone", None)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # the stateful aggregation runs spark.sql.shuffle.partitions tasks on
+    # every micro-batch (the default 200 for 78 result rows); pin it to
+    # the task slots for the query's duration, as the timezone is pinned
+    pinned = {"spark.sql.session.timeZone": "UTC",
+              "spark.sql.shuffle.partitions":
+                  str(spark.sparkContext.defaultParallelism)}
+    before = {k: spark.conf.get(k, None) for k in pinned}
+    for k, v in pinned.items():
+        spark.conf.set(k, v)
     name = "stream_parity_violation_windows"
     try:
         batch_df = spark.read.parquet(src)
@@ -1077,10 +1084,11 @@ def _q_stream_violation_windows(spark, sf_dir):
             F.col("window_start").cast("long").alias("w_start"),
             "keyword", "n_violations").collect()
     finally:
-        if tz_before is None:
-            spark.conf.unset("spark.sql.session.timeZone")
-        else:
-            spark.conf.set("spark.sql.session.timeZone", tz_before)
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
         shutil.rmtree(stage, ignore_errors=True)
     return spark.createDataFrame(
         rows, "w_start bigint, keyword string, n_violations bigint")

@@ -184,6 +184,15 @@ def empty_failures() -> Column:
     return F.array().cast(f"array<{FAILURE_DDL}>")
 
 
+def _text(*parts: str | Column) -> Column:
+    """Message text: literal parts and integer columns, concatenated. An
+    integer prints as ``format_string``'s ``%s`` prints it, and NULL as
+    ``null``, with no format string parsed per row."""
+    return F.concat(*[F.lit(p) if isinstance(p, str)
+                      else F.coalesce(p.cast("string"), F.lit("null"))
+                      for p in parts])
+
+
 def _fail_struct(keyword: str, kw_loc: str, inst_loc: Column, dyn_path: str,
                  message: Column) -> Column:
     return F.struct(
@@ -1259,33 +1268,55 @@ class Compiler:
             col = inst.col
         # F.length counts code points on strings — matches codePointCount
         # (Validator.kt:454,574); on binary it counts bytes. Counting walks
-        # every byte, so the O(1) byte length decides first: Spark's
-        # numChars lies in [ceil(bytes/4), bytes] (a character is 1-4
-        # bytes, an invalid lead byte counts as one), and codegen
-        # short-circuits AND/OR, so length() only runs for rows whose byte
-        # length falls inside that band. 4n is capped at 2^31 (past any
+        # every byte, so the O(1) byte length ob decides wherever it can:
+        # Spark's count lies in [ceil(ob/4), ob] (a character is 1-4 bytes,
+        # an invalid lead byte counts as one). length < n is certain for
+        # ob < n and impossible for ob > 4n-4; length > n is certain for
+        # ob > 4n and impossible for ob <= n. The node counts characters in
+        # one column ``ln``, NULL outside the union of the keywords' bands
+        # where ob cannot decide: common-subexpression elimination may
+        # evaluate ``ln`` ahead of the OR that reads it, and it then still
+        # counts only inside the band. A message counts the characters of
+        # its failing rows only. Bounds are capped at 2^31 (past any
         # octet_length) so that a huge bound still fits a long literal.
-        ln = F.length(col)
         ob = F.octet_length(col)
+        bands = {}   # keyword -> (lo, hi): ob cannot decide for lo <= ob <= hi
+        if "minLength" in node:
+            n = node["minLength"]
+            bands["minLength"] = (n, min(4 * n - 4, 2 ** 31))
+        if "maxLength" in node:
+            n = node["maxLength"]
+            bands["maxLength"] = (n + 1, min(4 * n, 2 ** 31))
+        bands = {k: b for k, b in bands.items() if b[0] <= b[1]}
+        band = F.lit(False)
+        for lo, hi in bands.values():
+            band = band | ((ob >= lo) & (ob <= hi))
+        ln = F.when(band, F.length(col))
         parts = []
         if "minLength" in node:
             n = node["minLength"]
-            # length < n  <=>  ob < n  OR  (ob < 4n AND length < n)
-            too_short = (ob < n) | ((ob < min(4 * n, 2 ** 31)) & (ln < n))
+            too_short = ob < n
+            if "minLength" in bands:
+                too_short = too_short | (ln < n)
+            # a failing row has ob < n or ob in the band; for n <= 1 it is
+            # empty, and ob is its character count
+            chars = ob if n <= 1 else F.when(
+                ob <= max(n, min(4 * n - 4, 2 ** 31)), F.length(col))
             parts.append(Compiled.simple(
                 ~inst.is_absent() & too_short, "minLength",
                 f"{kw_loc}/minLength", inst.loc, dyn + "/minLength",
-                F.format_string(
-                    f"actual string length %s is lower than minLength {n}", ln)))
+                _text("actual string length ", chars,
+                      f" is lower than minLength {n}")))
         if "maxLength" in node:
             n = node["maxLength"]
-            # length > n  <=>  ob > 4n  OR  (ob > n AND length > n)
-            too_long = (ob > min(4 * n, 2 ** 31)) | ((ob > n) & (ln > n))
+            too_long = ob > min(4 * n, 2 ** 31)
+            if "maxLength" in bands:
+                too_long = too_long | (ln > n)
             parts.append(Compiled.simple(
                 ~inst.is_absent() & too_long, "maxLength",
                 f"{kw_loc}/maxLength", inst.loc, dyn + "/maxLength",
-                F.format_string(
-                    f"actual string length %s exceeds maxLength {n}", ln)))
+                _text("actual string length ", F.when(ob > n, F.length(col)),
+                      f" exceeds maxLength {n}")))
         if "pattern" in node:
             p = node["pattern"]
             # rlike = Java regex unanchored find(), same engine + semantics as
@@ -1479,15 +1510,13 @@ class Compiler:
                 add(Compiled.simple(
                     ~inst.is_absent() & (cnt < n), "minProperties",
                     f"{kw_loc}/minProperties", inst.loc, dyn + "/minProperties",
-                    F.format_string(
-                        f"expected minimum properties: {n}, found only %s", cnt)))
+                    _text(f"expected minimum properties: {n}, found only ", cnt)))
             if "maxProperties" in node:
                 n = node["maxProperties"]
                 add(Compiled.simple(
                     ~inst.is_absent() & (cnt > n), "maxProperties",
                     f"{kw_loc}/maxProperties", inst.loc, dyn + "/maxProperties",
-                    F.format_string(
-                        f"expected maximum properties: {n}, found %s", cnt)))
+                    _text(f"expected maximum properties: {n}, found ", cnt)))
 
         # dependentRequired (Validator.kt:842-855)
         if "dependentRequired" in node:
@@ -1536,15 +1565,13 @@ class Compiler:
             add(Compiled.simple(
                 ~inst.is_absent() & (size < n), "minItems", f"{kw_loc}/minItems",
                 inst.loc, dyn + "/minItems",
-                F.format_string(
-                    f"expected minimum items: {n}, found only %s", size)))
+                _text(f"expected minimum items: {n}, found only ", size)))
         if "maxItems" in node:
             n = node["maxItems"]
             add(Compiled.simple(
                 ~inst.is_absent() & (size > n), "maxItems", f"{kw_loc}/maxItems",
                 inst.loc, dyn + "/maxItems",
-                F.format_string(
-                    f"expected maximum items: {n}, found %s", size)))
+                _text(f"expected maximum items: {n}, found ", size)))
 
         # uniqueItems (Validator.kt:692-708): report first duplicate pair
         if node.get("uniqueItems") is True:
@@ -1577,9 +1604,10 @@ class Compiler:
             add(Compiled.simple(
                 ~inst.is_absent() & dup, "uniqueItems", f"{kw_loc}/uniqueItems",
                 inst.loc, dyn + "/uniqueItems",
-                F.when(first_pair.isNotNull(), F.format_string(
-                    "the same array element occurs at positions %s, %s",
-                    first_pair.getField("first"), first_pair.getField("second")))
+                F.when(first_pair.isNotNull(), _text(
+                    "the same array element occurs at positions ",
+                    first_pair.getField("first"), ", ",
+                    first_pair.getField("second")))
                 .otherwise(F.lit(
                     "the same array element occurs multiple times "
                     "(null elements)"))))
@@ -1601,18 +1629,33 @@ class Compiler:
             elem_fn = self._element_fn(node["items"], elem_t, inst.loc, iloc,
                                        dyn + "/items", scope, depth, strict=inst.strict)
 
+            # passed: all post-prefix elements pass
+            ok = F.forall(
+                F.transform(arr, lambda x, i: F.when(i < prefix_n, F.lit(True))
+                            .otherwise(elem_fn(x, i).passed)),
+                lambda b: b)
+            passed = F.when(inst.is_absent(), F.lit(True)) \
+                .otherwise(F.coalesce(ok, F.lit(True)))
+
             def items_failures(elem_fn=elem_fn) -> Column:
-                # elem_fn bound at definition: the contains block rebinds it
+                # elem_fn bound at definition: the contains block rebinds
+                # it. Only a failing array builds its element failures.
                 per_elem = F.transform(
                     arr, lambda x, i: F.when(i >= prefix_n,
                                              elem_fn(x, i).failures)
                     .otherwise(empty_failures()))
-                return F.when(inst.is_absent(), empty_failures()) \
+                return F.when(passed, empty_failures()) \
                     .otherwise(F.coalesce(F.flatten(per_elem), empty_failures()))
 
             def items_legs(elem_fn=elem_fn) -> tuple:
                 # one element compile serves every leg: per element, a
-                # struct of its legs' counts; each leg sums its field
+                # struct of its legs' counts, summed over the elements
+                # into one struct. Each leg reads its field of that one
+                # sum in an always-evaluated position, so common-
+                # subexpression elimination computes the sum once per row.
+                # An absent (NULL) array sums to NULL, read as 0: a CASE
+                # on absence would take the field read into its branch,
+                # one sum per leg again.
                 legs: list = []
 
                 def per_elem(x: Column, i: Column) -> Column:
@@ -1621,21 +1664,17 @@ class Compiler:
                         F.when(i >= prefix_n, c).otherwise(F.lit(0))
                         .alias(f"_{j}") for j, (c, _, _) in enumerate(legs)])
                 counts = F.transform(arr, per_elem)
-                return tuple(
-                    (F.when(inst.is_absent(), F.lit(0)).otherwise(F.coalesce(
-                        F.aggregate(counts, F.lit(0),
-                                    lambda acc, c: acc + c[f"_{j}"]),
-                        F.lit(0))), k, kl)
-                    for j, (_, k, kl) in enumerate(legs))
-            # passed: all post-prefix elements pass
-            ok = F.forall(
-                F.transform(arr, lambda x, i: F.when(i < prefix_n, F.lit(True))
-                            .otherwise(elem_fn(x, i).passed)),
-                lambda b: b)
-            add(Compiled(
-                passed=F.when(inst.is_absent(), F.lit(True))
-                .otherwise(F.coalesce(ok, F.lit(True))),
-                build_failures=items_failures, build_legs=items_legs))
+                names = [f"_{j}" for j in range(len(legs))]
+                if not names:
+                    return ()
+                total = F.aggregate(
+                    counts, F.struct(*[F.lit(0).alias(f) for f in names]),
+                    lambda acc, c: F.struct(*[(acc[f] + c[f]).alias(f)
+                                              for f in names]))
+                return tuple((F.coalesce(total[f], F.lit(0)), k, kl)
+                             for f, (_, k, kl) in zip(names, legs))
+            add(Compiled(passed=passed, build_failures=items_failures,
+                         build_legs=items_legs))
             res.rest_cov.append(F.lit(True))
 
         # contains + minContains/maxContains (Validator.kt:751-781)
@@ -1666,9 +1705,9 @@ class Compiler:
                     match_cnt == 0,
                     F.lit('no array items are valid against "contains" subschema,'
                           f" expected minimum is {min_c}")
-                ).otherwise(F.format_string(
-                    'only %s array items are valid against "contains" subschema,'
-                    f" expected minimum is {min_c}", match_cnt))
+                ).otherwise(_text(
+                    "only ", match_cnt, ' array items are valid against'
+                    f' "contains" subschema, expected minimum is {min_c}'))
                 if min_c == 1 and "minContains" not in node:
                     low_msg = F.when(
                         match_cnt == 0,
@@ -1681,9 +1720,8 @@ class Compiler:
                 parts.append(Compiled.simple(
                     ~inst.is_absent() & (match_cnt > max_c), "maxContains", closed,
                     inst.loc, dyn + "/contains",
-                    F.format_string(
-                        '%s array items are valid against "contains" subschema,'
-                        f" expected maximum is {max_c}", match_cnt)))
+                    _text(match_cnt, ' array items are valid against "contains"'
+                          f" subschema, expected maximum is {max_c}")))
             if parts:
                 add(conj(parts))
             res.elem_cov.append((lambda x: elem_fn(x, F.lit(0)).passed, F.lit(True)))
@@ -1734,8 +1772,8 @@ class Compiler:
             for s in subs:
                 c = s.compiled.passed.cast("int")
                 matched = c if matched is None else matched + c
-            one_msg = F.format_string(
-                f"expected 1 subschema to match out of {n}, %s matched", matched)
+            one_msg = _text(f"expected 1 subschema to match out of {n}, ", matched,
+                            " matched")
             # absent value: oneOf never applies (all branches vacuously
             # pass, which would read as "N matched" without this guard)
             present = ~inst.is_absent()

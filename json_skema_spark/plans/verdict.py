@@ -12,15 +12,24 @@ Scale notes:
 - ``apply(..., mode="verdict")`` only builds the boolean column; Catalyst
   prunes every failure-struct expression, so the verdict path is pure
   whole-stage-codegen boolean algebra. ``minLength``/``maxLength`` decide
-  on the O(1) byte length and count characters only inside the byte band
-  where that cannot decide; ``pattern`` is one ``rlike``.
-- ``violations`` filters to failing rows *before* exploding, so shuffle-free
-  and proportional to the violation count, not the table size. The failure
-  structs and messages use no higher-order function, so their Project
-  stays in whole-stage codegen as well. Its output is coalesced (narrow,
-  no Exchange) to ``defaultParallelism`` partitions, so a write runs one
-  task and one file per task slot instead of one per input split;
-  ``partition_id`` still names the input split.
+  on the O(1) byte length and count characters once per string node, only
+  inside the byte band where the byte length cannot decide; ``pattern`` is
+  one ``rlike``.
+- ``violations`` is two Dataset steps: one Project builds each row's
+  failure array once, and one ``inline`` turns it into rows. There is no
+  verdict pre-filter: the ``size(failures) > 0`` filter Catalyst infers in
+  front of the Generate drops passing rows, and every node builds its
+  failure structs only where it fails (an ``items`` array only when it
+  fails), so a passing row pays for the verdict alone and a failing row
+  evaluates each check once. The work is shuffle-free and the failure
+  structs and messages use no higher-order function on flat schemas, so
+  the Project stays in whole-stage codegen. Its output is coalesced
+  (narrow, no Exchange) to ``defaultParallelism`` partitions, so a write
+  runs one task and one file per task slot instead of one per input
+  split; ``partition_id`` still names the input split.
+- ``summary`` is one aggregate of per-keyword SUMs and one ``inline`` of
+  literal result rows; both are built once per plan and reused by every
+  call.
 """
 
 from __future__ import annotations
@@ -88,6 +97,21 @@ class ValidationPlan:
         return df.withColumn("passed", self.passed) \
                  .withColumn("failures", self.failures)
 
+    @cached_property
+    def _summary_columns(self) -> tuple[list[Column], Column]:
+        """The summary's per-plan constants: one SUM per (keyword,
+        keyword_location) and the literal array of result-row structs that
+        reads them."""
+        keys = list(self.counts)
+        sums = [F.sum(self.counts[key]).alias(f"_l{i}")
+                for i, key in enumerate(keys)]
+        rows = F.array(*[
+            F.struct(F.lit(k).alias("keyword"),
+                     F.lit(kl).alias("keyword_location"),
+                     F.col(f"_l{i}").alias("n_violations"))
+            for i, (k, kl) in enumerate(keys)])
+        return sums, rows
+
     def violations(self, df: DataFrame, row_key: str | Column, *,
                    file_lineage: bool = False) -> DataFrame:
         """Explode per-row failures to one violation per row, with lineage.
@@ -101,12 +125,15 @@ class ValidationPlan:
         The result has at most ``defaultParallelism`` partitions (set
         ``spark.default.parallelism`` to fix the bound: under dynamic
         allocation Spark derives it from the executors alive at call time).
+
+        Two Dataset steps: one Project builds each row's failure array
+        once, and one ``inline`` turns it into rows. There is no verdict
+        pre-filter: Catalyst puts ``size(failures) > 0`` in front of the
+        Generate, which drops passing rows, and every node builds its
+        failure structs only where it fails, so a passing row pays for the
+        verdict alone.
         """
         key = F.col(row_key) if isinstance(row_key, str) else row_key
-        # The boolean verdict filter runs FIRST, fused into the scan, so
-        # passing rows never build any failure struct; the message/explode
-        # work applies to failing rows only.
-        failing = df.filter(~self.passed)
         cols = [
             key.cast("string").alias("row_key"),
             self.failures.alias("failures"),
@@ -123,26 +150,17 @@ class ValidationPlan:
                    else F.col("_metadata.file_path"))
             cols.append(src.alias("source_file"))
             out_extra = ["source_file"]
-        base = failing.select(*cols)
-        out = (
-            base.select("row_key", F.explode("failures").alias("f"),
-                        "partition_id", *out_extra)
-            .select(
-                "row_key",
-                F.col("f.keyword").alias("keyword"),
-                F.col("f.keyword_location").alias("keyword_location"),
-                F.col("f.instance_location").alias("instance_location"),
-                F.col("f.dynamic_path").alias("dynamic_path"),
-                F.col("f.message").alias("message"),
-                "partition_id",
-                *out_extra,
-            )
-        )
+        # inline emits the _fail_struct fields in their order, which is the
+        # output column order. The inferred size(failures) > 0 filter stays
+        # above the Project (spark_partition_id() is nondeterministic, so
+        # no filter moves below it) and reads the array built there.
+        out = df.select(*cols).select("row_key", F.inline("failures"),
+                                      "partition_id", *out_extra)
         # One output partition per task slot, not per input split: a write
         # pays a fixed writer set-up and commit cost per task whatever its
-        # row count. coalesce is narrow, so the verdict filter, failure
-        # Project and explode stay in one codegen stage with no Exchange,
-        # and spark_partition_id() is evaluated below it, so partition_id
+        # row count. coalesce is narrow, so the failure Project and the
+        # Generate stay in one codegen stage with no Exchange, and
+        # spark_partition_id() is evaluated below it, so partition_id
         # still names the input split. A shuffle (repartition/rebalance)
         # measured slower here, as it did in r06 for the failing rows;
         # numbers in CHANGES.md.
@@ -157,25 +175,19 @@ class ValidationPlan:
         keyword_location) count is one SUM of its per-row ``counts``. The
         aggregation is map-side combinable: the only shuffle is one
         partial-sum row per task (guide §2.3 "aggregate before you
-        shuffle"), and the one Generate explodes the literal result rows
-        above it. Exploding the failure array instead took 2.08 s against
-        ~0.5 s for the sums at sf1.0 (r06). Pairs that no row fails are
-        dropped, as the explode drops them.
+        shuffle"), and one ``inline`` above it turns the literal result
+        structs into rows. Exploding the failure array instead took 2.08 s
+        against ~0.5 s for the sums at sf1.0 (r06). Pairs that no row fails
+        are dropped, as the explode drops them. The SUM columns and the
+        result structs are built once per plan, so a call is three Dataset
+        steps (aggregate, ``inline``, filter) and no Column building.
         """
-        keys = list(self.counts)
-        if not keys:
+        sums, rows = self._summary_columns
+        if not sums:
             return df.sparkSession.createDataFrame(
                 [], "keyword string, keyword_location string, "
                     "n_violations bigint")
-        sums = df.agg(*[F.sum(self.counts[key]).alias(f"_l{i}")
-                        for i, key in enumerate(keys)])
-        rows = sums.select(F.explode(F.array(*[
-            F.struct(F.lit(k).alias("keyword"),
-                     F.lit(kl).alias("keyword_location"),
-                     F.col(f"_l{i}").alias("n_violations"))
-            for i, (k, kl) in enumerate(keys)])).alias("s"))
-        return (rows.select("s.keyword", "s.keyword_location",
-                            "s.n_violations")
+        return (df.agg(*sums).select(F.inline(rows))
                 .filter(F.col("n_violations") > 0))
 
     def verdict_counts(self, df: DataFrame) -> DataFrame:

@@ -6,7 +6,11 @@ The guard relies on Spark's character count lying in
 [ceil(bytes/4), bytes] for every string, including strings cast from
 binary with invalid UTF-8 lead bytes; the property test pins that on the
 installed Spark by comparing the compiled verdicts with a bare
-``length(col)`` comparison.
+``length(col)`` comparison. A node with both keywords counts characters
+once, in the union of their bands; the edge tests compare its verdicts,
+violation rows and ``format_string`` message text with a bare
+``length()`` at every band edge. The last test bounds the driver-JVM
+round trips of a repeated ``summary()``/``violations()`` call.
 """
 
 from __future__ import annotations
@@ -149,3 +153,116 @@ def test_pattern_verdicts_follow_java_find(spark):
     wrong = [(p, v, want) for i, (p, v, want) in enumerate(PATTERN_CASES)
              if got[i][f"p{pats.index(p)}"] != want]
     assert not wrong
+
+
+# nodes with both keywords: (3, 4) has overlapping bands, [3, 8] and
+# [5, 16]; (2, 40) has disjoint ones, [2, 4] and [41, 160]
+BOTH = ((3, 4), (2, 40))
+EDGE_UNITS = (b"a", "é".encode(), "€".encode(), "𝕏".encode(),
+              b"\x80", b"\xf0", b"\xf8")
+
+
+def _edge_strings() -> list[bytes]:
+    """Strings whose byte length sits at the band edges of every bound
+    in ``BOTH`` (n-1, n, n+1, 4n-4, 4n-3, 4n, 4n+1), made of one unit
+    padded with ASCII to the byte length, the unit first or last."""
+    obs = {ob for pair in BOTH for n in pair
+           for ob in (n - 1, n, n + 1, 4 * n - 4, 4 * n - 3, 4 * n, 4 * n + 1)
+           if ob >= 0}
+    out = []
+    for ob in sorted(obs):
+        for u in EDGE_UNITS:
+            q, r = divmod(ob, len(u))
+            out += [u * q + b"a" * r, b"a" * r + u * q]
+    return out
+
+
+@pytest.fixture(scope="module")
+def edges(spark, tmp_path_factory):
+    rows = [(i, b) for i, b in enumerate(_edge_strings())]
+    src = spark.createDataFrame(rows, "id int, b binary").select(
+        "id", F.col("b").cast("string").alias("s"))
+    src = src.unionByName(spark.createDataFrame([(-1, None)], "id int, s string"))
+    path = str(tmp_path_factory.mktemp("edges") / "t")
+    src.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _expected_failures(df, lo: int, hi: int):
+    """(id, keyword, message) for every failing row, from a bare
+    ``length()`` and the ``format_string`` message text."""
+    ln = F.length("s")
+    return df.select("id", F.explode(F.array(
+        F.when(ln < lo, F.struct(F.lit("minLength").alias("keyword"),
+                                 F.format_string(
+                                     f"actual string length %s is lower than minLength {lo}",
+                                     ln).alias("message"))),
+        F.when(ln > hi, F.struct(F.lit("maxLength").alias("keyword"),
+                                 F.format_string(
+                                     f"actual string length %s exceeds maxLength {hi}",
+                                     ln).alias("message"))))).alias("f")) \
+        .filter(F.col("f").isNotNull()).select("id", "f.keyword", "f.message")
+
+
+@pytest.mark.parametrize("lo,hi", BOTH)
+def test_overlapping_and_disjoint_bands_match_char_count(edges, lo, hi):
+    """A node with both keywords counts characters once, in the union of
+    the two bands: its verdicts, violation rows and messages equal those
+    of a bare ``length()`` at every band edge."""
+    plan = compile_schema({"properties": {"s": {"minLength": lo,
+                                                "maxLength": hi}}},
+                          edges.schema)
+    ln = F.length("s")
+    want_fail = F.coalesce((ln < lo) | (ln > hi), F.lit(False))
+    assert edges.filter((~plan.passed) != want_fail).count() == 0
+    got = plan.violations(edges, "id").select(
+        F.col("row_key").cast("int").alias("id"), "keyword", "message")
+    want = _expected_failures(edges, lo, hi)
+    assert want.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    assert sorted(map(tuple, plan.summary(edges).select(
+        "keyword", "n_violations").collect())) == sorted(map(tuple, want.groupBy(
+            "keyword").count().collect()))
+
+
+def test_summary_and_violations_reuse_plan_columns(spark):
+    """A second ``summary()`` and ``violations()`` on a used plan build no
+    Column trees: their driver-JVM round trips stay within a fixed budget
+    (a rebuild of the summary's sums and literal rows alone takes several
+    hundred)."""
+    import copy
+    import gc
+
+    from json_skema_spark.sources.clips import (CLIPS_CONSTRAINT_SCHEMA,
+                                                clips_df_fast)
+    doc = copy.deepcopy(CLIPS_CONSTRAINT_SCHEMA)
+    doc["properties"]["transcript"]["maxLength"] = 150
+    df = clips_df_fast(spark, 100)
+    plan = compile_schema(doc, df.schema)
+    plan.summary(df)
+    plan.violations(df, "clip_id")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = {"summary": 0, "violations": 0}
+    current = ["summary"]
+
+    def counting(command, *args, **kwargs):
+        # "m" commands release Java objects whose Python proxies died:
+        # garbage-collector timing, not plan building
+        if not command.startswith("m\n"):
+            calls[current[0]] += 1
+        return send(command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counting
+    try:
+        plan.summary(df)
+        current[0] = "violations"
+        plan.violations(df, "clip_id")
+    finally:
+        del client.send_command
+        gc.enable()
+    assert calls["summary"] <= 150, calls
+    assert calls["violations"] <= 150, calls
