@@ -15,9 +15,12 @@ of read I/O for one pass over a 100 TB table at N=16):
 2. **Resume by file pruning**: each per-bucket job reads ONLY the
    ``_bucket=<id>`` directory of the staged dataset. Committed buckets'
    files are never opened again.
-3. Sources that are already physically bucket-partitioned (an Iceberg
-   table with a bucket partition transform, or a previous run's staging)
-   skip step 1 entirely (``pre_staged_dir``).
+3. **One staging source**: a table that is already bucket-partitioned
+   (an Iceberg ``bucket(N, clip_id)`` transform) is read and staged like
+   any other input. Its bucket ids come from 32-bit Murmur3, not
+   ``xxhash64``, and its directories are named ``clip_id_bucket=<id>``,
+   so neither its ids nor its layout line up with this staging or with
+   the co-bucketed transcript reference.
 
 The staging step itself is crash-safe: the manifest records ``staged``
 only after the write commits (Spark's ``_SUCCESS``), so a crash mid-stage
@@ -31,7 +34,9 @@ seconds) — the north rule's "lineage + metrics intact".
 
 File layout under ``manifest_dir`` (driver-side fs, tiny):
     manifest.json        {"completed": {"<bucket>": {metrics...}},
-                          "staged": bool, "staging_dir": str}
+                          "staged": bool, "staging_dir": str,
+                          "num_buckets": int, "key": str,
+                          "staged_schema": <StructType JSON>}
 """
 
 from __future__ import annotations
@@ -104,15 +109,13 @@ class PartitionManifest:
     def staging_dir(self) -> str | None:
         return self._state.get("staging_dir")
 
-    def mark_staged(self, staging_dir: str, *,
-                    num_buckets: int | None = None,
-                    key: str | None = None) -> None:
+    def mark_staged(self, staging_dir: str, *, num_buckets: int, key: str,
+                    schema: T.StructType) -> None:
         self._state["staged"] = True
         self._state["staging_dir"] = staging_dir
-        if num_buckets is not None:
-            self._state["num_buckets"] = num_buckets
-        if key is not None:
-            self._state["key"] = key
+        self._state["num_buckets"] = num_buckets
+        self._state["key"] = key
+        self._state["staged_schema"] = schema.jsonValue()
         self._flush()
 
     @property
@@ -122,6 +125,13 @@ class PartitionManifest:
     @property
     def key(self) -> str | None:
         return self._state.get("key")
+
+    @property
+    def staged_schema(self) -> T.StructType | None:
+        """The data columns the staged files were written with (None for a
+        manifest written before the schema was recorded)."""
+        js = self._state.get("staged_schema")
+        return None if js is None else T.StructType.fromJson(js)
 
     # -- run options (emit_clean, ref-staging fingerprint, lineage...) ----
     # Recorded so a RESUME into the same out_dir can detect that it was
@@ -198,59 +208,12 @@ def fs_exists(spark, path: str) -> bool:
     return hp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hp)
 
 
-def _staged_bucket_ids(spark, path: str) -> list[int]:
-    """The ``_bucket=<id>`` partition ids actually present under a staging
-    directory (Hadoop FS listing — one metadata call)."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = []
-    for st in fs.listStatus(hp):
-        name = st.getPath().getName()
-        if name.startswith("_bucket="):
-            try:
-                out.append(int(name[len("_bucket="):]))
-            except ValueError:
-                pass
-    return out
-
-
-def _check_bucket_layout(spark, staging: str, num_buckets: int) -> None:
-    """Refuse a staging directory whose ``_bucket=<id>`` layout cannot be
-    this bucketing. Two silent-data-loss shapes (review r04 + r05c):
-
-    - NO ``_bucket=<id>`` dir at all — a typo'd path or an Iceberg
-      bucket-transform table's real naming (``<col>_bucket=0``): every
-      bucket would read as "genuinely empty" and be committed done without
-      opening a single row;
-    - a dir with id >= ``num_buckets`` — data bucketed MORE ways than this
-      invocation processes: the extra dirs' rows would silently never be
-      read, and bucket-locality assumptions (all copies of a key share a
-      bucket) break for the rows that were.
-    """
-    ids = _staged_bucket_ids(spark, staging)
-    if not ids:
-        raise ValueError(
-            f"staging dir {staging!r} contains no _bucket=<id> directory "
-            f"for any of the {num_buckets} buckets — every bucket would "
-            "be committed as empty. An Iceberg bucket-transform table "
-            "names its partition dirs '<col>_bucket=<id>'; re-expose them "
-            "as '_bucket=<id>' (or restage with stage_by_bucket)")
-    over = sorted(i for i in ids if i >= num_buckets)
-    if over:
-        raise ValueError(
-            f"staging dir {staging!r} holds _bucket={over[0]} (and "
-            f"{len(over) - 1} more) beyond num_buckets={num_buckets} — "
-            "the data is bucketed MORE ways than this run would read, so "
-            f"those buckets' rows would silently never be validated; run "
-            f"with num_buckets={max(ids) + 1} (or restage)")
-
-
 def _norm_nullability(dtype: T.DataType) -> T.DataType:
-    """The same type with every nullability flag forced True: parquet
-    footers may widen containsNull/nullable relative to the live source
-    schema, and that difference is harmless for an explicit-schema read —
-    only name/type drift is the silent-NULL hazard."""
+    """The same type with every nullability flag forced True: two reads of
+    one source may differ only in nullable/containsNull (an in-memory frame
+    vs its parquet copy), and that difference is harmless for an
+    explicit-schema read — only name/type drift is the silent-NULL
+    hazard."""
     if isinstance(dtype, T.StructType):
         return T.StructType([
             T.StructField(f.name, _norm_nullability(f.dataType), True)
@@ -263,22 +226,23 @@ def _norm_nullability(dtype: T.DataType) -> T.DataType:
     return dtype
 
 
-def _check_staged_schema(spark, staging: str,
+def _check_staged_schema(manifest: PartitionManifest,
                          expected: T.StructType) -> None:
-    """Refuse staged files whose footer schema diverges from this
-    invocation's source schema: the explicit-schema bucket read would
-    return changed/new columns as all-NULL (or mistyped values), silently
-    diverging from the already-committed buckets (review r05c). One footer
-    read; the staged ``_bucket`` partition column and any extra staged
+    """Refuse a resume whose source schema diverges from the schema the
+    staging was written with (recorded by ``mark_staged``): the
+    explicit-schema bucket read would return changed/new columns as
+    all-NULL (or mistyped values), silently diverging from the
+    already-committed buckets (review r05c). No file is read, so a staging
+    that holds no data file is checked like any other; extra staged
     columns are ignored."""
-    try:
-        actual = {f.name: f.dataType
-                  for f in spark.read.parquet(staging).schema.fields}
-    except Exception as exc:
+    staged = manifest.staged_schema
+    if staged is None:
         raise ValueError(
-            f"cannot read a schema from the staged data at {staging!r} "
-            f"({exc}) — refusing to treat every bucket as empty; delete "
-            "the manifest to restage") from exc
+            f"the manifest at {manifest.path!r} records no staged schema "
+            "(written by an older version) — refusing to resume against "
+            "staged files whose columns cannot be checked; delete the "
+            "manifest to restage")
+    actual = {f.name: f.dataType for f in staged.fields}
     problems = []
     for f in expected.fields:
         got = actual.get(f.name)
@@ -320,24 +284,13 @@ def with_source_file(df: DataFrame, col_name: str = "_src_file") -> DataFrame:
 
 def stage_by_bucket(df: DataFrame, key: str, num_buckets: int,
                     staging_dir: str, *,
-                    files_per_bucket: int | None = None,
                     capture_source_file: bool = False) -> None:
     """ONE pass: tag rows with their hash bucket, write bucket-partitioned
     parquet; every later per-bucket read prunes to one ``_bucket=<id>``
     directory.
 
-    File-count trade-off: the default (``files_per_bucket=None``) is a
-    map-side write — zero shuffle, but each input task emits one file per
-    bucket it touches (tasks x buckets files: fine for thousands of tasks,
-    pathological at 100 TB where 800k tasks x 64 buckets = 50M files).
-    Setting ``files_per_bucket`` inserts ONE shuffle on ``(_bucket, salt)``
-    so the staging holds on the order of ``num_buckets * files_per_bucket``
-    files — hash-partitioning collides (some partitions carry 2+
-    (bucket, salt) pairs, some none, and ``partitionBy`` writes one file
-    per bucket per task), so the bound is approximate small-constant-factor
-    control, not an exact count. At large scale one shuffle is far cheaper
-    than a 50M-file metadata bomb (and still one pass over the data; the
-    round-2 design re-SCANNED the table once per bucket).
+    The write is map-side (no shuffle): each input task writes one file per
+    bucket it touches, so the staging holds up to tasks x buckets files.
     """
     if "_bucket" in df.columns:
         # silently replacing a user column would make partitionBy consume
@@ -349,21 +302,14 @@ def stage_by_bucket(df: DataFrame, key: str, num_buckets: int,
             "back as NULL — rename the column before staging")
     if capture_source_file:
         df = with_source_file(df)
-    tagged = df.withColumn("_bucket", bucket_column(F.col(key), num_buckets))
-    if files_per_bucket is not None:
-        salt = F.pmod(F.xxhash64(F.col(key), F.lit(0x5a17)),
-                      F.lit(files_per_bucket))
-        tagged = tagged.repartition(num_buckets * files_per_bucket,
-                                    F.col("_bucket"), salt)
-    tagged.write.mode("overwrite").partitionBy("_bucket").parquet(staging_dir)
+    df.withColumn("_bucket", bucket_column(F.col(key), num_buckets)) \
+        .write.mode("overwrite").partitionBy("_bucket").parquet(staging_dir)
 
 
 def run_resumable(df: DataFrame, key: str, num_buckets: int,
                   manifest: PartitionManifest,
                   process: Callable[[DataFrame, int], dict], *,
                   staging_dir: str | None = None,
-                  pre_staged_dir: str | None = None,
-                  files_per_bucket: int | None = None,
                   capture_source_file: bool = False) -> dict:
     """Process each hash bucket of ``df`` exactly once across restarts.
 
@@ -375,42 +321,31 @@ def run_resumable(df: DataFrame, key: str, num_buckets: int,
     ``staging_dir``: where the one-pass bucket-partitioned copy lands; on
     a cluster pass a shared-FS path (defaults to ``<manifest>/staging``,
     which is correct for local mode and for manifest dirs on a shared
-    mount). ``pre_staged_dir``: skip staging — the path already holds
-    ``_bucket=<id>``-partitioned data with this bucketing (e.g. a previous
-    run's staging, or an Iceberg bucket-transform table's directory).
+    mount). A resume reads the directory the manifest recorded, whatever
+    this invocation passes.
 
     Returns the full metrics map (committed + newly processed).
     """
     spark = df.sparkSession
     schema = df.schema  # staged files carry the data columns only
-
-    if manifest.staged:
-        # the schema the staged files ACTUALLY carry is governed by how the
-        # crashed run staged them, not by this invocation's flag — a
-        # mismatch would read _src_file as all-NULL or silently cite the
-        # staging dir, so it REFUSES rather than silently overriding
-        # (review r04; validate_table raises its own friendlier message
-        # first, this one protects direct run_resumable callers)
-        prior = bool(manifest.option("lineage"))
-        if bool(capture_source_file) != prior:
-            raise ValueError(
-                f"resume requested capture_source_file="
-                f"{bool(capture_source_file)} but the staging was written "
-                f"with {prior} — the staged files cannot change shape on "
-                "resume; match the original setting or delete the "
-                "manifest+staging to restage")
     if capture_source_file and "_src_file" not in [f.name for f in schema]:
         schema = T.StructType(
             list(schema.fields) + [T.StructField("_src_file", T.StringType())])
 
-    def _exists(p: str) -> bool:
-        return fs_exists(spark, p)
-
     if manifest.staged:
-        # resume reads the directory the crashed run actually staged (a
-        # caller passing a different implicit staging_dir would otherwise
-        # "read" N missing directories as N empty buckets) — UNLESS the
-        # caller explicitly says the staged data moved (pre_staged_dir)
+        # the staged files either carry _src_file or they don't, however
+        # this invocation sets the flag: lineage-on over a lineage-off
+        # staging would read _src_file as all-NULL, and lineage-off over a
+        # lineage-on staging would leak _src_file into profile/clean — so
+        # a flip REFUSES, even with zero buckets committed (review r04)
+        prior = bool(manifest.option("lineage"))
+        if bool(capture_source_file) != prior:
+            raise ValueError(
+                f"resume requested file_lineage/capture_source_file="
+                f"{bool(capture_source_file)} but the staging was written "
+                f"with {prior} — the staged files cannot change shape on "
+                "resume; rerun with the original setting or delete the "
+                "manifest+staging to restage")
         if manifest.num_buckets is not None \
                 and manifest.num_buckets != num_buckets:
             raise ValueError(
@@ -431,60 +366,24 @@ def run_resumable(df: DataFrame, key: str, num_buckets: int,
                 f"bucketed by {manifest.key!r} — bucket-local semantics "
                 "would silently break; rerun with the original key or "
                 "delete the manifest to restage")
-        staging = pre_staged_dir or manifest.staging_dir or staging_dir \
-            or os.path.join(manifest.dir, "staging")
-        if not _exists(staging):
+        # resume reads the directory the crashed run actually staged (a
+        # caller passing a different staging_dir would otherwise "read" N
+        # missing directories as N empty buckets)
+        staging = manifest.staging_dir
+        if not fs_exists(spark, staging):
             raise FileNotFoundError(
                 f"manifest says staging is complete but {staging!r} does "
                 "not exist (cleaned tmp dir? node swap?) — refusing to "
                 "treat every bucket as empty; delete the manifest to "
-                "restage, or pass pre_staged_dir to the moved data")
-        # the elif branch's guards must hold HERE too: a wrong-but-existing
-        # pre_staged_dir override (or a source whose schema changed between
-        # staging and resume) would otherwise commit the remaining buckets
-        # as empty / all-NULL (review r05c)
-        _check_bucket_layout(spark, staging, num_buckets)
-        _check_staged_schema(spark, staging, schema)
-    elif pre_staged_dir is not None:
-        staging = pre_staged_dir
-        # sanity-check the layout BEFORE marking staged: a typo'd path or
-        # an Iceberg table's real partition-dir naming (`clip_id_bucket=0`,
-        # not `_bucket=0`) would otherwise read every bucket as "genuinely
-        # empty" and commit the whole table as validated without opening a
-        # single row (review r04)
-        if not _exists(pre_staged_dir):
-            raise FileNotFoundError(
-                f"pre_staged_dir {pre_staged_dir!r} does not exist")
-        _check_bucket_layout(spark, pre_staged_dir, num_buckets)
-        _check_staged_schema(
-            spark, pre_staged_dir,
-            # _src_file has its own friendlier message below
-            T.StructType([f for f in schema.fields
-                          if f.name != "_src_file"]))
-        if capture_source_file:
-            # pre-staged data (e.g. an Iceberg bucket-transform table) was
-            # written by someone else: requesting lineage it does not
-            # carry would read _src_file as all-NULL silently — the same
-            # explicit-schema failure mode the _bucket guard prevents
-            actual = {f.name
-                      for f in spark.read.parquet(pre_staged_dir).schema}
-            if "_src_file" not in actual:
-                raise ValueError(
-                    "capture_source_file=True with pre_staged_dir, but the "
-                    f"pre-staged data at {pre_staged_dir!r} has no "
-                    "_src_file column — every violation's source_file "
-                    "would be NULL; stage it with "
-                    "checkpoint.with_source_file first or run without "
-                    "lineage")
-        manifest.record_option("lineage", capture_source_file)
-        manifest.mark_staged(staging, num_buckets=num_buckets, key=key)
+                "restage")
+        _check_staged_schema(manifest, schema)
     else:
         staging = staging_dir or os.path.join(manifest.dir, "staging")
         stage_by_bucket(df, key, num_buckets, staging,
-                        files_per_bucket=files_per_bucket,
                         capture_source_file=capture_source_file)
         manifest.record_option("lineage", capture_source_file)
-        manifest.mark_staged(staging, num_buckets=num_buckets, key=key)
+        manifest.mark_staged(staging, num_buckets=num_buckets, key=key,
+                             schema=schema)
 
     for bucket in range(num_buckets):
         if manifest.is_done(bucket):
@@ -495,7 +394,7 @@ def run_resumable(df: DataFrame, key: str, num_buckets: int,
         # transient FS error or bad path must raise and leave the bucket
         # uncommitted for the next attempt — swallowing it would commit an
         # empty bucket as done and the data would never be validated
-        if _exists(bucket_path):
+        if fs_exists(spark, bucket_path):
             bucket_df = spark.read.schema(schema).parquet(bucket_path)
         else:
             # hash bucket genuinely received no rows -> no directory written

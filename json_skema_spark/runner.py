@@ -30,6 +30,7 @@ if __package__ in (None, ""):  # direct `python json_skema_spark/runner.py`
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from json_skema_spark import compile_schema
 from json_skema_spark.functions import audio as audio_fn
@@ -151,20 +152,6 @@ def validate_table(spark: SparkSession, clips: DataFrame, out_dir: str, *,
                 "inconsistent; finish with the original setting or use a "
                 "fresh out_dir")
         manifest.record_option(opt, bool(val))
-    # file_lineage is stricter: the STAGED FILES themselves either carry
-    # _src_file or they don't, so a flip after staging (even with zero
-    # buckets committed) cannot be honored — lineage-on over a lineage-off
-    # staging would silently cite the _staging directory, and lineage-off
-    # over a lineage-on staging would leak _src_file into profile/clean
-    prior_lineage = manifest.option("lineage")
-    if prior_lineage is not None and prior_lineage != bool(file_lineage):
-        raise ValueError(
-            f"resume requested file_lineage={bool(file_lineage)} but the "
-            f"staging was written with file_lineage={prior_lineage} — the "
-            "staged files cannot change shape on resume; rerun with "
-            f"file_lineage={prior_lineage} or delete the manifest+staging "
-            "to restage")
-
     # co-bucket the transcript reference ONCE: joining the full ref table
     # inside every bucket job would rescan+shuffle it num_buckets times —
     # the same N-full-scans pathology the staging redesign eliminates for
@@ -297,7 +284,7 @@ def validate_table(spark: SparkSession, clips: DataFrame, out_dir: str, *,
     # Keys come from the STAGED copy (parquet column pruning reads the
     # clip_id column only), so a resumed run never touches the source.
     def _staged_keys() -> DataFrame:
-        s = manifest.staging_dir or staging_dir
+        s = manifest.staging_dir
         if not checkpoint.fs_exists(spark, s):
             # same refusal run_resumable makes for buckets: a live-source
             # fallback would silently compute the global checks from a
@@ -308,7 +295,10 @@ def validate_table(spark: SparkSession, clips: DataFrame, out_dir: str, *,
                 "refusing to fall back to the live source (its content "
                 "may have drifted from the staged snapshot the buckets "
                 "validated); delete the manifest to restage")
-        return spark.read.parquet(s).select("clip_id")
+        # explicit schema: a staging of an EMPTY input holds no data file,
+        # and schema inference over it fails (UNABLE_TO_INFER_SCHEMA)
+        return spark.read.schema(T.StructType([clips.schema["clip_id"]])) \
+            .parquet(s).select("clip_id")
 
     # global steps skip on resume only when their INPUT is unchanged: the
     # uniqueness input (staged keys) is immutable, but the ref table /

@@ -25,12 +25,11 @@ def read_table(spark: SparkSession, path_or_name: str, *,
       sandbox (no jars) — the dispatch raises a targeted error instead
       of Spark's raw ClassNotFound.
 
-    Iceberg + resume recipe: if the table is partitioned with a
-    ``bucket(N, clip_id)`` transform, skip the staging pass entirely —
-    pass the table's data directory as ``pre_staged_dir`` to
-    ``checkpoint.run_resumable`` with ``num_buckets=N`` (the layout is
-    already the ``_bucket=<id>`` shape staging would produce, modulo the
-    partition dir name; see operators/checkpoint.py:17-20).
+    Iceberg + resume: a table partitioned with a ``bucket(N, clip_id)``
+    transform is read and staged like any other input. Its buckets are not
+    the resume's buckets: Iceberg hashes with 32-bit Murmur3 and names its
+    directories ``clip_id_bucket=<id>``, while staging hashes with
+    ``xxhash64`` into ``_bucket=<id>`` (operators/checkpoint.py).
     """
     if format == "parquet":
         return spark.read.parquet(path_or_name)

@@ -287,46 +287,6 @@ def test_start_streaming_failure_stops_started_queries(spark, tmp_path):
     assert len(spark.streams.active) == before
 
 
-def test_run_resumable_over_bucketed_pre_staged_refused(spark, tmp_path):
-    """Pre-staged data bucketed MORE ways than num_buckets previously
-    passed the any()-guard and the extra buckets were silently never read
-    (review r05c)."""
-    from json_skema_spark.operators import checkpoint
-    df = spark.createDataFrame([(f"c{i}", i) for i in range(50)],
-                               "clip_id string, v int")
-    staging = str(tmp_path / "staged4")
-    checkpoint.stage_by_bucket(df, "clip_id", 4, staging)
-    m = checkpoint.PartitionManifest(str(tmp_path / "_m"), spark)
-    with pytest.raises(ValueError, match="beyond num_buckets=2"):
-        checkpoint.run_resumable(df, "clip_id", 2, m, lambda b, i: {},
-                                 pre_staged_dir=staging)
-
-
-def test_run_resumable_resume_validates_overridden_pre_staged(spark,
-                                                              tmp_path):
-    """On RESUME, a wrong-but-existing pre_staged_dir override previously
-    skipped layout validation and committed every remaining bucket as
-    empty (review r05c)."""
-    from json_skema_spark.operators import checkpoint
-    df = spark.createDataFrame([(f"c{i}", i) for i in range(50)],
-                               "clip_id string, v int")
-    m = checkpoint.PartitionManifest(str(tmp_path / "_m"), spark)
-
-    def boom(bucket_df, i):
-        if i == 1:
-            raise RuntimeError("crash")
-        return {"rows": bucket_df.count()}
-
-    with pytest.raises(RuntimeError):
-        checkpoint.run_resumable(df, "clip_id", 2, m, boom)
-    wrong = tmp_path / "not_staging"
-    wrong.mkdir()
-    m2 = checkpoint.PartitionManifest(str(tmp_path / "_m"), spark)
-    with pytest.raises(ValueError, match="no _bucket=<id> directory"):
-        checkpoint.run_resumable(df, "clip_id", 2, m2, lambda b, i: {},
-                                 pre_staged_dir=str(wrong))
-
-
 def test_run_resumable_resume_key_mismatch_refused(spark, tmp_path):
     from json_skema_spark.operators import checkpoint
     df = spark.createDataFrame([(f"c{i}", i) for i in range(20)],

@@ -267,19 +267,6 @@ def test_global_ref_recomputed_when_ref_changes(spark, tmp_path):
     clips.unpersist()
 
 
-def test_pre_staged_lineage_without_src_file_raises(spark, tmp_path):
-    """Requesting lineage over pre-staged data that has no _src_file must
-    refuse instead of reading all-NULL source_file."""
-    pre = str(tmp_path / "pre")
-    df = clips_src.clips_df(spark, 20, audio=False, inject=False)
-    checkpoint.stage_by_bucket(df, "clip_id", 2, pre)  # no lineage column
-    manifest = checkpoint.PartitionManifest(str(tmp_path / "m"))
-    with pytest.raises(ValueError, match="_src_file"):
-        checkpoint.run_resumable(df, "clip_id", 2, manifest,
-                                 lambda b, i: {}, pre_staged_dir=pre,
-                                 capture_source_file=True)
-
-
 def test_cli_forwards_digest_and_lineage_to_revalidate(spark, tmp_path,
                                                        monkeypatch):
     """--emit-digest/--file-lineage reach revalidate_table when
@@ -380,21 +367,6 @@ def test_run_resumable_direct_lineage_mismatch_raises(spark, tmp_path):
                                  capture_source_file=True)
 
 
-def test_pre_staged_dir_sanity_checked(spark, tmp_path):
-    df = clips_src.clips_df(spark, 10, audio=False, inject=False)
-    with pytest.raises(FileNotFoundError):
-        checkpoint.run_resumable(
-            df, "clip_id", 2, checkpoint.PartitionManifest(str(tmp_path / "m1")),
-            lambda b, i: {}, pre_staged_dir=str(tmp_path / "nope"))
-    # exists but wrong layout (Iceberg-style partition dir name)
-    wrong = tmp_path / "iceberg_style"
-    (wrong / "clip_id_bucket=0").mkdir(parents=True)
-    with pytest.raises(ValueError, match="_bucket"):
-        checkpoint.run_resumable(
-            df, "clip_id", 2, checkpoint.PartitionManifest(str(tmp_path / "m2")),
-            lambda b, i: {}, pre_staged_dir=str(wrong))
-
-
 def test_manifest_on_uri_scheme_filesystem(spark, tmp_path):
     """A scheme-qualified manifest dir routes through the Hadoop FS API
     (file:// here standing in for s3a/hdfs) — os.makedirs on a URI would
@@ -446,3 +418,29 @@ def test_cli_audio_flag_reaches_revalidate(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sys, "argv", base_argv)
     runner_mod.main()
     assert "check_audio" not in seen  # revalidate default (off) preserved
+
+
+def test_empty_input_table_runs_and_reruns_clean(spark, tmp_path):
+    """A 0-row input stages to a directory holding only _SUCCESS: the
+    global phase must read the staged keys without schema inference, and
+    a re-run must resume over that empty staging — with every emit flag,
+    lineage, a transcript reference and a baseline profile on."""
+    from json_skema_spark.operators.stats import profile
+    from json_skema_spark.sources.clips import transcripts_ref_df
+    src = str(tmp_path / "empty_input")
+    clips_src.clips_df(spark, 0, audio=False, inject=False).write.parquet(src)
+    clips = spark.read.parquet(src)
+    base = profile(clips_src.clips_df(spark, 20, audio=False, inject=False)
+                   .select("clip_id", "sr_hz", "dur_ms", "codec",
+                           "transcript"))
+    out = str(tmp_path / "out")
+    kw = dict(num_buckets=4, check_audio=False, emit_clean=True,
+              emit_digest=True, file_lineage=True,
+              transcripts_ref=transcripts_ref_df(spark, 10, inject=False),
+              baseline_profile=base)
+    first = validate_table(spark, clips, out, **kw)
+    assert set(first) == {"0", "1", "2", "3"}
+    assert sum(m["rows"] for m in first.values()) == 0
+    assert spark.read.parquet(
+        os.path.join(out, "violations_unique")).count() == 0
+    assert validate_table(spark, clips, out, **kw) == first
