@@ -369,7 +369,7 @@ def _q_audio_snr_verdicts(spark, sf_dir):
     clips = ids.mapInPandas(
         synth, "clip_id string, bytes binary, sr_hz int, dur_ms int, "
                "codec string, transcript string")
-    checked = jaudio.pcm_invariant_check(clips, min_snr_db=30.0)
+    checked = jaudio.pcm_invariant_check(clips)
     return checked.select(
         F.conv(F.substring("clip_id", 6, 12), 16, 10).cast("long")
         .alias("doc_id"),

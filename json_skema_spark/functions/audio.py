@@ -35,6 +35,8 @@ DECODE_SCHEMA = ("clip_id string, decode_ok boolean, error string, "
                  "sr_hz_decoded int, n_samples long")
 SNR_SCHEMA = ("clip_id string, invariant_ok boolean, snr_db double, "
               "transcript_ok boolean, error string")
+# the per-row invariant: decoded PCM reaches this SNR against the reference
+MIN_SNR_DB = 30.0
 
 # largest header-claimed sample rate for which the SNR checker caches a
 # full one-second reference period (2x DSD-rate headroom over any real
@@ -336,11 +338,10 @@ def snr_db_periodic(one: np.ndarray, decoded: np.ndarray) -> float:
 
 
 def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
-                        *, min_snr_db: float = 30.0,
-                        check_duration: bool = False,
+                        *, check_duration: bool = False,
                         duration_tolerance: float = 0.02) -> DataFrame:
     """North-rule per-row invariant: decoded PCM vs the deterministic
-    reference signal (allclose expressed as SNR >= ``min_snr_db``), plus
+    reference signal (allclose expressed as SNR >= ``MIN_SNR_DB``), plus
     transcript equality when a reference transcript table is joined in.
 
     ``check_duration=True`` additionally fails rows whose decoded sample
@@ -488,7 +489,7 @@ def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
                                 dtype=np.float32).astype(np.float64)
                         s = snr_db_periodic(one, sig[:n_cmp])
                         snr[idx] = s
-                        ok[idx] = s >= min_snr_db
+                        ok[idx] = s >= MIN_SNR_DB
                         if check_duration:
                             expected = int(eff_sr) * int(dur) / 1000.0
                             if abs(sig_len - expected) > max(
@@ -512,7 +513,7 @@ def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
     return base.mapInArrow(run, SNR_SCHEMA)
 
 
-def audio_violations(df: DataFrame, *, min_snr_db: float = 30.0,
+def audio_violations(df: DataFrame, *,
                      ref_transcripts: DataFrame | None = None,
                      **invariant_kwargs) -> DataFrame:
     """Failed invariants rendered in the standard violations shape.
@@ -521,8 +522,7 @@ def audio_violations(df: DataFrame, *, min_snr_db: float = 30.0,
     production violations path can enable the opt-in gates
     (``check_duration=True``, ``duration_tolerance=...``) — without this,
     runner.py's pipeline had no way to turn them on (review r04)."""
-    checked = pcm_invariant_check(df, ref_transcripts, min_snr_db=min_snr_db,
-                                  **invariant_kwargs)
+    checked = pcm_invariant_check(df, ref_transcripts, **invariant_kwargs)
     bad = checked.filter(~F.col("invariant_ok") | ~F.col("transcript_ok"))
     return bad.select(
         F.col("clip_id").alias("row_key"),
@@ -531,7 +531,7 @@ def audio_violations(df: DataFrame, *, min_snr_db: float = 30.0,
         F.lit("#/bytes").alias("instance_location"),
         F.lit("#/properties/bytes/format").alias("dynamic_path"),
         F.when(~F.col("invariant_ok"),
-               F.concat(F.lit(f"decoded PCM SNR below {min_snr_db} dB or decode "
+               F.concat(F.lit(f"decoded PCM SNR below {MIN_SNR_DB} dB or decode "
                               "failed: "), F.coalesce(F.col("error"), F.lit(""))))
         .when(F.col("error") == "missing_reference_transcript",
               F.lit("no reference transcript exists for this clip"))

@@ -50,6 +50,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# the lineage column with_source_file adds: staging carries it, and
+# ValidationPlan.violations(file_lineage=True) and the runner read it
+SOURCE_FILE_COL = "_src_file"
+
 
 class PartitionManifest:
     """Driver-side JSON manifest. Plain local-FS I/O by default; when
@@ -259,27 +263,28 @@ def _check_staged_schema(manifest: PartitionManifest,
             "source, or delete the manifest+staging to restage")
 
 
-def with_source_file(df: DataFrame, col_name: str = "_src_file") -> DataFrame:
+def with_source_file(df: DataFrame) -> DataFrame:
     """Capture the source file path as a REGULAR column before the rows
     leave their original files.
 
     ``_metadata.file_path`` only exists on a file-source scan; once rows
     are staged (stage_by_bucket) the metadata cites the *staging*
     directory, losing the provenance the reference's SourceLocation idea
-    carries (JsonValue.kt:63-123). Capturing it into ``_src_file`` before
-    staging lets ``ValidationPlan.violations(file_lineage=True)`` cite the
-    original input file from a resumed run. No-op pass-through when the
-    column already exists; raises a clear error for non-file sources.
+    carries (JsonValue.kt:63-123). Capturing it into ``SOURCE_FILE_COL``
+    before staging lets ``ValidationPlan.violations(file_lineage=True)``
+    cite the original input file from a resumed run. No-op pass-through
+    when the column already exists; raises a clear error for non-file
+    sources.
     """
-    if col_name in df.columns:
+    if SOURCE_FILE_COL in df.columns:
         return df
     try:
-        return df.withColumn(col_name, F.col("_metadata.file_path"))
+        return df.withColumn(SOURCE_FILE_COL, F.col("_metadata.file_path"))
     except Exception as e:  # AnalysisException: not a file-based source
         raise ValueError(
             "source-file lineage requested but the input is not a "
             "file-based scan (no _metadata column) — read from "
-            f"parquet/Iceberg or pre-populate {col_name!r}") from e
+            f"parquet/Iceberg or pre-populate {SOURCE_FILE_COL!r}") from e
 
 
 def stage_by_bucket(df: DataFrame, key: str, num_buckets: int,
@@ -328,9 +333,10 @@ def run_resumable(df: DataFrame, key: str, num_buckets: int,
     """
     spark = df.sparkSession
     schema = df.schema  # staged files carry the data columns only
-    if capture_source_file and "_src_file" not in [f.name for f in schema]:
+    if capture_source_file and SOURCE_FILE_COL not in [f.name for f in schema]:
         schema = T.StructType(
-            list(schema.fields) + [T.StructField("_src_file", T.StringType())])
+            list(schema.fields)
+            + [T.StructField(SOURCE_FILE_COL, T.StringType())])
 
     if manifest.staged:
         # the staged files either carry _src_file or they don't, however

@@ -15,19 +15,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# The drift thresholds, shared with the streaming monitor
+# (``streaming.drift_stream.windowed_drift``).
+NULL_DELTA_THRESHOLD = 0.01
+DISTINCT_RATIO_THRESHOLD = 0.5
+QUANTILE_REL_THRESHOLD = 0.25
 
-def drift_report(current: DataFrame, baseline: DataFrame, *,
-                 null_delta_threshold: float = 0.01,
-                 distinct_ratio_threshold: float = 0.5,
-                 quantile_rel_threshold: float = 0.25) -> DataFrame:
+
+def drift_report(current: DataFrame, baseline: DataFrame) -> DataFrame:
     """Per-column drift flags.
 
-    - ``null_drift``: |null_fraction - baseline| > threshold
+    - ``null_drift``: |null_fraction - baseline| > ``NULL_DELTA_THRESHOLD``
     - ``distinct_drift``: approx_distinct ratio outside
-      [threshold, 1/threshold]
-    - ``quantile_drift``: max relative per-quantile shift > threshold
-      (quantiles compared positionally; both sides computed with the same
-      quantile vector)
+      [``DISTINCT_RATIO_THRESHOLD``, 1/``DISTINCT_RATIO_THRESHOLD``]
+    - ``quantile_drift``: max relative per-quantile shift >
+      ``QUANTILE_REL_THRESHOLD`` (quantiles compared positionally; both
+      sides computed with the same quantile vector)
 
     Refuses per-partition profile parts (a ``partition_id`` column):
     duplicate column_name rows would turn the full-outer join into a
@@ -76,13 +79,13 @@ def drift_report(current: DataFrame, baseline: DataFrame, *,
     return j.select(
         "column_name",
         (F.abs(F.col("nf_cur") - F.col("nf_base"))).alias("null_delta"),
-        (F.abs(F.col("nf_cur") - F.col("nf_base")) > null_delta_threshold)
+        (F.abs(F.col("nf_cur") - F.col("nf_base")) > NULL_DELTA_THRESHOLD)
         .alias("null_drift"),
         ratio.alias("distinct_ratio"),
-        ((ratio < distinct_ratio_threshold) | (ratio > 1.0 / distinct_ratio_threshold))
-        .alias("distinct_drift"),
+        ((ratio < DISTINCT_RATIO_THRESHOLD)
+         | (ratio > 1.0 / DISTINCT_RATIO_THRESHOLD)).alias("distinct_drift"),
         F.coalesce(max_shift, F.lit(0.0)).alias("max_quantile_shift"),
-        (F.coalesce(max_shift, F.lit(0.0)) > quantile_rel_threshold)
+        (F.coalesce(max_shift, F.lit(0.0)) > QUANTILE_REL_THRESHOLD)
         .alias("quantile_drift"),
     ).withColumn(
         "drifted",

@@ -3,12 +3,12 @@ resolution ("a value must satisfy a schema defined elsewhere",
 reference SchemaLoader.kt:381-405) and of ``enum`` membership against a
 reference set (Validator.kt:625-630).
 
-Join-strategy selection mirrors the reference's pre-registered vs remote
-lookup split (SchemaClient.kt:28-34): small dimension tables broadcast
-(hash join, no shuffle of the fact side); large ones fall back to Spark's
-sort-merge join. A broadcast is forced only when the caller supplies a
-row-count (``dim_rows``, e.g. from catalog stats); otherwise AQE picks the
-strategy from runtime statistics — never an eager ``dim.count()``.
+The join strategy is left to Catalyst: AQE picks it from runtime
+statistics (a small dimension broadcasts, with no shuffle of the fact
+side; a large one falls back to sort-merge). No hint is forced and no
+eager ``dim.count()`` runs — that would add a full extra scan of the
+dimension table, the most expensive part of the query at 100 TB
+(VERDICT r01).
 """
 
 from __future__ import annotations
@@ -16,27 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from json_skema_spark.operators.util import ensure_parallelism
 
-DEFAULT_BROADCAST_ROWS = 2_000_000  # ~key-only dim of 2M strings << 8 GiB limit
-
-
-def _maybe_broadcast(dim: DataFrame, broadcast_threshold_rows: int,
-                     known_rows: int | None = None) -> DataFrame:
-    """Force a broadcast only when the caller supplies a row-count (catalog
-    stats / prior knowledge). Without one, return the dim unchanged and let
-    AQE / ``spark.sql.autoBroadcastJoinThreshold`` pick the strategy from
-    runtime statistics — an eager ``dim.count()`` here would add a full extra
-    scan of the dimension table, the most expensive part of the query at
-    100 TB (VERDICT r01)."""
-    if known_rows is not None and known_rows <= broadcast_threshold_rows:
-        return F.broadcast(dim)
-    return dim
-
-
-def orphans(fact: DataFrame, dim: DataFrame, key: str, *,
-            broadcast_threshold_rows: int = DEFAULT_BROADCAST_ROWS,
-            dim_rows: int | None = None) -> DataFrame:
+def orphans(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     """Fact rows whose key has no match in ``dim`` (left_anti).
 
     The reference analogue is an unresolvable ``$ref``
@@ -47,7 +28,7 @@ def orphans(fact: DataFrame, dim: DataFrame, key: str, *,
     # agg collapses the dim to its key set BEFORE the exchange, so a
     # round-robin repartition ahead of it just shuffles every raw key the
     # partial agg would have collapsed — measured 0.6 s -> 1.5 s at sf1.0
-    d = _maybe_broadcast(dim.select(key).distinct(), broadcast_threshold_rows, dim_rows)
+    d = dim.select(key).distinct()
     # NULL fact keys are NOT failed lookups: the schema validator's
     # required/type check owns them (engine-wide convention — "a null is
     # not a match"); left_anti would otherwise report every null-key row
@@ -55,18 +36,13 @@ def orphans(fact: DataFrame, dim: DataFrame, key: str, *,
     return fact.filter(F.col(key).isNotNull()).join(d, on=key, how="left_anti")
 
 
-def members(fact: DataFrame, dim: DataFrame, key: str, *,
-            broadcast_threshold_rows: int = DEFAULT_BROADCAST_ROWS,
-            dim_rows: int | None = None) -> DataFrame:
+def members(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     """Fact rows whose key exists in ``dim`` (left_semi) — large-set ``enum``."""
-    d = _maybe_broadcast(dim.select(key).distinct(), broadcast_threshold_rows, dim_rows)
-    return fact.join(d, on=key, how="left_semi")
+    return fact.join(dim.select(key).distinct(), on=key, how="left_semi")
 
 
-def referential_violations(fact: DataFrame, dim: DataFrame, key: str, *,
-                           keyword_location: str = "#/$ref",
-                           broadcast_threshold_rows: int = DEFAULT_BROADCAST_ROWS,
-                           dim_rows: int | None = None) -> DataFrame:
+def referential_violations(fact: DataFrame, dim: DataFrame,
+                           key: str) -> DataFrame:
     """Orphan rows rendered in the standard violations shape (FIXTURES.md §5).
 
     ``partition_id`` is tagged on the FACT SIDE BEFORE the join: evaluated
@@ -74,13 +50,11 @@ def referential_violations(fact: DataFrame, dim: DataFrame, key: str, *,
     rewritten again by AQE coalescing), not the source partition the
     violating row came from — same rule as ``uniqueness.duplicate_rows``."""
     tagged = fact.withColumn("partition_id", F.spark_partition_id())
-    o = orphans(tagged, dim, key,
-                broadcast_threshold_rows=broadcast_threshold_rows,
-                dim_rows=dim_rows)
+    o = orphans(tagged, dim, key)
     return o.select(
         F.col(key).cast("string").alias("row_key"),
         F.lit("$ref").alias("keyword"),
-        F.lit(keyword_location).alias("keyword_location"),
+        F.lit("#/$ref").alias("keyword_location"),
         F.lit(f"#/{key}").alias("instance_location"),
         F.lit("#/$ref").alias("dynamic_path"),
         F.format_string(
@@ -91,15 +65,11 @@ def referential_violations(fact: DataFrame, dim: DataFrame, key: str, *,
 
 
 def field_equality_violations(fact: DataFrame, dim: DataFrame, key: str,
-                              field: str, *, keyword_location: str = "#/const",
-                              broadcast_threshold_rows: int = DEFAULT_BROADCAST_ROWS,
-                              dim_rows: int | None = None) -> DataFrame:
+                              field: str) -> DataFrame:
     """Rows where ``fact.field`` disagrees with ``dim.field`` for the same key
     (e.g. transcript equality vs the reference table — BASELINE.json
     input_hint's per-row invariant). Null-safe comparison via ``eqNullSafe``.
-    ``dim_rows`` (caller-asserted dim size) gates the broadcast, same as
-    ``orphans``/``members``; ``partition_id`` is tagged pre-join (see
-    ``referential_violations``)."""
+    ``partition_id`` is tagged pre-join (see ``referential_violations``)."""
     # dedupe the dim pairs, then treat a fact value matching ANY of the
     # key's reference values as conforming: an un-deduplicated dim fans a
     # fact row out N ways and reports a row that EQUALS a legitimate
@@ -108,7 +78,6 @@ def field_equality_violations(fact: DataFrame, dim: DataFrame, key: str,
     # on key excludes keys absent from dim (those are orphans, not
     # equality violations).
     d = dim.select(F.col(key), F.col(field).alias("_expected")).distinct()
-    d = _maybe_broadcast(d, broadcast_threshold_rows, dim_rows)
     tagged = fact.withColumn("partition_id", F.spark_partition_id())
     in_dim = tagged.join(d.select(key).distinct(), on=key, how="left_semi")
     joined = (in_dim.join(
@@ -119,7 +88,7 @@ def field_equality_violations(fact: DataFrame, dim: DataFrame, key: str,
         .select(
             F.col(key).cast("string").alias("row_key"),
             F.lit("const").alias("keyword"),
-            F.lit(keyword_location).alias("keyword_location"),
+            F.lit("#/const").alias("keyword_location"),
             F.lit(f"#/{field}").alias("instance_location"),
             F.lit("#/const").alias("dynamic_path"),
             F.lit(f"{field} does not equal the reference value").alias("message"),

@@ -19,17 +19,18 @@ from pyspark.sql import types as T
 
 from json_skema_spark.operators.util import quoted_col
 
-DEFAULT_QUANTILES = [0.01, 0.25, 0.5, 0.75, 0.99]
+QUANTILES = [0.01, 0.25, 0.5, 0.75, 0.99]
+RSD = 0.02  # approx_count_distinct's maximum relative standard deviation
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType,
             T.DoubleType, T.DecimalType)
 
 
-def _col_aggs(name: str, dtype: T.DataType, quantiles: list[float],
-              rsd: float, exact_distinct: bool = False) -> list[Column]:
+def _col_aggs(name: str, dtype: T.DataType,
+              exact_distinct: bool) -> list[Column]:
     c = quoted_col(name)
     distinct = (F.count_distinct(c) if exact_distinct
-                else F.approx_count_distinct(c, rsd))
+                else F.approx_count_distinct(c, RSD))
     aggs = [
         F.count(F.lit(1)).alias("n_rows"),
         F.avg(c.isNull().cast("int")).alias("null_fraction"),
@@ -38,7 +39,7 @@ def _col_aggs(name: str, dtype: T.DataType, quantiles: list[float],
         distinct.alias("approx_distinct"),
     ]
     if isinstance(dtype, _NUMERIC):
-        aggs.append(F.percentile_approx(c.cast("double"), quantiles, 10_000)
+        aggs.append(F.percentile_approx(c.cast("double"), QUANTILES, 10_000)
                     .alias("quantiles"))
     else:
         aggs.append(F.lit(None).cast("array<double>").alias("quantiles"))
@@ -50,7 +51,6 @@ _PROFILE_FIELDS = ("n_rows", "null_fraction", "min_value", "max_value",
 
 
 def profile(df: DataFrame, columns: list[str] | None = None, *,
-            quantiles: list[float] | None = None, rsd: float = 0.02,
             per_partition: bool = False, exact_distinct: bool = False) -> DataFrame:
     """One profile row per column (x partition when ``per_partition``).
 
@@ -64,7 +64,6 @@ def profile(df: DataFrame, columns: list[str] | None = None, *,
     many columns are profiled (a per-column union would re-scan the table
     per column: at 100 TB that's the difference between 1 pass and N).
     """
-    qs = quantiles or DEFAULT_QUANTILES
     columns = columns or [f.name for f in df.schema.fields
                           if not isinstance(f.dataType, (T.BinaryType, T.ArrayType,
                                                          T.MapType, T.StructType))]
@@ -82,7 +81,7 @@ def profile(df: DataFrame, columns: list[str] | None = None, *,
     aggs = []
     for name in columns:
         dtype = df.schema[name].dataType
-        cols = _col_aggs(name, dtype, qs, rsd, exact_distinct)
+        cols = _col_aggs(name, dtype, exact_distinct)
         for fieldname, c in zip(_PROFILE_FIELDS, cols):
             aggs.append(c.alias(f"{name}__prof_{fieldname}"))
     wide = g.agg(*aggs)

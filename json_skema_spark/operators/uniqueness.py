@@ -13,10 +13,10 @@ Scale design:
   Salting remains the right tool where per-group STATE grows with the
   group: ``exact_duplicates``' id lists and ``violation_digest``'s example
   keys each salt their own two-phase aggregation.
-- ``duplicate_rows``: tags every row of a duplicated key via a broadcast-able
-  semi-join against the (small) duplicate-key set rather than a
-  ``Window.partitionBy(key)`` — a window would shuffle the *full* table on a
-  skewed key; the agg+semi-join only shuffles counts.
+- ``duplicate_rows``: tags every row of a duplicated key via a join against
+  the duplicate-key set rather than a ``Window.partitionBy(key)`` — a window
+  would shuffle the *full* table on a skewed key; the agg+join only
+  shuffles counts.
 """
 
 from __future__ import annotations
@@ -57,18 +57,14 @@ def duplicate_keys(df: DataFrame, key: str | Column) -> DataFrame:
     )
 
 
-def duplicate_rows(df: DataFrame, key: str, *,
-                   dup_keys_hint: int | None = None,
-                   broadcast_threshold_rows: int = 2_000_000) -> DataFrame:
+def duplicate_rows(df: DataFrame, key: str) -> DataFrame:
     """Every row whose key occurs more than once (the row-level violation set,
     paralleling UniqueItemsValidationFailure.arrayPositions,
     UniqueItems.kt:11-16), annotated with partition lineage.
 
     Join strategy: the duplicate-key set is *unbounded* (a skewed 10^12-row
-    table can have millions of dup keys), so it is only force-broadcast when
-    the caller asserts its size via ``dup_keys_hint``; otherwise AQE picks
-    broadcast vs shuffled hash join from runtime statistics."""
-    from json_skema_spark.operators.referential import _maybe_broadcast
+    table can have millions of dup keys), so no broadcast is forced; AQE
+    picks broadcast vs shuffled join from runtime statistics."""
     clash = [c for c in ("partition_id", "n_rows") if c in df.columns]
     if clash:
         # withColumn would silently OVERWRITE a user 'partition_id' column
@@ -78,26 +74,21 @@ def duplicate_rows(df: DataFrame, key: str, *,
         raise ValueError(
             f"duplicate_rows adds output column(s) {clash} that the input "
             "already carries — rename them first")
-    dups = _maybe_broadcast(
-        duplicate_keys(df, key)
-        .select(F.col("key").alias(key), "n_rows"),
-        broadcast_threshold_rows, dup_keys_hint)
+    dups = duplicate_keys(df, key).select(F.col("key").alias(key), "n_rows")
     return (
         df.withColumn("partition_id", F.spark_partition_id())
         .join(dups, on=key, how="inner")
     )
 
 
-def uniqueness_violations(df: DataFrame, key: str, *,
-                          keyword_location: str = "#/uniqueItems"
-                          ) -> DataFrame:
+def uniqueness_violations(df: DataFrame, key: str) -> DataFrame:
     """Duplicate keys rendered as violation rows in the engine's standard
     violations shape (FIXTURES.md §5)."""
     dups = duplicate_keys(df, key)
     return dups.select(
         F.col("key").cast("string").alias("row_key"),
         F.lit("uniqueItems").alias("keyword"),
-        F.lit(keyword_location).alias("keyword_location"),
+        F.lit("#/uniqueItems").alias("keyword_location"),
         F.lit(f"#/{key}").alias("instance_location"),
         F.lit("#/uniqueItems").alias("dynamic_path"),
         F.format_string(

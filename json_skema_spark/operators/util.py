@@ -54,8 +54,9 @@ def _hadoop_total_size(spark, uris: list[str]) -> int | None:
         return None
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition iff the input is under-partitioned for CPU-heavy work.
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Repartition to ``defaultParallelism`` iff the input is
+    under-partitioned for CPU-heavy work.
 
     A small parquet file arrives as one split; shingling/hashing 5k docs on
     one core wastes the other 31. Decided from *file metadata only*
@@ -64,7 +65,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     the source has thousands of files and this short-circuits to a no-op.
     """
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:

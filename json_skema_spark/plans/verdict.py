@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from json_skema_spark.operators.checkpoint import SOURCE_FILE_COL
 from json_skema_spark.plans.compile import Compiled, Compiler
 
 
@@ -141,12 +142,12 @@ class ValidationPlan:
         ]
         out_extra = []
         if file_lineage:
-            # prefer a pre-captured _src_file (checkpoint.with_source_file):
-            # after staged resume, _metadata.file_path cites the STAGING
-            # directory; _src_file carries provenance to the original input
-            # file — the reference's SourceLocation contract is provenance
-            # to the source (JsonValue.kt:63-123)
-            src = (F.col("_src_file") if "_src_file" in df.columns
+            # prefer a column checkpoint.with_source_file captured: after
+            # staged resume, _metadata.file_path cites the STAGING
+            # directory; the captured column carries provenance to the
+            # original input file — the reference's SourceLocation contract
+            # is provenance to the source (JsonValue.kt:63-123)
+            src = (F.col(SOURCE_FILE_COL) if SOURCE_FILE_COL in df.columns
                    else F.col("_metadata.file_path"))
             cols.append(src.alias("source_file"))
             out_extra = ["source_file"]

@@ -202,7 +202,8 @@ def validate_table(spark: SparkSession, clips: DataFrame, out_dir: str, *,
         # data_df: the original table shape — the staged lineage column
         # must not leak into the profile (it is not a data column) or the
         # clean split (consumers expect the input schema)
-        data_df = bucket_df.drop("_src_file") if file_lineage else bucket_df
+        data_df = (bucket_df.drop(checkpoint.SOURCE_FILE_COL) if file_lineage
+                   else bucket_df)
         viols = plan.violations(bucket_df, "clip_id",
                                 file_lineage=file_lineage)
         if check_audio:

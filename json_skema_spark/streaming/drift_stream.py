@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from json_skema_spark.operators.drift import (DISTINCT_RATIO_THRESHOLD,
+                                              NULL_DELTA_THRESHOLD)
 from json_skema_spark.operators.util import quoted_col
 
 DRIFT_COLUMNS = ("window_start", "window_end", "column_name",
@@ -54,16 +56,15 @@ def baseline_map(profile: DataFrame) -> dict[str, dict]:
 
 def windowed_drift(stream_df: DataFrame, baseline: dict[str, dict],
                    ts_col: str, *, window: str = "1 minute",
-                   watermark: str = "2 minutes",
-                   null_delta_threshold: float = 0.01,
-                   distinct_ratio_threshold: float = 0.5) -> DataFrame:
+                   watermark: str = "2 minutes") -> DataFrame:
     """Per-window per-column drift verdicts against ``baseline``
     (``baseline_map`` output, or any {col: {null_fraction, approx_distinct}}).
 
-    Thresholds mirror ``operators.drift.drift_report``: ``null_drift`` when
-    |null_fraction - baseline| exceeds ``null_delta_threshold``;
-    ``distinct_drift`` when the SCALE-ANCHORED distinct ratio falls outside
-    [t, 1/t]. A window holds far fewer rows than the baseline table, so a
+    The thresholds are ``operators.drift``'s, the ones ``drift_report``
+    uses: ``null_drift`` when |null_fraction - baseline| exceeds
+    ``NULL_DELTA_THRESHOLD``; ``distinct_drift`` when the SCALE-ANCHORED
+    distinct ratio falls outside [t, 1/t], t = ``DISTINCT_RATIO_THRESHOLD``.
+    A window holds far fewer rows than the baseline table, so a
     raw ``ad_window / ad_baseline`` would fire on every healthy window of a
     high-cardinality column (1e5-row window vs 1e7 baseline ids = 0.01);
     the anchor is ``min(baseline_distinct, window_non_null_rows)`` — the
@@ -119,11 +120,11 @@ def windowed_drift(stream_df: DataFrame, baseline: dict[str, dict],
             F.lit(c).alias("column_name"),
             nf.alias("null_fraction"),
             nd.alias("null_delta"),
-            (nd > null_delta_threshold).alias("null_drift"),
+            (nd > NULL_DELTA_THRESHOLD).alias("null_drift"),
             ad.alias("approx_distinct"),
             ratio.alias("distinct_ratio"),
-            ((ratio < distinct_ratio_threshold)
-             | (ratio > 1.0 / distinct_ratio_threshold))
+            ((ratio < DISTINCT_RATIO_THRESHOLD)
+             | (ratio > 1.0 / DISTINCT_RATIO_THRESHOLD))
             .alias("distinct_drift")))
     for c in missing:
         per_col.append(F.struct(

@@ -1,5 +1,7 @@
 """Every ``json_skema_spark`` module must be reachable by imports from a
 production entry point, so code that nothing runs cannot pile up unseen.
+Likewise every defaulted parameter of the table-scope operators must be set
+by some caller (``test_every_default_is_set_by_a_caller``).
 
 The walk is static: it parses each reached file and follows every
 ``import``/``from ... import`` statement in it, including the ones inside
@@ -79,3 +81,146 @@ def test_every_module_has_a_production_importer():
     # a kept module that is deleted or gains a production importer leaves
     # the list, so the list cannot grow stale
     assert sorted(set(KEPT) - (mods - reached)) == []
+
+
+# -- settable values --------------------------------------------------------
+# The table-scope operators on the validation path. Every defaulted
+# parameter of their module-level public functions must be set by some
+# call in the package or an entry point, or be kept below with a reason,
+# so a value nothing ever sets cannot hide a branch nothing ever runs.
+# Outside this set, two families keep unset values on purpose: the network
+# settings of ``plans.model.fetch_schema_document`` (deployment settings)
+# and the LLM-prep operators (their scope is an open decision).
+CHECKED = tuple(f"{PACKAGE}/{m}.py" for m in (
+    "functions/audio", "operators/checkpoint", "operators/drift",
+    "operators/referential", "operators/stats", "operators/uniqueness",
+    "operators/util", "streaming/drift_stream"))
+
+# (function, parameter) kept without a setting caller, each for a reason.
+KEPT_DEFAULTS = {
+    ("mergeable_profile", "lg_k"):
+        "parts built with different lg_k must merge (a test pins it)",
+    ("mergeable_profile", "columns"):
+        "the twin of profile(columns), which callers set: drift_report "
+        "joins a merged profile to a profile() baseline column by column",
+    ("profile", "per_partition"):
+        "the per-partition baseline_profile rows of FIXTURES.md §3",
+    ("pcm_invariant_check", "check_duration"):
+        "opt-in duration gate; making it the default is its own decision",
+    ("pcm_invariant_check", "duration_tolerance"):
+        "tolerance of the opt-in duration gate",
+}
+
+
+def _params(fn: ast.FunctionDef) -> tuple[list[str], dict[str, ast.expr]]:
+    """Positional parameter names, and each defaulted name's default."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    defaults = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+    defaults |= {p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                 if d is not None}
+    return pos, defaults
+
+
+def _call_sites(path: Path):
+    """Yield ``(callee, slot, value, forwarded)`` for each argument of each
+    call: ``slot`` is a keyword name or a positional index, and
+    ``forwarded`` is ``(function, parameter)`` when the argument names an
+    enclosing function's parameter."""
+
+    def visit(node, scopes):
+        if isinstance(node, ast.FunctionDef):
+            a = node.args
+            names = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+            scopes = scopes + [(node.name, names)]
+        if isinstance(node, ast.Call):
+            f = node.func
+            callee = f.attr if isinstance(f, ast.Attribute) else \
+                getattr(f, "id", None)
+
+            def owner(arg):
+                if isinstance(arg, ast.Name):
+                    for fn, names in reversed(scopes):
+                        if arg.id in names:
+                            return fn, arg.id
+                return None
+
+            for i, arg in enumerate(node.args):
+                if isinstance(arg, ast.Starred):
+                    break
+                yield callee, i, arg, owner(arg)
+            for kw in node.keywords:
+                if kw.arg is not None:
+                    yield callee, kw.arg, kw.value, owner(kw.value)
+        for child in ast.iter_child_nodes(node):
+            yield from visit(child, scopes)
+
+    yield from visit(ast.parse(path.read_text(), str(path)), [])
+
+
+def unset_defaults() -> set[tuple[str, str]]:
+    """(function, parameter) pairs of the CHECKED modules that no call
+    sets. A call that passes the default itself sets nothing, and one that
+    passes through a same-named parameter of its enclosing function sets
+    the value only if that parameter is required or set. Calls are matched
+    to functions by name, so a same-named function elsewhere can only make
+    a value look set, never unset."""
+    callers = sorted({*(ROOT / PACKAGE).rglob("*.py"),
+                      *(ROOT / p for p in ENTRY_POINTS)})
+    signatures: dict[str, tuple[list[str], dict[str, ast.expr]]] = {}
+    for path in callers:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.FunctionDef):
+                pos, defaults = _params(node)
+                old = signatures.get(node.name, ([], {}))
+                signatures[node.name] = (pos or old[0], old[1] | defaults)
+
+    def is_default(callee, name, value):
+        d = signatures.get(callee, ([], {}))[1].get(name)
+        return isinstance(d, ast.Constant) and \
+            isinstance(value, ast.Constant) and d.value == value.value
+
+    setting = []  # (callee, parameter, forwarded-from or None)
+    for path in callers:
+        for callee, slot, value, fwd in _call_sites(path):
+            if isinstance(slot, int):
+                pos = signatures.get(callee, ([], {}))[0]
+                slot = pos[slot] if slot < len(pos) else None
+            if slot is None or is_default(callee, slot, value):
+                continue
+            setting.append((callee, slot,
+                            fwd if fwd and fwd[1] == slot else None))
+
+    reached: set[tuple[str, str]] = set()
+    changed = True
+    while changed:
+        changed = False
+        for callee, name, fwd in setting:
+            if (callee, name) in reached:
+                continue
+            if fwd and fwd not in reached \
+                    and fwd[1] in signatures.get(fwd[0], ([], {}))[1]:
+                continue  # forwards a defaulted value nothing set (yet)
+            reached.add((callee, name))
+            changed = True
+
+    unset = set()
+    for rel in CHECKED:
+        tree = ast.parse((ROOT / rel).read_text(), rel)
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef) \
+                    and not node.name.startswith("_"):
+                unset |= {(node.name, p) for p in _params(node)[1]
+                          if (node.name, p) not in reached}
+    return unset
+
+
+def test_every_default_is_set_by_a_caller():
+    unset = unset_defaults()
+    extra = sorted(unset - set(KEPT_DEFAULTS))
+    assert not extra, (
+        "defaulted parameters no caller sets: delete each (its default "
+        "becomes the code) or keep it with a reason: "
+        + ", ".join(f"{fn}({p})" for fn, p in extra))
+    # a kept value that a caller starts setting leaves the list
+    assert sorted(set(KEPT_DEFAULTS) - unset) == []
