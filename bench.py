@@ -191,16 +191,14 @@ def main() -> None:
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet")).cache()
     emb.count()
     qvecs = np.random.default_rng(11).standard_normal((5, 64))
-    cents = similarity.train_ivf_centroids(emb, "embedding", n_lists=16,
-                                           seed=42)
+    cents = similarity.train_ivf_centroids(emb, "embedding")
     ann_hits = ivf_hits = 0
     for qv in qvecs:
         q = [float(x) for x in qv]
         exact = {r.vec_id for r in similarity.cosine_topk(
             emb, "embedding", "vec_id", q, k=10).collect()}
         ann = {r.vec_id for r in similarity.ann_topk(
-            emb, "embedding", "vec_id", q, k=10, bands=16,
-            planes_per_band=4).collect()}
+            emb, "embedding", "vec_id", q, k=10, bands=16).collect()}
         ivf = {r.vec_id for r in similarity.ivf_topk(
             emb, "embedding", "vec_id", q, k=10, centroids=cents,
             n_probe=4).collect()}

@@ -27,20 +27,23 @@ from pyspark.sql import functions as F
 from json_skema_spark.functions.text import md5_hex_slice
 from json_skema_spark.operators.util import ensure_parallelism
 
+# one hash seed for every near-duplicate and similarity operator (shingle
+# and token hashes, hyperplanes, the IVF sample and KMeans)
+SEED = 42
+
 
 # -- exact ------------------------------------------------------------------
 
-def content_digest(col: Column, *, normalize: bool = True) -> Column:
-    """md5 digest of (optionally whitespace/case-normalized) text."""
-    c = col
-    if normalize:
-        c = F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
-    return F.md5(c)
+def content_digest(col: Column) -> Column:
+    """md5 digest of whitespace/case-normalized text."""
+    return F.md5(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))))
+
+
+ID_SALTS = 64
 
 
 def exact_duplicates(df: DataFrame, text_col: str, id_col: str, *,
-                     normalize: bool = True, max_ids: int | None = 100,
-                     id_salts: int = 64) -> DataFrame:
+                     max_ids: int | None = 100) -> DataFrame:
     """Digest groups with >1 member: ``(digest, n_docs, doc_ids)``.
 
     Two-phase hash agg (map-side combine) on the digest; only digests+ids
@@ -52,7 +55,7 @@ def exact_duplicates(df: DataFrame, text_col: str, id_col: str, *,
     ``collect_list`` would build one multi-million-element array cell and a
     straggler task. With ``max_ids`` set, ids are first aggregated per
     (digest, salt) sub-group and sliced to ``max_ids`` *before* the final
-    merge, so no agg buffer or shuffled row ever exceeds ~group/``id_salts``
+    merge, so no agg buffer or shuffled row ever exceeds ~group/``ID_SALTS``
     elements and the final cell is <= ``max_ids``. Per-salt K-smallest
     merged and re-sliced equals the global K-smallest (top-K is
     distributive over partitions). ``max_ids=None`` restores the full list.
@@ -65,7 +68,7 @@ def exact_duplicates(df: DataFrame, text_col: str, id_col: str, *,
     d = ensure_parallelism(df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))) \
         .select("doc_id",
-                content_digest(F.col("_text"), normalize=normalize).alias("digest"))
+                content_digest(F.col("_text")).alias("digest"))
     # null text -> null digest; groupBy treats nulls as equal, which would
     # report documents whose content was never compared as one duplicate
     # cluster — null-text rows are simply not exact duplicates of anything
@@ -79,7 +82,7 @@ def exact_duplicates(df: DataFrame, text_col: str, id_col: str, *,
         )
     salted = (
         d.groupBy("digest",
-                  F.pmod(F.xxhash64("doc_id"), F.lit(id_salts)).alias("_salt"))
+                  F.pmod(F.xxhash64("doc_id"), F.lit(ID_SALTS)).alias("_salt"))
         .agg(F.count("*").alias("_n"),
              F.slice(F.sort_array(F.collect_list("doc_id")), 1, max_ids)
              .alias("_ids"))
@@ -107,7 +110,7 @@ def shingles(col: Column, n: int = 3) -> Column:
     )
 
 
-def shingle_hashes(col: Column, n: int = 3, seed: int = 42) -> Column:
+def shingle_hashes(col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles reduced to 8-byte xxhash64 values.
 
     Hashing once at the source makes every downstream stage operate on
@@ -116,21 +119,24 @@ def shingle_hashes(col: Column, n: int = 3, seed: int = 42) -> Column:
     rather than the shingle text (3-5x narrower at 100 TB). Jaccard on the
     hashed sets equals Jaccard on the string sets up to 64-bit collisions
     (~n^2 / 2^64 — negligible)."""
-    return F.transform(shingles(col, n), lambda s: F.xxhash64(s, F.lit(seed)))
+    return F.transform(shingles(col, n), lambda s: F.xxhash64(s, F.lit(SEED)))
 
 
-def minhash_signature_from_hashes(hash_col: Column,
-                                  num_hashes: int = 64) -> Column:
-    """Array of ``num_hashes`` min-hash values in ONE pass over pre-hashed
+NUM_HASHES = 64  # MinHash signature length: 16 bands x 4 rows
+BANDS = 16
+
+
+def minhash_signature_from_hashes(hash_col: Column) -> Column:
+    """Array of ``NUM_HASHES`` min-hash values in ONE pass over pre-hashed
     shingles: the hash family is derived by re-hashing each 8-byte value with
     the hash index (``xxhash64(h, i)``) — ~10x cheaper than hashing the
     string per family member, and the element-wise ``least`` fold keeps it a
     single ``aggregate`` (no 64 array passes)."""
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
+    idx = F.sequence(F.lit(0), F.lit(NUM_HASHES - 1))
     max_long = (1 << 63) - 1
     return F.aggregate(
         hash_col,
-        F.array_repeat(F.lit(max_long).cast("long"), num_hashes),
+        F.array_repeat(F.lit(max_long).cast("long"), NUM_HASHES),
         lambda acc, h: F.zip_with(
             acc,
             F.transform(idx, lambda i: F.xxhash64(h, i)),
@@ -167,8 +173,13 @@ def _persist_base(base: DataFrame) -> DataFrame:
     return base
 
 
+# a bucket (MinHash/SimHash/embedding band, n-gram posting list) of more
+# members than this is dropped: m members make m^2/2 candidate pairs
+MAX_BUCKET = 1000
+
+
 def _bucket_pairs(keyed: DataFrame, bucket_cols: list[str],
-                  max_bucket: int | None,
+                  max_bucket: int,
                   payload: str | Column = "doc_id") -> DataFrame:
     """Distinct candidate pairs (``doc_id_a < doc_id_b``) from bucket
     co-membership — the one pair generator behind every near-duplicate
@@ -184,8 +195,7 @@ def _bucket_pairs(keyed: DataFrame, bucket_cols: list[str],
     ``collect_list``, so a hot bucket is collected whole into one agg
     buffer before it is dropped — ``max_bucket`` bounds the pairs, not the
     buffer. Counting first and collecting only the kept buckets is ROADMAP
-    direction 4. Callers that pass ``max_bucket=None`` accept unbounded
-    buckets exactly as the old self-join accepted their m^2 blow-up.
+    direction 4. The operators pass ``MAX_BUCKET``.
 
     ``payload`` is the member value (a column of ``keyed`` or a Column
     over it) and is what ``doc_id_a``/``doc_id_b`` carry: an id of any
@@ -196,9 +206,7 @@ def _bucket_pairs(keyed: DataFrame, bucket_cols: list[str],
     join back (SimHash's fingerprint)."""
     grouped = (keyed.groupBy(*bucket_cols)
                .agg(F.collect_list(payload).alias("_ids"))
-               .filter(F.size("_ids") >= 2))
-    if max_bucket:
-        grouped = grouped.filter(F.size("_ids") <= max_bucket)
+               .filter(F.size("_ids").between(2, max_bucket)))
     return (
         grouped.select("_ids", F.explode("_ids").alias("doc_id_a"))
         .select("doc_id_a", F.explode("_ids").alias("doc_id_b"))
@@ -239,37 +247,28 @@ def _jaccard(a: Column, b: Column) -> Column:
 
 
 def minhash_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
-                            shingle_n: int = 3, num_hashes: int = 64,
-                            bands: int = 16, seed: int = 42,
-                            jaccard_threshold: float = 0.8,
-                            max_bucket: int = 1000) -> DataFrame:
+                            jaccard_threshold: float = 0.8) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH.
 
-    Pipeline: shingle -> signature -> split into ``bands`` bands of
-    ``num_hashes // bands`` rows -> hash each band -> explode -> groupBy
-    (band, band_hash) bucket pairs -> exact Jaccard verification on the
-    shingle sets.
+    Pipeline: word 3-gram shingles -> signature -> split into ``BANDS``
+    bands of ``NUM_HASHES // BANDS`` rows -> hash each band -> explode ->
+    groupBy (band, band_hash) bucket pairs -> exact Jaccard verification
+    on the shingle sets.
 
     Scale: the only all-to-all movement is the exploded (band_hash, id)
-    pairs — ``bands`` rows per document, independent of document length.
+    pairs — ``BANDS`` rows per document, independent of document length.
     Candidate verification re-joins shingle sets only for candidate ids
     (semi-join pruned). Output: ``(doc_id_a, doc_id_b, jaccard)`` with
     ``doc_id_a < doc_id_b``.
     """
-    if bands <= 0 or num_hashes % bands != 0:
-        # silent truncation would alter the LSH S-curve the caller tuned
-        # (64 hashes / 12 bands would quietly use only 60), and
-        # bands > num_hashes would build zero-hash bands
-        raise ValueError(
-            f"bands ({bands}) must evenly divide num_hashes ({num_hashes})")
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // BANDS
     # null text is NOT a duplicate of other null text (same convention as
     # exact_duplicates below and the streaming dedup): a null yields a
     # null signature whose band hashes are xxhash64's seed constant, so
     # every null-text doc would land in ONE bucket per band and pair with
     # every other null doc (review r04)
     df = ensure_parallelism(df).filter(F.col(text_col).isNotNull())
-    # max_bucket guards the pair generation against degenerate buckets
+    # MAX_BUCKET guards the pair generation against degenerate buckets
     # (e.g. empty or boilerplate docs all hashing identically): a bucket of
     # m members contributes m^2/2 candidate pairs, so one hot bucket at
     # 10^12-row scale is quadratic blow-up. Oversized buckets are dropped
@@ -278,8 +277,8 @@ def minhash_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
     # verify-stage joins both consume array<long> — text never shuffles
     base = _persist_base(df.select(
         F.col(id_col).alias("doc_id"),
-        shingle_hashes(F.col(text_col), shingle_n, seed).alias("sh"),
-    ).withColumn("sig", minhash_signature_from_hashes(F.col("sh"), num_hashes)))
+        shingle_hashes(F.col(text_col)).alias("sh"),
+    ).withColumn("sig", minhash_signature_from_hashes(F.col("sh"))))
 
     banded = base.select(
         "doc_id",
@@ -289,21 +288,19 @@ def minhash_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
                 F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
                              for r in range(rows_per_band)]).alias("band_hash"),
             )
-            for b in range(bands)
+            for b in range(BANDS)
         ])).alias("bh"),
     ).select("doc_id", F.col("bh.band").alias("band"),
              F.col("bh.band_hash").alias("band_hash"))
 
-    cand = _bucket_pairs(banded, ["band", "band_hash"], max_bucket)
+    cand = _bucket_pairs(banded, ["band", "band_hash"], MAX_BUCKET)
     return _verify_pairs(cand, base, "sh", "jaccard", _jaccard,
                          jaccard_threshold)
 
 
 def ngram_jaccard_near_duplicates(df: DataFrame, text_col: str, id_col: str,
                                   *, n: int = 3,
-                                  jaccard_threshold: float = 0.8,
-                                  seed: int = 42,
-                                  max_posting: int = 1000) -> DataFrame:
+                                  jaccard_threshold: float = 0.8) -> DataFrame:
     """EXACT n-gram-Jaccard near-duplicate pairs via a prefix-filtered
     inverted index — the deterministic sibling of ``minhash_near_duplicates``
     (MinHash trades exactness for a fixed-width signature; this keeps exact
@@ -327,12 +324,13 @@ def ngram_jaccard_near_duplicates(df: DataFrame, text_col: str, id_col: str,
     Scale: the only all-to-all movements are (1) the 16-byte (gram, doc_id)
     postings — never the text, prefix-trimmed by ``1-t`` — and (2) hashed
     shingle ARRAYS for candidate ids only (semi-join-pruned verify, same
-    shape as the MinHash verify stage). ``max_posting`` drops stopword-like
-    grams whose postings list would contribute quadratic candidates (same
-    convention as MinHash ``max_bucket``: a pair whose shared grams are ALL
-    hot is missed, and its members are still compared through their other
-    grams). Output: ``(doc_id_a, doc_id_b, jaccard)`` with
-    ``doc_id_a < doc_id_b``; jaccard is exact (64-bit hash collisions at
+    shape as the MinHash verify stage). A gram with more than
+    ``MAX_BUCKET`` postings is dropped as stopword-like, since its list
+    would contribute quadratic candidates (same cap as the MinHash bands: a
+    pair whose shared grams are ALL hot is missed, and its members are
+    still compared through their other grams). Output:
+    ``(doc_id_a, doc_id_b, jaccard)`` with ``doc_id_a < doc_id_b``;
+    jaccard is exact (64-bit hash collisions at
     ~|grams|^2/2^64 are the only deviation from string-set Jaccard).
     """
     if not (0.0 < jaccard_threshold <= 1.0):
@@ -346,7 +344,7 @@ def ngram_jaccard_near_duplicates(df: DataFrame, text_col: str, id_col: str,
         # convention with exact_duplicates / minhash_near_duplicates)
         .filter(F.col(text_col).isNotNull())
         .select(F.col(id_col).alias("doc_id"),
-                shingle_hashes(F.col(text_col), n, seed).alias("sh"))
+                shingle_hashes(F.col(text_col), n).alias("sh"))
         # shingles() never yields an empty array (it pads k to >= 1), but an
         # explicit guard keeps the Jaccard denominator provably non-zero
         .filter(F.size("sh") > 0)
@@ -364,8 +362,8 @@ def ngram_jaccard_near_duplicates(df: DataFrame, text_col: str, id_col: str,
         "doc_id", F.explode(F.slice(F.sort_array(F.col("sh")), 1, plen))
         .alias("gram"))
 
-    # a gram whose posting list exceeds max_posting is dropped whole
-    cand = _bucket_pairs(postings, ["gram"], max_posting)
+    # a gram whose posting list exceeds MAX_BUCKET is dropped whole
+    cand = _bucket_pairs(postings, ["gram"], MAX_BUCKET)
     return _verify_pairs(cand, base, "sh", "jaccard", _jaccard,
                          jaccard_threshold)
 
@@ -373,15 +371,16 @@ def ngram_jaccard_near_duplicates(df: DataFrame, text_col: str, id_col: str,
 # -- SimHash ----------------------------------------------------------------
 
 SIMHASH_BITS = 48  # 4 chunks x 12 bits; 2^i stays exactly representable
+MAX_HAMMING = 3  # pigeonhole: a pair this close shares one of the 4 chunks
 
 
-def simhash(col: Column, *, bits: int = SIMHASH_BITS, seed: int = 42) -> Column:
+def simhash(col: Column) -> Column:
     """Bit-vote SimHash fingerprint of a text column, entirely JVM-side.
 
     Each token hashes to 60 bits — the lower md5 half (hex chars 17..31),
     chosen over ``xxhash64`` because md5 is bit-identical across engines, so
     the whole fingerprint is DuckDB-oracle-checkable (same trick as
-    functions/text.fingerprint); ``seed`` is appended to the token bytes.
+    functions/text.fingerprint); ``SEED`` is appended to the token bytes.
     Bit b of the fingerprint is the sign of the vote sum over tokens.
     Implemented with higher-order functions (aggregate / zip_with) so it
     stays in codegen — no Python in the loop. Bit masks are ``pow(2, i)``
@@ -392,12 +391,12 @@ def simhash(col: Column, *, bits: int = SIMHASH_BITS, seed: int = 42) -> Column:
         F.split(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))), " "))
     hashes = F.transform(
         tokens,
-        lambda t: md5_hex_slice(t, 17, 15, seed=seed).cast("long"))
-    masks = F.transform(F.sequence(F.lit(0), F.lit(bits - 1)),
+        lambda t: md5_hex_slice(t, 17, 15, seed=SEED).cast("long"))
+    masks = F.transform(F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
                         lambda i: F.pow(F.lit(2.0), i).cast("long"))
     votes = F.aggregate(
         hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
+        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
         lambda acc, h: F.zip_with(
             acc, masks,
             lambda a, m: a + F.when(h.bitwiseAND(m) != 0, F.lit(1))
@@ -415,47 +414,34 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
-                            max_hamming: int = 3, seed: int = 42,
-                            max_bucket: int = 1000) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 48-bit fingerprint into
-    ``max_hamming + 1`` chunks (pigeonhole: a pair within hamming distance
-    d differs in at most d chunks, so with d+1 chunks at least one matches
-    exactly), pair the members of each chunk bucket, verify hamming
-    distance. The chunk
-    count is DERIVED from ``max_hamming`` — a fixed 4-chunk banding only
-    guarantees recall for d <= 3 and silently loses pairs at d >= 4
-    (review r04).
+def simhash_near_duplicates(df: DataFrame, text_col: str,
+                            id_col: str) -> DataFrame:
+    """Near-dup pairs by SimHash, within hamming distance ``MAX_HAMMING``:
+    band the 48-bit fingerprint into 4 chunks of 12 bits (pigeonhole: a
+    pair within hamming distance 3 differs in at most 3 chunks, so at least
+    one matches exactly), pair the members of each chunk bucket, verify
+    hamming distance.
 
-    ``max_bucket`` caps the chunk buckets exactly like the MinHash path: a
+    ``MAX_BUCKET`` caps the chunk buckets exactly like the MinHash path: a
     degenerate chunk value (e.g. empty docs all fingerprinting to 0) makes
     one bucket m^2/2 pairs — quadratic at 10^12 rows. Oversized buckets are
     dropped; their members still pair through their other chunks."""
-    n_chunks = max_hamming + 1
-    if not 1 <= n_chunks <= SIMHASH_BITS:
-        raise ValueError(
-            f"max_hamming must be in [0, {SIMHASH_BITS - 1}]")
-    width = SIMHASH_BITS // n_chunks  # last chunk absorbs the remainder
     fp = ensure_parallelism(df).select(F.col(id_col).alias("doc_id"),
-                   simhash(F.col(text_col), seed=seed).alias("fp"))
-
-    def _chunk_val(i: int):
-        w = width if i < n_chunks - 1 else SIMHASH_BITS - width * (n_chunks - 1)
-        return F.shiftrightunsigned(F.col("fp"), width * i) \
-            .bitwiseAND(F.lit((1 << w) - 1))
-
+                                       simhash(F.col(text_col)).alias("fp"))
     chunks = fp.select(
         "doc_id", "fp",
         F.explode(F.array(*[
-            F.struct(F.lit(i).alias("chunk"), _chunk_val(i).alias("val"))
-            for i in range(n_chunks)
+            F.struct(F.lit(i).alias("chunk"),
+                     F.shiftrightunsigned(F.col("fp"), 12 * i)
+                     .bitwiseAND(F.lit(0xFFF)).alias("val"))
+            for i in range(4)
         ])).alias("c"),
     ).select("doc_id", "fp", F.col("c.chunk").alias("chunk"),
              F.col("c.val").alias("val"))
     # the fingerprint rides along in the member struct, so hamming
     # verification needs no join back (8 extra bytes per member)
     return (
-        _bucket_pairs(chunks, ["chunk", "val"], max_bucket,
+        _bucket_pairs(chunks, ["chunk", "val"], MAX_BUCKET,
                       F.struct("doc_id", "fp"))
         .select(F.col("doc_id_a.doc_id").alias("doc_id_a"),
                 F.col("doc_id_b.doc_id").alias("doc_id_b"),
@@ -464,7 +450,7 @@ def simhash_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
         # struct order sorts a null id first where a bare id's `<` is
         # NULL: drop it here, as the scalar-payload operators do
         .filter(F.col("doc_id_a").isNotNull()
-                & (F.col("hamming") <= max_hamming))
+                & (F.col("hamming") <= MAX_HAMMING))
     )
 
 
@@ -483,11 +469,10 @@ def _release_local_checkpoint(df: DataFrame, *, blocking: bool = False) -> None:
         pass
 
 
-def duplicate_clusters(pairs: DataFrame, id_a: str = "doc_id_a",
-                       id_b: str = "doc_id_b", *,
-                       max_iter: int = 20) -> DataFrame:
-    """Connected components over near-duplicate PAIRS -> clusters with a
-    deterministic canonical representative.
+def duplicate_clusters(pairs: DataFrame, *, max_iter: int = 20) -> DataFrame:
+    """Connected components over near-duplicate PAIRS (``doc_id_a``,
+    ``doc_id_b``) -> clusters with a deterministic canonical
+    representative.
 
     Every pair-producing dedup op here (exact, MinHash-LSH, SimHash,
     embedding-LSH) stops at pairs; production dedup needs the transitive
@@ -511,7 +496,8 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "doc_id_a",
     probe is a ``limit(1)`` existence check, not a full count. Everything
     shuffled is (id, id) pairs — never document payloads.
     """
-    sym = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    sym = pairs.select(F.col("doc_id_a").alias("src"),
+                       F.col("doc_id_b").alias("dst"))
     edges = (sym.unionByName(
         sym.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct().persist())
@@ -568,28 +554,25 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "doc_id_a",
 
 
 def drop_near_duplicates(df: DataFrame, text_col: str, id_col: str, *,
-                         broadcast_losers: bool = True,
-                         **minhash_kwargs) -> DataFrame:
-    """One-call end-to-end dedup: MinHash-LSH pairs -> connected components
-    -> keep one canonical document per cluster. Returns ``df`` minus every
-    non-canonical cluster member.
+                         jaccard_threshold: float) -> DataFrame:
+    """One-call end-to-end dedup: MinHash-LSH pairs at
+    ``jaccard_threshold`` -> connected components -> keep one canonical
+    document per cluster. Returns ``df`` minus every non-canonical cluster
+    member.
 
     Composition of the scale-audited pieces above: only (id, id) pairs and
-    labels ever shuffle beyond the LSH stage. The final drop broadcasts the
-    non-canonical id list by default — the labels come from a
+    labels ever shuffle beyond the LSH stage. The final drop always
+    broadcasts the non-canonical id list — the labels come from a
     localCheckpoint whose size statistics Spark cannot estimate, so without
     the hint the anti-join would sort-merge and shuffle the full corpus
     INCLUDING text payloads. Losers scale with the duplicate count, not the
-    corpus; pass ``broadcast_losers=False`` only for pathological corpora
-    where duplicates themselves exceed executor memory or Spark's 8 GiB
-    broadcast-table hard cap — the forced broadcast then fails LOUDLY
-    (never silently wrong) and the flag falls back to a shuffle join,
-    which is the honest cost at that point.
+    corpus; a loser list past executor memory or Spark's 8 GiB
+    broadcast-table limit makes the broadcast fail LOUDLY, never silently
+    wrong.
     """
-    pairs = minhash_near_duplicates(df, text_col, id_col, **minhash_kwargs)
+    pairs = minhash_near_duplicates(df, text_col, id_col,
+                                    jaccard_threshold=jaccard_threshold)
     losers = (duplicate_clusters(pairs)
               .filter(~F.col("is_canonical"))
               .select(F.col("doc_id").alias(id_col)))
-    if broadcast_losers:
-        losers = F.broadcast(losers)
-    return df.join(losers, id_col, "left_anti")
+    return df.join(F.broadcast(losers), id_col, "left_anti")

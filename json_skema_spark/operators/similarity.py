@@ -9,15 +9,16 @@ training-data-pipeline surface. Two paths:
   executes as TakeOrderedAndProject (per-partition heap + driver merge —
   no full sort, no shuffle of the table).
 - ``lsh_bucket`` / ``ann_topk``: random-hyperplane LSH (sign of projections
-  onto ``num_planes`` driver-seeded hyperplanes). At scale the bucket id is
+  onto driver-seeded hyperplanes). At scale the bucket id is
   a partition key: a query probes one bucket (plus optional neighboring
   buckets by Hamming distance) instead of scanning everything.
 - ``embedding_near_duplicates``: same-bucket pairs + exact cosine through
   the near-dup operators' shared pair and verify stages (operators/dedup.py)
   — the embedding-space analogue of MinHash near-dup.
 
-Hyperplanes are generated driver-side from a numpy PRNG with a fixed seed and
-baked into the plan as literals — deterministic and resumable.
+Hyperplanes are generated driver-side from a numpy PRNG seeded with
+``dedup.SEED`` and baked into the plan as literals — deterministic and
+resumable.
 """
 
 from __future__ import annotations
@@ -26,9 +27,22 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from json_skema_spark.operators.dedup import (_bucket_pairs, _persist_base,
+from json_skema_spark.operators.dedup import (MAX_BUCKET, SEED,
+                                              _bucket_pairs, _persist_base,
                                               _verify_pairs)
 from json_skema_spark.operators.util import ensure_parallelism
+
+# banded hyperplane LSH: a vector pair is a candidate when it agrees on all
+# PLANES_PER_BAND planes of any of EMBED_BANDS bands
+EMBED_BANDS = 16
+PLANES_PER_BAND = 4
+# single-table ann_topk: one bucket of SINGLE_TABLE_PLANES sign bits, probed
+# within PROBE_HAMMING bits of the query's bucket
+SINGLE_TABLE_PLANES = 12
+PROBE_HAMMING = 1
+# IVF coarse quantizer: N_LISTS KMeans lists fit on ~SAMPLE_ROWS rows
+N_LISTS = 16
+SAMPLE_ROWS = 100_000
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -55,7 +69,7 @@ def _lit_vec(vec) -> Column:
 
 
 def cosine_topk(df: DataFrame, embedding_col: str, id_col: str, query,
-                k: int = 10) -> DataFrame:
+                k: int) -> DataFrame:
     """Exact top-k by cosine similarity to ``query`` (a Python list/ndarray).
 
     Output: ``(id, score)`` ordered desc, deterministic ties by id.
@@ -68,8 +82,8 @@ def cosine_topk(df: DataFrame, embedding_col: str, id_col: str, query,
     return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
 
 
-def make_hyperplanes(dim: int, num_planes: int = 16, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
+def make_hyperplanes(dim: int, num_planes: int = 16) -> np.ndarray:
+    rng = np.random.default_rng(SEED)
     return rng.standard_normal((num_planes, dim))
 
 
@@ -82,7 +96,7 @@ def lsh_bucket(embedding: Column, hyperplanes: np.ndarray) -> Column:
         raise ValueError(
             f"{len(hyperplanes)} hyperplanes exceed the 63 bits a signed "
             "long bucket id can carry — split them into bands of <= 63 "
-            "planes (ann_topk's bands/planes_per_band)")
+            "planes")
     bucket = F.lit(0).cast("long")
     for i, h in enumerate(hyperplanes):
         bit = F.when(dot(embedding, _lit_vec(h)) > 0,
@@ -92,18 +106,16 @@ def lsh_bucket(embedding: Column, hyperplanes: np.ndarray) -> Column:
 
 
 def ann_topk(df: DataFrame, embedding_col: str, id_col: str, query,
-             k: int = 10, *, num_planes: int = 12, seed: int = 42,
-             probe_hamming: int = 1, bands: int | None = None,
-             planes_per_band: int = 4) -> DataFrame:
+             k: int, *, bands: int | None = None) -> DataFrame:
     """Approximate top-k. Two probe strategies:
 
-    - single-table (``bands=None``): score rows whose ``num_planes``-bit
-      LSH bucket is within ``probe_hamming`` bits of the query's bucket.
-      Cuts the scored set by ~2^num_planes / sum_{i<=h} C(num_planes, i),
-      but an AND-of-12-planes bucket misses moderate-similarity neighbors
+    - single-table (``bands=None``): score rows whose
+      ``SINGLE_TABLE_PLANES``-bit LSH bucket is within ``PROBE_HAMMING``
+      bits of the query's bucket. Cuts the scored set by ~2^12 / 13, but
+      an AND-of-12-planes bucket misses moderate-similarity neighbors
       badly (measured recall@10 ~0.1 at cosine ~0.5 — BENCH ann_recall).
     - banded OR-construction (``bands`` set): a row is a candidate when
-      its sign-vector matches the query's on ALL ``planes_per_band``
+      its sign-vector matches the query's on ALL ``PLANES_PER_BAND``
       planes of ANY band — the same 1-(1-p^r)^b recall amplification the
       near-duplicate ops use. At 16x4 a cosine-0.5 neighbor is a candidate
       with p ~ 0.97 vs ~0.11 for single-table probing; the price is a
@@ -119,19 +131,19 @@ def ann_topk(df: DataFrame, embedding_col: str, id_col: str, query,
     emb = F.col(embedding_col).cast("array<double>")
     qvec = np.asarray(query, dtype=float)
     if bands is None:
-        planes = make_hyperplanes(dim, num_planes, seed)
+        planes = make_hyperplanes(dim, SINGLE_TABLE_PLANES)
         bucketed = df.select(F.col(id_col), emb.alias("_e"),
                              lsh_bucket(emb, planes).alias("_bucket"))
         qbucket = int(sum((2 ** i) for i, h in enumerate(planes)
                           if float(np.dot(h, qvec)) > 0))
         probe = bucketed.filter(
             F.bit_count(F.col("_bucket").bitwiseXOR(F.lit(qbucket)))
-            <= probe_hamming)
+            <= PROBE_HAMMING)
     else:
-        planes = make_hyperplanes(dim, bands * planes_per_band, seed)
+        planes = make_hyperplanes(dim, bands * PLANES_PER_BAND)
         band_cols, q_buckets = [], []
         for b in range(bands):
-            sub = planes[b * planes_per_band:(b + 1) * planes_per_band]
+            sub = planes[b * PLANES_PER_BAND:(b + 1) * PLANES_PER_BAND]
             band_cols.append(lsh_bucket(emb, sub))
             q_buckets.append(int(sum(
                 (2 ** i) for i, h in enumerate(sub)
@@ -149,41 +161,28 @@ def ann_topk(df: DataFrame, embedding_col: str, id_col: str, query,
     return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
 
 
-def train_ivf_centroids(df: DataFrame, embedding_col: str, *, n_lists: int = 16,
-                        seed: int = 42, max_iter: int = 20,
-                        sample_rows: int = 100_000,
-                        approx_rows: int | None = None) -> np.ndarray:
-    """Coarse quantizer for IVF: KMeans (Spark MLlib) on a deterministic
-    UNBIASED sample. Returns (n_lists, dim) centroids. The model is
-    centroids-only (broadcast as literals).
+def train_ivf_centroids(df: DataFrame, embedding_col: str) -> np.ndarray:
+    """Coarse quantizer for IVF: KMeans (Spark MLlib, 20 iterations) on a
+    deterministic UNBIASED sample. Returns (N_LISTS, dim) centroids. The
+    model is centroids-only (broadcast as literals).
 
-    Sampling (VERDICT r02 #6): pass ``approx_rows`` (the table's rough
-    size — cheap from table metadata) and the sample fraction is derived
-    with NO count job. Without it, one narrow count of the embedding-id
-    column sizes the fraction — never ``limit(sample_rows)`` alone, which
-    takes the FIRST file splits: on a table written ordered by
-    time/tenant the quantizer would be fit to one slice of the
-    distribution and probe recall collapses elsewhere.
+    Sampling (VERDICT r02 #6): one narrow count of the embedding column
+    sizes a Bernoulli fraction of ~``SAMPLE_ROWS`` rows drawn from the
+    whole table — never ``limit(SAMPLE_ROWS)``, which takes the FIRST file
+    splits: on a table written ordered by time/tenant the quantizer would
+    be fit to one slice of the distribution and probe recall collapses
+    elsewhere.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     frac_df = df.select(F.col(embedding_col).cast("array<double>").alias("e"))
-    rows = approx_rows if approx_rows is not None else frac_df.count()
-    if rows > sample_rows:
-        # the safety cap (4x) must not be a bare GlobalLimit: that consumes
-        # head partitions first, so when approx_rows under-estimates by >3x
-        # the cap binds and re-biases the sample toward the head of the
-        # table (ADVICE r03). Ranking by a deterministic hash of the vector
-        # makes the capped subset a uniform draw regardless of physical
-        # order — TakeOrderedAndProject, each task keeps at most the cap.
-        frac_df = (frac_df
-                   .sample(fraction=min(1.0, 1.25 * sample_rows / rows),
-                           seed=seed)
-                   .withColumn("_h", F.xxhash64(F.col("e"), F.lit(seed)))
-                   .orderBy("_h").limit(4 * sample_rows).drop("_h"))
+    rows = frac_df.count()
+    if rows > SAMPLE_ROWS:
+        frac_df = frac_df.sample(fraction=min(1.0, 1.25 * SAMPLE_ROWS / rows),
+                                 seed=SEED)
     train = frac_df.select(array_to_vector(F.col("e")).alias("features"))
-    km = KMeans(k=n_lists, seed=seed, maxIter=max_iter).fit(train)
+    km = KMeans(k=N_LISTS, seed=SEED, maxIter=20).fit(train)
     return np.array(km.clusterCenters())
 
 
@@ -197,9 +196,9 @@ def ivf_list_id(embedding: Column, centroids: np.ndarray) -> Column:
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
-def ivf_topk(df: DataFrame, embedding_col: str, id_col: str, query, k: int = 10,
-             *, centroids: np.ndarray | None = None, n_lists: int = 16,
-             n_probe: int = 3, seed: int = 42) -> DataFrame:
+def ivf_topk(df: DataFrame, embedding_col: str, id_col: str, query, k: int,
+             *, centroids: np.ndarray | None = None,
+             n_probe: int = 3) -> DataFrame:
     """IVF approximate top-k: probe the ``n_probe`` inverted lists whose
     centroids are nearest the query, brute-force cosine inside them.
 
@@ -207,8 +206,7 @@ def ivf_topk(df: DataFrame, embedding_col: str, id_col: str, query, k: int = 10,
     probe prunes partitions at the source; pass precomputed ``centroids`` to
     skip training (e.g. loaded from the index build job)."""
     if centroids is None:
-        centroids = train_ivf_centroids(df, embedding_col, n_lists=n_lists,
-                                        seed=seed)
+        centroids = train_ivf_centroids(df, embedding_col)
     q = np.asarray(query, dtype=float)
     d2 = ((centroids - q) ** 2).sum(axis=1)
     probe_lists = [int(i) for i in np.argsort(d2)[:n_probe]]
@@ -223,9 +221,7 @@ def ivf_topk(df: DataFrame, embedding_col: str, id_col: str, query, k: int = 10,
 
 def embedding_near_duplicates(df: DataFrame, embedding_col: str, id_col: str, *,
                               cosine_threshold: float = 0.95,
-                              bands: int = 16, planes_per_band: int = 4,
-                              seed: int = 42, dim: int | None = None,
-                              max_bucket: int = 1000) -> DataFrame:
+                              dim: int | None = None) -> DataFrame:
     """Near-duplicate pairs by embedding cosine: **banded** random-hyperplane
     LSH (the SimHash/MinHash banding trick applied to sign-projections), then
     exact-cosine verification. Output ``(id_a, id_b, cosine)``.
@@ -233,18 +229,19 @@ def embedding_near_duplicates(df: DataFrame, embedding_col: str, id_col: str, *,
     A pair is a candidate when its sign-vector agrees on ALL planes of SOME
     band: P(candidate) = 1 - (1 - p^r)^b with p = 1 - theta/pi. A single
     AND-of-12-planes bucket (the naive design) has recall ~0.28 at cosine
-    0.95; 16 bands x 4 planes pushes the miss probability below 1e-7 for
-    near-identical vectors while still pruning ~all random pairs. Shuffle
-    volume: ``bands`` (band, bucket, id) rows per vector — independent of
-    dimension; vectors themselves only move for the verified candidates.
+    0.95; ``EMBED_BANDS`` x ``PLANES_PER_BAND`` = 16 bands x 4 planes pushes
+    the miss probability below 1e-7 for near-identical vectors while still
+    pruning ~all random pairs. Shuffle volume: 16 (band, bucket, id) rows
+    per vector — independent of dimension; vectors themselves only move
+    for the verified candidates.
 
     ``dim`` is the embedding dimension; pass it when known (it is a schema
     property, not data) — the ``.first()`` fallback is a driver action that
-    runs an extra job. ``max_bucket`` caps each band's buckets (one
+    runs an extra job. ``MAX_BUCKET`` caps each band's buckets (one
     hot bucket of m members is m^2/2 pairs — quadratic at scale)."""
     if dim is None:
         dim = int(df.select(F.size(embedding_col).alias("d")).first()["d"])
-    planes = make_hyperplanes(dim, bands * planes_per_band, seed)
+    planes = make_hyperplanes(dim, EMBED_BANDS * PLANES_PER_BAND)
     emb = F.col(embedding_col).cast("array<double>")
     base = _persist_base(ensure_parallelism(df).select(
         F.col(id_col).alias("doc_id"), emb.alias("e")))
@@ -254,14 +251,14 @@ def embedding_near_duplicates(df: DataFrame, embedding_col: str, id_col: str, *,
             F.struct(
                 F.lit(b).alias("band"),
                 lsh_bucket(F.col("e"),
-                           planes[b * planes_per_band:(b + 1) * planes_per_band])
+                           planes[b * PLANES_PER_BAND:(b + 1) * PLANES_PER_BAND])
                 .alias("bucket"))
-            for b in range(bands)
+            for b in range(EMBED_BANDS)
         ])).alias("bb"),
     ).select(F.col("bb.band").alias("band"),
              F.col("bb.bucket").alias("bucket"), "doc_id")
     # only (band, bucket, id) rows shuffle — never the vectors
-    cand = _bucket_pairs(banded, ["band", "bucket"], max_bucket) \
+    cand = _bucket_pairs(banded, ["band", "bucket"], MAX_BUCKET) \
         .select(F.col("doc_id_a").alias("id_a"),
                 F.col("doc_id_b").alias("id_b"))
     return _verify_pairs(cand, base, "e", "cosine", cosine, cosine_threshold)

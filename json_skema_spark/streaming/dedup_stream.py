@@ -24,8 +24,7 @@ from json_skema_spark.operators.dedup import content_digest
 
 
 def exact_dedup_stream(stream_df: DataFrame, text_col: str, ts_col: str, *,
-                       watermark: str = "10 minutes",
-                       normalize: bool = True) -> DataFrame:
+                       watermark: str = "10 minutes") -> DataFrame:
     """Drop content-duplicate rows from a stream, state bounded by
     ``watermark``. Output: the input rows, first occurrence per digest."""
     wm = stream_df.withWatermark(ts_col, watermark)
@@ -41,9 +40,7 @@ def exact_dedup_stream(stream_df: DataFrame, text_col: str, ts_col: str, *,
     # DROPPED as "duplicates" of content that was never compared. Null-text
     # rows bypass dedup instead (they are not duplicates of anything).
     deduped = (wm.filter(F.col(text_col).isNotNull())
-               .withColumn(digest_col,
-                           content_digest(F.col(text_col),
-                                          normalize=normalize))
+               .withColumn(digest_col, content_digest(F.col(text_col)))
                .dropDuplicatesWithinWatermark([digest_col])
                .drop(digest_col))
     return deduped.unionByName(wm.filter(F.col(text_col).isNull()))

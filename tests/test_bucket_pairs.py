@@ -18,11 +18,10 @@ from json_skema_spark.operators.dedup import _bucket_pairs
 
 def _selfjoin_pairs(keyed, bucket_cols, max_bucket):
     """The r05 shape: size agg -> left-semi prune -> self-join."""
-    if max_bucket:
-        sizes = (keyed.groupBy(*bucket_cols)
-                 .agg(F.count("*").alias("_bsz"))
-                 .filter(F.col("_bsz") <= max_bucket).drop("_bsz"))
-        keyed = keyed.join(sizes, on=bucket_cols, how="left_semi")
+    sizes = (keyed.groupBy(*bucket_cols)
+             .agg(F.count("*").alias("_bsz"))
+             .filter(F.col("_bsz") <= max_bucket).drop("_bsz"))
+    keyed = keyed.join(sizes, on=bucket_cols, how="left_semi")
     a, b = keyed.alias("a"), keyed.alias("b")
     return (a.join(b, on=bucket_cols, how="inner")
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -65,19 +64,10 @@ def test_bucket_pairs_matches_selfjoin_with_prune(spark):
     assert all(fa == int(a[1]) and fb == int(b[1]) for a, b, fa, fb in got_fp)
 
 
-def test_bucket_pairs_unbounded(spark):
-    keyed = _fixture(spark)
-    got = sorted(map(tuple, _bucket_pairs(
-        keyed, ["bucket"], max_bucket=None).collect()))
-    want = sorted(map(tuple, _selfjoin_pairs(
-        keyed, ["bucket"], max_bucket=None).collect()))
-    assert got == want and ("d6", "d7") in got
-
-
 def _simhash_corpus(seed=5):
     """Clusters of near-duplicate documents (a base text with 0-3 token
-    substitutions each) plus seven identical boilerplate documents whose
-    chunk buckets all exceed the max_bucket the test uses."""
+    substitutions each) plus MAX_BUCKET + 1 identical boilerplate documents
+    whose chunk buckets all exceed MAX_BUCKET."""
     rng = np.random.default_rng(seed)
     vocab = [f"w{i}" for i in range(200)]
     rows = []
@@ -89,29 +79,22 @@ def _simhash_corpus(seed=5):
                 toks[int(rng.integers(0, len(toks)))] = \
                     vocab[int(rng.integers(0, len(vocab)))]
             rows.append((f"c{c}v{v}", " ".join(toks)))
-    rows += [(f"hot{i}", "same boilerplate header text") for i in range(7)]
+    rows += [(f"hot{i:04d}", "same boilerplate header text")
+             for i in range(dedup.MAX_BUCKET + 1)]
     return rows
 
 
 def test_simhash_pairs_match_brute_force(spark):
     """SimHash pairs through _bucket_pairs equal an all-pairs Hamming scan
     over the same fingerprints, with the documented prune: a pair is
-    missed only when every chunk bucket it shares exceeds max_bucket."""
-    max_hamming, max_bucket = 5, 5
-    n_chunks = max_hamming + 1
-    width = dedup.SIMHASH_BITS // n_chunks
+    missed only when every chunk bucket it shares exceeds MAX_BUCKET."""
     rows = _simhash_corpus()
     df = spark.createDataFrame(rows, "doc_id string, text string")
     fps = {r.doc_id: r.fp for r in df.select(
         "doc_id", dedup.simhash(F.col("text")).alias("fp")).collect()}
 
-    def chunks(fp):
-        out = []
-        for i in range(n_chunks):
-            w = width if i < n_chunks - 1 \
-                else dedup.SIMHASH_BITS - width * (n_chunks - 1)
-            out.append((i, (fp >> (width * i)) & ((1 << w) - 1)))
-        return out
+    def chunks(fp):  # 4 chunks of 12 bits
+        return [(i, (fp >> (12 * i)) & 0xFFF) for i in range(4)]
 
     size: dict = {}
     for fp in fps.values():
@@ -120,22 +103,20 @@ def test_simhash_pairs_match_brute_force(spark):
     want, pruned = set(), set()
     for a, b in combinations(sorted(fps), 2):
         d = bin(fps[a] ^ fps[b]).count("1")
-        if d > max_hamming:
+        if d > dedup.MAX_HAMMING:
             continue
         shared = set(chunks(fps[a])) & set(chunks(fps[b]))
-        assert shared  # pigeonhole: d <= max_hamming shares a chunk
-        if any(size[ch] <= max_bucket for ch in shared):
+        assert shared  # pigeonhole: d <= MAX_HAMMING shares a chunk
+        if any(size[ch] <= dedup.MAX_BUCKET for ch in shared):
             want.add((a, b, d))
         else:
             pruned.add((a, b))
-    assert max(size.values()) > max_bucket and pruned
+    assert max(size.values()) > dedup.MAX_BUCKET and pruned
     # pairs come from more than one chunk bucket
     assert len({ch for a, b, _d in want
                 for ch in set(chunks(fps[a])) & set(chunks(fps[b]))}) > 1
 
-    got = dedup.simhash_near_duplicates(
-        df, "text", "doc_id", max_hamming=max_hamming,
-        max_bucket=max_bucket).collect()
+    got = dedup.simhash_near_duplicates(df, "text", "doc_id").collect()
     got_set = {(r.doc_id_a, r.doc_id_b, r.hamming) for r in got}
     assert len(got) == len(got_set) and got_set == want
 

@@ -41,18 +41,17 @@ def test_profile_baseline_drift_on_clips(spark):
 
 def test_simhash_hot_bucket_guard(spark):
     """A degenerate chunk value (hundreds of empty docs -> fingerprint 0) must
-    not blow the chunk self-join quadratic: max_bucket drops the hot bucket
+    not blow the chunk self-join quadratic: MAX_BUCKET drops the hot bucket
     but distinct real near-dup pairs still surface through other chunks."""
     from json_skema_spark.operators import dedup
-    empties = spark.range(0, 500).select(
+    empties = spark.range(0, dedup.MAX_BUCKET + 1).select(
         F.concat(F.lit("e"), F.col("id")).alias("doc_id"), F.lit("").alias("text"))
     real = spark.createDataFrame(
         [("a1", "the quick brown fox jumps over the lazy dog today"),
          ("a2", "the quick brown fox jumps over the lazy dog today")],
         ["doc_id", "text"])
     df = empties.unionAll(real)
-    pairs = dedup.simhash_near_duplicates(df, "text", "doc_id",
-                                          max_hamming=3, max_bucket=50).collect()
+    pairs = dedup.simhash_near_duplicates(df, "text", "doc_id").collect()
     ids = {(r.doc_id_a, r.doc_id_b) for r in pairs}
     assert ("a1", "a2") in ids
     # no pair of empties survives: their only shared buckets were capped
@@ -61,9 +60,9 @@ def test_simhash_hot_bucket_guard(spark):
 
 def test_embedding_hot_bucket_guard(spark):
     """Same blow-up guard for embedding LSH: a degenerate bucket (identical
-    vectors) larger than max_bucket is dropped, small buckets still pair."""
-    from json_skema_spark.operators import similarity
-    hot = spark.range(0, 300).select(
+    vectors) larger than MAX_BUCKET is dropped, small buckets still pair."""
+    from json_skema_spark.operators import dedup, similarity
+    hot = spark.range(0, dedup.MAX_BUCKET + 1).select(
         F.concat(F.lit("h"), F.col("id")).alias("vid"),
         F.array(F.lit(1.0), F.lit(0.0), F.lit(0.0)).alias("emb"))
     cold = spark.createDataFrame(
@@ -71,7 +70,7 @@ def test_embedding_hot_bucket_guard(spark):
         ["vid", "emb"])
     df = hot.unionAll(cold)
     pairs = similarity.embedding_near_duplicates(
-        df, "emb", "vid", cosine_threshold=0.95, dim=3, max_bucket=50).collect()
+        df, "emb", "vid", cosine_threshold=0.95, dim=3).collect()
     ids = {(r.id_a, r.id_b) for r in pairs}
     assert ("c1", "c2") in ids
     assert not any(a.startswith("h") for a, b in ids)

@@ -3,7 +3,8 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from json_skema_spark.operators.similarity import (cosine_topk, ivf_list_id,
+from json_skema_spark.operators.similarity import (N_LISTS, SAMPLE_ROWS,
+                                                   cosine_topk, ivf_list_id,
                                                    ivf_topk,
                                                    train_ivf_centroids)
 
@@ -21,7 +22,7 @@ def test_ivf_topk_recall(spark):
 
     q = [float(x) for x in (centers[2] + 0.1)]
     exact = [r.vec_id for r in cosine_topk(df, "embedding", "vec_id", q, k=10).collect()]
-    cents = train_ivf_centroids(df, "embedding", n_lists=8, seed=42)
+    cents = train_ivf_centroids(df, "embedding")
     approx = [r.vec_id for r in ivf_topk(df, "embedding", "vec_id", q, k=10,
                                          centroids=cents, n_probe=2).collect()]
     recall = len(set(exact) & set(approx)) / 10
@@ -31,28 +32,24 @@ def test_ivf_topk_recall(spark):
 
 def test_ivf_list_assignment_balanced(spark):
     rng = np.random.default_rng(5)
-    vecs = rng.standard_normal((400, 8))
+    vecs = rng.standard_normal((100 * N_LISTS, 8))  # ~100 rows per list
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "id int, embedding array<double>")
-    cents = train_ivf_centroids(df, "embedding", n_lists=4, seed=42)
+    cents = train_ivf_centroids(df, "embedding")
     counts = (df.select(ivf_list_id(
         F.col("embedding").cast("array<double>"), cents).alias("l"))
         .groupBy("l").count().collect())
-    assert len(counts) == 4
+    assert len(counts) == N_LISTS
     assert all(r["count"] > 20 for r in counts)  # no empty/degenerate list
 
 
-def test_ivf_sample_cap_not_head_biased(spark):
-    """ADVICE r03: when approx_rows under-estimates by >3x the 4x safety
-    cap binds; the capped subset must remain a uniform draw, not the head
-    partitions. Head rows cluster at -10, tail rows at +10: a head-biased
-    cap trains every centroid near -10."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from json_skema_spark.operators.similarity import train_ivf_centroids
-
-    n = 4000
+def test_ivf_sample_not_head_biased(spark):
+    """The training sample is a Bernoulli draw over the whole table, never
+    its head partitions (VERDICT r02 #6, ADVICE r03). Head rows cluster at
+    -10, tail rows at +10, and the table exceeds SAMPLE_ROWS: a
+    head-biased sample trains every centroid near -10."""
+    n = 2 * SAMPLE_ROWS
     # ordered source: first half -10-centered, second half +10-centered,
     # one row per ordered partition range
     df = (spark.range(0, n, 1, 8)
@@ -62,11 +59,9 @@ def test_ivf_sample_cap_not_head_biased(spark):
               F.col("c") + (F.pmod(F.xxhash64("id"), F.lit(100)) / 100.0),
               F.col("c") - (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(100)) / 100.0),
           ).alias("emb")))
-    # approx_rows 10x under-estimated -> fraction 1.0 -> cap binds hard
-    cents = train_ivf_centroids(df, "emb", n_lists=2, approx_rows=n // 10,
-                                sample_rows=100, seed=7)
-    signs = sorted(np.sign(cents[:, 0]))
-    assert signs == [-1.0, 1.0], f"head-biased centroids: {cents}"
+    cents = train_ivf_centroids(df, "emb")
+    signs = set(np.sign(cents[:, 0]))
+    assert signs == {-1.0, 1.0}, f"head-biased centroids: {cents}"
 
 
 def test_ann_banded_recall_beats_single_table(spark):
@@ -86,8 +81,8 @@ def test_ann_banded_recall_beats_single_table(spark):
         exact = {r.vec_id for r in
                  cosine_topk(df, "embedding", "vec_id", q, k=10).collect()}
         banded = {r.vec_id for r in
-                  ann_topk(df, "embedding", "vec_id", q, k=10, bands=16,
-                           planes_per_band=4).collect()}
+                  ann_topk(df, "embedding", "vec_id", q, k=10,
+                           bands=16).collect()}
         hits += len(exact & banded)
     df.unpersist()
     assert hits / 30 >= 0.8, hits

@@ -9,6 +9,7 @@ import re
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from json_skema_spark.operators import dedup
 
@@ -76,15 +77,17 @@ def test_threshold_one_keeps_only_identical_shingle_sets(spark):
 
 
 def test_hot_gram_cap_drops_pairs_served_only_by_hot_grams(spark):
-    rows = [(f"d{i}", "same same same boilerplate") for i in range(5)]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    kw = dict(n=3, jaccard_threshold=1.0)
-    capped = dedup.ngram_jaccard_near_duplicates(
-        df, "text", "doc_id", max_posting=4, **kw).collect()
-    assert capped == []  # every indexed gram has 5 postings > 4 — documented drop
-    full = dedup.ngram_jaccard_near_duplicates(
-        df, "text", "doc_id", max_posting=10, **kw).collect()
-    assert len(full) == 10  # C(5,2)
+    def pairs(n_docs):
+        df = spark.range(n_docs).select(
+            F.col("id").cast("string").alias("doc_id"),
+            F.lit("same same same boilerplate").alias("text"))
+        return dedup.ngram_jaccard_near_duplicates(
+            df, "text", "doc_id", n=3, jaccard_threshold=1.0)
+
+    # every indexed gram has MAX_BUCKET + 1 postings — documented drop
+    assert pairs(dedup.MAX_BUCKET + 1).count() == 0
+    m = dedup.MAX_BUCKET  # a full-size posting list still pairs
+    assert pairs(m).count() == m * (m - 1) // 2
 
 
 def test_null_text_is_not_a_near_duplicate(spark):

@@ -132,12 +132,15 @@ def test_minhash_near_duplicates(spark):
 
 
 def test_simhash_near_duplicates(spark):
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
-    near = base.replace("kappa", "lambda")
+    # 24 distinct tokens: one substituted token moves the fingerprint by
+    # 1 bit, within MAX_HAMMING (over 10 tokens it moves 8)
+    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa lambda "
+            "mu nu xi omicron pi rho sigma tau upsilon phi chi psi omega")
+    near = base.replace("omega", "digamma")
     other = "numbers one two three four five six seven eight nine ten " * 4
     df = spark.createDataFrame(
         [("a", base), ("b", near), ("c", other)], "doc_id string, text string")
-    pairs = dedup.simhash_near_duplicates(df, "text", "doc_id", max_hamming=8).collect()
+    pairs = dedup.simhash_near_duplicates(df, "text", "doc_id").collect()
     got = {(p.doc_id_a, p.doc_id_b) for p in pairs}
     assert ("a", "b") in got and ("a", "c") not in got
 
@@ -157,7 +160,7 @@ def test_ann_topk_matches_exact_for_easy_case(spark):
         [(f"v{i}", [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id string, embedding array<double>")
     got = similarity.ann_topk(df, "embedding", "vec_id", [float(x) for x in q],
-                              k=1, probe_hamming=2).collect()
+                              k=1).collect()
     assert got and got[0].vec_id == "v17"
 
 
@@ -481,14 +484,6 @@ def test_exact_duplicates_ignores_null_text(spark):
         "doc_id string, text string")
     got = exact_duplicates(df, "text", "doc_id").collect()
     assert len(got) == 1 and set(got[0].doc_ids) == {"c", "d"}
-
-
-def test_minhash_bands_must_divide_hashes(spark):
-    from json_skema_spark.operators.dedup import minhash_near_duplicates
-
-    df = spark.createDataFrame([("a", "x y z")], "doc_id string, text string")
-    with pytest.raises(ValueError, match="evenly divide"):
-        minhash_near_duplicates(df, "text", "doc_id", num_hashes=64, bands=12)
 
 
 def test_contamination_null_text_kept(spark):

@@ -120,38 +120,6 @@ def test_profile_per_partition_name_collision_raises(spark):
 
 # ---------------------------------------- dedup/join family (review pass 6)
 
-def test_simhash_banding_scales_with_max_hamming(spark):
-    """Fixed 4-chunk banding only guarantees recall for hamming <= 3; the
-    chunk count must derive from max_hamming. Construct a pair at hamming
-    distance 4 whose differing bits hit 4 distinct 12-bit chunks — the old
-    banding misses it, max_hamming=4 (5 chunks) must find it."""
-    from json_skema_spark.operators import dedup
-
-    # find two texts whose fingerprints differ in exactly 4 bits spread
-    # over all four 12-bit chunks: search a pool that varies two tokens
-    # (144 texts; fingerprints are deterministic, and this pool holds
-    # several such pairs)
-    import itertools
-    texts = [f"alpha bravo charlie delta w{i} v{j}"
-             for i in range(12) for j in range(12)]
-    df = spark.createDataFrame([(str(i), t) for i, t in enumerate(texts)],
-                               "doc_id string, text string")
-    fps = {r.doc_id: r.fp for r in df.select(
-        "doc_id", dedup.simhash(F.col("text")).alias("fp")).collect()}
-    target = None
-    for a, b in itertools.combinations(fps, 2):
-        x = fps[a] ^ fps[b]
-        if bin(x).count("1") == 4 and all(
-                (x >> (12 * c)) & 0xFFF for c in range(4)):
-            target = (a, b)
-            break
-    assert target is not None, "no 4-bit all-chunk pair in the pool"
-    pair_df = df.filter(F.col("doc_id").isin(list(target)))
-    found = dedup.simhash_near_duplicates(pair_df, "text", "doc_id",
-                                          max_hamming=4).collect()
-    assert len(found) == 1 and found[0].hamming == 4
-
-
 def test_duplicate_keys_ignores_nulls(spark):
     from json_skema_spark.operators import uniqueness
     df = spark.createDataFrame(

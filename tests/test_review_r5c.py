@@ -449,11 +449,10 @@ def test_duplicate_clusters_raises_on_non_convergence(spark):
 
 
 def test_lsh_bucket_rejects_over_63_planes(spark):
-    from json_skema_spark.operators.similarity import ann_topk
-    df = spark.createDataFrame([("d0", [1.0, 0.0])],
-                               "doc_id string, emb array<float>")
+    from json_skema_spark.operators.similarity import (lsh_bucket,
+                                                       make_hyperplanes)
     with pytest.raises(ValueError, match="63 bits"):
-        ann_topk(df, "emb", "doc_id", [1.0, 0.0], num_planes=64)
+        lsh_bucket(F.col("emb"), make_hyperplanes(2, 64))
 
 
 def test_yaml_date_scalars_still_validate(spark):
