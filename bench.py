@@ -180,8 +180,8 @@ def main() -> None:
     # Regression tripwire (VERDICT r04 #7): a change in banding/probing
     # would pass the CORRECTNESS gate (the IVF driver query pins fixed
     # centroids) while silently losing recall — so the recall itself is
-    # recorded per round. Banded 16x4 is the production ANN configuration
-    # (OR-construction; single-table AND-of-12 measures ~0.1 on this
+    # recorded per round. ann_topk probes 16 bands of 4 planes
+    # (OR-construction; a single AND-of-12 table measured ~0.1 on this
     # corpus); IVF's number is its honest n_probe=4/16 point on gaussian
     # embeddings, where neighbor contrast is inherently low — see
     # BENCH/BASELINE.md round-5 addendum for the n_probe curve.
@@ -198,7 +198,7 @@ def main() -> None:
         exact = {r.vec_id for r in similarity.cosine_topk(
             emb, "embedding", "vec_id", q, k=10).collect()}
         ann = {r.vec_id for r in similarity.ann_topk(
-            emb, "embedding", "vec_id", q, k=10, bands=16).collect()}
+            emb, "embedding", "vec_id", q, k=10).collect()}
         ivf = {r.vec_id for r in similarity.ivf_topk(
             emb, "embedding", "vec_id", q, k=10, centroids=cents,
             n_probe=4).collect()}

@@ -8,31 +8,27 @@ decode-ability itself as a per-row constraint).
 Execution model (input_hint mandate: vectorized pandas/Arrow UDFs, no
 per-row Python):
 
-- ``mapInPandas`` with an iterator of Arrow record batches; numpy does the
+- ``mapInArrow`` over an iterator of Arrow record batches; numpy does the
   byte-level work per batch. Python cost is per *batch*, not per row; the
   per-row loop inside is pure numpy/bytes slicing.
 - Only the needed columns enter the UDF (schema-projected before the map),
   so the 100 TB scan doesn't ship unused columns through Arrow.
 
 Codec support: WAV/RIFF PCM16 ("pcm_s16le") decoded for real. "flac" /
-"opus" decoders are STUBS (no codec libs in this container): they
-deterministically reject with ``error='codec_not_supported:<codec>'`` —
+"opus" have no decoder unless one is registered: they deterministically
+reject with ``error='codec_not_supported:<codec>'`` —
 the Spark-side plumbing (schema, batching, dispatch) is real and tested.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DECODE_SCHEMA = ("clip_id string, decode_ok boolean, error string, "
-                 "sr_hz_decoded int, n_samples long")
 SNR_SCHEMA = ("clip_id string, invariant_ok boolean, snr_db double, "
               "transcript_ok boolean, error string")
 # the per-row invariant: decoded PCM reaches this SNR against the reference
@@ -181,57 +177,6 @@ def unregister_decoder(codec: str) -> None:
     _DECODERS.pop(codec, None)
 
 
-def register_optional_decoders() -> list[str]:
-    """Register REAL flac/opus decoders when ``soundfile`` (libsndfile) is
-    importable; returns the codecs registered ([] when the lib is absent —
-    the registry keeps its deterministic ``codec_not_supported`` reject).
-
-    Call on the driver BEFORE building a plan: UDF closures snapshot the
-    registry by value. The decode contract is identical to
-    ``decode_wav_pcm16``: mono float in [-1,1], true sample rate, error
-    string — so ``pcm_invariant_check``/``audio_violations`` work
-    unchanged whichever decoder served the row.
-    """
-    registered: list[str] = []
-    try:
-        import soundfile as sf  # optional: not in the sandbox image
-    except ImportError:
-        return registered
-
-    def _sf_decode(buf: Any) -> tuple[np.ndarray | None, int, str]:
-        # imports INSIDE the body: cloudpickle would otherwise capture the
-        # soundfile module by reference and an executor lacking the lib
-        # would die at closure DESERIALIZATION (whole-task failure, 4
-        # retries, job dead) instead of containing the miss per row as a
-        # decode_error verdict — the registry's never-crash contract
-        import io as _io
-
-        import soundfile as _sf
-        try:
-            data, sr = _sf.read(_io.BytesIO(bytes(buf)), dtype="float64",
-                                always_2d=True)
-        except Exception as exc:
-            return None, 0, f"decode_error:{type(exc).__name__}"
-        if data.shape[1] != 1:
-            return None, int(sr), "unsupported_pcm_layout"
-        return data[:, 0], int(sr), ""
-
-    register_decoder("flac", _sf_decode)
-    registered.append("flac")
-    # opus support depends on the linked libsndfile (>= 1.0.29): register
-    # only when the driver's library actually has it, else keep the honest
-    # codec_not_supported reject instead of per-row decode_error blaming
-    # valid rows for an environment limitation
-    try:
-        has_opus = "OPUS" in sf.available_subtypes("OGG")
-    except Exception:
-        has_opus = False
-    if has_opus:
-        register_decoder("opus", _sf_decode)
-        registered.append("opus")
-    return registered
-
-
 def _decoder_snapshot() -> dict[str, Decoder]:
     """Value-copy of the registry for capture into a UDF closure."""
     return dict(_DECODERS)
@@ -248,32 +193,6 @@ def _decode_with(decoders: dict[str, Decoder], codec: Any,
     if codec in _BUILTIN_CODECS:
         return None, 0, f"codec_not_supported:{codec}"
     return None, 0, f"unknown_codec:{codec}"
-
-
-def _decode_dispatch(codec: Any, buf: Any) -> tuple[np.ndarray | None, int, str]:
-    """Driver-side convenience dispatch against the live registry."""
-    return _decode_with(_DECODERS, codec, buf)
-
-
-def decode_check(df: DataFrame) -> DataFrame:
-    """Per-row decode-ability check -> (clip_id, decode_ok, error,
-    sr_hz_decoded, n_samples)."""
-
-    decoders = _decoder_snapshot()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"clip_id": pdf["clip_id"], "decode_ok": [], "error": [],
-                   "sr_hz_decoded": [], "n_samples": []}
-            for codec, buf in zip(pdf["codec"], pdf["bytes"]):
-                sig, sr, err = _decode_with(decoders, codec, buf)
-                out["decode_ok"].append(sig is not None)
-                out["error"].append(err)
-                out["sr_hz_decoded"].append(sr)
-                out["n_samples"].append(0 if sig is None else len(sig))
-            yield pd.DataFrame(out)
-
-    return df.select("clip_id", "codec", "bytes").mapInPandas(run, DECODE_SCHEMA)
 
 
 def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
@@ -359,10 +278,8 @@ def pcm_invariant_check(df: DataFrame, ref_transcripts: DataFrame | None = None,
 
     Output: (clip_id, invariant_ok, snr_db, transcript_ok, error) —
     ``invariant_ok`` is the PER-ROW INVARIANT verdict (decode AND SNR AND
-    metadata AND optional duration), deliberately NOT named decode_ok:
-    ``decode_check``'s column of that name means only "decoder returned a
-    signal", and sharing the name over-counted decode failures in any
-    consumer comparing the two outputs (review r05c).
+    metadata AND optional duration), deliberately NOT named decode_ok: a
+    decode_ok column means only "decoder returned a signal" (review r05c).
     """
     cols = ["clip_id", "codec", "bytes", "sr_hz", "dur_ms", "transcript"]
     base = df.select(*cols)

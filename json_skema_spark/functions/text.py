@@ -21,12 +21,6 @@ _STOPWORDS = {
     "hu": ["a", "az", "és", "hogy", "nem", "egy", "van", "de", "is", "meg"],
 }
 
-# Unicode letter/number runs (same migration as quality_score, review
-# r05c): the ASCII version counted every accented letter as its own
-# punctuation token — 'café' was 2 tokens — inflating counts for the
-# languages language_id supports
-_BPE_ISH = r"\p{L}+|\p{N}+|[^\s\p{L}\p{N}]"
-
 
 def md5_hex_slice(col: Column, start: int, length: int, *,
                   seed: int | None = None) -> Column:
@@ -52,12 +46,6 @@ def tokens(col: Column) -> Column:
 def token_count(col: Column) -> Column:
     """Whitespace token count."""
     return F.size(tokens(col))
-
-
-def bpe_ish_token_count(col: Column) -> Column:
-    """BPE-ish token count: alpha runs, digit runs, single punctuation —
-    ``regexp_count`` keeps it in codegen."""
-    return F.regexp_count(col, F.lit(_BPE_ISH))
 
 
 def language_id(col: Column) -> Column:

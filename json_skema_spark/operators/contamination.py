@@ -33,9 +33,8 @@ _WS = re.compile(f"[{_JAVA_WS}]+")
 
 
 def _hits(text: Column, probes: list[str], n: int) -> Column:
-    """Shared contamination predicate: the document's distinct ``n``-gram
-    shingles intersected with the literal probe array. ONE definition so
-    the flag view and the filter twin cannot drift (review r04).
+    """Contamination predicate: the document's distinct ``n``-gram
+    shingles intersected with the literal probe array.
 
     Probes are normalized HERE into the shingle normal form (lowercase,
     whitespace collapsed to single spaces, trimmed — exactly what
@@ -87,12 +86,3 @@ def contamination_flags(df: DataFrame, text_col: str, id_col: str,
         .alias("matched"),
     )
 
-
-def decontaminate(df: DataFrame, text_col: str, id_col: str,
-                  probes: list[str], *, n: int = 3) -> DataFrame:
-    """Drop contaminated documents (the filter twin of
-    ``contamination_flags``). Null-text rows are KEPT — no content means
-    no contamination (same convention as dedup: a null is not a match),
-    and an un-coalesced NULL predicate would silently drop them."""
-    hits = _hits(F.col(text_col), probes, n)
-    return df.filter(F.coalesce(F.size(hits) == 0, F.lit(True)))

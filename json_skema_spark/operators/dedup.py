@@ -8,7 +8,7 @@ detection over a documents table:
   DuckDB, so oracle-comparable)
 - MinHash + LSH: shingle -> per-seed min-hash -> band -> bucket join;
   candidates verified by exact n-gram Jaccard
-- SimHash: 64-bit bit-vote fingerprint, banded for candidate generation
+- SimHash: 48-bit bit-vote fingerprint
 - embedding near-dup lives in operators/similarity.py (shared LSH machinery)
 
 Everything below is pure ``pyspark.sql.functions`` (whole-stage codegen; the
@@ -43,7 +43,7 @@ ID_SALTS = 64
 
 
 def exact_duplicates(df: DataFrame, text_col: str, id_col: str, *,
-                     max_ids: int | None = 100) -> DataFrame:
+                     max_ids: int = 100) -> DataFrame:
     """Digest groups with >1 member: ``(digest, n_docs, doc_ids)``.
 
     Two-phase hash agg (map-side combine) on the digest; only digests+ids
@@ -53,12 +53,12 @@ def exact_duplicates(df: DataFrame, text_col: str, id_col: str, *,
     Hot-group safety (VERDICT r02 #3): a hyper-duplicated document (empty
     string, boilerplate header) can have millions of members — an unbounded
     ``collect_list`` would build one multi-million-element array cell and a
-    straggler task. With ``max_ids`` set, ids are first aggregated per
-    (digest, salt) sub-group and sliced to ``max_ids`` *before* the final
-    merge, so no agg buffer or shuffled row ever exceeds ~group/``ID_SALTS``
-    elements and the final cell is <= ``max_ids``. Per-salt K-smallest
-    merged and re-sliced equals the global K-smallest (top-K is
-    distributive over partitions). ``max_ids=None`` restores the full list.
+    straggler task. Ids are therefore first aggregated per (digest, salt)
+    sub-group and sliced to ``max_ids`` *before* the final merge: no agg
+    buffer or shuffled row ever exceeds ~group/``ID_SALTS`` elements and
+    the final cell is <= ``max_ids``. Per-salt K-smallest merged and
+    re-sliced equals the global K-smallest (top-K is distributive over
+    partitions).
     """
     # ensure_parallelism on the (id, text) projection: a small corpus
     # arrives as 1-2 splits (openCostInBytes floors the split size) and the
@@ -73,13 +73,6 @@ def exact_duplicates(df: DataFrame, text_col: str, id_col: str, *,
     # report documents whose content was never compared as one duplicate
     # cluster — null-text rows are simply not exact duplicates of anything
     d = d.filter(F.col("digest").isNotNull())
-    if max_ids is None:
-        return (
-            d.groupBy("digest")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-            .filter(F.col("n_docs") > 1)
-        )
     salted = (
         d.groupBy("digest",
                   F.pmod(F.xxhash64("doc_id"), F.lit(ID_SALTS)).alias("_salt"))
@@ -173,14 +166,13 @@ def _persist_base(base: DataFrame) -> DataFrame:
     return base
 
 
-# a bucket (MinHash/SimHash/embedding band, n-gram posting list) of more
+# a bucket (MinHash/embedding band, n-gram posting list) of more
 # members than this is dropped: m members make m^2/2 candidate pairs
 MAX_BUCKET = 1000
 
 
 def _bucket_pairs(keyed: DataFrame, bucket_cols: list[str],
-                  max_bucket: int,
-                  payload: str | Column = "doc_id") -> DataFrame:
+                  max_bucket: int) -> DataFrame:
     """Distinct candidate pairs (``doc_id_a < doc_id_b``) from bucket
     co-membership — the one pair generator behind every near-duplicate
     operator. ONE aggregation instead of the r05 shape (bucket-size agg +
@@ -195,17 +187,9 @@ def _bucket_pairs(keyed: DataFrame, bucket_cols: list[str],
     ``collect_list``, so a hot bucket is collected whole into one agg
     buffer before it is dropped — ``max_bucket`` bounds the pairs, not the
     buffer. Counting first and collecting only the kept buckets is ROADMAP
-    direction 4. The operators pass ``MAX_BUCKET``.
-
-    ``payload`` is the member value (a column of ``keyed`` or a Column
-    over it) and is what ``doc_id_a``/``doc_id_b`` carry: an id of any
-    orderable type, or a struct whose FIRST field is the id — Spark orders
-    structs field by field, so ``a < b`` and ``distinct`` keep their
-    meaning (except that a null id sorts first instead of pairing with
-    nothing), and the other fields ride along to verification without a
-    join back (SimHash's fingerprint)."""
+    direction 4. The operators pass ``MAX_BUCKET``."""
     grouped = (keyed.groupBy(*bucket_cols)
-               .agg(F.collect_list(payload).alias("_ids"))
+               .agg(F.collect_list("doc_id").alias("_ids"))
                .filter(F.size("_ids").between(2, max_bucket)))
     return (
         grouped.select("_ids", F.explode("_ids").alias("doc_id_a"))
@@ -370,8 +354,7 @@ def ngram_jaccard_near_duplicates(df: DataFrame, text_col: str, id_col: str,
 
 # -- SimHash ----------------------------------------------------------------
 
-SIMHASH_BITS = 48  # 4 chunks x 12 bits; 2^i stays exactly representable
-MAX_HAMMING = 3  # pigeonhole: a pair this close shares one of the 4 chunks
+SIMHASH_BITS = 48  # 2^i stays exactly representable in a double
 
 
 def simhash(col: Column) -> Column:
@@ -409,51 +392,6 @@ def simhash(col: Column) -> Column:
                        lambda acc, x: acc.bitwiseOR(x))
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two fingerprints (popcount via bit_count)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_near_duplicates(df: DataFrame, text_col: str,
-                            id_col: str) -> DataFrame:
-    """Near-dup pairs by SimHash, within hamming distance ``MAX_HAMMING``:
-    band the 48-bit fingerprint into 4 chunks of 12 bits (pigeonhole: a
-    pair within hamming distance 3 differs in at most 3 chunks, so at least
-    one matches exactly), pair the members of each chunk bucket, verify
-    hamming distance.
-
-    ``MAX_BUCKET`` caps the chunk buckets exactly like the MinHash path: a
-    degenerate chunk value (e.g. empty docs all fingerprinting to 0) makes
-    one bucket m^2/2 pairs — quadratic at 10^12 rows. Oversized buckets are
-    dropped; their members still pair through their other chunks."""
-    fp = ensure_parallelism(df).select(F.col(id_col).alias("doc_id"),
-                                       simhash(F.col(text_col)).alias("fp"))
-    chunks = fp.select(
-        "doc_id", "fp",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("chunk"),
-                     F.shiftrightunsigned(F.col("fp"), 12 * i)
-                     .bitwiseAND(F.lit(0xFFF)).alias("val"))
-            for i in range(4)
-        ])).alias("c"),
-    ).select("doc_id", "fp", F.col("c.chunk").alias("chunk"),
-             F.col("c.val").alias("val"))
-    # the fingerprint rides along in the member struct, so hamming
-    # verification needs no join back (8 extra bytes per member)
-    return (
-        _bucket_pairs(chunks, ["chunk", "val"], MAX_BUCKET,
-                      F.struct("doc_id", "fp"))
-        .select(F.col("doc_id_a.doc_id").alias("doc_id_a"),
-                F.col("doc_id_b.doc_id").alias("doc_id_b"),
-                hamming64(F.col("doc_id_a.fp"), F.col("doc_id_b.fp"))
-                .alias("hamming"))
-        # struct order sorts a null id first where a bare id's `<` is
-        # NULL: drop it here, as the scalar-payload operators do
-        .filter(F.col("doc_id_a").isNotNull()
-                & (F.col("hamming") <= MAX_HAMMING))
-    )
-
-
 def _release_local_checkpoint(df: DataFrame, *, blocking: bool = False) -> None:
     """Release the block-manager storage behind a ``localCheckpoint``-ed
     DataFrame. ``Dataset.unpersist()`` only clears CacheManager entries and
@@ -474,8 +412,8 @@ def duplicate_clusters(pairs: DataFrame, *, max_iter: int = 20) -> DataFrame:
     ``doc_id_b``) -> clusters with a deterministic canonical
     representative.
 
-    Every pair-producing dedup op here (exact, MinHash-LSH, SimHash,
-    embedding-LSH) stops at pairs; production dedup needs the transitive
+    Every pair-producing dedup op here (MinHash-LSH, n-gram, embedding-LSH)
+    stops at pairs; production dedup needs the transitive
     closure — A~B and B~C must collapse to ONE keep-decision even when A~C
     was never emitted. Output one row per document that appears in a pair:
     ``(doc_id, cluster_id, is_canonical)`` with ``cluster_id`` = the

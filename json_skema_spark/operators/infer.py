@@ -20,8 +20,9 @@ Scale design:
 
 Output is relational — one ``(column_name, keyword, value)`` row per
 suggested keyword, with ``value`` rendered as a JSON scalar/array string so
-the table is engine-agnostic (DuckDB-oracle-able) — plus ``to_schema_doc``
-to assemble the actual schema document.
+the table is engine-agnostic (DuckDB-oracle-able). The document is the
+rows assembled: each keyword under ``properties.<column_name>``, each
+``required`` row naming a member of ``required``.
 """
 
 from __future__ import annotations
@@ -179,21 +180,3 @@ def suggest_constraints(df: DataFrame, columns: list[str] | None = None, *,
     return spark.createDataFrame(
         out, "column_name string, keyword string, value string")
 
-
-def to_schema_doc(suggestions: DataFrame) -> dict:
-    """Assemble the suggestion rows into a compilable draft 2020-12
-    document: per-column keywords under ``properties``, zero-null columns
-    under ``required``."""
-    props: dict[str, dict] = {}
-    required: list[str] = []
-    for r in suggestions.collect():
-        val = json.loads(r.value)
-        if r.keyword == "required":
-            if val is True:
-                required.append(r.column_name)
-            continue
-        props.setdefault(r.column_name, {})[r.keyword] = val
-    doc: dict[str, Any] = {"type": "object", "properties": props}
-    if required:
-        doc["required"] = sorted(required)
-    return doc

@@ -157,13 +157,3 @@ def pack_greedy(df: DataFrame, id_col: str, tokens_col: str, *,
 
     return base.groupBy("bucket").applyInPandas(pack, PACKED_SCHEMA)
 
-
-def pack_stats(packed: DataFrame, *, max_tokens: int = 2048) -> DataFrame:
-    """Per-pack fill statistics: ``(bucket?, pack_id, n_docs, total_tokens,
-    fill_ratio)`` — the packing-efficiency report."""
-    keys = [c for c in ("bucket", "pack_id") if c in packed.columns]
-    return (packed.groupBy(*keys)
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("n_tokens").alias("total_tokens"))
-            .withColumn("fill_ratio",
-                        F.col("total_tokens") / F.lit(float(max_tokens))))

@@ -8,10 +8,10 @@ training-data-pipeline surface. Two paths:
   (JVM-side, codegen); top-k via ``ORDER BY ... LIMIT k`` which Spark
   executes as TakeOrderedAndProject (per-partition heap + driver merge —
   no full sort, no shuffle of the table).
-- ``lsh_bucket`` / ``ann_topk``: random-hyperplane LSH (sign of projections
-  onto driver-seeded hyperplanes). At scale the bucket id is
-  a partition key: a query probes one bucket (plus optional neighboring
-  buckets by Hamming distance) instead of scanning everything.
+- ``lsh_bucket`` / ``ann_topk``: banded random-hyperplane LSH (sign of
+  projections onto driver-seeded hyperplanes). At scale the bucket ids are
+  partition keys: a query probes its bucket in each band instead of
+  scanning everything.
 - ``embedding_near_duplicates``: same-bucket pairs + exact cosine through
   the near-dup operators' shared pair and verify stages (operators/dedup.py)
   — the embedding-space analogue of MinHash near-dup.
@@ -36,10 +36,6 @@ from json_skema_spark.operators.util import ensure_parallelism
 # PLANES_PER_BAND planes of any of EMBED_BANDS bands
 EMBED_BANDS = 16
 PLANES_PER_BAND = 4
-# single-table ann_topk: one bucket of SINGLE_TABLE_PLANES sign bits, probed
-# within PROBE_HAMMING bits of the query's bucket
-SINGLE_TABLE_PLANES = 12
-PROBE_HAMMING = 1
 # IVF coarse quantizer: N_LISTS KMeans lists fit on ~SAMPLE_ROWS rows
 N_LISTS = 16
 SAMPLE_ROWS = 100_000
@@ -106,56 +102,35 @@ def lsh_bucket(embedding: Column, hyperplanes: np.ndarray) -> Column:
 
 
 def ann_topk(df: DataFrame, embedding_col: str, id_col: str, query,
-             k: int, *, bands: int | None = None) -> DataFrame:
-    """Approximate top-k. Two probe strategies:
-
-    - single-table (``bands=None``): score rows whose
-      ``SINGLE_TABLE_PLANES``-bit LSH bucket is within ``PROBE_HAMMING``
-      bits of the query's bucket. Cuts the scored set by ~2^12 / 13, but
-      an AND-of-12-planes bucket misses moderate-similarity neighbors
-      badly (measured recall@10 ~0.1 at cosine ~0.5 — BENCH ann_recall).
-    - banded OR-construction (``bands`` set): a row is a candidate when
-      its sign-vector matches the query's on ALL ``PLANES_PER_BAND``
-      planes of ANY band — the same 1-(1-p^r)^b recall amplification the
-      near-duplicate ops use. At 16x4 a cosine-0.5 neighbor is a candidate
-      with p ~ 0.97 vs ~0.11 for single-table probing; the price is a
-      larger candidate set (the OR of b buckets), honest at scale because
-      real embedding corpora have high-similarity neighbors where each
-      band still prunes hard.
+             k: int) -> DataFrame:
+    """Approximate top-k by banded OR-construction: a row is a candidate
+    when its sign-vector matches the query's on ALL ``PLANES_PER_BAND``
+    planes of ANY of ``EMBED_BANDS`` bands — the same 1-(1-p^r)^b recall
+    amplification the near-duplicate ops use. At 16x4 a cosine-0.5
+    neighbor is a candidate with p ~ 0.97, where one AND-of-12-planes
+    bucket probed within 1 bit reaches ~0.11 (measured recall@10 ~0.1);
+    the price is a larger candidate set (the OR of b buckets), honest at
+    scale because real embedding corpora have high-similarity neighbors
+    where each band still prunes hard.
 
     At 100 TB the table is written bucketed/partitioned by the band
     buckets so the probe prunes partitions at the source; candidates
     stream through one TakeOrderedAndProject (per-partition heap + driver
     merge — no sort, no shuffle of the table)."""
-    dim = len(query)
     emb = F.col(embedding_col).cast("array<double>")
     qvec = np.asarray(query, dtype=float)
-    if bands is None:
-        planes = make_hyperplanes(dim, SINGLE_TABLE_PLANES)
-        bucketed = df.select(F.col(id_col), emb.alias("_e"),
-                             lsh_bucket(emb, planes).alias("_bucket"))
-        qbucket = int(sum((2 ** i) for i, h in enumerate(planes)
-                          if float(np.dot(h, qvec)) > 0))
-        probe = bucketed.filter(
-            F.bit_count(F.col("_bucket").bitwiseXOR(F.lit(qbucket)))
-            <= PROBE_HAMMING)
-    else:
-        planes = make_hyperplanes(dim, bands * PLANES_PER_BAND)
-        band_cols, q_buckets = [], []
-        for b in range(bands):
-            sub = planes[b * PLANES_PER_BAND:(b + 1) * PLANES_PER_BAND]
-            band_cols.append(lsh_bucket(emb, sub))
-            q_buckets.append(int(sum(
-                (2 ** i) for i, h in enumerate(sub)
-                if float(np.dot(h, qvec)) > 0)))
-        # OR over bands, evaluated in one pass — no self-join, no explode:
-        # the query's b bucket ids are literals folded into the predicate
-        match = None
-        for c, qb in zip(band_cols, q_buckets):
-            m = (c == qb)
-            match = m if match is None else (match | m)
-        probe = df.select(F.col(id_col), emb.alias("_e"), match.alias("_m")) \
-            .filter(F.col("_m"))
+    planes = make_hyperplanes(len(query), EMBED_BANDS * PLANES_PER_BAND)
+    # OR over bands, evaluated in one pass — no self-join, no explode: the
+    # query's bucket id in each band is a literal folded into the predicate
+    match = None
+    for b in range(EMBED_BANDS):
+        sub = planes[b * PLANES_PER_BAND:(b + 1) * PLANES_PER_BAND]
+        qb = int(sum((2 ** i) for i, h in enumerate(sub)
+                     if float(np.dot(h, qvec)) > 0))
+        m = lsh_bucket(emb, sub) == qb
+        match = m if match is None else (match | m)
+    probe = df.select(F.col(id_col), emb.alias("_e"), match.alias("_m")) \
+        .filter(F.col("_m"))
     scored = probe.select(F.col(id_col),
                           cosine(F.col("_e"), _lit_vec(query)).alias("score"))
     return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)

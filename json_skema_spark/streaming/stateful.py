@@ -12,15 +12,11 @@ source shard or tenant, not clip_id) bounds the state store.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from json_skema_spark.plans.compile import Compiler
-from json_skema_spark.plans.verdict import ValidationPlan
 from json_skema_spark.operators.util import quoted_col
 
 OUTPUT_SCHEMA = ("key string, rows_seen long, rows_failed long, "
@@ -43,18 +39,11 @@ def _tally(key: tuple, pdfs: Iterator[pd.DataFrame],
     })
 
 
-def running_violation_tally(stream_df: DataFrame, schema_doc: Any,
-                            key_col: str, **compiler_kwargs) -> DataFrame:
-    """Per-key cumulative (rows_seen, rows_failed, fail_fraction), updated
-    every micro-batch; emit in update mode."""
-    plan = ValidationPlan(Compiler(schema_doc, **compiler_kwargs),
-                          stream_df.schema)
-    return tally_verdicts(stream_df, plan.passed, key_col)
-
-
 def tally_verdicts(stream_df: DataFrame, passed: Column,
                    key_col: str) -> DataFrame:
-    """``running_violation_tally`` over an already compiled verdict."""
+    """Per-key cumulative (rows_seen, rows_failed, fail_fraction) of an
+    already compiled verdict, updated every micro-batch; emit in update
+    mode."""
     # key cast to string: OUTPUT_SCHEMA declares `key string`, and a
     # non-string grouping column (int shard ids — the docstring's own
     # suggested key class) would fail the pandas->Arrow conversion on the

@@ -5,7 +5,19 @@ zero violations)."""
 import json
 
 from json_skema_spark import compile_schema
-from json_skema_spark.operators.infer import suggest_constraints, to_schema_doc
+from json_skema_spark.operators.infer import suggest_constraints
+
+
+def _schema_doc(suggestions):
+    """The suggestion rows assembled into a draft 2020-12 document."""
+    doc = {"type": "object", "properties": {}, "required": []}
+    for r in suggestions.collect():
+        if r.keyword == "required":
+            doc["required"].append(r.column_name)
+        else:
+            doc["properties"].setdefault(r.column_name, {})[r.keyword] = \
+                json.loads(r.value)
+    return doc
 
 
 def test_suggest_constraints_keywords(spark):
@@ -39,7 +51,7 @@ def test_suggested_schema_roundtrips_with_zero_violations(spark):
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderpriority"]
-    doc = to_schema_doc(suggest_constraints(orders, cols))
+    doc = _schema_doc(suggest_constraints(orders, cols))
     assert doc["type"] == "object"
     assert "o_orderstatus" in doc["properties"]
     plan = compile_schema(doc, orders.schema)

@@ -39,25 +39,6 @@ def test_profile_baseline_drift_on_clips(spark):
     assert report["sr_hz"].drifted is False
 
 
-def test_simhash_hot_bucket_guard(spark):
-    """A degenerate chunk value (hundreds of empty docs -> fingerprint 0) must
-    not blow the chunk self-join quadratic: MAX_BUCKET drops the hot bucket
-    but distinct real near-dup pairs still surface through other chunks."""
-    from json_skema_spark.operators import dedup
-    empties = spark.range(0, dedup.MAX_BUCKET + 1).select(
-        F.concat(F.lit("e"), F.col("id")).alias("doc_id"), F.lit("").alias("text"))
-    real = spark.createDataFrame(
-        [("a1", "the quick brown fox jumps over the lazy dog today"),
-         ("a2", "the quick brown fox jumps over the lazy dog today")],
-        ["doc_id", "text"])
-    df = empties.unionAll(real)
-    pairs = dedup.simhash_near_duplicates(df, "text", "doc_id").collect()
-    ids = {(r.doc_id_a, r.doc_id_b) for r in pairs}
-    assert ("a1", "a2") in ids
-    # no pair of empties survives: their only shared buckets were capped
-    assert not any(a.startswith("e") and b.startswith("e") for a, b in ids)
-
-
 def test_embedding_hot_bucket_guard(spark):
     """Same blow-up guard for embedding LSH: a degenerate bucket (identical
     vectors) larger than MAX_BUCKET is dropped, small buckets still pair."""

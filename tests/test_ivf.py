@@ -81,8 +81,7 @@ def test_ann_banded_recall_beats_single_table(spark):
         exact = {r.vec_id for r in
                  cosine_topk(df, "embedding", "vec_id", q, k=10).collect()}
         banded = {r.vec_id for r in
-                  ann_topk(df, "embedding", "vec_id", q, k=10,
-                           bands=16).collect()}
+                  ann_topk(df, "embedding", "vec_id", q, k=10).collect()}
         hits += len(exact & banded)
     df.unpersist()
     assert hits / 30 >= 0.8, hits

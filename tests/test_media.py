@@ -1,5 +1,5 @@
-"""Image/video multimodal plumbing (functions/media.py): real rgb8raw /
-rawvid codecs, registry stubs, resize determinism, frame sampling."""
+"""Image plumbing (functions/media.py): the real rgb8raw codec, the
+decoder registry and its stubs, per-image statistics."""
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -21,13 +21,14 @@ def test_rgb8raw_roundtrip():
 
 
 def test_image_decode_check_and_stubs(spark):
-    rows = [("i1", "rgb8raw", bytearray(media.encode_rgb8raw(_img(2)))),
+    px = _img(2)
+    rows = [("i1", "rgb8raw", bytearray(media.encode_rgb8raw(px))),
             ("i2", "jpeg", bytearray(b"\xff\xd8\xff")),
             ("i3", "tiff", bytearray(b"II*\x00")),
             ("i4", "rgb8raw", bytearray(b"bad"))]
     df = spark.createDataFrame(rows, "image_id string, codec string, bytes binary")
-    got = {r.image_id: r for r in media.image_decode_check(df).collect()}
-    assert got["i1"].decode_ok and (got["i1"].width, got["i1"].height) == (6, 8)
+    got = {r.image_id: r for r in media.image_stats(df).collect()}
+    assert got["i1"].decode_ok and got["i1"].mean_r == px[..., 0].mean()
     assert got["i2"].error == "codec_not_supported:jpeg"
     assert got["i3"].error == "unknown_codec:tiff"
     assert got["i4"].error == "not_rgb8raw"
@@ -46,26 +47,12 @@ def test_image_decoder_registry(spark):
         "image_id string, codec string, bytes binary")
     media.register_image_decoder("jpeg", fake_jpeg)
     try:
-        r = media.image_decode_check(df).collect()[0]
-        assert r.decode_ok and r.width == 4
+        r = media.image_stats(df).collect()[0]
+        assert r.decode_ok and r.mean_r == 0.0
     finally:
         media.unregister_image_decoder("jpeg")
-    r2 = media.image_decode_check(df).collect()[0]
+    r2 = media.image_stats(df).collect()[0]
     assert r2.error == "codec_not_supported:jpeg"
-
-
-def test_resize_deterministic_and_decodable(spark):
-    px = _img(4, 10, 8)
-    df = spark.createDataFrame(
-        [("a", "rgb8raw", bytearray(media.encode_rgb8raw(px)))],
-        "image_id string, codec string, bytes binary")
-    out1 = media.resize_images(df, 4, 5).collect()[0]
-    out2 = media.resize_images(df.repartition(3), 4, 5).collect()[0]
-    assert bytes(out1.bytes) == bytes(out2.bytes)  # partitioning-independent
-    dec, err = media.decode_rgb8raw(bytes(out1.bytes))
-    assert err == "" and dec.shape == (5, 4, 3)
-    # nearest-neighbor: corner pixel preserved
-    assert np.array_equal(dec[0, 0], px[0, 0])
 
 
 def test_image_stats(spark):
@@ -77,27 +64,6 @@ def test_image_stats(spark):
     r = media.image_stats(df).collect()[0]
     assert r.decode_ok and r.mean_r == 200.0 and r.mean_g == 100.0
     assert abs(r.std_gray) < 1e-9  # constant gray plane
-
-
-def test_video_frame_sampling(spark):
-    rng = np.random.default_rng(5)
-    frames = rng.integers(0, 256, (10, 4, 6, 3), np.uint8)  # 10 frames 6x4
-    buf = media.encode_rawvid(frames, fps=5)
-    hdr, err = media.decode_rawvid_header(buf)
-    assert err == "" and hdr == (6, 4, 5, 10)
-    df = spark.createDataFrame(
-        [("v1", "rawvid", bytearray(buf)),
-         ("v2", "h264", bytearray(b"\x00\x00\x01"))],
-        "video_id string, codec string, bytes binary")
-    # every_ms=1000 at 5 fps -> every 5th frame: indices 0, 5
-    got = media.sample_video_frames(df, every_ms=1000).collect()
-    assert [(r.video_id, r.frame_index) for r in got] == [("v1", 0), ("v1", 5)]
-    assert got[0].ts_ms == 0.0 and got[1].ts_ms == 1000.0
-    dec, _ = media.decode_rgb8raw(bytes(got[1].bytes))
-    assert np.array_equal(dec, frames[5])
-    # max_frames cap
-    capped = media.sample_video_frames(df, every_ms=200, max_frames=3).collect()
-    assert [r.frame_index for r in capped] == [0, 1, 2]
 
 
 def test_image_stats_alpha_not_in_gray(spark):

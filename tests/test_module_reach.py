@@ -1,7 +1,9 @@
 """Every ``json_skema_spark`` module must be reachable by imports from a
 production entry point, so code that nothing runs cannot pile up unseen.
-Likewise every defaulted parameter of the checked operator modules must be
-set by some caller (``test_every_default_is_set_by_a_caller``).
+One level down, every public function must be reached from a caller
+(``test_every_public_function_has_a_production_caller``), and every
+defaulted parameter of the checked operator modules must be set by some
+caller (``test_every_default_is_set_by_a_caller``).
 
 The walk is static: it parses each reached file and follows every
 ``import``/``from ... import`` statement in it, including the ones inside
@@ -17,13 +19,17 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = "json_skema_spark"
 
+# the production callers, for every check below: the package's entry
+# points, the tools, and the benchmark harness
 ENTRY_POINTS = (
     f"{PACKAGE}/__init__.py",
     f"{PACKAGE}/runner.py",
     f"{PACKAGE}/stream_runner.py",
     "__spark_entry__.py",
     "bench.py",
-    "tools/oracle_check.py",
+    *sorted(p.relative_to(ROOT).as_posix()
+            for pattern in ("tools/*.py", "perfbench/**/*.py")
+            for p in ROOT.glob(pattern)),
 )
 
 # Modules kept without a production import, each for a stated reason.
@@ -81,6 +87,91 @@ def test_every_module_has_a_production_importer():
     # a kept module that is deleted or gains a production importer leaves
     # the list, so the list cannot grow stale
     assert sorted(set(KEPT) - (mods - reached)) == []
+
+
+# -- public functions -------------------------------------------------------
+# Functions kept without a production caller, each for a stated reason.
+KEPT_FUNCTIONS = {
+    f"{PACKAGE}.functions.audio.register_decoder":
+        "the seam through which tests substitute fake audio decoders",
+    f"{PACKAGE}.functions.audio.unregister_decoder":
+        "removes a decoder a test substituted",
+    f"{PACKAGE}.functions.media.register_image_decoder":
+        "the seam through which tests substitute fake image decoders",
+    f"{PACKAGE}.functions.media.unregister_image_decoder":
+        "removes an image decoder a test substituted",
+    f"{PACKAGE}.plans.verdict.duplicate_key_violations":
+        "reference parity: a duplicate key is a parse error "
+        "(JsonParser.kt:250-256)",
+    f"{PACKAGE}.plans.model.registry_from_dir":
+        "reference parity with the pre-registered schema client "
+        "(SchemaClient.kt:28-34)",
+    f"{PACKAGE}.operators.dedup.release_persisted_signatures":
+        "a library caller's release hook for the bases _persist_base caches",
+}
+
+
+def _referenced_names(nodes) -> set[str]:
+    """Every name, attribute and string literal under ``nodes``: a string
+    counts because a caller may name a function to wrap or look it up."""
+    names: set[str] = set()
+    for root in nodes:
+        for node in ast.walk(root):
+            if isinstance(node, ast.Name):
+                names.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+            elif isinstance(node, ast.Constant) \
+                    and isinstance(node.value, str):
+                names.add(node.value)
+    return names
+
+
+def unreached_functions() -> set[str]:
+    """Qualified names of the public module-level functions, outside the
+    KEPT modules, that no caller reaches. The roots are every statement of
+    the ENTRY_POINTS files and the module-level statements of the package;
+    the walk follows the body of each reached module-level function or
+    class. Names are matched, not bindings, so a same-named function
+    elsewhere can only make a function look reached, never unreached."""
+    callers = {ROOT / p for p in ENTRY_POINTS}
+    bodies: dict[str, list[ast.AST]] = {}  # name -> its def/class nodes
+    public: set[tuple[str, str]] = set()  # (module, function)
+    roots: list[ast.AST] = []
+    files = _module_files()
+    for mod, path in files.items():
+        tree = ast.parse(path.read_text(), str(path))
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)) \
+                    and path not in callers:
+                bodies.setdefault(node.name, []).append(node)
+                roots += node.decorator_list
+                if isinstance(node, ast.FunctionDef) \
+                        and not node.name.startswith("_") and mod not in KEPT:
+                    public.add((mod, node.name))
+            else:
+                roots.append(node)
+    roots += [ast.parse(p.read_text(), str(p))
+              for p in callers - set(files.values())]
+
+    reached: set[str] = set()
+    todo = _referenced_names(roots)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo |= _referenced_names(bodies.get(name, ())) - reached
+    return {f"{mod}.{fn}" for mod, fn in public if fn not in reached}
+
+
+def test_every_public_function_has_a_production_caller():
+    unreached = unreached_functions()
+    assert sorted(unreached - set(KEPT_FUNCTIONS)) == [], (
+        "public functions no caller reaches: give each a production caller "
+        "or delete it")
+    # a kept function that is deleted or gains a production caller leaves
+    # the list, so the list cannot grow stale
+    assert sorted(set(KEPT_FUNCTIONS) - unreached) == []
 
 
 # -- settable values --------------------------------------------------------

@@ -114,9 +114,6 @@ def test_exact_duplicates_hot_group_capped(spark):
     assert len(got) == 1
     assert got[0].n_docs == 10_000
     assert got[0].doc_ids == [f"d{i:05d}" for i in range(7)]
-    # uncapped fallback still returns everything
-    full = dedup.exact_duplicates(df, "text", "doc_id", max_ids=None).collect()
-    assert len(full[0].doc_ids) == 10_000
 
 
 def test_minhash_near_duplicates(spark):
@@ -133,16 +130,20 @@ def test_minhash_near_duplicates(spark):
 
 def test_simhash_near_duplicates(spark):
     # 24 distinct tokens: one substituted token moves the fingerprint by
-    # 1 bit, within MAX_HAMMING (over 10 tokens it moves 8)
+    # 1 bit, within hamming distance 3 (over 10 tokens it moves 8)
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa lambda "
             "mu nu xi omicron pi rho sigma tau upsilon phi chi psi omega")
     near = base.replace("omega", "digamma")
     other = "numbers one two three four five six seven eight nine ten " * 4
     df = spark.createDataFrame(
         [("a", base), ("b", near), ("c", other)], "doc_id string, text string")
-    pairs = dedup.simhash_near_duplicates(df, "text", "doc_id").collect()
-    got = {(p.doc_id_a, p.doc_id_b) for p in pairs}
-    assert ("a", "b") in got and ("a", "c") not in got
+    fp = {r.doc_id: r.fp for r in df.select(
+        "doc_id", dedup.simhash(F.col("text")).alias("fp")).collect()}
+
+    def hamming(x, y):
+        return bin(fp[x] ^ fp[y]).count("1")
+
+    assert hamming("a", "b") <= 3 < hamming("a", "c")
 
 
 def test_cosine_topk(spark):
@@ -263,8 +264,7 @@ def test_contamination_flags_and_decontaminate(spark):
     assert flags[1] == (True, "quick brown fox")   # case/whitespace normalized
     assert flags[2] == (False, "")
     assert flags[3][0] is True
-    kept = contamination.decontaminate(df, "text", "doc_id", probes)
-    assert [r.doc_id for r in kept.collect()] == [2]
+    assert [d for d, (hit, _m) in sorted(flags.items()) if not hit] == [2]
 
 
 def test_stratified_sample_deterministic(spark):
@@ -307,10 +307,6 @@ def test_pack_greedy_and_chunk_assignments(spark):
     p2 = packing.pack_greedy(df.repartition(5), "doc_id", "n_tokens",
                              max_tokens=2048, buckets=1).collect()
     assert sorted(map(tuple, packed)) == sorted(map(tuple, p2))
-    stats = packing.pack_stats(
-        packing.pack_greedy(df, "doc_id", "n_tokens", max_tokens=2048,
-                            buckets=1), max_tokens=2048).collect()
-    assert all(0 < r.fill_ratio for r in stats)
 
     chunks = packing.chunk_assignments(df, "doc_id", "n_tokens",
                                        max_tokens=1000).collect()
@@ -487,8 +483,7 @@ def test_exact_duplicates_ignores_null_text(spark):
 
 
 def test_contamination_null_text_kept(spark):
-    from json_skema_spark.operators.contamination import (
-        contamination_flags, decontaminate)
+    from json_skema_spark.operators.contamination import contamination_flags
 
     df = spark.createDataFrame(
         [("a", "the quick brown fox runs"), ("b", None)],
@@ -496,9 +491,6 @@ def test_contamination_null_text_kept(spark):
     flags = {r.doc_id: r.contaminated for r in contamination_flags(
         df, "text", "doc_id", ["quick brown fox"]).collect()}
     assert flags == {"a": True, "b": False}  # real boolean, not NULL
-    kept = {r.doc_id for r in decontaminate(
-        df, "text", "doc_id", ["quick brown fox"]).collect()}
-    assert kept == {"b"}  # null text survives decontamination
 
 
 def test_drift_report_flags_added_and_removed_columns(spark):

@@ -195,21 +195,18 @@ def test_builder_subschema_not_aliased():
 
 
 def test_contamination_probe_word_count_validated(spark):
-    from json_skema_spark.operators.contamination import (
-        contamination_flags, decontaminate)
+    from json_skema_spark.operators.contamination import contamination_flags
     df = spark.createDataFrame([("d1", "the answer is forty two")],
                                "doc_id string, text string")
     with pytest.raises(ValueError, match="never match"):
         contamination_flags(df, "text", "doc_id",
                             ["the answer is forty"], n=3)
     with pytest.raises(ValueError, match="never match"):
-        decontaminate(df, "text", "doc_id", ["answer is"], n=3)
-    # exact-n probes still work through both twins
+        contamination_flags(df, "text", "doc_id", ["answer is"], n=3)
+    # exact-n probes still work
     flags = contamination_flags(df, "text", "doc_id",
                                 ["the answer is"], n=3).collect()
     assert flags[0].contaminated is True
-    assert decontaminate(df, "text", "doc_id",
-                         ["the answer is"], n=3).count() == 0
 
 
 def test_scrubber_replacement_with_dollar_sign(spark):

@@ -161,8 +161,7 @@ def test_contamination_probes_normalized_to_shingle_form(spark):
     """Case-mismatched probes must match (shingles lowercase the text) and
     a double-spaced probe must word-count AFTER collapsing — both used to
     make the gate silently inert."""
-    from json_skema_spark.operators.contamination import (
-        contamination_flags, decontaminate)
+    from json_skema_spark.operators.contamination import contamination_flags
 
     df = spark.createDataFrame(
         [("d1", "contains the quick fox indeed"), ("d2", "clean text here")],
@@ -170,9 +169,10 @@ def test_contamination_probes_normalized_to_shingle_form(spark):
     out = {r["id"]: r["contaminated"] for r in contamination_flags(
         df, "text", "id", ["The  Quick   Fox"], n=3).collect()}
     assert out == {"d1": True, "d2": False}
-    kept = [r["id"] for r in decontaminate(
-        df, "text", "id", ["The Quick Fox"], n=3).collect()]
-    assert kept == ["d2"]
+    clean = [r["id"] for r in contamination_flags(
+        df, "text", "id", ["The Quick Fox"], n=3).collect()
+        if not r["contaminated"]]
+    assert clean == ["d2"]
     # 2 real words hiding behind a double space: still raises for n=3
     with pytest.raises(ValueError, match="2 words"):
         contamination_flags(df, "text", "id", ["the  fox"], n=3)

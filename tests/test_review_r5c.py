@@ -89,30 +89,6 @@ def test_windowed_drift_empty_baseline_raises(spark):
         windowed_drift(df, {}, "ts")
 
 
-def test_exact_dedup_stream_survives_user_digest_column(spark, tmp_path):
-    """An input column literally named '_digest' (batch-dedup output
-    re-ingested) previously broke the unionByName (review r05c finding 3)."""
-    from json_skema_spark.streaming.dedup_stream import exact_dedup_stream
-    src = str(tmp_path / "in")
-    rows = [
-        (datetime(2026, 1, 1, 12, 0, 0), "dup text", "keep0"),
-        (datetime(2026, 1, 1, 12, 0, 1), "dup text", "keep1"),
-        (datetime(2026, 1, 1, 12, 0, 2), None, "keepnull"),
-        (datetime(2026, 1, 1, 12, 0, 3), "other", "keep3"),
-    ]
-    spark.createDataFrame(rows, "ts timestamp, text string, _digest string") \
-        .write.parquet(src)
-    out = exact_dedup_stream(
-        spark.readStream.schema("ts timestamp, text string, _digest string")
-        .parquet(src), "text", "ts")
-    got = _drain(out, str(tmp_path / "ck"))
-    # one of the two dups dropped; the USER's _digest values pass through
-    assert len(got) == 3
-    digests = {r["_digest"] for r in got}
-    assert "keepnull" in digests and "keep3" in digests
-    assert digests & {"keep0", "keep1"}
-
-
 def test_deprecated_usage_zero_row_table_counts_zero(spark):
     """F.sum over zero rows is NULL; the report must say 0 present / 0.0
     fraction — the 'safe to delete' answer (review r05c finding 6)."""
@@ -252,7 +228,7 @@ def test_image_decode_contains_2d_decoder_output(spark):
         df = spark.createDataFrame(
             [("i1", "gray2d", bytearray(b"xx"))],
             "image_id string, codec string, bytes binary")
-        r = media.image_decode_check(df).collect()[0]
+        r = media.image_stats(df).collect()[0]
     finally:
         media.unregister_image_decoder("gray2d")
     assert not r["decode_ok"]
@@ -533,16 +509,6 @@ def test_empty_combinator_arrays_are_compile_errors(spark):
     assert "#/allOf" in locs and "#/properties/a/anyOf" in locs
 
 
-def test_bpe_token_count_unicode(spark):
-    """'café' must be ONE token, not 'caf' + 'é'-as-punctuation
-    (review r05c — same migration as quality_score)."""
-    from json_skema_spark.functions.text import bpe_ish_token_count
-    df = spark.createDataFrame([("café au lait",), ("a1 b2!",)], ["t"])
-    got = [r["n"] for r in
-           df.select(bpe_ish_token_count(F.col("t")).alias("n")).collect()]
-    assert got == [3, 5]
-
-
 def test_drift_report_refuses_per_partition_profiles(spark):
     """Duplicate column_name rows (per-partition parts) turned the
     full-outer join into a per-column cross product (review r05c) — same
@@ -579,15 +545,17 @@ def test_suggest_constraints_temporal_enum_serializes(spark):
 def test_running_tally_dotted_key_column(spark, tmp_path):
     """key_col with a dot must resolve as one literal column
     (review r05c)."""
-    from json_skema_spark.streaming.stateful import running_violation_tally
+    from json_skema_spark import compile_schema
+    from json_skema_spark.streaming.stateful import tally_verdicts
     src = str(tmp_path / "in")
     df = spark.createDataFrame([("s1", 5), ("s1", -1)],
                                "shard string, v int") \
         .withColumnRenamed("shard", "meta.shard")
     df.write.parquet(src)
     stream = spark.readStream.schema(df.schema).parquet(src)
-    out = running_violation_tally(
-        stream, {"properties": {"v": {"minimum": 0}}}, "meta.shard")
+    out = tally_verdicts(
+        stream, compile_schema({"properties": {"v": {"minimum": 0}}},
+                               stream.schema).passed, "meta.shard")
     got = []
     q = (out.writeStream.outputMode("update")
          .foreachBatch(lambda b, _i: got.extend(b.collect()))

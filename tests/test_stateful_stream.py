@@ -1,9 +1,8 @@
 """applyInPandasWithState running-tally operator: state persists across
 micro-batches."""
 
-import time
-
-from json_skema_spark.streaming.stateful import running_violation_tally
+from json_skema_spark import compile_schema
+from json_skema_spark.streaming.stateful import tally_verdicts
 
 
 def test_running_tally_across_batches(spark, tmp_path):
@@ -18,7 +17,8 @@ def test_running_tally_across_batches(spark, tmp_path):
         .write.mode("overwrite").parquet(src)
 
     stream = spark.readStream.schema(schema_ddl).parquet(src)
-    out = running_violation_tally(stream, doc, "key")
+    out = tally_verdicts(stream, compile_schema(doc, stream.schema).passed,
+                         "key")
     results = {}
 
     def sink(bdf, _id):
@@ -34,37 +34,14 @@ def test_running_tally_across_batches(spark, tmp_path):
     # batch 2 (new file): state must accumulate, not reset
     spark.createDataFrame([("a", 99)], schema_ddl) \
         .write.mode("append").parquet(src)
-    q2 = (running_violation_tally(
-        spark.readStream.schema(schema_ddl).parquet(src), doc, "key")
+    stream2 = spark.readStream.schema(schema_ddl).parquet(src)
+    q2 = (tally_verdicts(
+        stream2, compile_schema(doc, stream2.schema).passed, "key")
         .writeStream.outputMode("update").foreachBatch(sink)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True).start())
     q2.awaitTermination(120)
     assert results["a"] == (3, 2)
-
-
-def test_stream_dedup_passes_null_text_through(spark, tmp_path):
-    """Null-text rows bypass streaming dedup instead of being dropped as
-    'duplicates' of each other."""
-    import datetime as dt
-
-    from json_skema_spark.streaming.dedup_stream import exact_dedup_stream
-
-    src = str(tmp_path / "in")
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [(1, t0, None), (2, t0, None), (3, t0, "x"), (4, t0, "x")]
-    df = spark.createDataFrame(rows, "doc_id int, ts timestamp, text string")
-    df.coalesce(1).write.parquet(src)
-    got = []
-    q = (exact_dedup_stream(
-            spark.readStream.schema(df.schema).parquet(src), "text", "ts")
-         .writeStream.outputMode("append")
-         .foreachBatch(lambda b, _i: got.extend(b.collect()))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    ids = sorted(r.doc_id for r in got)
-    assert 1 in ids and 2 in ids          # both null-text rows survive
-    assert len([i for i in ids if i in (3, 4)]) == 1  # dup text collapsed
 
 
 def test_running_tally_integer_key(spark, tmp_path):
@@ -74,9 +51,10 @@ def test_running_tally_integer_key(spark, tmp_path):
     src = str(tmp_path / "iin")
     spark.createDataFrame([(7, 8000), (7, 99)], "shard int, sr_hz int") \
         .write.parquet(src)
-    out = running_violation_tally(
-        spark.readStream.schema("shard int, sr_hz int").parquet(src),
-        {"properties": {"sr_hz": {"enum": [8000]}}}, "shard")
+    stream = spark.readStream.schema("shard int, sr_hz int").parquet(src)
+    out = tally_verdicts(
+        stream, compile_schema({"properties": {"sr_hz": {"enum": [8000]}}},
+                               stream.schema).passed, "shard")
     res = {}
     q = (out.writeStream.outputMode("update")
          .foreachBatch(lambda b, _i: res.update(

@@ -95,34 +95,6 @@ def test_runner_end_to_end_with_resume(spark, tmp_path):
     clips.unpersist()
 
 
-def test_streaming_exact_dedup(spark, tmp_path):
-    """dropDuplicatesWithinWatermark on the content digest: duplicate texts
-    collapse to the first arrival; distinct texts pass through."""
-    import datetime as dt
-    from json_skema_spark.streaming.dedup_stream import exact_dedup_stream
-
-    src = str(tmp_path / "dedup_in")
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [(1, t0, "same text here"),
-            (2, t0 + dt.timedelta(seconds=10), "same  TEXT  here"),  # dup (normalized)
-            (3, t0 + dt.timedelta(seconds=20), "different text")]
-    df = spark.createDataFrame(rows, "doc_id int, ts timestamp, text string")
-    df.coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    out = exact_dedup_stream(stream, "text", "ts")
-    assert out.isStreaming
-
-    collected = []
-    q = (out.writeStream.outputMode("append")
-         .foreachBatch(lambda bdf, _id: collected.extend(bdf.collect()))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    ids = sorted(r.doc_id for r in collected)
-    assert len(ids) == 2 and 3 in ids and (1 in ids or 2 in ids)
-    assert set(collected[0].asDict()) == {"doc_id", "ts", "text"}
-
-
 def test_runner_revalidate_delta(spark, tmp_path):
     """Schema-evolution fast path: widening skips entirely; a tightened
     keyword re-validates against the delta only."""
