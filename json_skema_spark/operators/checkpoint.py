@@ -22,9 +22,17 @@ of read I/O for one pass over a 100 TB table at N=16):
    so neither its ids nor its layout line up with this staging or with
    the co-bucketed transcript reference.
 
-The staging step itself is crash-safe: the manifest records ``staged``
-only after the write commits (Spark's ``_SUCCESS``), so a crash mid-stage
-restages from scratch while a crash mid-bucket resumes after staging.
+The staging step itself is crash-safe: the manifest records
+``staging_dir`` only after the write commits (Spark's ``_SUCCESS``), so a
+crash mid-stage restages from scratch while a crash mid-bucket resumes
+after staging.
+
+One resume rule (``PartitionManifest.pin``): each section of the run
+records what shaped its output, and a resume whose inputs differ is
+refused once that output exists. The *staging* section (key, bucket
+count, lineage capture, input schema) binds once the staging committed;
+the runner's *outputs* section (schema document, emit flags, audio
+check, transcript reference) binds once a bucket committed.
 
 The reference has no persistence at all (in-memory, single document); the
 semantic anchor is its collect-don't-fail-fast error handling
@@ -34,9 +42,9 @@ seconds) — the north rule's "lineage + metrics intact".
 
 File layout under ``manifest_dir`` (driver-side fs, tiny):
     manifest.json        {"completed": {"<bucket>": {metrics...}},
-                          "staged": bool, "staging_dir": str,
-                          "num_buckets": int, "key": str,
-                          "staged_schema": <StructType JSON>}
+                          "staging_dir": str,
+                          "pins": {"<section>": {field: value}},
+                          "global": {"<step>": {"fingerprint": str|null}}}
 """
 
 from __future__ import annotations
@@ -106,48 +114,37 @@ class PartitionManifest:
         self._flush()
 
     @property
-    def staged(self) -> bool:
-        return bool(self._state.get("staged"))
-
-    @property
     def staging_dir(self) -> str | None:
+        """Where the committed staging lives (None until it committed)."""
         return self._state.get("staging_dir")
 
-    def mark_staged(self, staging_dir: str, *, num_buckets: int, key: str,
-                    schema: T.StructType) -> None:
-        self._state["staged"] = True
+    def mark_staged(self, staging_dir: str) -> None:
         self._state["staging_dir"] = staging_dir
-        self._state["num_buckets"] = num_buckets
-        self._state["key"] = key
-        self._state["staged_schema"] = schema.jsonValue()
         self._flush()
 
-    @property
-    def num_buckets(self) -> int | None:
-        return self._state.get("num_buckets")
-
-    @property
-    def key(self) -> str | None:
-        return self._state.get("key")
-
-    @property
-    def staged_schema(self) -> T.StructType | None:
-        """The data columns the staged files were written with (None for a
-        manifest written before the schema was recorded)."""
-        js = self._state.get("staged_schema")
-        return None if js is None else T.StructType.fromJson(js)
-
-    # -- run options (emit_clean, ref-staging fingerprint, lineage...) ----
-    # Recorded so a RESUME into the same out_dir can detect that it was
-    # invoked with different semantics than the run that committed buckets
-    # (e.g. emit_clean newly on: committed buckets would silently lack
-    # their clean/ split — ADVICE r03).
-
-    def option(self, name: str):
-        return self._state.get("options", {}).get(name)
-
-    def record_option(self, name, value) -> None:
-        self._state.setdefault("options", {})[name] = value
+    def pin(self, section: str, identity: dict, *, binding: bool) -> None:
+        """Record ``identity`` (what shapes ``section``'s output) for the
+        resumes that follow. While ``binding`` (the output it shaped
+        exists), a differing identity is refused instead: a resume with
+        other inputs would silently mix two runs' semantics in one
+        out_dir. A manifest written before a section was pinned records
+        nothing for it, which reads as every field changed."""
+        recorded = self._state.get("pins", {}).get(section)
+        if recorded == identity:
+            return
+        if binding:
+            recorded = recorded or {}
+            changes = "; ".join(
+                f"{k}: requested {identity.get(k)!r}, recorded "
+                f"{recorded.get(k)!r}"
+                for k in sorted(set(identity) | set(recorded))
+                if identity.get(k) != recorded.get(k))
+            raise ValueError(
+                f"resume refused: the {section} settings differ from the "
+                f"run recorded in this manifest ({changes}) — rerun with "
+                "the recorded values, or delete the manifest to restage "
+                "from scratch")
+        self._state.setdefault("pins", {})[section] = identity
         self._flush()
 
     # -- global (cross-bucket) phase steps --------------------------------
@@ -156,16 +153,20 @@ class PartitionManifest:
     # mid-global-phase redoes full-table scans on restart AND leaves
     # partially-written output indistinguishable from complete output
     # (VERDICT r03 #2). The manifest entry IS the commit marker: written
-    # only after the parquet write (with its _SUCCESS) committed.
+    # only after the parquet write (with its _SUCCESS) committed. A step
+    # whose input the caller supplies (a reference table, a baseline
+    # profile) records that input's fingerprint, and counts as done only
+    # for the same fingerprint.
 
-    def is_global_done(self, step: str) -> bool:
-        return step in self._state.get("global", {})
+    def is_global_done(self, step: str,
+                       fingerprint: str | None = None) -> bool:
+        rec = self._state.get("global", {}).get(step)
+        return rec is not None and rec.get("fingerprint") == fingerprint
 
-    def global_metrics(self, step: str) -> dict | None:
-        return self._state.get("global", {}).get(step)
-
-    def mark_global_done(self, step: str, metrics: dict | None = None) -> None:
-        self._state.setdefault("global", {})[step] = metrics or {}
+    def mark_global_done(self, step: str,
+                         fingerprint: str | None = None) -> None:
+        self._state.setdefault("global", {})[step] = {
+            "fingerprint": fingerprint}
         self._flush()
 
     def _flush(self) -> None:
@@ -179,7 +180,7 @@ class PartitionManifest:
             # Hadoop FS reports failure by RETURNING FALSE, not throwing
             # (ADVICE r04): an unchecked rename can silently leave the
             # manifest stale — committed buckets re-run and recorded
-            # option guards stop firing. Check every boolean.
+            # pins stop binding. Check every boolean.
             if not fs.mkdirs(hp(self.dir)):
                 raise IOError(f"manifest mkdirs failed: {self.dir}")
             tmp, dst = hp(self.path + ".tmp"), hp(self.path)
@@ -210,57 +211,6 @@ def fs_exists(spark, path: str) -> bool:
     jvm = spark._jvm
     hp = jvm.org.apache.hadoop.fs.Path(path)
     return hp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hp)
-
-
-def _norm_nullability(dtype: T.DataType) -> T.DataType:
-    """The same type with every nullability flag forced True: two reads of
-    one source may differ only in nullable/containsNull (an in-memory frame
-    vs its parquet copy), and that difference is harmless for an
-    explicit-schema read — only name/type drift is the silent-NULL
-    hazard."""
-    if isinstance(dtype, T.StructType):
-        return T.StructType([
-            T.StructField(f.name, _norm_nullability(f.dataType), True)
-            for f in dtype.fields])
-    if isinstance(dtype, T.ArrayType):
-        return T.ArrayType(_norm_nullability(dtype.elementType), True)
-    if isinstance(dtype, T.MapType):
-        return T.MapType(_norm_nullability(dtype.keyType),
-                         _norm_nullability(dtype.valueType), True)
-    return dtype
-
-
-def _check_staged_schema(manifest: PartitionManifest,
-                         expected: T.StructType) -> None:
-    """Refuse a resume whose source schema diverges from the schema the
-    staging was written with (recorded by ``mark_staged``): the
-    explicit-schema bucket read would return changed/new columns as
-    all-NULL (or mistyped values), silently diverging from the
-    already-committed buckets (review r05c). No file is read, so a staging
-    that holds no data file is checked like any other; extra staged
-    columns are ignored."""
-    staged = manifest.staged_schema
-    if staged is None:
-        raise ValueError(
-            f"the manifest at {manifest.path!r} records no staged schema "
-            "(written by an older version) — refusing to resume against "
-            "staged files whose columns cannot be checked; delete the "
-            "manifest to restage")
-    actual = {f.name: f.dataType for f in staged.fields}
-    problems = []
-    for f in expected.fields:
-        got = actual.get(f.name)
-        if got is None:
-            problems.append(f"{f.name} missing from staged files")
-        elif _norm_nullability(got) != _norm_nullability(f.dataType):
-            problems.append(f"{f.name}: staged {got.simpleString()} != "
-                            f"source {f.dataType.simpleString()}")
-    if problems:
-        raise ValueError(
-            "staged data does not match this invocation's source schema "
-            f"({'; '.join(problems)}) — the source changed between "
-            "staging and resume; finish the resume against the original "
-            "source, or delete the manifest+staging to restage")
 
 
 def with_source_file(df: DataFrame) -> DataFrame:
@@ -338,40 +288,18 @@ def run_resumable(df: DataFrame, key: str, num_buckets: int,
             list(schema.fields)
             + [T.StructField(SOURCE_FILE_COL, T.StringType())])
 
-    if manifest.staged:
-        # the staged files either carry _src_file or they don't, however
-        # this invocation sets the flag: lineage-on over a lineage-off
-        # staging would read _src_file as all-NULL, and lineage-off over a
-        # lineage-on staging would leak _src_file into profile/clean — so
-        # a flip REFUSES, even with zero buckets committed (review r04)
-        prior = bool(manifest.option("lineage"))
-        if bool(capture_source_file) != prior:
-            raise ValueError(
-                f"resume requested file_lineage/capture_source_file="
-                f"{bool(capture_source_file)} but the staging was written "
-                f"with {prior} — the staged files cannot change shape on "
-                "resume; rerun with the original setting or delete the "
-                "manifest+staging to restage")
-        if manifest.num_buckets is not None \
-                and manifest.num_buckets != num_buckets:
-            raise ValueError(
-                f"resume requested num_buckets={num_buckets} but the "
-                f"staged data was bucketed {manifest.num_buckets} ways — "
-                "a mismatch would read missing bucket dirs as EMPTY and "
-                "commit them done, silently skipping validation; rerun "
-                f"with num_buckets={manifest.num_buckets} or delete the "
-                "manifest to restage")
-        if manifest.key is not None and manifest.key != key:
-            # num_buckets gets the guard above; the KEY equally shapes the
-            # staged layout — resuming with a different key would read
-            # buckets co-located by the OLD key, silently breaking every
-            # bucket-local assumption (duplicates share a bucket,
-            # key-scoped process logic) (review r05c)
-            raise ValueError(
-                f"resume requested key={key!r} but the staged data was "
-                f"bucketed by {manifest.key!r} — bucket-local semantics "
-                "would silently break; rerun with the original key or "
-                "delete the manifest to restage")
+    # the staged files carry this key's bucketing, this many bucket dirs,
+    # these columns (with or without _src_file): any of them differing on
+    # resume would read the staging as something it is not — missing
+    # bucket dirs as empty, new columns as all-NULL — so a change refuses,
+    # even with zero buckets committed. simpleString ignores nullability:
+    # an in-memory frame and its parquet copy stage the same files.
+    manifest.pin("staging", {
+        "key": key, "num_buckets": num_buckets,
+        "capture_source_file": bool(capture_source_file),
+        "schema": schema.simpleString()},
+        binding=manifest.staging_dir is not None)
+    if manifest.staging_dir is not None:
         # resume reads the directory the crashed run actually staged (a
         # caller passing a different staging_dir would otherwise "read" N
         # missing directories as N empty buckets)
@@ -382,14 +310,11 @@ def run_resumable(df: DataFrame, key: str, num_buckets: int,
                 "not exist (cleaned tmp dir? node swap?) — refusing to "
                 "treat every bucket as empty; delete the manifest to "
                 "restage")
-        _check_staged_schema(manifest, schema)
     else:
         staging = staging_dir or os.path.join(manifest.dir, "staging")
         stage_by_bucket(df, key, num_buckets, staging,
                         capture_source_file=capture_source_file)
-        manifest.record_option("lineage", capture_source_file)
-        manifest.mark_staged(staging, num_buckets=num_buckets, key=key,
-                             schema=schema)
+        manifest.mark_staged(staging)
 
     for bucket in range(num_buckets):
         if manifest.is_done(bucket):

@@ -18,6 +18,7 @@ same ``--out`` resumes at bucket granularity (operators/checkpoint.py).
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
@@ -55,7 +56,6 @@ def _ref_fingerprint(df: DataFrame) -> str:
     sorted source-file list (empty for non-file sources). Enough to catch
     the failure modes that matter — a restage after the ref table was
     rewritten, or a ref read from a different path."""
-    import hashlib
     files = sorted(df.inputFiles())
     basis = df.schema.simpleString() + "|" + "|".join(files)
     if not files:
@@ -111,82 +111,42 @@ def validate_table(spark: SparkSession, clips: DataFrame, out_dir: str, *,
     manifest = checkpoint.PartitionManifest(
         os.path.join(out_dir, "_manifest"), spark)
 
-    # a resume must run with the semantics of the run that committed
-    # buckets: emit_clean/emit_digest newly ON would silently leave the
-    # committed buckets without their clean//digest/ output while
-    # reporting success (ADVICE r03)
-    # check_audio / audio-ref presence shape the BUCKET outputs too: a
-    # resume that flips them would commit the remaining buckets under
-    # different semantics than the finished ones (review r04). A ref used
-    # only by the global phase (check_audio=False) is NOT guarded here —
-    # the global step is fingerprinted and recomputes safely.
-    # the SCHEMA ITSELF is the primary semantic input: a resume with an
-    # edited schema would validate the remaining buckets against B while
-    # the committed ones keep A's verdicts, reported as ONE successful
-    # run — and a fully-committed re-run with a new schema would skip all
-    # work and print the OLD run's totals as success (review r05c)
-    import hashlib as _hashlib
-    import json as _json
-    schema_fp = _hashlib.md5(_json.dumps(
+    # what shapes every bucket's output: a resume into an out_dir whose
+    # buckets were committed under other settings would mix two runs'
+    # semantics in one "successful" result — an edited schema validating
+    # the rest against B while the committed keep A's verdicts, emit
+    # flags newly on leaving committed buckets without clean//digest/
+    # (ADVICE r03, review r04/r05c). A reference used only by the global
+    # phase (check_audio=False) is not part of it: the global step is
+    # fingerprinted and recomputes safely.
+    schema_fp = hashlib.md5(json.dumps(
         schema_doc, sort_keys=True, separators=(",", ":"),
         default=str).encode()).hexdigest()
-    prior_fp = manifest.option("schema_fp")
-    if prior_fp is not None and prior_fp != schema_fp and manifest.completed:
-        raise ValueError(
-            f"resume with a DIFFERENT schema document (fingerprint "
-            f"{schema_fp} vs {prior_fp}) after {len(manifest.completed)} "
-            "committed bucket(s) — their verdicts were produced by the "
-            "original schema; finish with it, or use a fresh out_dir (or "
-            "revalidate_table for schema evolution)")
-    manifest.record_option("schema_fp", schema_fp)
-    for opt, val in (("emit_clean", emit_clean), ("emit_digest", emit_digest),
-                     ("check_audio", check_audio),
-                     ("audio_has_ref",
-                      check_audio and transcripts_ref is not None)):
-        prior = manifest.option(opt)
-        if prior is not None and prior != bool(val) and manifest.completed:
-            raise ValueError(
-                f"resume requested {opt}={bool(val)} but the run that "
-                f"committed {len(manifest.completed)} bucket(s) into this "
-                f"out_dir ran with {opt}={prior} — their output would be "
-                "inconsistent; finish with the original setting or use a "
-                "fresh out_dir")
-        manifest.record_option(opt, bool(val))
+    ref_fp = (_ref_fingerprint(transcripts_ref)
+              if check_audio and transcripts_ref is not None else None)
+    manifest.pin("outputs", {
+        "schema_doc": schema_fp, "emit_clean": bool(emit_clean),
+        "emit_digest": bool(emit_digest), "check_audio": bool(check_audio),
+        "transcripts_ref": ref_fp}, binding=bool(manifest.completed))
     # co-bucket the transcript reference ONCE: joining the full ref table
     # inside every bucket job would rescan+shuffle it num_buckets times —
     # the same N-full-scans pathology the staging redesign eliminates for
-    # the input. Reuse is guarded like the main staging (ADVICE r03): the
-    # _SUCCESS probe alone cannot tell "staged 16 ways from today's ref"
-    # from "staged 8 ways from last week's ref" — a silent mismatch
-    # commits false missing_reference_transcript violations.
+    # the input. The directory is named by what shaped it, so its _SUCCESS
+    # proves it was staged from THIS reference, THIS many ways; a staging
+    # from another reference or bucket count is never read (ADVICE r03).
     ref_staging = None
-    ref_schema = None
-    if transcripts_ref is not None and check_audio:
-        ref_staging = os.path.join(out_dir, "_staging_ref")
-        ref_schema = transcripts_ref.schema
-        ref_meta = {"num_buckets": num_buckets,
-                    "fingerprint": _ref_fingerprint(transcripts_ref)}
-        prior_ref = manifest.option("ref_staging")
-        if prior_ref is not None and prior_ref != ref_meta \
-                and manifest.completed:
-            raise ValueError(
-                f"resume with a DIFFERENT transcript reference or bucket "
-                f"count ({ref_meta} vs staged {prior_ref}) after "
-                f"{len(manifest.completed)} bucket(s) committed against "
-                "the old reference — restaging now would mix verdicts "
-                "from two references; rerun with the original ref/buckets "
-                "or use a fresh out_dir")
-        reusable = (
-            checkpoint.fs_exists(spark, os.path.join(ref_staging, "_SUCCESS"))
-            and prior_ref == ref_meta)
-        if not reusable:
+    if ref_fp is not None:
+        ref_staging = os.path.join(out_dir, "_staging_ref",
+                                   f"{ref_fp}_{num_buckets}")
+        if not checkpoint.fs_exists(spark,
+                                    os.path.join(ref_staging, "_SUCCESS")):
             checkpoint.stage_by_bucket(transcripts_ref, "clip_id",
                                        num_buckets, ref_staging)
-            manifest.record_option("ref_staging", ref_meta)
 
     def _ref_bucket(bucket: int) -> DataFrame | None:
         if ref_staging is None:
-            return None if transcripts_ref is None else transcripts_ref
+            return None
+        ref_schema = transcripts_ref.schema
         p = os.path.join(ref_staging, f"_bucket={bucket}")
         if checkpoint.fs_exists(spark, p):
             return spark.read.schema(ref_schema).parquet(p)
@@ -305,39 +265,32 @@ def validate_table(spark: SparkSession, clips: DataFrame, out_dir: str, *,
     # uniqueness input (staged keys) is immutable, but the ref table /
     # baseline profile are caller-supplied — a re-run with an updated ref
     # must recompute, not silently return the old run's orphan report
-    def _global_fresh(step: str, fingerprint: str | None) -> bool:
-        if not manifest.is_global_done(step):
-            return False
-        rec = manifest.global_metrics(step) or {}
-        return rec.get("fingerprint") == fingerprint
-
     if not manifest.is_global_done("unique"):
         dup = uniqueness.uniqueness_violations(_staged_keys(), "clip_id")
         dup.write.mode("overwrite").parquet(
             os.path.join(out_dir, "violations_unique"))
         manifest.mark_global_done("unique")
     if transcripts_ref is not None:
-        # reuse the staging-guard fingerprint when it was computed: for a
+        # reuse the outputs-pin fingerprint when it was computed: for a
         # non-file reference each computation is a full content-hash scan
         # (review r05c). ASSUMPTION (ADVICE r05): the reference table is
         # immutable for the duration of the run — if a live reference
         # changes between staging and this step, violations_ref reflects
-        # the new content while the recorded guard fingerprint describes
-        # the staged-time content; the mismatch self-heals on the next run
-        # (the guard recomputes and sees fresh content). Callers with
-        # mutable references should snapshot them before validate_table.
-        fp = (ref_meta["fingerprint"]
-              if check_audio and transcripts_ref is not None
-              else _ref_fingerprint(transcripts_ref))
-        if not _global_fresh("ref", fp):
+        # the new content while the recorded fingerprint describes the
+        # staged-time content; the mismatch self-heals on the next run
+        # (the fingerprint is recomputed and sees fresh content). Callers
+        # with mutable references should snapshot them before
+        # validate_table.
+        fp = ref_fp or _ref_fingerprint(transcripts_ref)
+        if not manifest.is_global_done("ref", fp):
             orph = referential.referential_violations(
                 _staged_keys(), transcripts_ref, "clip_id")
             orph.write.mode("overwrite").parquet(
                 os.path.join(out_dir, "violations_ref"))
-            manifest.mark_global_done("ref", {"fingerprint": fp})
+            manifest.mark_global_done("ref", fp)
     if baseline_profile is not None:
         fp = _ref_fingerprint(baseline_profile)
-        if not _global_fresh("drift", fp):
+        if not manifest.is_global_done("drift", fp):
             # merge the per-bucket parts written above: zero additional
             # input scans (round-2 design re-profiled the whole table here)
             # mergeSchema: parts written by an older code version may lack
@@ -363,7 +316,7 @@ def validate_table(spark: SparkSession, clips: DataFrame, out_dir: str, *,
             cur = stats.merge_profiles(parts)
             drift_report(cur, baseline_profile).write.mode("overwrite") \
                 .parquet(os.path.join(out_dir, "drift"))
-            manifest.mark_global_done("drift", {"fingerprint": fp})
+            manifest.mark_global_done("drift", fp)
     return metrics
 
 
@@ -384,8 +337,6 @@ def revalidate_table(spark: SparkSession, clips: DataFrame, out_dir: str, *,
     note the audio invariant is schema-independent, so ``check_audio``
     defaults off here; re-enable it only if the invariant itself changed).
     """
-    import hashlib
-
     from json_skema_spark.plans.compat import delta_schema
     delta = delta_schema(old_schema_doc, new_schema_doc)
     if delta is None:

@@ -72,20 +72,30 @@ def start_streaming(spark: SparkSession, input_dir: str, out_dir: str, *,
              "drift": [ts_col],
              "tally": [tally_key] if tally_key else []}
 
-    def _satisfied(q: str) -> bool:
+    def _unmet(q: str) -> str | None:
+        """The prerequisite (an input or a column) query ``q`` lacks, as
+        the refusal message; None when it can run."""
         if q == "drift" and baseline_profile is None:
-            return False
+            return ("the drift query needs --baseline-profile (a batch "
+                    "operators/stats.profile output) — drop 'drift' from "
+                    "queries to run without it")
         if q == "tally" and tally_key is None:
-            return False
-        return all(c in cols for c in needs.get(q, []))
+            return ("the tally query needs --tally-key (a BOUNDED-cardinality "
+                    "column: source shard, tenant, codec — state is one "
+                    "tuple per key) — drop 'tally' to run without it")
+        missing = [c for c in needs.get(q, []) if c not in cols]
+        if missing:
+            return (f"streaming query {q!r} needs column(s) {missing} that "
+                    f"the input lacks (have: {sorted(cols)}) — drop {q!r} "
+                    "from --queries or fix --key/--ts/--tally-key")
+        return None
 
-    # default query set = everything whose prerequisites (inputs AND
-    # columns) are satisfied — an EXPLICIT queries tuple is validated
-    # strictly instead, so a caller who asked for drift/tally/dedup
-    # without its input gets a loud error while the default never breaks
-    # existing callers (review r05)
+    # default query set = every query with no unmet prerequisite; an
+    # EXPLICIT query with one raises it instead, so a caller who asked for
+    # drift/tally/dedup without its input gets a loud error while the
+    # default never breaks existing callers (review r05)
     if queries is None:
-        queries = tuple(q for q in STREAM_QUERIES if _satisfied(q))
+        queries = tuple(q for q in STREAM_QUERIES if _unmet(q) is None)
     # validate EVERYTHING before the first .start(): raising after a query
     # is already running would leak an orphaned StreamingQuery the caller
     # can't stop (no handle), and a retry against the same checkpoint dir
@@ -97,23 +107,10 @@ def start_streaming(spark: SparkSession, input_dir: str, out_dir: str, *,
     if unknown:
         raise ValueError(f"unknown streaming queries {unknown}; "
                          f"choose from {STREAM_QUERIES}")
-    if "drift" in queries and baseline_profile is None:
-        raise ValueError(
-            "the drift query needs --baseline-profile (a batch "
-            "operators/stats.profile output) — drop 'drift' from "
-            "queries to run without it")
-    if "tally" in queries and tally_key is None:
-        raise ValueError(
-            "the tally query needs --tally-key (a BOUNDED-cardinality "
-            "column: source shard, tenant, codec — state is one tuple "
-            "per key) — drop 'tally' to run without it")
     for q in queries:
-        missing = [c for c in needs.get(q, []) if c not in cols]
-        if missing:
-            raise ValueError(
-                f"streaming query {q!r} needs column(s) {missing} that the "
-                f"input lacks (have: {sorted(cols)}) — drop {q!r} from "
-                "--queries or fix --key/--ts/--tally-key")
+        unmet = _unmet(q)
+        if unmet is not None:
+            raise ValueError(unmet)
     # one compile feeds the verdicts, violations and tally queries
     plan = compile_schema(schema_doc, input_schema)
     reader = spark.readStream.schema(input_schema)

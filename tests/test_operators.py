@@ -518,6 +518,7 @@ def test_resume_refuses_bucket_count_mismatch(spark, tmp_path):
             df, "k", 8, m1,
             lambda b, i: (_ for _ in ()).throw(RuntimeError("crash")))
     m2 = checkpoint.PartitionManifest(mdir)
-    with pytest.raises(ValueError, match="bucketed 8 ways"):
+    with pytest.raises(ValueError,
+                       match="num_buckets: requested 4, recorded 8"):
         checkpoint.run_resumable(df, "k", 4, m2,
                                  lambda b, i: {"rows": b.count()})

@@ -2,8 +2,10 @@
 source-file lineage through staging, resume-option guards, per-bucket
 digest, Iceberg format dispatch (VERDICT r03 #2-#4, #6, #8 + ADVICE r03)."""
 
+import glob
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -137,33 +139,50 @@ def test_emit_clean_flip_on_resume_raises(spark, tmp_path):
     out = str(tmp_path / "out")
     clips = clips_src.clips_df(spark, 50, audio=False, inject=True).cache()
     validate_table(spark, clips, out, num_buckets=2, check_audio=False)
-    with pytest.raises(ValueError, match="emit_clean"):
+    with pytest.raises(ValueError,
+                       match="emit_clean: requested True, recorded False"):
         validate_table(spark, clips, out, num_buckets=2, check_audio=False,
                        emit_clean=True)
     clips.unpersist()
 
 
-def test_ref_staging_guard_restages_on_unrecorded_success(spark, tmp_path):
-    """_SUCCESS alone no longer proves the ref staging is reusable: with no
-    manifest record (crash before recording) the ref is restaged."""
+def test_ref_staging_reused_only_by_its_own_reference(spark, tmp_path):
+    """The co-bucketed reference lives under a directory named by the
+    reference's fingerprint and the bucket count: its _SUCCESS proves the
+    staging belongs to them. A staging without _SUCCESS (crash mid-write)
+    is restaged; another bucket count stages beside it, never reading the
+    old one; a complete staging is reused untouched."""
     from json_skema_spark.sources.clips import transcripts_ref_df
     out = str(tmp_path / "out")
     clips = clips_src.clips_df(spark, 40, audio=True, inject=False).cache()
     ref = transcripts_ref_df(spark, 40)
     validate_table(spark, clips, out, num_buckets=2, check_audio=True,
                    transcripts_ref=ref)
+    (two,) = glob.glob(os.path.join(out, "_staging_ref", "*_2"))
     mpath = os.path.join(out, "_manifest", "manifest.json")
     m = json.loads(open(mpath).read())
-    assert m["options"]["ref_staging"]["num_buckets"] == 2
-    # simulate the ADVICE crash: _SUCCESS exists, manifest record missing
-    # AND buckets not yet committed
-    del m["options"]["ref_staging"]
-    m["completed"] = {}
-    open(mpath, "w").write(json.dumps(m))
-    before = _mtime_tree(os.path.join(out, "_staging_ref"))
-    validate_table(spark, clips, out, num_buckets=2, check_audio=True,
+
+    def rerun(n):
+        m["completed"] = {}
+        open(mpath, "w").write(json.dumps(m))
+        validate_table(spark, clips, out, num_buckets=n, check_audio=True,
+                       transcripts_ref=ref)
+
+    before = _mtime_tree(two)
+    rerun(2)                             # complete: reused, not rewritten
+    assert _mtime_tree(two) == before
+    os.remove(os.path.join(two, "_SUCCESS"))
+    rerun(2)                             # torn: restaged
+    assert os.path.exists(os.path.join(two, "_SUCCESS"))
+    assert _mtime_tree(two) != before
+    shutil.rmtree(os.path.join(out, "_manifest"))   # restage 3 ways
+    before = _mtime_tree(two)
+    validate_table(spark, clips, out, num_buckets=3, check_audio=True,
                    transcripts_ref=ref)
-    assert _mtime_tree(os.path.join(out, "_staging_ref")) != before
+    assert _mtime_tree(two) == before
+    (three,) = glob.glob(os.path.join(out, "_staging_ref", "*_3"))
+    assert os.path.basename(three)[:-2] == os.path.basename(two)[:-2]
+    assert os.path.exists(os.path.join(three, "_SUCCESS"))
     clips.unpersist()
 
 
@@ -178,7 +197,7 @@ def test_ref_change_after_committed_buckets_raises(spark, tmp_path):
     # a DIFFERENT ref source (different file fingerprint) on resume
     ref_src2 = str(tmp_path / "refB")
     transcripts_ref_df(spark, 40).write.parquet(ref_src2)
-    with pytest.raises(ValueError, match="DIFFERENT transcript reference"):
+    with pytest.raises(ValueError, match="transcripts_ref: requested"):
         validate_table(spark, clips, out, num_buckets=2, check_audio=True,
                        transcripts_ref=spark.read.parquet(ref_src2))
     clips.unpersist()
@@ -231,12 +250,12 @@ def test_file_lineage_flip_on_resume_raises(spark, tmp_path):
     out = str(tmp_path / "out")
     validate_table(spark, clips, out, num_buckets=2, check_audio=False,
                    file_lineage=True)
-    with pytest.raises(ValueError, match="file_lineage"):
+    with pytest.raises(ValueError, match="capture_source_file: requested"):
         validate_table(spark, clips, out, num_buckets=2, check_audio=False,
                        file_lineage=False)
     out2 = str(tmp_path / "out2")
     validate_table(spark, clips, out2, num_buckets=2, check_audio=False)
-    with pytest.raises(ValueError, match="file_lineage"):
+    with pytest.raises(ValueError, match="capture_source_file: requested"):
         validate_table(spark, clips, out2, num_buckets=2, check_audio=False,
                        file_lineage=True)
 
@@ -305,7 +324,8 @@ def test_check_audio_flip_on_resume_raises(spark, tmp_path):
     out = str(tmp_path / "out")
     clips = clips_src.clips_df(spark, 30, audio=True, inject=False).cache()
     validate_table(spark, clips, out, num_buckets=2, check_audio=True)
-    with pytest.raises(ValueError, match="check_audio"):
+    with pytest.raises(ValueError,
+                       match="check_audio: requested False, recorded True"):
         validate_table(spark, clips, out, num_buckets=2, check_audio=False)
     clips.unpersist()
 
@@ -317,7 +337,7 @@ def test_audio_ref_presence_flip_on_resume_raises(spark, tmp_path):
     ref = transcripts_ref_df(spark, 30)
     validate_table(spark, clips, out, num_buckets=2, check_audio=True,
                    transcripts_ref=ref)
-    with pytest.raises(ValueError, match="audio_has_ref"):
+    with pytest.raises(ValueError, match="transcripts_ref: requested None"):
         validate_table(spark, clips, out, num_buckets=2, check_audio=True)
     clips.unpersist()
 
@@ -361,7 +381,8 @@ def test_run_resumable_direct_lineage_mismatch_raises(spark, tmp_path):
     del m["completed"]["0"]
     open(manifest.path, "w").write(json.dumps(m))
     m2 = checkpoint.PartitionManifest(str(tmp_path / "m"))
-    with pytest.raises(ValueError, match="capture_source_file"):
+    with pytest.raises(ValueError, match="capture_source_file: "
+                       "requested True, recorded False"):
         checkpoint.run_resumable(df, "clip_id", 2, m2, lambda b, i: {},
                                  staging_dir=str(tmp_path / "s"),
                                  capture_source_file=True)
@@ -377,15 +398,18 @@ def test_manifest_on_uri_scheme_filesystem(spark, tmp_path):
         checkpoint.PartitionManifest(uri_dir)
     man = checkpoint.PartitionManifest(uri_dir, spark)
     man.mark_done(0, {"rows": 7})
-    man.record_option("emit_clean", True)
-    man.mark_global_done("unique", {"fingerprint": "abc"})
+    man.pin("outputs", {"emit_clean": True}, binding=False)
+    man.mark_global_done("unique", "abc")
     # no bogus local dir was created
     assert not os.path.exists("file:")
     # a fresh instance (new driver) reads the committed state back
     man2 = checkpoint.PartitionManifest(uri_dir, spark)
     assert man2.is_done(0) and man2.completed["0"]["rows"] == 7
-    assert man2.option("emit_clean") is True
-    assert man2.global_metrics("unique") == {"fingerprint": "abc"}
+    man2.pin("outputs", {"emit_clean": True}, binding=True)
+    with pytest.raises(ValueError, match="emit_clean: requested False"):
+        man2.pin("outputs", {"emit_clean": False}, binding=True)
+    assert man2.is_global_done("unique", "abc")
+    assert not man2.is_global_done("unique")
     # the file physically exists at the local path the URI names
     assert os.path.exists(str(tmp_path / "m" / "manifest.json"))
 

@@ -150,6 +150,24 @@ def test_stream_runner_tally_requires_key(spark, tmp_path):
                         queries=("tally",))
 
 
+def test_stream_runner_refuses_query_missing_its_column(spark, tmp_path):
+    """An explicit query whose key/watermark column the input lacks is
+    refused before any query starts; the default set leaves it out."""
+    src = str(tmp_path / "in")
+    spark.createDataFrame([("clip_a", 8000)], "clip_id string, sr_hz int") \
+        .write.parquet(src)
+    before = len(spark.streams.active)
+    with pytest.raises(ValueError,
+                       match=r"'dedup' needs column\(s\) \['ts'\]"):
+        start_streaming(spark, src, str(tmp_path / "o"), schema_doc=DOC,
+                        queries=("verdicts", "dedup"), available_now=True)
+    assert len(spark.streams.active) == before
+    running = start_streaming(spark, src, str(tmp_path / "o2"),
+                              schema_doc=DOC, available_now=True)
+    await_streaming(running)
+    assert set(running) == {"verdicts", "violations"}
+
+
 def test_stream_runner_compiles_schema_once(spark, tmp_path, monkeypatch):
     """All five queries started together come from one compile_root."""
     from json_skema_spark.operators import stats

@@ -194,7 +194,8 @@ def test_runner_stages_transcript_ref_once(spark, tmp_path):
                F.lit("__wrong__")).otherwise(F.col("transcript")))
     validate_table(spark, clips, out, num_buckets=3, check_audio=True,
                    transcripts_ref=ref)
-    assert os.path.exists(os.path.join(out, "_staging_ref", "_SUCCESS"))
+    assert len(glob.glob(os.path.join(out, "_staging_ref", "*",
+                                      "_SUCCESS"))) == 1
     viols = spark.read.parquet(os.path.join(out, "violations", "bucket=*"))
     msgs = {r.message for r in viols.collect()}
     assert any("transcript" in m for m in msgs)
